@@ -675,37 +675,6 @@ def char_shingles(col: Column, n: int = CHAR_SHINGLE_N) -> Column:
     )
 
 
-def _char_gram_hashes_staged(chars: Column, n: int = CHAR_SHINGLE_N) -> Column:
-    """Distinct xxhash64 values of the stride-1 character n-grams over
-    a PRE-STAGED char-array column (``split(lower(text), '')`` staged
-    as a projection — the module staging rule: ``chars`` must be a
-    column attribute, probed per element, never an inline split).
-
-    r12 optimization of :func:`_char_shingles_staged` for the
-    contamination counting paths (guide §1.2 "per-task work"):
-    ``substr(i, n)`` on a UTF8String scans from the string head to
-    locate codepoint ``i``, so materializing the n-char substring at
-    every position is O(len²) bytes scanned per document; splitting to
-    a char array ONCE and hashing a reference-copied ``slice`` per
-    position is O(len·n) reference work with no byte copying. Gram
-    hashes are equality keys only — every consumer counts overlap
-    between distinct-gram sets, so any collision-free hash yields
-    identical counts to the materialized-substring form (equal char
-    runs hash equal; 64-bit collisions are the same negligible class
-    the md5/xxhash pipeline already accepts everywhere else).
-
-    Texts shorter than ``n`` clamp to ONE whole-string gram (the
-    word_shingles clamp, preserved: ``slice`` past the array end
-    returns the short tail)."""
-    n_sh = F.greatest(F.size(chars) - F.lit(n - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n_sh),
-            lambda i: F.xxhash64(F.slice(chars, i.cast("int"), n)),
-        )
-    )
-
-
 _POLY_C = 0x9E3779B97F4A7C15 | 1  # odd 64-bit multiplier (golden-ratio mix)
 
 

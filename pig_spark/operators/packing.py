@@ -12,16 +12,15 @@ boundary-straddling document can push a bucket over B — the standard
 trade for a distributed plan.
 
 The running sum itself is the POCounter/PORank two-pass scheme the
-engine's RANK already uses (operators/rank.py) — NOT a window
-partitioned by the shard key: a shard is a DATA-SIZED key (a corpus
-with a handful of sources puts each source's full token stream in ONE
-window partition, which AQE cannot split — the r9 first-occurrence
-rule applied to prefix sums). Instead: range-partition by
-(shard, order), within-partition prefix sums (window keys =
-(shard, partition id), bounded by partition size — a cluster-config
-knob, not data), and cross-partition offsets from a tiny
-per-(shard, partition) totals table. Output is IDENTICAL to the
-single-window formulation (differential-tested).
+engine's RANK uses (:func:`~pig_spark.operators.prefix.running_sums`)
+— NOT a window partitioned by the shard key: a shard is a DATA-SIZED
+key (a corpus with a handful of sources puts each source's full token
+stream in ONE window partition, which AQE cannot split — the r9
+first-occurrence rule applied to prefix sums). The running sums
+range-partition by (shard, order), sum within partitions and add
+cross-partition offsets from a tiny per-(shard, partition) totals
+table; ``tests/test_prefix_sums.py`` compares each packer with the
+single-window formulation on 200k rows.
 
 Strict caps, when required, run per-bucket afterwards — each coarse
 bucket is budget-bounded, so :func:`pack_strict` re-packs it
@@ -30,8 +29,10 @@ exact-greedily with an in-row fold (the nested-FOREACH shape).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .prefix import running_sums
 
 
 def pack_by_budget(
@@ -48,40 +49,18 @@ def pack_by_budget(
     ordering is the incoming partition layout (arbitrary but valid —
     no determinism promise, same as before).
 
-    Two-pass distributed prefix sum (see module docstring): with an
-    explicit ``order`` the input is range-partitioned on
-    (shard, order) so partition ids follow the sort order; the local
-    cumulative window partitions on (shard, __pid) — partition-sized,
-    never shard-sized — and the exclusive cross-partition offset comes
-    from a per-(shard, __pid) totals table (≤ shards × partitions
-    rows, broadcast back)."""
+    The running token sum is :func:`~pig_spark.operators.prefix.
+    running_sums` within ``shard`` (see module docstring)."""
     tok = F.col(tokens) if isinstance(tokens, str) else tokens
-    shard_cols = [shard] if shard else []
-    if order is not None:
-        parts = df.repartitionByRange(*[F.col(c) for c in (*shard_cols, order)])
-        local_order = [F.col(order)]
-    else:
-        parts = df
-        local_order = [F.monotonically_increasing_id()]
-    parts = parts.withColumn("__pid", F.spark_partition_id())
-    w_local = Window.partitionBy(*shard_cols, "__pid").orderBy(*local_order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    sums = running_sums(
+        df,
+        order=[F.col(order)] if order is not None else [],
+        group=[shard] if shard else [],
+        weight=tok,
     )
-    local = parts.withColumn("__cum_local", F.sum(tok).over(w_local))
-    totals = local.groupBy(*shard_cols, "__pid").agg(F.sum(tok).alias("__tot"))
-    # exclusive running offset over the TINY totals table (≤ shards ×
-    # shuffle-partition-count rows — config-bounded, not data-bounded)
-    w_off = Window.partitionBy(*shard_cols).orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = totals.withColumn(
-        "__off", F.coalesce(F.sum("__tot").over(w_off), F.lit(0))
-    ).select(*shard_cols, "__pid", "__off")
-    joined = local.join(F.broadcast(offsets), [*shard_cols, "__pid"])
-    cum = F.col("__off") + F.col("__cum_local")
-    return joined.withColumn(
-        bucket_col, F.floor((cum - tok) / F.lit(budget)).cast("long")
-    ).drop("__pid", "__cum_local", "__off")
+    return sums.withColumn(
+        bucket_col, F.floor(F.col("__excl") / F.lit(budget)).cast("long")
+    ).drop("__excl", "__incl")
 
 
 def balanced_shards(
@@ -110,40 +89,25 @@ def balanced_shards(
     document (property-tested) — the tight bound for any assignment
     that keeps documents whole.
 
-    100 TB design: the prefix sum is the same two-pass
-    range-partition + partition-local window + tiny offsets table
-    :func:`pack_by_budget` uses — NO data-sized window partition and
-    no global orderBy; the manifest total is partial-aggregated. The
+    100 TB design: the prefix sum is
+    :func:`~pig_spark.operators.prefix.running_sums` — NO data-sized
+    window partition and no global orderBy; the manifest total is
+    partial-aggregated. The
     quota arithmetic stays exact: cum*n ≲ 2^53 for any realistic
     corpus (2.5e13 tokens × 1024 shards), so the float floor is the
     integer floor on both engines (the DuckDB oracle mirrors it)."""
     if n_shards <= 0:
         raise ValueError(f"n_shards must be positive, got {n_shards}")
     tok = F.col(tokens) if isinstance(tokens, str) else tokens
-    parts = df.repartitionByRange(F.col(order)).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    w_local = Window.partitionBy("__pid").orderBy(order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    local = parts.withColumn("__cum_local", F.sum(tok).over(w_local))
-    totals = local.groupBy("__pid").agg(F.sum(tok).alias("__tot"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "__off", F.coalesce(F.sum("__tot").over(w_off), F.lit(0))
-    )
-    grand = offsets.agg(F.sum("__tot").alias("__total"))
-    joined = local.join(
-        F.broadcast(offsets.select("__pid", "__off")), "__pid"
-    ).crossJoin(F.broadcast(grand))
-    cum_excl = F.col("__off") + F.col("__cum_local") - tok
-    return joined.withColumn(
+    grand = df.agg(F.sum(tok).alias("__total"))
+    sums = running_sums(df, order=[F.col(order)], weight=tok)
+    return sums.crossJoin(F.broadcast(grand)).withColumn(
         shard_name,
         F.least(
             F.lit(n_shards - 1),
-            F.floor(cum_excl * n_shards / F.col("__total")),
+            F.floor(F.col("__excl") * n_shards / F.col("__total")),
         ).cast("long"),
-    ).drop("__pid", "__cum_local", "__off", "__total")
+    ).drop("__excl", "__incl", "__total")
 
 
 def shard_assign(
@@ -289,12 +253,11 @@ def sequence_spans(
     from the manifest (they have no bytes to pack); count them
     upstream if their ids must be accounted for.
 
-    100 TB design: the exclusive offset is the same two-pass
-    distributed prefix sum as :func:`pack_by_budget` (range-partition
-    + partition-LOCAL window + tiny broadcast offsets — never a
+    100 TB design: the exclusive offset is
+    :func:`~pig_spark.operators.prefix.running_sums` (never a
     data-sized window partition); the explode emits ~n/L + 1 rows per
     doc (stream-sized / L, the output's own size) in the SAME map
-    stage; nothing else shuffles.
+    stage.
 
     ``base_offset`` shifts the whole token stream: a streaming ingest
     continuing an existing manifest passes the committed corpus total
@@ -304,37 +267,19 @@ def sequence_spans(
     if seq_len <= 0:
         raise ValueError(f"sequence_spans: seq_len must be positive, got {seq_len}")
     tok = F.col(tokens) if isinstance(tokens, str) else tokens
-    # two-pass exclusive prefix sum (the pack_by_budget shape —
-    # partition-LOCAL windows only, tiny broadcast offsets table)
-    parts = df.select(
-        F.col(id_col), F.col(order), tok.cast("long").alias("__n")
-    ).where(F.col("__n") > 0)
-    parts = parts.repartitionByRange(F.col(order)).withColumn(
-        "__pid", F.spark_partition_id()
+    keep = list(dict.fromkeys((id_col, order)))  # id_col may be the order
+    parts = df.select(*keep, tok.cast("long").alias("__n")).where(F.col("__n") > 0)
+    sums = running_sums(parts, order=[F.col(order)], weight=F.col("__n"))
+    staged = sums.select(
+        *keep, "__n", (F.col("__excl") + F.lit(int(base_offset))).alias("__doc_off")
     )
-    w_local = Window.partitionBy("__pid").orderBy(order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    local = parts.withColumn("__cum_local", F.sum("__n").over(w_local))
-    totals = local.groupBy("__pid").agg(F.sum("__n").alias("__tot"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.withColumn(
-        "__off", F.coalesce(F.sum("__tot").over(w_off), F.lit(0))
-    ).select("__pid", "__off")
-    joined = local.join(F.broadcast(offsets), "__pid")
-    off = (
-        F.col("__off") + F.col("__cum_local") - F.col("__n")
-        + F.lit(int(base_offset))
-    ).alias("__doc_off")
-    staged = joined.select(id_col, order, "__n", off)
     # explode one span per crossed sequence: sequences floor(off/L) ..
     # floor((off+n-1)/L); F.sequence is ascending here (lo ≤ hi always,
     # since n ≥ 1)
     lo = F.floor(F.col("__doc_off") / seq_len).cast("long")
     hi = F.floor((F.col("__doc_off") + F.col("__n") - 1) / seq_len).cast("long")
     spans = staged.select(
-        id_col,
-        order,
+        *keep,
         "__n",
         "__doc_off",
         F.explode(F.sequence(lo, hi)).alias("seq_id"),

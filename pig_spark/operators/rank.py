@@ -4,23 +4,18 @@ POCounter.java).
 Pig's RANK prepends a 1-based rank column:
 
 - ``RANK rel`` (no BY): a *global contiguous row number* in input
-  order. Pig runs a two-pass plan — per-task counters, then a
-  cumulative-offset pass (POCounter → PORank). We reproduce exactly
-  that distributed scheme: per-partition row numbers + a tiny
-  per-partition-count offset table (broadcast), never a single-
-  partition global window.
+  order — Pig's two-pass plan (per-task counters, then a
+  cumulative-offset pass), which is exactly
+  :func:`~pig_spark.operators.prefix.running_sums` with unit weights.
 - ``RANK rel BY cols [DESC] [DENSE]``: SQL rank()/dense_rank() by the
   sort key. A naive ``Window.orderBy`` without partitioning drags the
   whole relation to one task; instead:
 
   1. aggregate per distinct key (one distributed shuffle);
-  2. range-partition the key domain by the sort order and compute
-     per-partition cumulative row/key counts (windows partitioned by
-     range-partition id — distributed);
-  3. cumulative offsets across partitions come from a per-partition
-     totals table (≤ shuffle-partition-count rows — the only
-     single-partition step, bounded by cluster config not data);
-  4. join ranks back on the key (Catalyst/AQE picks broadcast when
+  2. running sums over the key domain in sort order — rows per key
+     for RANK, one per key for DENSE; a key's rank is the sum before
+     it plus one;
+  3. join ranks back on the key (Catalyst/AQE picks broadcast when
      the key domain is small, sort-merge when it isn't).
 
   This is POCounter/PORank's two-pass scheme applied to the key
@@ -35,32 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _global_row_number(df: DataFrame, name: str) -> DataFrame:
-    """zipWithIndex-equivalent without leaving DataFrames (POCounter)."""
-    df = df.withColumn("__pid", F.spark_partition_id()).withColumn("__mid", F.monotonically_increasing_id())
-    counts = df.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    w = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn("__off", F.coalesce(F.sum("__cnt").over(w), F.lit(0))).select("__pid", "__off")
-    within = F.row_number().over(Window.partitionBy("__pid").orderBy("__mid"))
-    out = df.join(F.broadcast(offsets), "__pid").withColumn(name, (F.col("__off") + within).cast("long"))
-    return out.drop("__pid", "__mid", "__off")
-
-
-def _range_offsets(parted: DataFrame) -> DataFrame:
-    """(__rpid, __off_rows): cumulative row offsets per range
-    partition, computed from the UNSORTED exchange output (row counts
-    are order-invariant, so this subtree reuses the range exchange
-    without paying the local sort the ranked side needs). ≤ shuffle-
-    partition-count rows — the only single-partition window, bounded
-    by cluster config, not data."""
-    totals = parted.groupBy(F.spark_partition_id().alias("__rpid")).agg(
-        F.count(F.lit(1)).alias("__rows")
-    )
-    w_off = Window.orderBy("__rpid").rowsBetween(Window.unboundedPreceding, -1)
-    return totals.select(
-        "__rpid", F.coalesce(F.sum("__rows").over(w_off), F.lit(0)).alias("__off_rows")
-    )
+from .prefix import running_sums
 
 
 def rank(
@@ -75,113 +45,42 @@ def rank(
     unique PER ROW (e.g. an id column is part of the key). Then
     rank == dense_rank == the row's position in total key order, and
     the key-domain aggregate + join-back of the generic scheme are
-    pure overhead: the fast path range-partitions the rows themselves
-    and ranks with local row numbers + the tiny offsets table — two
-    full exchanges and a sort-merge join fewer (r12, guide §2.4),
-    bit-identical rank values. A caller passing non-unique keys here
+    pure overhead: the rows themselves are numbered in key order —
+    two full exchanges and a sort-merge join fewer (r12, guide §2.4),
+    identical rank values. A caller passing non-unique keys here
     would silently get row numbers instead of ranks — only opt in
-    where uniqueness holds by construction."""
+    where uniqueness holds by construction
+    (``SPARK_GRAFT_DEBUG_ASSERTS=1`` checks it)."""
     if not by:
-        return _global_row_number(df, name)
-
-    key_names = [f"__rk{i}" for i in range(len(by))]
+        return running_sums(df).select(F.col("__incl").alias(name), *df.columns)
     if isinstance(ascending, bool):
         ascending = [ascending] * len(by)
+    key_names = [f"__rk{i}" for i in range(len(by))]
     tagged = df.select(F.struct(*[c.alias(k) for c, k in zip(by, key_names)]).alias("__key"), "*")
+    order = [
+        F.col(f"__key.{k}").asc_nulls_first() if a else F.col(f"__key.{k}").desc_nulls_last()
+        for k, a in zip(key_names, ascending)
+    ]
 
     if unique_keys:
-        order = [
-            F.col(f"__key.{k}").asc_nulls_first() if a else F.col(f"__key.{k}").desc_nulls_last()
-            for k, a in zip(key_names, ascending)
-        ]
-        parted = tagged.repartitionByRange(*order)
+        rank_col = F.col("__incl")
         if os.environ.get("SPARK_GRAFT_DEBUG_ASSERTS") == "1":
-            # opt-in uniqueness validation (ADVICE r12): a caller
-            # violating the unique_keys contract silently gets row
-            # numbers, so under SPARK_GRAFT_DEBUG_ASSERTS=1 every row
-            # checks that its predecessor in key order carries a
-            # DIFFERENT key (equal keys are adjacent within a range
-            # partition, and equal keys always land in the same range
-            # partition, so adjacency covers every duplicate).
-            # assert_true yields NULL when the guard holds; it is
-            # folded into the rank sum (+0) so column pruning cannot
-            # remove it. This branch keeps the window lowering (lag
-            # needs one anyway); the default path below never builds
-            # a window — zero plan change when the flag is off.
-            kc = parted.sortWithinPartitions(*order).withColumn(
-                "__rpid", F.spark_partition_id()
-            )
-            local_rn = F.row_number().over(Window.partitionBy("__rpid").orderBy(*order))
-            prev_key = F.lag("__key").over(Window.partitionBy("__rpid").orderBy(*order))
+            # opt-in uniqueness validation (ADVICE r12): assert_true
+            # yields NULL when the guard holds; it is folded into the
+            # rank (+0) so column pruning cannot remove it
             guard = F.assert_true(
-                prev_key.isNull() | (prev_key != F.col("__key")),
+                F.count(F.lit(1)).over(Window.partitionBy("__key")) == 1,
                 F.lit("rank(unique_keys=True): duplicate sort key"),
             )
-            local_rn = local_rn + F.coalesce(guard.cast("int"), F.lit(0))
-            out = kc.join(F.broadcast(_range_offsets(parted)), "__rpid").withColumn(
-                name, (F.col("__off_rows") + local_rn).cast("long")
-            )
-            return out.select(name, *df.columns)
-        # r13: the r12 lowering computed the local row number with a
-        # window PARTITIONED BY __rpid — Catalyst cannot know that
-        # __rpid (= spark_partition_id) already matches the physical
-        # layout, so the window re-exchanged AND re-sorted the whole
-        # relation by hash(__rpid). Instead, evaluate
-        # monotonically_increasing_id ABOVE the local sort: its
-        # documented layout is partition_id·2³³ + index-within-
-        # partition with consecutive indexes, so the low 33 bits ARE
-        # the local row number in sorted order (both expressions are
-        # non-deterministic, which pins the projection above the Sort).
-        # One data-sized exchange total (the range partitioning); rank
-        # values are bit-identical (offset + local position is
-        # invariant to how the position is computed). q142 plan: 3
-        # data-sized exchanges → 1; in-session A/B q142 full 4.37 →
-        # ~3.5 s class (see OPTIMIZATION_r13.md).
-        kc = parted.sortWithinPartitions(*order).select(
-            "*",
-            F.spark_partition_id().alias("__rpid"),
-            (F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)) + 1).alias(
-                "__lrn"
-            ),
-        )
-        out = kc.join(F.broadcast(_range_offsets(parted)), "__rpid").withColumn(
-            name, (F.col("__off_rows") + F.col("__lrn")).cast("long")
-        )
-        return out.select(name, *df.columns)
+            rank_col = rank_col + F.coalesce(guard.cast("long"), F.lit(0))
+        return running_sums(tagged, order=order).select(rank_col.alias(name), *df.columns)
 
     # 1. distinct-key domain with per-key row counts (one shuffle)
     key_counts = tagged.groupBy("__key").agg(F.count(F.lit(1)).alias("__cnt"))
-    order = [F.col(f"__key.{k}").asc_nulls_first() if a else F.col(f"__key.{k}").desc_nulls_last() for k, a in zip(key_names, ascending)]
-
-    # 2. range-partition the key domain in sort order; per-partition
-    #    cumulative counts are distributed windows over __rpid
-    kc = (
-        key_counts.repartitionByRange(*order)
-        .sortWithinPartitions(*order)
-        .withColumn("__rpid", F.spark_partition_id())
-    )
-    w_prev = Window.partitionBy("__rpid").orderBy(*order).rowsBetween(Window.unboundedPreceding, -1)
-    local_prev_rows = F.coalesce(F.sum("__cnt").over(w_prev), F.lit(0))
-    local_prev_keys = F.row_number().over(Window.partitionBy("__rpid").orderBy(*order)) - 1
-
-    # 3. cross-partition offsets from the tiny totals table
-    totals = kc.groupBy("__rpid").agg(
-        F.sum("__cnt").alias("__rows"), F.count(F.lit(1)).alias("__keys")
-    )
-    w_off = Window.orderBy("__rpid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__rpid",
-        F.coalesce(F.sum("__rows").over(w_off), F.lit(0)).alias("__off_rows"),
-        F.coalesce(F.sum("__keys").over(w_off), F.lit(0)).alias("__off_keys"),
-    )
-    ranked_keys = kc.join(F.broadcast(offsets), "__rpid")
-    if dense:
-        rank_col = (F.col("__off_keys") + local_prev_keys + 1).cast("long")
-    else:
-        rank_col = (F.col("__off_rows") + local_prev_rows + 1).cast("long")
-    ranks = ranked_keys.withColumn(name, rank_col).select("__key", name)
-
-    # 4. join back on the key — no forced broadcast: AQE broadcasts a
+    # 2. rank = rows (RANK) or keys (DENSE) strictly before the key, + 1
+    sums = running_sums(key_counts, order=order, weight=None if dense else F.col("__cnt"))
+    ranks = sums.select("__key", (F.col("__excl") + 1).alias(name))
+    # 3. join back on the key — no forced broadcast: AQE broadcasts a
     #    small key domain and falls back to SMJ for huge ones.
     out = tagged.join(ranks, "__key").drop("__key")
     return out.select(name, *df.columns)

@@ -42,10 +42,10 @@ def executed_plan_string(df: DataFrame) -> str:
 
 
 # order columns whose domain is bounded by the partition count — the
-# two-pass rank machinery's per-partition totals tables (operators/
-# rank.py). An unpartitioned window over these sorts ≤ #partitions
+# per-partition totals table of the two-pass running sums (operators/
+# prefix.py). An unpartitioned window over these sorts ≤ #partitions
 # rows; over anything else it sorts the DATA in one task.
-_BOUNDED_ORDER_COLS = {"__pid", "__rpid"}
+_BOUNDED_ORDER_COLS = {"__pid"}
 
 
 def unpartitioned_windows(plan: str, allow_order_cols: set[str] = _BOUNDED_ORDER_COLS) -> list[str]:

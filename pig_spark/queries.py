@@ -3431,8 +3431,9 @@ def q142_perplexity_partition(spark: SparkSession, sf: str) -> DataFrame:
     per-doc scores are then localCheckpointed ONCE (doc-count rows ×
     ~40 bytes — the fan-out idiom, the table has two consumers:
     rank + total count) and ranked with the POCounter/PORank
-    two-pass scheme (`operators/rank.rank`): key-domain aggregate,
-    range-partitioned per-partition windows, tiny offsets table —
+    two-pass scheme (`operators/rank.rank` over
+    `operators/prefix.running_sums`): range partition, rows stored
+    once with their positions, tiny offsets table —
     NO global-order window (a bare `row_number over (order by
     score)` is a single unsplittable partition, the r8/r9 skew
     rule). The tercile split itself is a 1-row count broadcast +
@@ -3454,8 +3455,7 @@ def q142_perplexity_partition(spark: SparkSession, sf: str) -> DataFrame:
         name="rk",
         # (avg_logp, doc_id) is unique per row — rank == row number,
         # so the key-domain aggregate + join-back are pure overhead
-        # (r12: 3.46 → 3.13 s in-session, two exchanges + an SMJ
-        # fewer; see operators/rank.py)
+        # (r12: 3.46 → 3.13 s in-session; see operators/rank.py)
         unique_keys=True,
     )
     n = scored.agg(F.count(F.lit(1)).alias("__n"))
@@ -3799,10 +3799,11 @@ def q149_balanced_shards(spark: SparkSession, sf: str) -> DataFrame:
     every document on any cluster.
 
     100 TB design: pass 1 is ONE partial-aggregated manifest total
-    (1-row broadcast); pass 2's prefix sum is the pack_by_budget
-    two-pass scheme — range-partition by the md5 key, partition-LOCAL
-    cumulative windows (partition-sized, never corpus-sized), and a
-    tiny per-partition offsets table broadcast back. No global-order
+    (1-row broadcast); pass 2's prefix sum is
+    operators/prefix.running_sums — range-partition by the md5 key,
+    partition-LOCAL cumulative windows (partition-sized, never
+    corpus-sized), and a tiny per-partition offsets table broadcast
+    back. No global-order
     window anywhere (plan-pinned)."""
     from pyspark.sql import functions as F
 
@@ -4241,9 +4242,9 @@ def q158_sequence_manifest(spark: SparkSession, sf: str) -> DataFrame:
     training loader consumes; the text gather downstream is one
     equi-join on doc_id.
 
-    100 TB design: ONE two-pass distributed prefix sum (the
-    pack_by_budget scheme — partition-LOCAL windows, tiny broadcast
-    offsets, no data-sized window partition) + a spans-sized explode
+    100 TB design: ONE two-pass distributed prefix sum
+    (operators/prefix.running_sums — partition-LOCAL windows, tiny
+    broadcast offsets, no data-sized window partition) + a spans-sized explode
     in the same map stage. Everything after the offset join is pure
     integer codegen, and the DuckDB twin reproduces it exactly —
     no floats anywhere."""
@@ -4303,9 +4304,9 @@ def q160_epoch_shuffle(spark: SparkSession, sf: str) -> DataFrame:
 
     100 TB design: the manifest is sequences-sized (corpus/L); the
     3-epoch fan-out is a map-only explode; the position comes from
-    the engine's distributed two-pass RANK (operators/rank — the
-    POCounter/PORank shape: range-partition the key domain,
-    partition-local windows, tiny offsets table), NEVER a
+    the engine's distributed two-pass RANK (operators/rank over
+    operators/prefix.running_sums — range partition, positions
+    stored once, tiny offsets table), NEVER a
     single-partition row_number window."""
     from .functions.dedup import md5_60
     from .functions.text import tokenize_ws
@@ -4332,9 +4333,9 @@ def q160_epoch_shuffle(spark: SparkSession, sf: str) -> DataFrame:
         md5_60(F.concat(F.col("seq_id").cast("string"),
                         F.lit(":epoch:"), F.col("epoch").cast("string"))),
     )
-    # the two-pass rank consumes its input twice (key domain + join
-    # back); checkpoint the SEQUENCES-sized manifest so the prefix-sum
-    # lineage underneath runs once (the q142 localCheckpoint pattern —
+    # checkpoint the SEQUENCES-sized manifest so the sequence_spans
+    # lineage underneath runs once before the rank's range sampling
+    # and partitioning read it (the q142 localCheckpoint pattern —
     # epochs × corpus/L rows, never corpus-sized)
     keyed = keyed.localCheckpoint(eager=True)
     ranked = rank(
@@ -4480,11 +4481,10 @@ def q163_loader_batches(spark: SparkSession, sf: str) -> DataFrame:
     exception class (q37's global-ntile idiom), never a data-sized
     window; batching itself is map-only integer codegen. The q160
     subtree has two consumers (the epoch-size aggregate and the batch
-    projection) but needs NO materialization: both sides aggregate
-    after the same exchanges, so ReusedExchange dedupes the pipeline
-    at runtime (r12: a localCheckpoint here measured ~10% SLOWER
-    in-session — the eager job is pure overhead when reuse already
-    applies)."""
+    projection) but needs NO materialization of its own: the rank's
+    running sums already store the ranked rows once, so both
+    consumers read the same positions (r12: a localCheckpoint here
+    measured ~10% SLOWER in-session)."""
     df = q160_epoch_shuffle(spark, sf)
     n = df.where(F.col("epoch") == 0).agg(F.count(F.lit(1)).alias("__n"))
     b = df.crossJoin(F.broadcast(n))

@@ -74,12 +74,13 @@ def test_rank_unique_keys_fast_path_matches_generic(spark):
 
 
 def test_rank_unique_keys_no_data_window(spark):
-    """r13: the default unique-keys lowering computes local row numbers
-    from monotonically_increasing_id above the range sort — NO window
-    over the data (the r12 window re-exchanged and re-sorted the whole
-    relation by hash(__rpid)). The only Window left is the offsets
-    cumulative sum over ≤ shuffle-partition-count rows; the only
-    data-sized exchange is the range partitioning itself."""
+    """The unique-keys lowering reads each row's local row number from
+    the position bits of the once-materialized layout (operators/
+    prefix.running_sums) — NO window over the data. The only Window
+    is the offsets cumulative sum over the ≤ partition-count totals
+    table; the partition id is derived from the stored position, never
+    from spark_partition_id() (which two plan branches can disagree
+    on)."""
     rows = [Row(id=i, v=float((i * 37) % 101)) for i in range(100)]
     df = spark.createDataFrame(rows).repartition(5)
     plan = (
@@ -89,12 +90,13 @@ def test_rank_unique_keys_no_data_window(spark):
         .toString()
     )
     # the only window left is the offsets cumulative sum over the tiny
-    # per-partition totals table (ordered by __rpid); the data never
+    # per-partition totals table (ordered by __pid); the data never
     # passes through row_number
     assert "row_number" not in plan, plan
-    assert "monotonically_increasing_id" in plan, plan
+    assert "spark_partition_id" not in plan, plan
+    assert "LogicalRDD" in plan and "__pos" in plan, plan
     assert plan.count("windowspecdefinition") == 1, plan
-    assert "windowspecdefinition(__rpid" in plan, plan
+    assert "windowspecdefinition(__pid" in plan, plan
 
 
 def test_rank_unique_keys_debug_assert(spark, monkeypatch):

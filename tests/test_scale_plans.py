@@ -47,7 +47,7 @@ def test_rank_has_no_global_single_partition_window(spark, sf_dir):
     df = q17_rank_by(spark, sf_dir)
     # the full-row relation must not pass through a Window with no
     # partition spec; the only unpartitioned windows allowed run over
-    # the per-partition totals tables (order cols __pid/__rpid,
+    # the per-partition totals tables (order col __pid,
     # bounded by partition count — the shape whitelist in plans).
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     assert not unpartitioned_windows(opt), unpartitioned_windows(opt)
@@ -161,7 +161,7 @@ def test_catalog_plan_audit(spark, sf_dir):
                     bad.append(f"{name}: non-broadcast cartesian join")
         # no data-sized single-partition window anywhere (VERDICT r4
         # #5 — generalizes the q37 pin; bounded totals-table windows
-        # over __pid/__rpid are whitelisted by shape, not by name)
+        # over __pid are whitelisted by shape, not by name)
         for w in unpartitioned_windows(s):
             bad.append(f"{name}: unpartitioned window {w}")
     assert not bad, "\n".join(bad)
@@ -509,6 +509,31 @@ def test_corpus_checkpoint_guard(spark, sf_dir, monkeypatch):
         assert {tuple(r) for r in lazy137.collect()} == base137
     finally:
         spark.catalog.clearCache()
+
+
+def test_ckpt_if_small_disk_only_branch(spark, sf_dir, monkeypatch):
+    """_ckpt_if_small's two branches on real data: under the threshold
+    a localCheckpoint (no cache entry, lineage cut), above it a
+    DISK_ONLY persist — and both yield the same rows."""
+    from pyspark import StorageLevel
+
+    from pig_spark.queries import _ckpt_if_small
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "source", F.length("text").alias("n_chars")
+    )
+    ckpt = _ckpt_if_small(docs)
+    assert ckpt.storageLevel == StorageLevel.NONE
+    assert "LogicalRDD" in ckpt._jdf.queryExecution().optimizedPlan().toString()
+    monkeypatch.setenv("SPARK_GRAFT_CKPT_MAX_BYTES", "1")
+    disk = _ckpt_if_small(docs)
+    try:
+        assert disk.storageLevel == StorageLevel.DISK_ONLY
+        rows = disk.collect()
+        assert len(rows) > 0
+        assert sorted(rows) == sorted(ckpt.collect())
+    finally:
+        disk.unpersist()
 
 
 def test_dsir_plan(spark, sf_dir):

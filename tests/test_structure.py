@@ -138,3 +138,19 @@ def test_freshness_green_row_definition():
     assert is_green({"rows_match": True, "hash_match": None})
     # and a hash mismatch is red even when row counts agree
     assert not is_green({"rows_match": True, "hash_match": False})
+
+
+def test_partition_id_only_in_running_sums():
+    """Partition ids must come from ONE evaluation of the layout:
+    ``spark_partition_id()`` re-evaluated in two branches of a plan
+    names different rows once AQE coalesces each branch's exchange
+    read on its own. Only the running-sums primitive may touch it."""
+    allowed = {PKG / "operators" / "prefix.py"}
+    offenders = [
+        f"{path.relative_to(REPO)}:{i}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path not in allowed
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "spark_partition_id(" in line
+    ]
+    assert not offenders, "spark_partition_id( outside operators/prefix.py:\n" + "\n".join(offenders)
