@@ -20,7 +20,11 @@ first-occurrence rule applied to prefix sums). The running sums
 range-partition by (shard, order), sum within partitions and add
 cross-partition offsets from a tiny per-(shard, partition) totals
 table; ``tests/test_prefix_sums.py`` compares each packer with the
-single-window formulation on 200k rows.
+single-window formulation on 200k rows. The running sums store their
+input once, so building a packed frame runs the input's shuffle
+stages as a job and the stored rows stay in executor storage until
+the plan is collected (:mod:`~pig_spark.operators.prefix`);
+``sequence_spans`` stores only (id, order, token count).
 
 Strict caps, when required, run per-bucket afterwards — each coarse
 bucket is budget-bounded, so :func:`pack_strict` re-packs it
@@ -74,9 +78,9 @@ def balanced_shards(
     greedy follow-up to :func:`shard_assign` (whose mod-N deal
     balances row COUNTS, not byte/token totals). Two passes:
 
-    1. the manifest aggregate: one corpus scan → the total token count
-       (a 1-row broadcast), so shard i's quota boundary sits at
-       ``i * total / n_shards``;
+    1. the manifest aggregate: the total token count (a 1-row
+       broadcast, the largest running sum), so shard i's quota
+       boundary sits at ``i * total / n_shards``;
     2. deterministic range assignment: rows ordered by the
        deterministic ``order`` key (md5-60 of the row key — the
        shard_assign retry-stability contract: no RNG, no partition-
@@ -99,8 +103,10 @@ def balanced_shards(
     if n_shards <= 0:
         raise ValueError(f"n_shards must be positive, got {n_shards}")
     tok = F.col(tokens) if isinstance(tokens, str) else tokens
-    grand = df.agg(F.sum(tok).alias("__total"))
     sums = running_sums(df, order=[F.col(order)], weight=tok)
+    # token counts are ≥ 0, so the largest inclusive sum is the total —
+    # read from the stored rows, without running the input again
+    grand = sums.agg(F.max("__incl").alias("__total"))
     return sums.crossJoin(F.broadcast(grand)).withColumn(
         shard_name,
         F.least(

@@ -27,9 +27,25 @@ Scale shape: no window over data-sized input without a partition key.
 The local running sum partitions by (group, partition id) — bounded by
 partition size; unit weights without a group skip that window and read
 the position bits directly. Cross-partition offsets come from a totals
-table of ≤ groups × partitions rows, broadcast back. A local checkpoint
-is not fault tolerant: a lost block fails the job instead of being
-recomputed with a different layout.
+table of ≤ groups × partitions rows, broadcast back.
+
+Costs of the stored layout:
+
+- Building the frame runs a job. ``localCheckpoint(eager=False)`` only
+  defers the last stage: under AQE every shuffle stage of the input
+  (its own exchanges, and the range exchange with its bounds sample
+  when an order is given) runs while the frame is BUILT — in DSL
+  construction, Latin translation and ``explain`` too
+  (``tests/test_prefix_sums.py`` pins the job count).
+- The stored blocks hold every column of the input rows in executor
+  memory, spilling to disk. They are freed when the JVM collects the
+  plan (Spark's ContextCleaner) or by :func:`release`, for a caller
+  that owns the frame and is done with it (a streaming micro-batch).
+- A local checkpoint is not fault tolerant: a lost block fails the job
+  instead of being recomputed with a different layout.
+- Plans built on the result show the input only as a ``LogicalRDD``
+  leaf; plan audits must read the stored frame as well
+  (``tests/conftest.py`` ``checkpointed``).
 """
 
 from __future__ import annotations
@@ -94,3 +110,14 @@ def running_sums(
         [staged[c].eqNullSafe(offsets[f"__o{i}"]) for i, c in enumerate(part)],
     ).withColumn("__incl", F.col("__off") + local)
     return joined.select(*cols, (F.col("__incl") - F.col("__w")).alias("__excl"), "__incl")
+
+
+def release(df: DataFrame) -> None:
+    """Free the rows :func:`running_sums` stored under ``df`` — for a
+    caller that owns ``df`` and has finished with it; ``df`` cannot be
+    evaluated afterwards."""
+    leaves = df._jdf.queryExecution().logical().collectLeaves()  # noqa: SLF001
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD" and "__pos" in list(leaf.schema().fieldNames()):
+            leaf.rdd().unpersist(False)

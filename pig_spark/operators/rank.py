@@ -20,6 +20,12 @@ Pig's RANK prepends a 1-based rank column:
 
   This is POCounter/PORank's two-pass scheme applied to the key
   domain — no single-partition pass over data-sized input anywhere.
+
+Like Pig's counter pass, the running sums store their input once (see
+:mod:`~pig_spark.operators.prefix`): building a ranked frame runs the
+input's shuffle stages as a job, and the stored rows — the whole
+relation without BY or with ``unique_keys``, the distinct-key domain
+otherwise — stay in executor storage until the plan is collected.
 """
 
 from __future__ import annotations

@@ -835,6 +835,7 @@ def write_sequence_manifest_stream(
     layout when the loader wants pruned reads); the appended files
     partition naturally by arrival."""
     from ..operators.packing import sequence_spans
+    from ..operators.prefix import release
 
     manifest = f"{path}/manifest"
 
@@ -870,9 +871,12 @@ def write_sequence_manifest_stream(
             batch, tokens_col, seq_len, order=id_col, id_col=id_col,
             base_offset=offset,
         )
-        spans.withColumn("__epoch", F.lit(sig)).write.mode(
-            "append"
-        ).parquet(manifest)
+        try:
+            spans.withColumn("__epoch", F.lit(sig)).write.mode(
+                "append"
+            ).parquet(manifest)
+        finally:
+            release(spans)  # the batch's stored running sums
 
     return (
         doc_stream.writeStream.foreachBatch(_append_once)
@@ -929,6 +933,7 @@ def write_sequence_store_stream(
     side table is read filtered by the gather join's keys — compact
     it on the loader's cadence."""
     from ..operators.packing import gather_sequences, sequence_spans
+    from ..operators.prefix import release
 
     manifest = f"{path}/manifest"
     docs_p = f"{path}/docs"
@@ -1011,13 +1016,16 @@ def write_sequence_store_stream(
         )
         # r12 (guide §6): one file per touched block per batch — see
         # write_ann_index_stream's layout note
-        spans.withColumn("part", F.floor(F.col("seq_id") / block)).withColumn(
-            "__epoch", F.lit(sig)
-        ).repartition("part").write.option(
-            "maxRecordsPerFile", 8_000_000
-        ).mode("append").partitionBy(
-            "part"
-        ).parquet(manifest)
+        try:
+            spans.withColumn("part", F.floor(F.col("seq_id") / block)).withColumn(
+                "__epoch", F.lit(sig)
+            ).repartition("part").write.option(
+                "maxRecordsPerFile", 8_000_000
+            ).mode("append").partitionBy(
+                "part"
+            ).parquet(manifest)
+        finally:
+            release(spans)  # the batch's stored running sums
         _finalize(spark, fs, jvm, (offset + int(stats["t"])) // seq_len)
 
     return (

@@ -19,3 +19,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def checkpointed(monkeypatch):
+    """Every frame a local checkpoint stores while the test runs.
+
+    A checkpoint replaces its input's plan with a ``LogicalRDD`` leaf,
+    so a pin that reads only the final plan cannot see what runs below
+    it — RANK and packing store their input this way
+    (operators/prefix.running_sums). Pins assert on these frames too."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    seen: list = []
+    real = DataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        seen.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    return seen

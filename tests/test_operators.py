@@ -73,7 +73,7 @@ def test_rank_unique_keys_fast_path_matches_generic(spark):
         assert sorted(rk for _, rk in fast) == list(range(1, 501))
 
 
-def test_rank_unique_keys_no_data_window(spark):
+def test_rank_unique_keys_no_data_window(spark, checkpointed):
     """The unique-keys lowering reads each row's local row number from
     the position bits of the once-materialized layout (operators/
     prefix.running_sums) — NO window over the data. The only Window
@@ -97,6 +97,13 @@ def test_rank_unique_keys_no_data_window(spark):
     assert "LogicalRDD" in plan and "__pos" in plan, plan
     assert plan.count("windowspecdefinition") == 1, plan
     assert "windowspecdefinition(__pid" in plan, plan
+    # the stored layout below the LogicalRDD: the range partitioning and
+    # the position column over the input, no window
+    (stored,) = checkpointed
+    splan = stored._jdf.queryExecution().optimizedPlan().toString()
+    assert splan.count("RepartitionByExpression") == 1, splan
+    assert "monotonically_increasing_id" in splan, splan
+    assert "windowspecdefinition" not in splan, splan
 
 
 def test_rank_unique_keys_debug_assert(spark, monkeypatch):

@@ -174,3 +174,55 @@ def test_relation_and_latin_rank_return_every_row_once(wide, docs, grouped, tmp_
     by = _pd(rels["rb"].df, ["k", "rank_f"])
     assert by["k"].tolist() == list(range(N))
     assert sorted(set(by["rank_f"])) == list(range(1, 1001))
+
+
+def _stored_rdd_ids(df):
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    return {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).nodeName() == "LogicalRDD"
+    }
+
+
+def test_building_a_rank_runs_the_input_shuffle_stages(wide):
+    """The stored layout is built with the frame, not with its first
+    action: every shuffle stage below the stored rows runs as a job
+    while the ranked frame is BUILT (the final stage stays lazy)."""
+    from pig_spark.operators.prefix import release
+
+    sc = wide.sparkContext
+    scan = wide.range(0, 2000, 1, numPartitions=4).select(
+        F.col("id").alias("k"), (F.col("id") % 97).alias("v")
+    )
+    grouped_small = scan.groupBy("v").agg(F.count(F.lit(1)).alias("n"))
+
+    def build_jobs(label, build):
+        sc.setJobGroup(label, label)
+        try:
+            built = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        release(built)
+        return len(sc.statusTracker().getJobIdsForGroup(label))
+
+    # scan input, no order: nothing below the stored rows to run
+    assert build_jobs("rank_scan", lambda: rank(scan, by=[])) == 0
+    # the input's own shuffle (the GROUP)
+    assert build_jobs("rank_grouped", lambda: rank(grouped_small, by=[])) == 1
+    # range bounds sample + range shuffle
+    assert build_jobs("rank_unique", lambda: rank(scan, by=[F.col("k")], unique_keys=True)) == 2
+    # key-domain aggregate + range bounds sample + range shuffle
+    assert build_jobs("rank_by", lambda: rank(scan, by=[F.col("v")])) == 3
+
+
+def test_release_frees_the_stored_rows(wide):
+    from pig_spark.operators.prefix import release
+
+    jsc = wide.sparkContext._jsc
+    out = pack_by_budget(wide.range(0, 1000, 1, numPartitions=4), F.lit(3), 100, order="id")
+    (stored,) = _stored_rdd_ids(out)
+    assert out.count() == 1000
+    assert jsc.getPersistentRDDs().containsKey(stored)
+    release(out)
+    assert not jsc.getPersistentRDDs().containsKey(stored)

@@ -14,6 +14,27 @@ def lineitem(spark, sf_dir):
     return Relation.load(spark, f"{sf_dir}/lineitem.parquet")
 
 
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _assert_scale_safe(df, checkpointed) -> None:
+    """No unpartitioned window over data, no Python UDF and no
+    cartesian product in ``df`` — nor in any frame a local checkpoint
+    stored while ``df`` was built. RANK and packing store their input
+    (operators/prefix.running_sums), so the upstream of a rank or pack
+    shows in the final plan only as a LogicalRDD leaf."""
+    for f in [df, *checkpointed]:
+        opt, phys = _optimized(f), _executed(f)
+        assert not unpartitioned_windows(opt), unpartitioned_windows(opt)
+        assert "PythonUDF" not in phys and "EvalPython" not in phys, phys
+        assert "CartesianProduct" not in phys, phys
+
+
 def test_filter_pushdown_reaches_scan(lineitem):
     df = lineitem.filter(F.col("l_quantity") > 30).foreach("l_orderkey").df
     facts = lint_plan(df)
@@ -40,21 +61,23 @@ def test_no_python_in_builtin_pipeline(spark, sf_dir):
         assert not lint_plan(df)["python_udfs"], f"{q.__name__} uses Python UDFs"
 
 
-def test_rank_has_no_global_single_partition_window(spark, sf_dir):
+def test_rank_has_no_global_single_partition_window(spark, sf_dir, checkpointed):
     """rank BY must window over the distinct-key domain, not all rows."""
     from pig_spark.queries import q17_rank_by
 
     df = q17_rank_by(spark, sf_dir)
     # the full-row relation must not pass through a Window with no
-    # partition spec; the only unpartitioned windows allowed run over
-    # the per-partition totals tables (order col __pid,
-    # bounded by partition count — the shape whitelist in plans).
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
-    assert not unpartitioned_windows(opt), unpartitioned_windows(opt)
+    # partition spec — neither in the query nor upstream of the stored
+    # key domain; the only unpartitioned windows allowed run over the
+    # per-partition totals tables (order col __pid, bounded by
+    # partition count — the shape whitelist in plans).
+    assert checkpointed
+    for opt in map(_optimized, [df, *checkpointed]):
+        assert not unpartitioned_windows(opt), unpartitioned_windows(opt)
     assert lint_plan(df)["broadcast_joins"] >= 1  # rank joined back broadcast
 
 
-def test_ntile_has_no_data_sized_global_window(spark, sf_dir):
+def test_ntile_has_no_data_sized_global_window(spark, sf_dir, checkpointed):
     """q37 derives ntile/percent_rank/cume_dist from the distributed
     two-pass rank + a broadcast count scalar. The full customer table
     must never pass through an unpartitioned Window (the r3 verdict's
@@ -62,8 +85,11 @@ def test_ntile_has_no_data_sized_global_window(spark, sf_dir):
     exactly that single-partition sort."""
     from pig_spark.queries import q37_ntile_stats
 
-    s = q37_ntile_stats(spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
-    assert "windowspecdefinition(c_acctbal" not in s, s
+    df = q37_ntile_stats(spark, sf_dir)
+    assert checkpointed
+    for s in map(_optimized, [df, *checkpointed]):
+        assert "windowspecdefinition(c_acctbal" not in s, s
+        assert not unpartitioned_windows(s), unpartitioned_windows(s)
 
 
 def test_partial_aggregation_present(lineitem):
@@ -141,29 +167,33 @@ _CARTESIAN_OK = {
 }
 
 
-def test_catalog_plan_audit(spark, sf_dir):
+def test_catalog_plan_audit(spark, sf_dir, checkpointed):
     from pig_spark.queries import QUERIES
 
     bad: list[str] = []
     for name, fn in QUERIES.items():
+        checkpointed.clear()
         df = fn(spark, sf_dir)
-        s = df._jdf.queryExecution().optimizedPlan().toString()
-        if name not in _PYTHON_OK and ("PythonUDF" in s or "BatchEvalPython" in s):
-            bad.append(f"{name}: python in plan")
-        if name not in _CARTESIAN_OK:
-            # per-join check: a cross join is fine ONLY when broadcast
-            # (1-row scalar/model joins carry the hint on the Join
-            # line itself — `rightHint=(strategy=broadcast)`; the old
-            # whole-plan "Broadcast" search missed the lowercase hint
-            # and could also be masked by an unrelated broadcast)
-            for line in s.splitlines():
-                if "Join Cross" in line and "broadcast" not in line.lower():
-                    bad.append(f"{name}: non-broadcast cartesian join")
-        # no data-sized single-partition window anywhere (VERDICT r4
-        # #5 — generalizes the q37 pin; bounded totals-table windows
-        # over __pid are whitelisted by shape, not by name)
-        for w in unpartitioned_windows(s):
-            bad.append(f"{name}: unpartitioned window {w}")
+        # the query's plan and every plan a local checkpoint cut out of
+        # it (RANK and packing store their input; the upstream runs
+        # there, behind a LogicalRDD leaf of the final plan)
+        for s in map(_optimized, [df, *checkpointed]):
+            if name not in _PYTHON_OK and ("PythonUDF" in s or "BatchEvalPython" in s):
+                bad.append(f"{name}: python in plan")
+            if name not in _CARTESIAN_OK:
+                # per-join check: a cross join is fine ONLY when broadcast
+                # (1-row scalar/model joins carry the hint on the Join
+                # line itself — `rightHint=(strategy=broadcast)`; the old
+                # whole-plan "Broadcast" search missed the lowercase hint
+                # and could also be masked by an unrelated broadcast)
+                for line in s.splitlines():
+                    if "Join Cross" in line and "broadcast" not in line.lower():
+                        bad.append(f"{name}: non-broadcast cartesian join")
+            # no data-sized single-partition window anywhere (VERDICT r4
+            # #5 — generalizes the q37 pin; bounded totals-table windows
+            # over __pid are whitelisted by shape, not by name)
+            for w in unpartitioned_windows(s):
+                bad.append(f"{name}: unpartitioned window {w}")
     assert not bad, "\n".join(bad)
 
 
@@ -590,7 +620,7 @@ def test_exact_substring_removal_plan(spark, sf_dir):
     assert "array_contains" not in phys.lower(), phys
 
 
-def test_perplexity_partition_plan(spark, sf_dir):
+def test_perplexity_partition_plan(spark, sf_dir, checkpointed):
     """q142 (CCNet tercile partition): the corpus-sized scored table
     must never pass through an unpartitioned Window — the tercile
     rank comes from the POCounter/PORank two-pass scheme (key-domain
@@ -600,11 +630,8 @@ def test_perplexity_partition_plan(spark, sf_dir):
     from pig_spark.queries import q142_perplexity_partition
 
     df = q142_perplexity_partition(spark, sf_dir)
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
-    assert not unpartitioned_windows(opt), unpartitioned_windows(opt)
-    phys = df._jdf.queryExecution().executedPlan().toString()
-    assert "PythonUDF" not in phys and "EvalPython" not in phys, phys
-    assert "CartesianProduct" not in phys, phys
+    _assert_scale_safe(df, checkpointed)
+    opt = _optimized(df)
     # the LM's score ordering never becomes a raw-relation window sort
     assert "windowspecdefinition(avg_logp" not in opt, opt
 
@@ -645,7 +672,7 @@ def test_c4_rules_plan_map_only(spark, sf_dir):
     assert "Window" not in p, p
 
 
-def test_balanced_shards_plan(spark, sf_dir):
+def test_balanced_shards_plan(spark, sf_dir, checkpointed):
     """q149 (token-balanced shard export): NO data-sized window — the
     prefix sum is the pack_by_budget two-pass scheme (local windows
     partition by __pid; the only unpartitioned windows run over the
@@ -654,11 +681,7 @@ def test_balanced_shards_plan(spark, sf_dir):
     from pig_spark.queries import q149_balanced_shards
 
     df = q149_balanced_shards(spark, sf_dir)
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
-    assert not unpartitioned_windows(opt), unpartitioned_windows(opt)
-    phys = df._jdf.queryExecution().executedPlan().toString()
-    assert "PythonUDF" not in phys and "EvalPython" not in phys, phys
-    assert "CartesianProduct" not in phys, phys
+    _assert_scale_safe(df, checkpointed)
 
 
 def test_incremental_substring_dedup_plan(spark, sf_dir):
@@ -831,7 +854,7 @@ def test_ann_index_roundtrip_matches_inmemory_probe(spark, sf_dir, tmp_path):
     assert stored == direct
 
 
-def test_sequence_manifest_plan(spark, sf_dir):
+def test_sequence_manifest_plan(spark, sf_dir, checkpointed):
     """q158 (fixed-length sequence assembly): the prefix sum is the
     pack_by_budget two-pass scheme (local windows partition by __pid;
     the only unpartitioned window runs over the tiny per-partition
@@ -840,30 +863,23 @@ def test_sequence_manifest_plan(spark, sf_dir):
     from pig_spark.queries import q158_sequence_manifest
 
     df = q158_sequence_manifest(spark, sf_dir)
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
-    assert not unpartitioned_windows(opt), unpartitioned_windows(opt)
-    phys = df._jdf.queryExecution().executedPlan().toString()
-    assert "PythonUDF" not in phys and "EvalPython" not in phys, phys
-    assert "CartesianProduct" not in phys, phys
+    _assert_scale_safe(df, checkpointed)
+    phys = _executed(df)
     assert "BroadcastHashJoin" in phys, phys
     assert "Generate explode" in phys or "Generate" in phys, phys
 
 
-def test_sequence_gather_plan(spark, sf_dir):
+def test_sequence_gather_plan(spark, sf_dir, checkpointed):
     """q159 (sequence gather): ONE doc_id equi-join + ONE seq_id
     groupBy whose in-group assembly is an array_sort over a ≤ L-token
     bag — no Window anywhere, no Python, no cartesian."""
     from pig_spark.queries import q159_sequence_gather
 
     df = q159_sequence_gather(spark, sf_dir)
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
-    assert not unpartitioned_windows(opt), unpartitioned_windows(opt)
-    phys = df._jdf.queryExecution().executedPlan().toString()
-    assert "PythonUDF" not in phys and "EvalPython" not in phys, phys
-    assert "CartesianProduct" not in phys, phys
+    _assert_scale_safe(df, checkpointed)
 
 
-def test_bpe_sequence_pack_plan(spark, sf_dir):
+def test_bpe_sequence_pack_plan(spark, sf_dir, checkpointed):
     """q161 (BPE-id sequence packing): the segmentation join's build
     side is the word-type dictionary — vocabulary-sized by
     construction, broadcast explicitly (the VERDICT r11 'stays
@@ -872,15 +888,12 @@ def test_bpe_sequence_pack_plan(spark, sf_dir):
     from pig_spark.queries import q161_bpe_sequence_pack
 
     df = q161_bpe_sequence_pack(spark, sf_dir)
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
-    assert not unpartitioned_windows(opt), unpartitioned_windows(opt)
-    phys = df._jdf.queryExecution().executedPlan().toString()
-    assert "PythonUDF" not in phys and "EvalPython" not in phys, phys
-    assert "CartesianProduct" not in phys, phys
+    _assert_scale_safe(df, checkpointed)
+    phys = _executed(df)
     assert "BroadcastHashJoin" in phys, phys
 
 
-def test_strict_pack_plan(spark, sf_dir):
+def test_strict_pack_plan(spark, sf_dir, checkpointed):
     """q162 (strict-cap packing): coarse buckets via the two-pass
     prefix sum (local windows partition by __pid — never a data-sized
     partition), the exact greedy fold runs IN-ROW over budget-bounded
@@ -889,14 +902,10 @@ def test_strict_pack_plan(spark, sf_dir):
     from pig_spark.queries import q162_strict_pack
 
     df = q162_strict_pack(spark, sf_dir)
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
-    assert not unpartitioned_windows(opt), unpartitioned_windows(opt)
-    phys = df._jdf.queryExecution().executedPlan().toString()
-    assert "PythonUDF" not in phys and "EvalPython" not in phys, phys
-    assert "CartesianProduct" not in phys, phys
+    _assert_scale_safe(df, checkpointed)
 
 
-def test_loader_batches_plan(spark, sf_dir):
+def test_loader_batches_plan(spark, sf_dir, checkpointed):
     """q163 (loader micro-batches): q160's two-pass rank + ONE tiny
     count aggregate broadcast back (the scalar-projection idiom) —
     the cross join must be a broadcast of the 1-row count, never a
@@ -904,11 +913,8 @@ def test_loader_batches_plan(spark, sf_dir):
     from pig_spark.queries import q163_loader_batches
 
     df = q163_loader_batches(spark, sf_dir)
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
-    assert not unpartitioned_windows(opt), unpartitioned_windows(opt)
-    phys = df._jdf.queryExecution().executedPlan().toString()
-    assert "PythonUDF" not in phys and "EvalPython" not in phys, phys
-    assert "CartesianProduct" not in phys, phys
+    _assert_scale_safe(df, checkpointed)
+    phys = _executed(df)
     assert "BroadcastNestedLoopJoin" in phys, phys
 
 
@@ -954,18 +960,14 @@ def test_length_buckets_plan(spark, sf_dir):
     assert "PythonUDF" not in phys and "EvalPython" not in phys, phys
 
 
-def test_epoch_shuffle_plan(spark, sf_dir):
+def test_epoch_shuffle_plan(spark, sf_dir, checkpointed):
     """q160 (per-epoch loader order): the position comes from the
     two-pass distributed RANK — no data-sized single-partition
     window anywhere in the plan; no Python, no cartesian."""
     from pig_spark.queries import q160_epoch_shuffle
 
     df = q160_epoch_shuffle(spark, sf_dir)
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
-    assert not unpartitioned_windows(opt), unpartitioned_windows(opt)
-    phys = df._jdf.queryExecution().executedPlan().toString()
-    assert "PythonUDF" not in phys and "EvalPython" not in phys, phys
-    assert "CartesianProduct" not in phys, phys
+    _assert_scale_safe(df, checkpointed)
 
 
 def test_sequence_store_rank_read_partition_prunes(spark, sf_dir):
@@ -1006,7 +1008,7 @@ def test_sequence_store_roundtrip_matches_inmemory_gather(spark, sf_dir):
     assert got == want and len(want) > 0
 
 
-def test_sft_mask_pack_plan(spark, sf_dir):
+def test_sft_mask_pack_plan(spark, sf_dir, checkpointed):
     """q168 (SFT loss-mask packing): the manifest's two-pass prefix
     sum is the only window machinery — no data-sized (unpartitioned)
     window beyond the config-sized offsets table, no Python, no
@@ -1015,9 +1017,8 @@ def test_sft_mask_pack_plan(spark, sf_dir):
     from pig_spark.queries import q168_sft_mask_pack
 
     df = q168_sft_mask_pack(spark, sf_dir)
-    phys = df._jdf.queryExecution().executedPlan().toString()
-    assert "PythonUDF" not in phys and "EvalPython" not in phys, phys
-    assert "CartesianProduct" not in phys, phys
+    _assert_scale_safe(df, checkpointed)
+    phys = _executed(df)
     assert "BroadcastNestedLoopJoin" not in phys, phys
 
 
@@ -1035,7 +1036,7 @@ def test_tokenizer_fertility_plan(spark, sf_dir):
     assert "CartesianProduct" not in phys, phys
 
 
-def test_ffd_pack_plan(spark, sf_dir):
+def test_ffd_pack_plan(spark, sf_dir, checkpointed):
     """q170 (FFD packing): bags are coarse-bucket-bounded aggregates,
     the FFD fold is in-row codegen (no Python anywhere), assignments
     come back via an equi-join — no cartesian, no data-sized
@@ -1043,9 +1044,8 @@ def test_ffd_pack_plan(spark, sf_dir):
     from pig_spark.queries import q170_ffd_pack
 
     df = q170_ffd_pack(spark, sf_dir)
-    phys = df._jdf.queryExecution().executedPlan().toString()
-    assert "PythonUDF" not in phys and "EvalPython" not in phys, phys
-    assert "CartesianProduct" not in phys, phys
+    _assert_scale_safe(df, checkpointed)
+    phys = _executed(df)
     assert "BroadcastNestedLoopJoin" not in phys, phys
 
 
@@ -1065,7 +1065,7 @@ def test_bm25_topk_plan(spark, sf_dir):
     assert "CartesianProduct" not in phys, phys
 
 
-def test_position_ids_plan(spark, sf_dir):
+def test_position_ids_plan(spark, sf_dir, checkpointed):
     """q172 (position/segment ids): built entirely in-row over the
     ≤ L-token per-sequence bags — the position stream is never
     exploded; the only window machinery is the manifest's two-pass
@@ -1073,9 +1073,8 @@ def test_position_ids_plan(spark, sf_dir):
     from pig_spark.queries import q172_position_ids
 
     df = q172_position_ids(spark, sf_dir)
-    phys = df._jdf.queryExecution().executedPlan().toString()
-    assert "PythonUDF" not in phys and "EvalPython" not in phys, phys
-    assert "CartesianProduct" not in phys, phys
+    _assert_scale_safe(df, checkpointed)
+    phys = _executed(df)
     assert "Generate" not in phys.split("HashAggregate")[0], phys
 
 
