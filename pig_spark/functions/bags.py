@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators import nested as _nested
+
 
 def _c(c) -> Column:
     return c if isinstance(c, Column) else F.lit(c)
@@ -75,17 +77,12 @@ def Distinct(bag: Column) -> Column:
 
 def TOP(n: int, field: str, bag: Column, ascending: bool = False) -> Column:
     """TOP.java:72 — top-n tuples of a bag by one field (priority queue
-    in Pig; sort+slice here, JVM-evaluated). For top-k per *group* at
+    in Pig; sort+slice here, JVM-evaluated). Null is the smallest
+    value, as in Pig's comparator: the default descending top-n ranks
+    nulls last, an ascending one first. For top-k per *group* at
     scale prefer operators.nested.topk_per_group (no bag materialized).
     """
-    lt, gt = (-1, 1) if ascending else (1, -1)
-    sorted_bag = F.array_sort(
-        bag,
-        lambda a, b: F.when(a[field] < b[field], F.lit(lt))
-        .when(a[field] > b[field], F.lit(gt))
-        .otherwise(F.lit(0)),
-    )
-    return F.slice(sorted_bag, 1, n)
+    return F.slice(_nested.bag_sort(bag, [(field, ascending)]), 1, n)
 
 
 def KEYSET(m: Column) -> Column:

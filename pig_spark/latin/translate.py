@@ -25,6 +25,7 @@ from pyspark.sql import Window as SparkWindow
 from pyspark.sql import functions as F
 
 from .. import functions as PF
+from ..operators.nested import bag_distinct, bag_filter, bag_limit, bag_sort
 from ..compat import cast_as
 from ..dsl import Relation
 from . import grammar as G
@@ -1864,60 +1865,7 @@ class PigTranslator:
             return acc_col
 
         src, arr, elem = bag_col(st.source)
-        fields = elem.names if isinstance(elem, T.StructType) else []
-
-        def elem_expr(e, t) -> Column:
-            if isinstance(e, G.Col):
-                name = e.name.split(".")[-1]
-                if name.startswith("$") and fields:
-                    name = fields[int(name[1:])]
-                elif fields and name not in fields:
-                    # qualified cross-product fields (a::name): an
-                    # unqualified ref resolves by unique suffix, as
-                    # LogicalSchema disambiguation does
-                    hit = [f for f in fields if f.split("::")[-1] == name]
-                    if len(hit) == 1:
-                        name = hit[0]
-                    elif len(hit) > 1:
-                        raise ValueError(f"pig latin: ambiguous field {name!r}: {hit}")
-                return t[name] if fields else t
-            if isinstance(e, G.Num):
-                v = e.value.lower()
-                return F.lit(float(v.rstrip("f")) if "." in v or "e" in v else int(v.rstrip("l")))
-            if isinstance(e, G.Str):
-                return F.lit(e.value)
-            if isinstance(e, G.Bin):
-                return _binop(e.op, elem_expr(e.left, t), elem_expr(e.right, t))
-            if isinstance(e, G.Un) and e.op == "not":
-                return ~elem_expr(e.operand, t)
-            if isinstance(e, G.IsNull):
-                c = elem_expr(e.operand, t)
-                return c.isNotNull() if e.negated else c.isNull()
-            if isinstance(e, G.Bool):
-                return F.lit(e.value)
-            if isinstance(e, G.BinCond):
-                return F.when(elem_expr(e.cond, t), elem_expr(e.then, t)).otherwise(
-                    elem_expr(e.otherwise, t)
-                )
-            if isinstance(e, G.Cast):
-                return elem_expr(e.operand, t).try_cast(PIG_TO_SPARK_TYPE.get(e.type, e.type))
-            if isinstance(e, G.Matches):
-                return PF.MATCHES(elem_expr(e.operand, t), e.pattern)
-            if isinstance(e, G.Call):
-                # scalar builtin over element fields (CONCAT, UPPER…);
-                # aggregates don't belong inside a per-element lambda
-                if e.func.lower() in AGG_FUNCS:
-                    raise NotImplementedError(
-                        f"aggregate {e.func.upper()} inside a bag-column pipe; "
-                        "aggregate in the outer GENERATE instead"
-                    )
-                fn = getattr(PF, e.func, None) or getattr(PF, e.func.upper(), None)
-                if fn is None:
-                    raise NameError(f"pig latin: unknown function {e.func!r}")
-                return fn(*[elem_expr(a, t) for a in e.args])
-            raise NotImplementedError(
-                f"unsupported expression {type(e).__name__} inside a bag-column pipe"
-            )
+        fields = list(elem.names) if isinstance(elem, T.StructType) else []
 
         if st.kind == "nforeach":
             # inner FOREACH over a bag column: per-element projection —
@@ -1926,53 +1874,12 @@ class PigTranslator:
                 out = []
                 for i, item in enumerate(st.cond):
                     nm = item.alias or _default_name(item.expr, i)
-                    out.append(elem_expr(item.expr, t).alias(nm))
+                    out.append(self._elem_expr(item.expr, t, fields).alias(nm))
                 return F.struct(*out)
 
             return F.transform(arr, project)
-        if st.kind == "filter":
-            return F.filter(arr, lambda t: elem_expr(st.cond, t))
-        if st.kind == "distinct":
-            return F.array_distinct(arr)
-        if st.kind == "limit":
-            return F.slice(arr, 1, int(st.cond))
-        if st.kind == "order":
-            keys = [k if isinstance(k, tuple) else (k, True) for k in st.cond]
-            # '*' expands to every element field; for scalar-element
-            # bags it means the element itself
-            keys = [
-                kk
-                for cname, asc in keys
-                for kk in (
-                    [(f, asc) for f in fields] if cname == "*" and fields else [(cname, asc)]
-                )
-            ]
-
-            def comparator(left, right):
-                result = F.lit(0)
-                for cname, asc in reversed(keys):
-                    if cname == "*" and not fields:
-                        lv, rv = left, right
-                    else:
-                        nm = cname.split(".")[-1]
-                        if nm.startswith("$") and fields:
-                            nm = fields[int(nm[1:])]
-                        lv = left[nm] if fields else left
-                        rv = right[nm] if fields else right
-                    c = (
-                        F.when(lv.isNull() & rv.isNull(), 0)
-                        .when(lv.isNull(), -1)
-                        .when(rv.isNull(), 1)
-                        .when(lv < rv, -1)
-                        .when(lv > rv, 1)
-                        .otherwise(0)
-                    )
-                    if not asc:
-                        c = -c
-                    result = F.when(c != 0, c).otherwise(result)
-                return result
-
-            return F.array_sort(arr, comparator)
+        if st.kind in ("filter", "distinct", "order", "limit"):
+            return self._apply_bag_ops(arr, [_bag_op(st, fields)], fields)
         if st.kind == "project":
             rest = st.source.partition(".")[2]
             if rest and fields:
@@ -2293,21 +2200,27 @@ class PigTranslator:
 
     # -- nested FOREACH { ... } blocks ---------------------------------
     def _foreach_nested(self, op: G.Foreach, info: RelInfo) -> Relation:
-        """Lower a nested block to FLAT aggregates — no reducer bags.
+        """Lower a nested block over a GROUP — flat plans first, bags
+        only where the statement needs them.
 
         Pig streams each group's bag through the inner pipeline
         (POForEach.java inner plans + SecondaryKeyOptimizer for nested
-        order); the Spark-first lowering rewrites each supported shape:
+        order). Each statement is recorded once on its pipe (_Pipe),
+        ORDER keys already resolved to real field names; the GENERATE
+        shape then picks one lowering:
 
-          x = DISTINCT B.col   → COUNT/SUM/AVG(x) = distinct aggregates
-          x = FILTER B BY p    → aggregates over when(p, ...)
-          x = ORDER B BY c     → dropped for algebraic consumers
-                                 (order-insensitive; no secondary sort)
-          x = B.col            → plain column pipe
-
-        LIMIT inside a block isn't algebraic — use the flat top-k form
-        (operators.nested.topk_per_group) instead; we raise with that
-        pointer rather than silently materializing bags.
+          aggregates only          → plain groupBy aggregates
+                                     (FILTER → when(p, ...), DISTINCT of
+                                     a column → distinct aggregates,
+                                     ORDER dropped; DISTINCT tuples
+                                     aggregate the collected bag)
+          LIMIT pipe consumed      → per-group top-k window
+                                     (operators.nested.topk_per_group)
+          FLATTEN(<ordered pipe>)  → sortWithinPartitions per group key
+          Over/Stitch              → partitioned window functions
+          two FLATTENs, array
+          pipes or ops after LIMIT → collected bags (_pipe_bag), the
+                                     ops replayed by _apply_bag_ops
         """
         g = info.grouped
         if g is None:
@@ -2373,171 +2286,49 @@ class PigTranslator:
                     "COGROUP the inputs and cross the sibling bags"
                 )
             base = self._resolve_pipe(st.source, g, pipes)
-            if base.arr and st.kind in ("distinct", "filter", "order", "limit", "project"):
-                # pipe ops chained onto a FLATTENed inner-FOREACH pipe
-                # (QueryParser.g:921-971 residual corner, closed r6).
-                # FILTER is exact per element (rewrites the per-row
-                # array in place — no shuffle); DISTINCT/ORDER/LIMIT
-                # are group-level bag ops recorded as flags and applied
-                # when the bag assembles at the consumer (_pipe_bag /
-                # _nested_agg) — Pig's own reducer-bag footprint.
-                # STATEMENT order is the dataflow order: once a LIMIT
-                # is recorded, later ops must see the sliced bag, so
-                # they append to post_ops instead of the flags (which
-                # consumers apply in canonical order before the slice).
-                if base.limited or base.post_ops:
-                    if base.post_ops is None:
-                        base.post_ops = []
-                    if st.kind == "filter":
-                        base.post_ops.append(("filter", st.cond))
-                    elif st.kind == "distinct":
-                        base.post_ops.append(("distinct", None))
-                    elif st.kind == "order":
-                        enames = list(g.child.df.schema[base.arr].dataType.elementType.names)
-                        norm = []
-                        for ok in st.cond:
-                            cname, a = ok if isinstance(ok, tuple) else (ok, True)
-                            if cname == "*":
-                                norm.extend((c, a) for c in enames)
-                            elif cname.startswith("$"):
-                                norm.append((enames[int(cname[1:])], a))
-                            else:
-                                norm.append((cname, a))
-                        base.post_ops.append(("order", norm))
-                    elif st.kind == "limit":
-                        base.post_ops.append(("limit", int(st.cond)))
-                    pipes[st.alias] = base
-                    continue
-                if st.kind == "distinct" and base.ordered:
-                    # d = DISTINCT o after an ORDER: Pig's nested
-                    # DISTINCT is POSortedDistinct — it re-sorts by the
-                    # FULL tuple (natural order), discarding the prior
-                    # ORDER's keys
-                    elem = g.child.df.schema[base.arr].dataType.elementType
-                    names = [base.col.split("::")[-1]] if base.col is not None else list(elem.names)
-                    base.distinct = True
-                    base.order_keys = [(n, True) for n in names]
-                    pipes[st.alias] = base
-                    continue
-                if st.kind == "filter":
-                    ch = g.child
-                    enames = list(ch.df.schema[base.arr].dataType.elementType.names)
-                    mangled = f"__nfa_{st.alias}"
-                    filtered = F.filter(
-                        ch.df[base.arr],
-                        lambda el: self._elem_expr(st.cond, el, enames),
-                    )
-                    g = G_replace(
-                        g,
-                        child=Relation(ch.df.withColumn(mangled, filtered)),
-                        derived=g.derived + (mangled,),
-                    )
-                    base.arr = mangled
-                elif st.kind == "distinct":
-                    base.distinct = True
-                elif st.kind == "order":
-                    enames = list(g.child.df.schema[base.arr].dataType.elementType.names)
-                    norm = []
-                    for ok in st.cond:
-                        cname, a = ok if isinstance(ok, tuple) else (ok, True)
-                        if cname == "*":
-                            norm.extend((c, a) for c in enames)
-                        elif cname.startswith("$"):
-                            norm.append((enames[int(cname[1:])], a))
-                        elif cname in enames:
-                            norm.append((cname, a))
-                        else:
-                            raise NameError(
-                                f"nested ORDER over FLATTENed pipe: no field {cname!r} "
-                                f"(fields: {enames})"
-                            )
-                    base.ordered = True
-                    base.order_keys = norm
-                elif st.kind == "limit":
-                    base.limited = True
-                    base.limit_n = int(st.cond)
-                # "project" (x = p.col): _resolve_pipe already set base.col
-                pipes[st.alias] = base
-                continue
-            if st.kind != "project" and (base.limited or base.post_ops):
-                # op chained after a LIMIT pipe: statement order is the
-                # dataflow order — record for sequential replay on the
-                # sliced bag (_pipe_bag), mirroring the arr-pipe path
-                if base.post_ops is None:
-                    base.post_ops = []
-                if st.kind == "filter":
-                    base.post_ops.append(("filter", st.cond))
-                elif st.kind == "distinct":
-                    base.post_ops.append(("distinct", None))
-                elif st.kind == "limit":
-                    base.post_ops.append(("limit", int(st.cond)))
-                elif st.kind == "order":
-                    child_cols = (
-                        list(base.proj)
-                        if base.proj
-                        else [c for c in g.child.df.columns if c not in g.derived]
-                    )
-                    norm = []
-                    for ok in st.cond:
-                        cname, a = ok if isinstance(ok, tuple) else (ok, True)
-                        if cname == "*":
-                            norm.extend((c, a) for c in child_cols)
-                        elif cname.startswith("$"):
-                            norm.append((child_cols[int(cname[1:])], a))
-                        else:
-                            norm.append((cname.split("::")[-1], a))
-                    base.post_ops.append(("order", norm))
-                pipes[st.alias] = base
-                continue
+            pipes[st.alias] = base
             if st.kind == "project":
-                pass  # _resolve_pipe already applied the column
+                continue  # x = p.col: _resolve_pipe already applied the column
+            # ORDER keys resolve once, here, against the pipe's fields:
+            # an array pipe's element fields, else real child columns
+            fields = self._pipe_fields(base, g)
+            scope, proj = (None, None) if base.arr else (g.child.df.columns, base.proj)
+            if base.limited or base.post_ops:
+                # op chained after a LIMIT: statement order is the
+                # dataflow order, and the flags below apply in canonical
+                # filter→distinct→order→limit order before the slice —
+                # record it for replay on the sliced bag (_pipe_bag)
+                base.post_ops = [*(base.post_ops or []), _bag_op(st, fields, scope, proj)]
             elif st.kind == "distinct":
                 if base.ordered:
-                    # Pig's nested DISTINCT (POSortedDistinct) re-sorts
-                    # by the full tuple, discarding the prior ORDER
-                    # (mangled child-column names, like ORDER's own
-                    # normalization — consumers rename to output fields)
-                    base.order_keys = [
-                        (n, True)
-                        for n in (
-                            list(base.proj.values())
-                            if base.proj
-                            else (
-                                [base.col]
-                                if base.col is not None
-                                else [c for c in g.child.df.columns if c not in g.derived]
-                            )
-                        )
-                    ]
+                    # Pig's nested DISTINCT is POSortedDistinct: it
+                    # re-sorts by the FULL tuple (natural order),
+                    # discarding the prior ORDER's keys
+                    base.order_keys = [(n, True) for n in fields]
                 base.distinct = True
+            elif st.kind == "filter" and base.arr:
+                # FILTER on a FLATTENed inner-FOREACH pipe is exact per
+                # element: rewrite the per-row array in place, no
+                # shuffle. Its DISTINCT/ORDER/LIMIT are group-level flags
+                # applied when the bag assembles (_pipe_bag) — Pig's
+                # own reducer-bag footprint.
+                ch = g.child
+                mangled = f"__nfa_{st.alias}"
+                filtered = self._apply_bag_ops(ch.df[base.arr], [("filter", st.cond)], fields)
+                g = G_replace(
+                    g,
+                    child=Relation(ch.df.withColumn(mangled, filtered)),
+                    derived=g.derived + (mangled,),
+                )
+                base.arr = mangled
             elif st.kind == "filter":
                 base.cond = st.cond if base.cond is None else G.Bin("and", base.cond, st.cond)
             elif st.kind == "order":
                 base.ordered = True
-                # normalize positional ($N → N-th column), star (* →
-                # every column) and inner-FOREACH projection names up
-                # front so every downstream consumer sees real columns
-                child_cols = (
-                    list(base.proj.values())
-                    if base.proj
-                    else [c for c in g.child.df.columns if c not in g.derived]
-                )
-                norm: list[tuple[str, bool]] = []
-                for ok in st.cond:
-                    cname, a = ok if isinstance(ok, tuple) else (ok, True)
-                    if cname == "*":
-                        norm.extend((c, a) for c in child_cols)
-                    elif cname.startswith("$"):
-                        norm.append((child_cols[int(cname[1:])], a))
-                    elif base.proj and cname in base.proj:
-                        norm.append((base.proj[cname], a))
-                    else:
-                        norm.append((cname, a))
-                base.order_keys = norm
+                base.order_keys = _order_keys(st.cond, fields, scope, proj)
             elif st.kind == "limit":
                 base.limited = True
                 base.limit_n = int(st.cond)
-            pipes[st.alias] = base
         for pname, p in pipes.items():
             try:  # describe C::D support — best-effort schema record
                 self.nested_schemas[f"{self._current_alias}::{pname}"] = self._pipe_schema(p, g)
@@ -2724,9 +2515,10 @@ class PigTranslator:
             velem = T.DoubleType()
         zero = F.lit(0).cast(velem.simpleString())
         total = F.aggregate(nn, zero, lambda acc, x: acc + x)
+        # SUM/AVG of a bag with no non-null value is null (SUM.java)
         if lfn == "sum":
-            return total
-        return F.when(F.size(nn) > 0, total.cast("double") / F.size(nn)).otherwise(F.lit(None))
+            return F.when(F.size(nn) > 0, total)
+        return F.when(F.size(nn) > 0, total.cast("double") / F.size(nn))
 
     def _split_agg_leaves(self, e, limited_names: set, leaves: list, combo_idx: int):
         """Decompose a combining expression into aggregate-call leaves:
@@ -2865,12 +2657,7 @@ class PigTranslator:
             kdf = kdf.join(aggf, key_names, "left") if key_names else kdf.crossJoin(aggf)
 
         if pipe.ordered and pipe.order_keys:
-            order_cols = []
-            for ok in pipe.order_keys:
-                cname, a = ok if isinstance(ok, tuple) else (ok, True)
-                if cname.startswith(g.child_alias + "."):
-                    cname = cname.split(".", 1)[1]
-                order_cols.append(F.col(cname).asc() if a else F.col(cname).desc())
+            order_cols = [F.col(c).asc() if a else F.col(c).desc() for c, a in pipe.order_keys]
             if key_names:
                 kdf = kdf.repartition(*[F.col(n) for n in key_names]).sortWithinPartitions(
                     *[F.col(n) for n in key_names], *order_cols
@@ -3095,12 +2882,7 @@ class PigTranslator:
         df = child.df
         if pipe.cond is not None:
             df = df.filter(self._expr(pipe.cond, child))
-        order_cols = []
-        for ok in pipe.order_keys:
-            cname, a = ok if isinstance(ok, tuple) else (ok, True)
-            if cname.startswith(g.child_alias + "."):
-                cname = cname.split(".", 1)[1]
-            order_cols.append(F.col(cname).asc() if a else F.col(cname).desc())
+        order_cols = [F.col(c).asc() if a else F.col(c).desc() for c, a in pipe.order_keys]
         w = SparkWindow.partitionBy(*[c for _, c in g.key_exprs]).orderBy(*order_cols)
 
         over_cols = [self._over_column(oc, g, w) for oc in overs]
@@ -3285,15 +3067,9 @@ class PigTranslator:
                 cols = [pipe.col] if pipe.col is not None else others
                 kdf = kdf.select(*[F.col(n) for n in key_names], *[F.col(c) for c in cols]).dropDuplicates()
                 others = cols
-            order_names: list[str] = []
-            asc: list[bool] = []
             if pipe.ordered and pipe.order_keys:
-                for ok in pipe.order_keys:
-                    cname, a = ok if isinstance(ok, tuple) else (ok, True)
-                    if cname.startswith(g.child_alias + "."):
-                        cname = cname.split(".", 1)[1]
-                    order_names.append(cname)
-                    asc.append(a)
+                order_names = [c for c, _ in pipe.order_keys]
+                asc = [a for _, a in pipe.order_keys]
             else:
                 # Pig allows LIMIT without ORDER inside FOREACH {}
                 # (QueryParser.g:921-971): the contract is "ANY n rows
@@ -3429,6 +3205,7 @@ class PigTranslator:
         # one aggregate frame per consumed LIMIT pipe, in first-use order
         parts: list = []
         count_cols: list[str] = []
+        bag_cols: list[str] = []
         seen_pipes: list[str] = []
         for _, ln, _ in topk_aggs:
             if ln not in seen_pipes:
@@ -3448,12 +3225,18 @@ class PigTranslator:
                 n for n, e in aggs_for
                 if isinstance(e, G.Call) and e.func.lower() in ("count", "count_star")
             )
+            bag_cols.extend(n for n, e in aggs_for if isinstance(e, G.Col))
         if other_aggs:
             parts.append(
                 (child.df.groupBy(*[c.alias(n) for n, c in g.key_exprs]) if key_names else child.df.groupBy()).agg(
                     *[self._nested_agg(e, g, pipes).alias(n) for n, e in other_aggs]
                 )
             )
+        elif key_names and not flat_items and any(pipes[ln].cond is not None for ln in seen_pipes):
+            # every frame comes from a FILTERed pipe: a group the FILTER
+            # emptied is in none of them, yet Pig still emits it (empty
+            # bag: COUNT 0, SUM null) — the group keys anchor the join
+            parts.insert(0, child.df.select(*[c.alias(n) for n, c in g.key_exprs]).distinct())
         agg_out = None
         if parts:
             out = parts[0]
@@ -3470,6 +3253,8 @@ class PigTranslator:
             if len(parts) > 1 and key_names:
                 for n in count_cols:
                     out = out.withColumn(n, F.coalesce(F.col(n), F.lit(0).cast("long")))
+                for n in bag_cols:  # GENERATE <pipe> of an emptied group: {}
+                    out = out.withColumn(n, F.coalesce(F.col(n), F.array().cast(out.schema[n].dataType)))
             for name, rewritten in combos:
                 out = out.withColumn(name, self._expr(rewritten, Relation(out)))
             for name, argrefs, fnname in multi_exprs:
@@ -3561,7 +3346,7 @@ class PigTranslator:
                 )
             )
             if ocols:
-                bag = _bag_sort(bag, [(f"__o{i}", a) for i, (_, a) in enumerate(ocols)])
+                bag = bag_sort(bag, [(f"__o{i}", a) for i, (_, a) in enumerate(ocols)])
             return F.transform(bag, lambda t: t["__v"])
         if isinstance(e, G.Col) and e.name.partition(".")[0] == lname:
             # GENERATE <limit-pipe>[.field] — the survivors as a BAG
@@ -3589,17 +3374,10 @@ class PigTranslator:
                 cols = [(c.split("::")[-1], topk[c]) for c in child_cols + extra]
             bag = F.collect_list(F.struct(*[c.alias(n) for n, c in cols]))
             if pipe.ordered and pipe.order_keys:
-                field_names = [n for n, _ in cols]
-                order = []
-                for ok in pipe.order_keys:
-                    cname, a = ok if isinstance(ok, tuple) else (ok, True)
-                    if cname.startswith(g.child_alias + "."):
-                        cname = cname.split(".", 1)[1]
-                    fld = rename.get(cname, cname).split("::")[-1]
-                    if fld in field_names:
-                        order.append((fld, a))
+                keys = _bag_keys(pipe.order_keys, [n for n, _ in cols], rename)
+                order = [(f, a) for f, a in keys if f is not None]
                 if order:
-                    bag = _bag_sort(bag, order)
+                    bag = bag_sort(bag, order)
             return bag
         if isinstance(e, G.Bin):
             return _binop(e.op, self._topk_agg(e.left, topk, lname, g, pipes), self._topk_agg(e.right, topk, lname, g, pipes))
@@ -3702,6 +3480,20 @@ class PigTranslator:
                 if c not in g.derived
             ]
         return "{(" + ", ".join(f"{n}: {t}" for n, t in fields) + ")}"
+
+    def _pipe_fields(self, p: "_Pipe", g: GroupedInfo) -> list[str]:
+        """The fields of a nested pipe's tuple, as real names: element
+        fields for an array pipe, else child columns (inner-FOREACH
+        projections by their materialized names)."""
+        if p.arr:
+            if p.col is not None:
+                return [p.col.split("::")[-1]]
+            return list(g.child.df.schema[p.arr].dataType.elementType.names)
+        if p.col is not None:
+            return [p.col]
+        if p.proj:
+            return list(p.proj.values())
+        return [c for c in g.child.df.columns if c not in g.derived]
 
     def _resolve_pipe(self, source: str, g: GroupedInfo, pipes: dict[str, "_Pipe"]) -> "_Pipe":
         head, _, rest = source.partition(".")
@@ -3828,147 +3620,113 @@ class PigTranslator:
             return F.sum(row_sum)
         return F.sum(row_sum).cast("double") / F.sum(F.size(nn))
 
-    def _apply_post_ops(self, bag: Column, post_ops: list, enames: list[str]) -> Column:
-        """Replay ops chained after a LIMIT on the already-sliced bag,
-        in statement order (Pig's dataflow order): each is a pure
-        array op over the collected bag — same footprint as the flags."""
-        def _pred(cond):
-            # closure factory, NOT a default arg: pyspark counts lambda
-            # params, and a `c=cond` default would make it the 2-arg
-            # (element, index) form with the index bound into c
-            return lambda el: self._elem_expr(cond, el, enames)
-
-        for kind, payload in post_ops:
+    def _apply_bag_ops(self, bag: Column, ops: list, fields: list[str], rename: dict | None = None) -> Column:
+        """Replay recorded nested ops — ("filter", predicate),
+        ("distinct", None), ("order", [(field, asc)]), ("limit", n) —
+        over a collected bag in the given order (Pig's dataflow order):
+        pure array functions (operators.nested), the bag never explodes.
+        ``fields`` are the element fields ([] for a scalar-element bag);
+        ORDER keys name child or element fields and resolve against them
+        through ``rename`` (child column → bag field)."""
+        for kind, payload in ops:
             if kind == "filter":
-                bag = F.filter(bag, _pred(payload))
+                bag = bag_filter(bag, lambda el: self._elem_expr(payload, el, fields))
             elif kind == "distinct":
-                bag = F.array_distinct(bag)
+                bag = bag_distinct(bag)
             elif kind == "order":
-                for cname, _a in payload:
-                    if cname not in enames:
-                        raise NameError(
-                            f"nested ORDER after LIMIT: no field {cname!r} "
-                            f"(fields: {enames})"
-                        )
-                bag = _bag_sort(bag, payload)
+                order = _bag_keys(payload, fields, rename or {})
+                missing = [c for (c, _), (f, _) in zip(payload, order) if f is None]
+                if missing:
+                    raise NameError(
+                        f"nested ORDER: no field {missing[0]!r} in the bag (fields: {fields})"
+                    )
+                bag = bag_sort(bag, order)
             elif kind == "limit":
-                bag = F.slice(bag, 1, payload)
+                bag = bag_limit(bag, payload)
         return bag
 
     def _pipe_bag(self, lname: str, rest: str | None, g: GroupedInfo, pipes: dict[str, "_Pipe"]) -> Column:
         """GENERATE <pipe> — the pipe itself as a BAG column (Pig emits
         the inner relation as a bag of tuples; POForEach inner-plan
         output). Lowered to collect_list of the pipe's tuple struct
-        (FILTER → when(cond), DISTINCT → array_distinct, ORDER →
-        array_sort with a null-first comparator matching Pig's null
-        ordering). Scale note: the bag is the WHOLE group in executor
-        memory — exactly Pig's reducer-bag footprint for the same
-        statement; prefer FLATTEN/aggregate forms for giant groups."""
+        (FILTER → when(cond)), then the pipe's flags replayed in Pig's
+        stage order — DISTINCT, ORDER, LIMIT — and the ops recorded
+        after the LIMIT in statement order (_apply_bag_ops). Scale note:
+        the bag is the WHOLE group in executor memory — exactly Pig's
+        reducer-bag footprint for the same statement; prefer
+        FLATTEN/aggregate forms for giant groups."""
         pipe = pipes[lname]
         child = g.child
         df = child.df
+        rename: dict[str, str] = {}
+        hidden: list[tuple[str, Column]] = []
+        order: list[tuple[str, bool]] = []
         if pipe.arr:
             # array-pipe: the per-row arrays concatenate into the
-            # group's bag (collect_list skips FILTER-nulled rows).
-            # Chained DISTINCT/ORDER/LIMIT (QueryParser.g:921-971
-            # residual corner, closed r6) run on the CONCATENATED
-            # group bag in Pig's stage order: pipe-level projection
-            # first (d = DISTINCT p.x), then dedupe/sort/slice, then
-            # the consumption-time projection — pure array ops over
-            # ONE collect, the same reducer-bag footprint Pig uses.
+            # group's bag (collect_list skips FILTER-nulled rows). Its
+            # DISTINCT/ORDER/LIMIT run on the CONCATENATED group bag:
+            # pipe-level projection first (d = DISTINCT p.x), then
+            # dedupe/sort/slice, then the consumption-time projection.
             bag = F.flatten(F.collect_list(df[pipe.arr]))
+            field_names = self._pipe_fields(pipe, g)
             if pipe.col is not None:
-                pleaf = pipe.col.split("::")[-1]
+                pleaf = field_names[0]
                 bag = F.transform(bag, lambda t: F.struct(t[pleaf].alias(pleaf)))
-            if pipe.distinct:
-                bag = F.array_distinct(bag)
             if pipe.ordered and pipe.order_keys:
-                bag = _bag_sort(bag, pipe.order_keys)
+                order = pipe.order_keys
             elif pipe.limited:
                 # LIMIT without ORDER = Pig's "any n rows"; pin a
                 # deterministic slice order (orderable fields asc)
-                from pyspark.sql import types as T
-
                 elem = df.schema[pipe.arr].dataType.elementType
-                names = [pipe.col.split("::")[-1]] if pipe.col is not None else elem.names
-                pin = [
-                    (n, True) for n in names
-                    if _orderable(elem[n].dataType if isinstance(elem, T.StructType) else elem)
-                ]
-                if pin:
-                    bag = _bag_sort(bag, pin)
-            if pipe.limited and pipe.limit_n is not None:
-                bag = F.slice(bag, 1, pipe.limit_n)
-            if pipe.post_ops:
-                elem = df.schema[pipe.arr].dataType.elementType
-                enames = [pipe.col.split("::")[-1]] if pipe.col is not None else list(elem.names)
-                bag = self._apply_post_ops(bag, pipe.post_ops, enames)
-            if rest:
-                leaf = rest.split("::")[-1]
-                bag = F.transform(bag, lambda t: F.struct(t[leaf].alias(leaf)))
-            return bag
-        cond = self._expr(pipe.cond, child) if pipe.cond is not None else None
-        rename = {v: k for k, v in pipe.proj.items()} if pipe.proj else {}
-        if rest:
-            src = pipe.proj.get(rest, rest) if pipe.proj else rest
-            cols = [(rest.split("::")[-1], self._expr(G.Col(src), child))]
-        elif pipe.col is not None:
-            cols = [(pipe.col.split("::")[-1], self._expr(G.Col(pipe.col), child))]
-        elif pipe.proj:
-            cols = [(out, F.col(m)) for out, m in pipe.proj.items()]
+                order = [(n, True) for n in field_names if _orderable(elem[n].dataType)]
         else:
-            # whole-tuple pipe: the bag element is the FULL child tuple
-            # (LogicalSchema: the inner bag carries every field,
-            # including the group key's source columns)
-            cols = [(c, df[c]) for c in df.columns if c not in g.derived]
-        # ORDER keys resolved up front: a key OUTSIDE the projected
-        # fields (ORDER by acctbal, project custkey) rides along as a
-        # HIDDEN struct field so the sort — and any LIMIT slice — sees
-        # it, then strips after (dropping the order silently returned
-        # arbitrary LIMIT survivors; r5 review finding #1)
-        field_names = [n for n, _ in cols]
-        order: list[tuple[str, bool]] = []
-        hidden: list[tuple[str, Column]] = []
-        if pipe.ordered and pipe.order_keys and not pipe.distinct:
-            for idx, ok in enumerate(pipe.order_keys):
-                cname, a = ok if isinstance(ok, tuple) else (ok, True)
-                if cname.startswith(g.child_alias + "."):
-                    cname = cname.split(".", 1)[1]
-                fld = rename.get(cname, cname).split("::")[-1]
-                if fld in field_names:
-                    order.append((fld, a))
-                else:
-                    hname = f"__ok{idx}"
-                    hidden.append((hname, self._expr(G.Col(cname), child)))
-                    order.append((hname, a))
-        elif pipe.ordered and pipe.order_keys:
-            # DISTINCT + ORDER: valid Pig orders by the distinct
-            # projection's own fields — no hidden keys possible
-            for ok in pipe.order_keys:
-                cname, a = ok if isinstance(ok, tuple) else (ok, True)
-                if cname.startswith(g.child_alias + "."):
-                    cname = cname.split(".", 1)[1]
-                fld = rename.get(cname, cname).split("::")[-1]
-                if fld in field_names:
-                    order.append((fld, a))
-        el = F.struct(*[c.alias(n) for n, c in cols], *[c.alias(n) for n, c in hidden])
-        if cond is not None:
-            el = F.when(cond, el)  # collect_list skips nulls
-        bag = F.collect_list(el)
-        if pipe.distinct:
-            bag = F.array_distinct(bag)
+            cond = self._expr(pipe.cond, child) if pipe.cond is not None else None
+            rename = {v: k for k, v in pipe.proj.items()} if pipe.proj else {}
+            if rest:
+                src = pipe.proj.get(rest, rest) if pipe.proj else rest
+                cols = [(rest.split("::")[-1], self._expr(G.Col(src), child))]
+            elif pipe.col is not None:
+                cols = [(pipe.col.split("::")[-1], self._expr(G.Col(pipe.col), child))]
+            elif pipe.proj:
+                cols = [(out, F.col(m)) for out, m in pipe.proj.items()]
+            else:
+                # whole-tuple pipe: the bag element is the FULL child tuple
+                # (LogicalSchema: the inner bag carries every field,
+                # including the group key's source columns)
+                cols = [(c, df[c]) for c in df.columns if c not in g.derived]
+            field_names = [n for n, _ in cols]
+            if pipe.ordered and pipe.order_keys:
+                # a key OUTSIDE the projected fields (ORDER by acctbal,
+                # project custkey) rides along as a HIDDEN struct field
+                # so the sort — and any LIMIT slice — sees it, then
+                # strips after. DISTINCT + ORDER orders by the distinct
+                # projection's own fields: no hidden keys possible.
+                keys = _bag_keys(pipe.order_keys, field_names, rename)
+                for idx, ((cname, a), (fld, _)) in enumerate(zip(pipe.order_keys, keys)):
+                    if fld is None and not pipe.distinct:
+                        fld = f"__ok{idx}"
+                        hidden.append((fld, self._expr(G.Col(cname), child)))
+                    if fld is not None:
+                        order.append((fld, a))
+            el = F.struct(*[c.alias(n) for n, c in cols], *[c.alias(n) for n, c in hidden])
+            if cond is not None:
+                el = F.when(cond, el)  # collect_list skips nulls
+            bag = F.collect_list(el)
+        flags = [("distinct", None)] if pipe.distinct else []
         if order:
-            bag = _bag_sort(bag, order)
-        if pipe.limited and pipe.limit_n is not None:
-            # LIMIT inside the bag form: first n of the sorted bag
-            # (unordered = Pig's "any n rows", here collection order)
-            bag = F.slice(bag, 1, pipe.limit_n)
+            flags.append(("order", order))
+        if pipe.limited:
+            # an unordered LIMIT over a non-array pipe is Pig's "any n
+            # rows": here the first n in collection order
+            flags.append(("limit", pipe.limit_n))
+        bag = self._apply_bag_ops(bag, flags, field_names + [n for n, _ in hidden])
         if hidden:
-            bag = F.transform(
-                bag, lambda t: F.struct(*[t[n].alias(n) for n in field_names])
-            )
+            bag = F.transform(bag, lambda t: F.struct(*[t[n].alias(n) for n in field_names]))
         if pipe.post_ops:
-            bag = self._apply_post_ops(bag, pipe.post_ops, field_names)
+            bag = self._apply_bag_ops(bag, pipe.post_ops, field_names, rename)
+        if pipe.arr and rest:
+            leaf = rest.split("::")[-1]
+            bag = F.transform(bag, lambda t: F.struct(t[leaf].alias(leaf)))
         return bag
 
     def _foreach_nested_multiflatten(self, op: G.Foreach, g: GroupedInfo, pipes: dict[str, "_Pipe"]) -> Relation:
@@ -4078,45 +3836,23 @@ class PigTranslator:
         head = arg.name.split(".", 1)[0]
         if head not in pipes and head != g.child_alias:
             return self._agg_expr(e, g)
-        if head in pipes and pipes[head].arr:
-            p = pipes[head]
-            if p.distinct or p.limited:
-                # chained DISTINCT/LIMIT change the bag's multiset, so
-                # the per-row-partials shortcut is wrong; aggregate
-                # over the assembled group bag instead (the same
-                # reducer-bag footprint Pig uses for these statements)
-                from pyspark.sql import types as T
-
-                rest = arg.name.partition(".")[2]
-                elem = g.child.df.schema[p.arr].dataType.elementType
-                if p.col is not None:
-                    pleaf = p.col.split("::")[-1]
-                    elem = T.StructType([elem[pleaf]])
-                bag = self._pipe_bag(head, None, g, pipes)
-                return self._agg_over_bag(fn, bag, elem, rest or None)
-            return self._arr_pipe_agg(fn, arg, p, g)
-        pipe = self._resolve_pipe(arg.name, g, pipes)
-        if pipe.limited and pipe.post_ops:
-            # ops chained after the LIMIT (d = DISTINCT l; COUNT(d)):
-            # aggregate over the assembled bag — slice first, then the
-            # replayed post-ops, exactly Pig's dataflow order and its
-            # reducer-bag footprint (the topk window path can't replay
-            # ops that must see the sliced bag)
-            hd, _, rst = arg.name.partition(".")
-            bag = self._pipe_bag(hd, None, g, pipes)
+        base = pipes.get(head)
+        if base is not None and (base.limited or (base.distinct and (base.arr or base.col is None))):
+            # the aggregate must see the bag itself: a LIMIT slice (and
+            # the ops replayed after it), a group-level DISTINCT over an
+            # array pipe, or a DISTINCT over whole tuples (distinct
+            # aggregates would dedupe one field's values, not the
+            # tuples). Aggregate over the assembled group bag — the
+            # reducer-bag footprint Pig uses for these statements.
+            bag = self._pipe_bag(head, None, g, pipes)
             elem = (
-                g.child.df.limit(0)
-                .groupBy()
-                .agg(bag.alias("__pb"))
-                .schema["__pb"]
-                .dataType.elementType
+                g.child.df.limit(0).groupBy().agg(bag.alias("__pb")).schema["__pb"].dataType.elementType
             )
-            return self._agg_over_bag(fn, bag, elem, rst or None)
-        if pipe.limited:
-            raise NotImplementedError(
-                "LIMIT inside FOREACH {} is not algebraic; use "
-                "pig_spark.operators.nested.topk_per_group for nested top-k"
-            )
+            rest = arg.name.partition(".")[2]
+            return self._agg_over_bag(fn, bag, elem, rest and (_field_ref(rest, elem.names) or rest))
+        if base is not None and base.arr:
+            return self._arr_pipe_agg(fn, arg, base, g)
+        pipe = self._resolve_pipe(arg.name, g, pipes)
         cond = self._expr(pipe.cond, g.child) if pipe.cond is not None else None
         if pipe.col is not None:
             val: Column = self._expr(G.Col(pipe.col), g.child)
@@ -4124,7 +3860,7 @@ class PigTranslator:
             # whole-tuple pipe: COUNT uses the non-null first field
             # (COUNT.java:40); other aggs need a column
             if fn in ("count", "count_star"):
-                val = g.child.df[g.child.df.columns[0]] if fn == "count" else F.lit(1)
+                val = F.col(self._pipe_fields(pipe, g)[0]) if fn == "count" else F.lit(1)
             else:
                 raise SyntaxError(f"{fn.upper()} over a whole-tuple pipe needs a column (e.g. x.field)")
         if cond is not None:
@@ -4544,60 +4280,61 @@ class PigTranslator:
 
     def _elem_expr(self, e, el: Column, names: list[str]) -> Column:
         """Expression over ONE bag element (array-HOF lambda variable
-        ``el``) — the _expr subset a nested FILTER chained onto a
-        FLATTENed inner-FOREACH pipe can reference: element fields,
-        positional $N, literals, comparisons, matches, bincond, casts.
-        No relation context exists inside a lambda, so scalar/UDF
-        references raise with guidance."""
+        ``el``, element fields ``names``; [] for a scalar-element bag,
+        where every field reference is the element itself): fields
+        ($N, unique ``a::f`` suffixes), literals, arithmetic and
+        comparisons, IN, matches, bincond, casts and scalar builtins.
+        No relation context exists inside a lambda, so aggregates and
+        relation scalars raise with guidance."""
+        def sub(x):
+            return self._elem_expr(x, el, names)
+
         if isinstance(e, G.Num):
             t = e.value.lower()
             return F.lit(float(t.rstrip("f")) if "." in t or "e" in t else int(t.rstrip("l")))
-        if isinstance(e, G.Str):
-            return F.lit(e.value)
-        if isinstance(e, G.Bool):
+        if isinstance(e, (G.Str, G.Bool)):
             return F.lit(e.value)
         if isinstance(e, G.Null):
             return F.lit(None)
         if isinstance(e, G.Col):
-            nm = e.name.split(".")[-1]
-            if nm.startswith("$"):
-                return el[names[int(nm[1:])]]
-            leaf = nm.split("::")[-1]
-            if leaf in names:
-                return el[leaf]
-            raise NameError(
-                f"nested FILTER over FLATTENed pipe: no field {nm!r} (fields: {names})"
-            )
+            fld = _field_ref(e.name, names)
+            if fld is None:
+                raise NameError(f"nested bag pipe: no field {e.name!r} (fields: {names})")
+            return el if fld == "*" else el[fld]
         if isinstance(e, G.Bin):
             if e.op == "and":
-                return self._elem_expr(e.left, el, names) & self._elem_expr(e.right, el, names)
+                return sub(e.left) & sub(e.right)
             if e.op == "or":
-                return self._elem_expr(e.left, el, names) | self._elem_expr(e.right, el, names)
-            return _binop(
-                e.op, self._elem_expr(e.left, el, names), self._elem_expr(e.right, el, names)
-            )
+                return sub(e.left) | sub(e.right)
+            return _binop(e.op, sub(e.left), sub(e.right))
         if isinstance(e, G.Un):
-            c = self._elem_expr(e.operand, el, names)
-            return ~c if e.op == "not" else -c
+            return ~sub(e.operand) if e.op == "not" else -sub(e.operand)
         if isinstance(e, G.IsNull):
-            c = self._elem_expr(e.operand, el, names)
+            c = sub(e.operand)
             return c.isNotNull() if e.negated else c.isNull()
         if isinstance(e, G.Matches):
-            return PF.MATCHES(self._elem_expr(e.operand, el, names), e.pattern)
+            return PF.MATCHES(sub(e.operand), e.pattern)
         if isinstance(e, G.InList):
-            return self._elem_expr(e.operand, el, names).isin(*[_const(o) for o in e.options])
+            return sub(e.operand).isin(*[_const(o) for o in e.options])
         if isinstance(e, G.BinCond):
-            return F.when(
-                self._elem_expr(e.cond, el, names), self._elem_expr(e.then, el, names)
-            ).otherwise(self._elem_expr(e.otherwise, el, names))
+            return F.when(sub(e.cond), sub(e.then)).otherwise(sub(e.otherwise))
         if isinstance(e, G.Cast):
-            return self._elem_expr(e.operand, el, names).try_cast(
-                PIG_TO_SPARK_TYPE.get(e.type, e.type)
-            )
+            return sub(e.operand).try_cast(PIG_TO_SPARK_TYPE.get(e.type, e.type))
+        if isinstance(e, G.Call):
+            # scalar builtin over element fields (CONCAT, ABS…);
+            # aggregates don't belong inside a per-element lambda
+            if e.func.lower() in AGG_FUNCS:
+                raise NotImplementedError(
+                    f"aggregate {e.func.upper()} inside a nested bag pipe; "
+                    "aggregate in the outer GENERATE instead"
+                )
+            fn = getattr(PF, e.func, None) or getattr(PF, e.func.upper(), None)
+            if fn is None:
+                raise NameError(f"pig latin: unknown function {e.func!r}")
+            return fn(*[sub(a) for a in e.args])
         raise NotImplementedError(
-            "nested FILTER chained onto a FLATTENed pipe supports field/literal/"
-            f"comparison expressions (got {type(e).__name__}); move the FILTER "
-            "before the inner FOREACH for the full expression surface"
+            f"unsupported expression {type(e).__name__} inside a nested bag pipe; "
+            "move the FILTER before the inner FOREACH for the full expression surface"
         )
 
     def _expr(self, e, rel: Relation) -> Column:
@@ -5088,27 +4825,64 @@ def _common_type(ts):
     return T.StringType()
 
 
-def _bag_sort(bag: Column, order: list[tuple[str, bool]]) -> Column:
-    """Sort a bag (array<struct>) by struct fields with Pig's null
-    ordering (null smallest: first under asc, last under desc) —
-    array_sort with a lexicographic comparator, pure codegen."""
+def _field_ref(name: str, fields: list[str]) -> str | None:
+    """The element field a nested reference names: ``$N`` positional,
+    an exact name, its ``a::f`` leaf, or the unique field whose leaf it
+    is (qualified cross-product fields — LogicalSchema
+    disambiguation); ``'*'`` for a scalar-element bag (no fields),
+    None when nothing matches."""
+    nm = name.split(".")[-1]
+    if not fields or nm == "*":
+        return "*"
+    if nm.startswith("$"):
+        return fields[int(nm[1:])]
+    leaf = nm.split("::")[-1]
+    if nm in fields or leaf in fields:
+        return nm if nm in fields else leaf
+    hit = [f for f in fields if f.split("::")[-1] == leaf]
+    if len(hit) > 1:
+        raise ValueError(f"pig latin: ambiguous field {nm!r}: {hit}")
+    return hit[0] if hit else None
 
-    def cmp(x: Column, y: Column) -> Column:
-        out = F.lit(0)
-        for fld, asc in reversed(order):
-            xa, ya = x[fld], y[fld]
-            lt, gt = (F.lit(-1), F.lit(1)) if asc else (F.lit(1), F.lit(-1))
-            out = (
-                F.when(xa.isNull() & ya.isNull(), out)
-                .when(xa.isNull(), lt)
-                .when(ya.isNull(), gt)
-                .when(xa < ya, lt)
-                .when(xa > ya, gt)
-                .otherwise(out)
-            )
-        return out
 
-    return F.array_sort(bag, cmp)
+def _order_keys(keys, fields: list[str], scope=None, proj=None) -> list[tuple[str, bool]]:
+    """A nested ORDER's ``[(ref, asc)]`` resolved once, when recorded,
+    to real field names: ``*`` expands to the pipe's ``fields`` (the
+    element itself for a scalar-element bag), ``$N`` indexes them,
+    inner-FOREACH names map through ``proj`` to their materialized
+    child columns, and other names resolve against ``scope`` (the
+    child's columns; kept as written when absent — a key outside the
+    projection) or, without a scope, strictly against ``fields``."""
+    out: list[tuple[str, bool]] = []
+    for ref, asc in keys:
+        nm = ref.split(".")[-1]
+        if nm == "*":
+            out.extend((f, asc) for f in fields or ["*"])
+        elif nm.startswith("$"):
+            out.append((_field_ref(nm, fields), asc))
+        elif proj and nm in proj:
+            out.append((proj[nm], asc))
+        else:
+            fld = _field_ref(nm, scope if scope is not None else fields)
+            if fld is None and scope is None:
+                raise NameError(f"nested ORDER: no field {nm!r} (fields: {fields})")
+            out.append((fld or nm, asc))
+    return out
+
+
+def _bag_op(st, fields: list[str], scope=None, proj=None) -> tuple[str, object]:
+    """One nested filter/distinct/order/limit statement as the op
+    _apply_bag_ops replays, its ORDER keys resolved (_order_keys)."""
+    if st.kind == "order":
+        return "order", _order_keys(st.cond, fields, scope, proj)
+    return st.kind, st.cond
+
+
+def _bag_keys(keys, fields: list[str], rename: dict[str, str]) -> list[tuple[str | None, bool]]:
+    """Recorded ORDER keys (child or element field names) mapped onto a
+    projected bag's element ``fields`` (``rename``: materialized child
+    column → bag field); None where the projection dropped the key."""
+    return [(_field_ref(rename.get(c, c), fields), a) for c, a in keys]
 
 
 def _binop(op: str, a: Column, b: Column) -> Column:

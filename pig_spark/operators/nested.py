@@ -15,6 +15,8 @@ keys, so this module provides BOTH strategies (SURVEY §7.4 hard part 1):
 2. **Bag functions** (small-group fast path): higher-order functions on
    a materialized array<struct> column — filter(), array_sort with a
    comparator, array_distinct, slice — all JVM-evaluated, no Python.
+   ``bag_sort`` is the engine's one bag comparator: the Latin
+   translator and ``functions.TOP`` sort bags through it.
 """
 
 from __future__ import annotations
@@ -86,15 +88,30 @@ def bag_filter(bag: Column, predicate) -> Column:
     return F.filter(bag, predicate)
 
 
-def bag_sort(bag: Column, field: str, ascending: bool = True) -> Column:
-    """nested ORDER BY one field via array_sort comparator (JVM-side)."""
-    lt, gt = (-1, 1) if ascending else (1, -1)
-    return F.array_sort(
-        bag,
-        lambda a, b: F.when(a[field] < b[field], F.lit(lt))
-        .when(a[field] > b[field], F.lit(gt))
-        .otherwise(F.lit(0)),
-    )
+def bag_sort(bag: Column, order: Sequence[tuple[str, bool]]) -> Column:
+    """Nested ORDER over a bag column: sort by ``[(field, ascending)]``
+    keys, lexicographically, via array_sort with a comparator
+    (JVM-side). ``'*'`` names the element itself — the key of a
+    scalar-element bag. Pig's null ordering (DataType.compare): null is
+    the smallest value, so nulls come first under an ascending key and
+    last under a descending one."""
+
+    def cmp(x: Column, y: Column) -> Column:
+        out = F.lit(0)
+        for fld, asc in reversed(order):
+            xa, ya = (x, y) if fld == "*" else (x[fld], y[fld])
+            lt, gt = (F.lit(-1), F.lit(1)) if asc else (F.lit(1), F.lit(-1))
+            out = (
+                F.when(xa.isNull() & ya.isNull(), out)
+                .when(xa.isNull(), lt)
+                .when(ya.isNull(), gt)
+                .when(xa < ya, lt)
+                .when(xa > ya, gt)
+                .otherwise(out)
+            )
+        return out
+
+    return F.array_sort(bag, cmp)
 
 
 def bag_limit(bag: Column, n: int) -> Column:

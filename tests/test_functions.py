@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 import pig_spark.functions as PF
 from pig_spark.compat import cast_as
+from pig_spark.operators.nested import bag_sort
 
 
 def one(spark, expr):
@@ -80,6 +81,39 @@ def test_top_bag(spark):
     bag = F.array(*[F.struct(F.lit(i).alias("s")) for i in [5, 1, 9, 3]])
     out = one(spark, PF.TOP(2, "s", bag))
     assert [t["s"] for t in out] == [9, 5]
+
+
+NULL_BAG = [5, None, 3, None, 9, 1, 7]
+
+
+@pytest.mark.parametrize(
+    "sort, want",
+    [
+        (lambda bag: PF.TOP(3, "v", bag), [9, 7, 5]),
+        (lambda bag: PF.TOP(3, "v", bag, ascending=True), [None, None, 1]),
+        (lambda bag: bag_sort(bag, [("v", True)]), [None, None, 1, 3, 5, 7, 9]),
+        (lambda bag: bag_sort(bag, [("v", False)]), [9, 7, 5, 3, 1, None, None]),
+    ],
+    ids=["top-desc", "top-asc", "sort-asc", "sort-desc"],
+)
+def test_bag_sort_nulls_smallest(spark, sort, want):
+    """One bag comparator, Pig's null ordering: null is the smallest
+    value — first ascending, last descending, never a top-n winner."""
+    bag = F.array(*[F.struct(F.lit(v).cast("int").alias("v")) for v in NULL_BAG])
+    assert [t["v"] for t in one(spark, sort(bag))] == want
+
+
+def test_bag_sort_multikey_and_scalar_elements(spark):
+    """Keys compare lexicographically; '*' is the element of a
+    scalar-element bag."""
+    rows = [(1, "b"), (None, "a"), (1, "a"), (2, None)]
+    bag = F.array(
+        *[F.struct(F.lit(x).cast("int").alias("x"), F.lit(y).cast("string").alias("y")) for x, y in rows]
+    )
+    got = one(spark, bag_sort(bag, [("x", False), ("y", True)]))
+    assert [(t["x"], t["y"]) for t in got] == [(2, None), (1, "a"), (1, "b"), (None, "a")]
+    scalars = F.array(*[F.lit(v).cast("int") for v in NULL_BAG])
+    assert one(spark, bag_sort(scalars, [("*", False)])) == [9, 7, 5, 3, 1, None, None]
 
 
 def test_add_duration_preserves_time(spark):

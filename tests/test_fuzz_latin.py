@@ -425,3 +425,189 @@ def _fuzz_loop(spark, sf_dir, duck, rng, failures, ansi_start):
                 f"case {i} diff: spark {len(got)} rows vs duckdb {len(want)}\n{script}\n{sql}"
                 f"\nfirst spark: {got[:2]}\nfirst duck: {want[:2]}"
             )
+
+
+# ----------------------------------------------------------------------
+# nested FOREACH: GROUP, then a chain of FILTER / ORDER / LIMIT /
+# DISTINCT over the inner bag (ops after a LIMIT included), consumed by
+# aggregates, the bag itself or FLATTEN — vs the SQL window twin
+# ----------------------------------------------------------------------
+
+N_NESTED = 24
+NESTED_SEED = 20261017
+
+# (latin, sql) predicates over the nullable columns: a null operand
+# drops the tuple in both engines
+_NESTED_PREDS = [
+    ("a > {v}", "a > {v}"),
+    ("a IS NULL", "a IS NULL"),
+    ("b == '{s}'", "b = '{s}'"),
+    ("a IN (1, 3, 5, 7)", "a IN (1, 3, 5, 7)"),
+    ("b IS NOT NULL AND a < {v}", "b IS NOT NULL AND a < {v}"),
+    ("NOT (a == {v})", "NOT (a = {v})"),
+]
+
+
+def _nested_rows(rng):
+    """(k, id, a, b): a and b nullable; some tuples repeat exactly, so
+    DISTINCT has work while an ORDER ending in ``id`` still orders
+    distinct tuples totally (LIMIT survivors are a fixed multiset).
+    Group 5 is all-null, so most FILTERs empty its bag."""
+    rows = []
+    for i in range(48):
+        k = rng.randint(1, 4)
+        a = None if rng.random() < 0.2 else rng.randint(0, 9)
+        b = None if rng.random() < 0.2 else rng.choice("xyz")
+        rows.append((k, i, a, b))
+        if rng.random() < 0.25:
+            rows.append((k, i, a, b))
+    rows.append((5, 48, None, None))
+    return rows
+
+
+def _nested_order(rng):
+    """A random ORDER key list ending in the unique ``id``: (latin, sql)
+    with Pig's null ordering (null smallest)."""
+    keys = rng.sample(["a", "b"], rng.randint(0, 2)) + ["id"]
+    lat, sql = [], []
+    for c in keys:
+        asc = rng.random() < 0.5
+        lat.append(f"{c} {'ASC' if asc else 'DESC'}")
+        sql.append(f"{c} {'ASC NULLS FIRST' if asc else 'DESC NULLS LAST'}")
+    return ", ".join(lat), ", ".join(sql)
+
+
+def _gen_nested(rng, path, i):
+    """One nested-FOREACH script and its SQL twin. Returns (script,
+    sql, ordered): ``ordered`` is true when a GENERATEd bag has a
+    defined order (its SQL twin carries the position). Stratified by
+    case number: even cases lead with ORDER + LIMIT, so the random ops
+    after it replay on the sliced bag; the consumer cycles through
+    aggregates, the bag and FLATTEN."""
+    kinds = ["FILTER", "ORDER", "LIMIT", "DISTINCT"]
+    plan = [rng.choices(kinds, weights=[4, 3, 3, 1])[0] for _ in range(rng.randint(1, 3))]
+    if i % 2 == 0:
+        plan = ["FILTER"] * rng.randint(0, 1) + ["ORDER", "LIMIT"] + plan
+    else:
+        plan = [rng.choice(["FILTER", "ORDER", "DISTINCT"])] + plan
+    stmts, ctes = [], ["s0 AS (SELECT k, id, a, b FROM r)"]
+    src, order = "r", None
+    for step, kind in enumerate(plan, 1):
+        if kind == "LIMIT" and order is None:
+            kind = "ORDER"  # LIMIT survivors need a total order
+        if kind == "LIMIT":
+            n = rng.randint(1, 4)
+            stmts.append(f"s{step} = LIMIT {src} {n};")
+            ctes.append(
+                f"s{step} AS (SELECT k, id, a, b FROM s{step - 1} QUALIFY "
+                f"row_number() OVER (PARTITION BY k ORDER BY {order}) <= {n})"
+            )
+        elif kind == "ORDER":
+            lat, sql = _nested_order(rng)
+            stmts.append(f"s{step} = ORDER {src} BY {lat};")
+            ctes.append(f"s{step} AS (SELECT * FROM s{step - 1})")
+            order = sql
+        elif kind == "FILTER":
+            lp, sp = rng.choice(_NESTED_PREDS)
+            v, s = rng.randint(1, 8), rng.choice("xyz")
+            stmts.append(f"s{step} = FILTER {src} BY {lp.format(v=v, s=s)};")
+            ctes.append(f"s{step} AS (SELECT * FROM s{step - 1} WHERE {sp.format(v=v, s=s)})")
+        else:
+            # DISTINCT's output order is its own (Pig sorts the
+            # distinct bag): LIMIT waits for the next ORDER
+            stmts.append(f"s{step} = DISTINCT {src};")
+            ctes.append(f"s{step} AS (SELECT DISTINCT * FROM s{step - 1})")
+            order = None
+        src = f"s{step}"
+    last = src
+    groups = "gk AS (SELECT DISTINCT k FROM r)"
+    consumer = i % 3
+    if consumer == 0:
+        gen = f"COUNT({last}) AS n, SUM({last}.a) AS sa, MIN({last}.b) AS mb, MAX({last}.a) AS xa"
+        tail = (
+            f"SELECT gk.k AS kk, COUNT(t.k) AS n, SUM(t.a) AS sa, MIN(t.b) AS mb, "
+            f"MAX(t.a) AS xa FROM gk LEFT JOIN {last} t ON gk.k = t.k GROUP BY gk.k"
+        )
+        ordered = False
+    elif consumer == 1:
+        gen = f"{last} AS bag"
+        pos = f"row_number() OVER (PARTITION BY gk.k ORDER BY {order})" if order else "0"
+        tail = (
+            f"SELECT gk.k AS kk, t.k, t.id, t.a, t.b, {pos} AS pos "
+            f"FROM gk LEFT JOIN {last} t ON gk.k = t.k"
+        )
+        ordered = order is not None
+    else:
+        gen = f"FLATTEN({last})"
+        tail = f"SELECT k AS kk, k, id, a, b FROM {last}"
+        ordered = False
+    script = (
+        f"r = LOAD '{path}' USING ParquetLoader();\n"
+        "g = GROUP r BY k;\n"
+        "out = FOREACH g {\n    " + "\n    ".join(stmts) + f"\n    GENERATE group AS kk, {gen};\n}};"
+    )
+    sql = "WITH " + ", ".join([groups, *ctes]) + " " + tail
+    return script, sql, ordered
+
+
+def _nested_bag_rows(got, want_rows, ordered):
+    """Bag consumer: Spark's (kk, bag) rows vs the SQL twin's one row
+    per element (an element-less LEFT JOIN row for an empty bag) —
+    sequences when the bag is ordered, sorted multisets otherwise."""
+    import collections
+
+    want = collections.defaultdict(list)
+    for r in want_rows:
+        if r[1] is None:
+            want[r[0]]
+        else:
+            want[r[0]].append((r[5], tuple(_norm(v) for v in r[1:5])))
+    want = {
+        kk: [t for _, t in sorted(els)] if ordered else sorted(t for _, t in els)
+        for kk, els in want.items()
+    }
+    have = {}
+    for kk, bag in got:
+        tuples = [tuple(_norm(v) for v in t) for t in bag]
+        have[kk] = tuples if ordered else sorted(tuples)
+    return have, want
+
+
+def test_latin_nested_fuzz_differential(spark, tmp_path):
+    """Nested FOREACH scripts over nullable columns: each statement
+    chain runs through the nested lowerings (flat aggregates, top-k
+    window, collected bags with ops replayed after the LIMIT) and must
+    equal the SQL twin built from FILTER clauses and row_number
+    windows."""
+    rng = random.Random(NESTED_SEED)
+    path = str(tmp_path / "nested.parquet")
+    con = duckdb.connect()
+    rows = _nested_rows(rng)
+    con.execute("CREATE TABLE r (k INTEGER, id INTEGER, a INTEGER, b VARCHAR)")
+    con.executemany("INSERT INTO r VALUES (?, ?, ?, ?)", rows)
+    con.execute(f"COPY r TO '{path}' (FORMAT PARQUET)")
+    failures = []
+    for i in range(N_NESTED):
+        script, sql, ordered = _gen_nested(rng, path, i)
+        try:
+            df = run(spark, script)["out"].df
+            cols = df.columns
+            got_rows = df.collect()
+            duck_rel = con.execute(sql)
+            dcols = [d[0] for d in duck_rel.description]
+            want_rows = duck_rel.fetchall()
+            if "bag" in cols:
+                got, want = _nested_bag_rows(
+                    [(r["kk"], r["bag"]) for r in got_rows], want_rows, ordered
+                )
+            else:
+                got = sorted(tuple(_norm(v) for v in r) for r in got_rows)
+                order = [dcols.index(c) for c in cols]
+                want = sorted(tuple(_norm(r[j]) for j in order) for r in want_rows)
+        except Exception as ex:  # pragma: no cover - diagnostic path
+            failures.append(f"case {i} raised {type(ex).__name__}: {ex}\n{script}\n{sql}")
+            continue
+        if got != want:
+            failures.append(f"case {i} diff\n{script}\n{sql}\nspark: {got}\nduck:  {want}")
+    con.close()
+    assert not failures, "\n\n".join(failures)

@@ -904,6 +904,60 @@ def test_top_positional_field_index(spark, sf_dir):
         assert row["top2"][0]["l_extendedprice"] >= row["top2"][1]["l_extendedprice"]
 
 
+def test_top_positional_index_nullable_field(spark, tmp_path):
+    """TOP over a nullable field: null is the smallest value, so the
+    descending top-n never picks a null over a number (TOP.java)."""
+    src = tmp_path / "t.tsv"
+    src.write_text("".join(f"1\t{'' if v is None else v}\n" for v in [5, None, 3, None, 9, 1, 7]))
+    rels = run(spark, f"""
+        a = LOAD '{src}' AS (k:int, v:int);
+        g = GROUP a BY k;
+        t = FOREACH g GENERATE group, TOP(3, 1, a) AS top3;
+    """)
+    assert [t["v"] for t in rels["t"].df.collect()[0]["top3"]] == [9, 7, 5]
+
+
+def test_bag_column_pipe_in_and_flattened_pipe_call(spark, tmp_path):
+    """The one per-element evaluator covers what either former copy
+    did: IN in a FILTER over a flat relation's bag column, and a
+    builtin call in a FILTER chained onto a FLATTENed inner-FOREACH
+    pipe."""
+    src = tmp_path / "t.tsv"
+    src.write_text("".join(f"{k}\t{v}\n" for k, v in [(1, 1), (1, 2), (1, 3), (1, 9), (2, 4)]))
+    base = f"""
+        a = LOAD '{src}' AS (k:int, v:int);
+        g = GROUP a BY k;
+    """
+    rels = run(spark, base + """
+        h = FOREACH g GENERATE group AS k, a AS r;
+        x = FOREACH h { f = FILTER r BY v IN (1, 3); GENERATE k, COUNT(f) AS n; };
+    """)
+    assert sorted(map(tuple, rels["x"].df.collect())) == [(1, 2), (2, 0)]
+    rels = run(spark, base + """
+        x = FOREACH g {
+            p = FOREACH a GENERATE FLATTEN(TOBAG(v, v - 6)) AS x;
+            f = FILTER p BY ABS(x) > 4;
+            GENERATE group, COUNT(f) AS n;
+        };
+    """)
+    # |x| over {1,-5}, {2,-4}, {3,-3}, {9,3} and {4,-2}
+    assert sorted(map(tuple, rels["x"].df.collect())) == [(1, 2), (2, 0)]
+
+
+def test_nested_count_projection_first_field(spark, tmp_path):
+    """COUNT over an inner-FOREACH projection counts the tuples whose
+    FIRST projected field is non-null (COUNT.java:40), not the child's
+    first column."""
+    src = tmp_path / "t.tsv"
+    src.write_text("1\t\t5\n1\t2\t6\n1\t3\t\n2\t\t1\n")
+    rels = run(spark, f"""
+        a = LOAD '{src}' AS (k:int, v:int, w:int);
+        g = GROUP a BY k;
+        x = FOREACH g {{ p = FOREACH a GENERATE w, v; GENERATE group, COUNT(p) AS n, COUNT(a) AS na; }};
+    """)
+    assert sorted(map(tuple, rels["x"].df.collect())) == [(1, 2, 3), (2, 1, 1)]
+
+
 def test_size_polymorphic(spark, sf_dir):
     """SIZE dispatches by type as in Pig: chararray -> length, bag ->
     count, scalar -> 1 (SIZE.java family)."""
@@ -1014,6 +1068,21 @@ def test_nested_empty_filtered_group_survives(spark, sf_dir):
     n_status = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_orderstatus").distinct().count()
     assert len(rows) == n_status
     assert all(r["n"] == 0 and r["n_all"] > 0 for r in rows)
+    # the LIMIT pipe alone: its top-k frame is the only aggregate
+    # frame, and the emptied groups still come out with an empty bag
+    rels = run(spark, f"""
+        o = LOAD '{sf_dir}/orders.parquet' USING ParquetLoader();
+        g = GROUP o BY o_orderstatus;
+        t = FOREACH g {{
+            f = FILTER o BY o_totalprice < -1.0;
+            s = ORDER f BY o_totalprice DESC;
+            l = LIMIT s 2;
+            GENERATE group AS st, COUNT(l) AS n, l AS top;
+        }}
+    """)
+    rows = rels["t"].df.collect()
+    assert len(rows) == n_status
+    assert all(r["n"] == 0 and r["top"] == [] for r in rows)
 
 
 def test_generate_typed_as_alias(spark, sf_dir):

@@ -160,7 +160,7 @@ def test_topk_per_group(spark):
 def test_bag_functions(spark):
     df = spark.createDataFrame([Row(bag=[Row(x=3), Row(x=1), Row(x=2), Row(x=1)])])
     out = df.select(
-        bag_limit(bag_sort(F.col("bag"), "x"), 2).alias("sorted2"),
+        bag_limit(bag_sort(F.col("bag"), [("x", True)]), 2).alias("sorted2"),
         F.size(bag_distinct(F.col("bag"))).alias("nd"),
         F.size(bag_filter(F.col("bag"), lambda t: t["x"] > 1)).alias("nf"),
     ).collect()[0]

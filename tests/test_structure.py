@@ -154,3 +154,25 @@ def test_partition_id_only_in_running_sums():
         if "spark_partition_id(" in line
     ]
     assert not offenders, "spark_partition_id( outside operators/prefix.py:\n" + "\n".join(offenders)
+
+
+def test_one_bag_comparator():
+    """Bags sort through ONE comparator, ``operators.nested.bag_sort``
+    (multi-key, null smallest, ``'*'`` for scalar elements): the
+    hand-written copies in the Latin translator and ``TOP`` had drifted
+    apart — one ignored nulls, one treated null as equal to everything.
+    ``array_sort`` with a comparator argument may appear only there;
+    the comparator-free form (natural order) stays legal anywhere."""
+    allowed = PKG / "operators" / "nested.py"
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == allowed:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not (isinstance(node, ast.Call) and len(node.args) + len(node.keywords) > 1):
+                continue
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            if name == "array_sort":
+                offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert not offenders, "array_sort comparator outside operators/nested.py:\n" + "\n".join(offenders)
