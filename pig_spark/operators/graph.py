@@ -24,19 +24,28 @@ stars rooted at each component's minimum node in O(log n) rounds —
 the 100 TB-scale property (min-label *propagation* needs O(diameter)
 rounds, which a chain-shaped dup cluster turns into O(n)).
 
-Spark mapping: each step is ONE ``groupBy(min)`` plus one
-co-partitioned join on the same key (AQE coalesces the twin
-exchanges); per-round ``localCheckpoint`` truncates lineage so the
-iteration count never deepens the plan (on a real cluster with an HDFS
-checkpoint dir, ``DataFrame.checkpoint`` is the durable variant — same
-call shape).  Convergence is detected by an order-insensitive edge-set
-checksum (count + sum of per-edge hashes), one tiny aggregate per
-round, no ``collect()`` of edges.
+Stop rule, exact: canonical distinct edges (u < v) form a star forest
+exactly when no node has both a smaller neighbor and a second neighbor
+(``min(Γ(n)) < n`` and ``deg(n) > 1``); each component is then one
+star rooted at its minimum.  The loop stops at that fixpoint, with no
+confirming round after it, and a star-forest input takes zero rounds.
+
+Spark mapping: a round starts with ONE window pass partitioned by node
+over the bidirected edges (``__mn = min(Γ(u))``, ``__deg = |Γ(u)|``),
+stored with a lazy ``localCheckpoint``.  That pass serves the stop
+test (a count of violating rows, which also materializes the store),
+the large-star emit, and the final (node, component) output, which
+needs no exchange.  Small-star is one window partitioned by node plus
+the canonical distinct.  The store truncates lineage, so the
+iteration count never deepens the plan (on a cluster with a
+checkpoint dir, ``DataFrame.checkpoint`` is the durable variant, same
+call shape); each round frees the previous round's store once its own
+is materialized.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = ["connected_components"]
@@ -53,47 +62,46 @@ def _canon(edges: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
-def _bidir(e: DataFrame) -> DataFrame:
-    return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+def _by_node(e: DataFrame) -> DataFrame:
+    """The round's stored pass: every (u, v) of the bidirected edges
+    with ``__mn = min(Γ(u))`` and ``__deg = |Γ(u)|``."""
+    flip = F.struct(F.col("v").alias("u"), F.col("u").alias("v"))
+    b = e.select(F.inline(F.array(F.struct("u", "v"), flip)))
+    by_node = Window.partitionBy("u")
+    return b.select(
+        "u",
+        "v",
+        F.min("v").over(by_node).alias("__mn"),
+        F.count(F.lit(1)).over(by_node).alias("__deg"),
+    ).localCheckpoint(eager=False)
 
 
-def _large_star(e: DataFrame) -> DataFrame:
-    """(m, v) for every neighbor v > u, m = min(Γ(u) ∪ {u}).
-
-    r13: NO ``_canon`` on the output — for every emitted pair
-    m ≤ u < v, so least/greatest and the self-loop filter are identity
-    work, and the round-closing distinct only dropped pairs emitted by
-    two different u's. Small-star's aggregates (min) are multiset-
-    insensitive and its own canon-distinct dedups the round output, so
-    the per-round edge SET sequence — hence convergence and the
-    result — is IDENTICAL (verified row-identical at sf0.001+sf0.01
-    for all CC consumers) while each round loses one full exchange.
-    In-session A/B on q87: 2.40 → 2.17 s (−10%)."""
-    b = _bidir(e)
-    mins = b.groupBy("u").agg(F.min("v").alias("__mn"))
-    m = F.least(F.col("u"), F.col("__mn"))
-    return (
-        b.join(mins, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(m.alias("u"), F.col("v").alias("v"))
-    )
+def _star_forest(p: DataFrame) -> bool:
+    """The exact stop test over a :func:`_by_node` pass: no node has
+    both a smaller neighbor and a second neighbor.  Counting the
+    violating rows also materializes the stored pass.  An RDD count is
+    one job; ``DataFrame.count`` adds a single-partition exchange (a
+    second job), and ``isEmpty`` scans partitions in growing batches."""
+    bad = p.filter((F.col("__mn") < F.col("u")) & (F.col("__deg") > 1))
+    return bad._jdf.rdd().count() == 0  # noqa: SLF001
 
 
-def _small_star(e: DataFrame) -> DataFrame:
-    """Orient larger→smaller; connect N(u) ∪ {u} to its minimum."""
-    b = e.select(F.col("v").alias("u"), F.col("u").alias("v"))  # u > v
-    mins = b.groupBy("u").agg(F.min("v").alias("__mn"))  # min ≤ all of N(u) < u
-    nbrs = b.join(mins, "u").select(F.col("v").alias("__a"), F.col("__mn").alias("__b"))
-    selfs = mins.select(F.col("u").alias("__a"), F.col("__mn").alias("__b"))
-    return _canon(nbrs.union(selfs), "__a", "__b")
+def _star_round(p: DataFrame) -> DataFrame:
+    """Large-star then small-star over a :func:`_by_node` pass."""
+    # large-star: (m, v) for every neighbor v > u, m = least(u, __mn),
+    # emitted oriented larger→smaller (u=v, v=m) for small-star; m ≤ u < v
+    big = p.filter(F.col("v") > F.col("u"))
+    b = big.select(F.col("v").alias("u"), F.least("u", "__mn").alias("v"))
+    # small-star: connect N(u) ∪ {u} to min(N(u)) (all of N(u) < u)
+    s = b.withColumn("__mn", F.min("v").over(Window.partitionBy("u")))
+    mn = F.col("__mn").alias("b")
+    pairs = F.array(F.struct(F.col("v").alias("a"), mn), F.struct(F.col("u").alias("a"), mn))
+    return _canon(s.select(F.inline(pairs)), "a", "b")
 
 
-def _checksum(e: DataFrame) -> tuple[int, int]:
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(F.hash("u", "v").cast("long")), F.lit(0)).alias("h"),
-    ).first()
-    return (row["n"], row["h"])
+def _release(stored: DataFrame) -> None:
+    """Free the rows a ``localCheckpoint`` holds under ``stored``."""
+    stored._jdf.queryExecution().logical().rdd().unpersist(False)  # noqa: SLF001
 
 
 def connected_components(
@@ -114,40 +122,24 @@ def connected_components(
     ``canonical=True`` is the caller's guarantee that the edges are
     ALREADY canonical — src < dst, distinct, no nulls (true for every
     LSH pair stream: id_a < id_b by construction, deduped, verified) —
-    which skips the initial least/greatest + distinct pass (one
-    exchange + its job, r13).
+    which skips the initial least/greatest + distinct pass.  Raises
+    ``RuntimeError`` when ``max_iter`` star rounds do not converge.
     """
-    # r12: checkpoints are LAZY — the convergence checksum right after
-    # each one is a full-partition aggregate, so it materializes the
-    # checkpoint as a side effect: one driver round-trip per round
-    # instead of two (in-session A/B on q87: 3.04 → 2.56 s, −16%).
-    # r13, measured NON-change: batching TWO star rounds per
-    # convergence checksum (VERDICT r12 #4) A/B'd at +59% (2.40 →
-    # 3.80 s) — the catalog's edge sets converge in ~2 rounds, so the
-    # batch just doubles the shuffle work past the fixpoint to save
-    # one driver sync; it would only pay at many-round diameters.
     if canonical:
-        e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
-            eager=False
-        )
+        e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     else:
-        e = _canon(edges, src, dst).localCheckpoint(eager=False)
-    prev = _checksum(e)
+        e = _canon(edges, src, dst)
+    p = _by_node(e)
+    star = _star_forest(p)
     for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        cur = _checksum(e)
-        if cur == prev:
+        if star:
             break
-        prev = cur
-    else:
+        p, spent = _by_node(_star_round(p)), p
+        star = _star_forest(p)
+        _release(spent)
+    if not star:
         raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
-    # converged edge set is a star forest; canonical order (u < v)
-    # puts each component's root (its minimum) on the u side. r13: in
-    # a distinct star forest every member (v) carries exactly one edge
-    # and no member is a root, so `nodes` is already duplicate-free
-    # and disjoint from `roots` — only the root side needs a distinct;
-    # the union-wide distinct exchange is gone (verified row-identical
-    # at sf0.001/sf0.01 + adversarial chain/multi-component graphs).
-    nodes = e.select(F.col("v").alias("node"), F.col("u").alias("component"))
-    roots = e.select(F.col("u").alias("node"), F.col("u").alias("component")).distinct()
-    return nodes.union(roots)
+    # one row per node: its edge to its minimum neighbor
+    return p.filter(F.col("v") == F.col("__mn")).select(
+        F.col("u").alias("node"), F.least("u", "__mn").alias("component")
+    )

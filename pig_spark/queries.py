@@ -2207,8 +2207,8 @@ def q123_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
     row per vector with its semantic group and keep/drop flag.
 
     100 TB design: candidate generation is LSH-bucketed (never
-    all-pairs), CC shuffles only edges (log rounds, checksummed
-    convergence), and the final survivors join is a LEFT join of ids
+    all-pairs), CC shuffles only edges (log rounds, an exact
+    star-forest stop), and the final survivors join is a LEFT join of ids
     against the (small) component map — broadcastable whenever the
     near-dup fraction is low, which at 100 TB it is."""
     from .operators.graph import connected_components

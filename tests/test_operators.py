@@ -594,31 +594,42 @@ def test_token_packing_budget_property(spark, sf_dir):
         assert r["nb"] == r["mb"] + 1
 
 
+def _union_find(edges):
+    """(node → min node of its component) for the non-loop edges."""
+    real = [(a, b) for a, b in edges if a != b]
+    parent = {x: x for e in real for x in e}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in real:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    comp = {}
+    for n in parent:
+        comp.setdefault(find(n), []).append(n)
+    return {n: min(mem) for mem in comp.values() for n in mem}
+
+
+def _cc_matches_union_find(spark, edges, schema="src: long, dst: long", **kw):
+    from pig_spark.operators.graph import connected_components
+
+    df = spark.createDataFrame(edges, schema)
+    rows = connected_components(df, "src", "dst", **kw).collect()
+    got = {r["node"]: r["component"] for r in rows}
+    assert len(rows) == len(got)  # one row per node
+    assert got == _union_find(edges)
+
+
 def test_connected_components_vs_union_find(spark):
     """operators/graph: large-star/small-star CC equals a driver-side
     union-find on random graphs, including a 300-node chain (the
     O(log n)-rounds case that kills naive label propagation)."""
     import random
-
-    from pig_spark.operators.graph import connected_components
-
-    def uf(edges, nodes):
-        parent = {n: n for n in nodes}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        comp = {}
-        for n in nodes:
-            comp.setdefault(find(n), []).append(n)
-        return {n: min(mem) for mem in comp.values() for n in mem}
 
     rng = random.Random(7)
     cases = [
@@ -627,11 +638,75 @@ def test_connected_components_vs_union_find(spark):
         [(i, i + 1) for i in range(299)],  # chain
     ]
     for edges in cases:
+        _cc_matches_union_find(spark, edges)
+
+
+def test_connected_components_adversarial_graphs(spark):
+    """The exact star-forest stop on shapes where an inexact one would
+    stop early or late: a star forest (zero rounds, so max_iter=0
+    converges), a reversed chain, hubs sharing a leaf (a leaf with two
+    centres is not a star), duplicate and reversed edges, string ids."""
+    star_forest = [(1, x) for x in range(2, 9)] + [(10, 11), (20, 30), (20, 25)]
+    _cc_matches_union_find(spark, star_forest, canonical=True, max_iter=0)
+    _cc_matches_union_find(spark, star_forest, max_iter=0)
+    _cc_matches_union_find(spark, [(i + 1, i) for i in range(199)])  # reversed chain
+    hubs = [(1, x) for x in range(10, 21)] + [(2, x) for x in range(20, 31)]
+    _cc_matches_union_find(spark, hubs, canonical=True)
+    high_hubs = [(100, x) for x in range(3, 8)] + [(50, x) for x in range(7, 12)]
+    _cc_matches_union_find(spark, high_hubs)
+    dup_rev = [(1, 2), (2, 1), (1, 2), (3, 2), (2, 3), (5, 5), (4, 6), (6, 4), (6, 7)]
+    _cc_matches_union_find(spark, dup_rev, canonical=False)
+    strs = [("b", "a"), ("c", "b"), ("x", "y"), ("d", "c"), ("y", "w"), ("aa", "d")]
+    _cc_matches_union_find(spark, strs, "src: string, dst: string")
+
+
+def test_connected_components_max_iter_raises(spark):
+    from pig_spark.operators.graph import connected_components
+
+    df = spark.createDataFrame([(i, i + 1) for i in range(299)], "src: long, dst: long")
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(df, max_iter=1)
+
+
+def test_connected_components_job_counts(spark):
+    """Jobs per call, pinned exactly. The stop test on a by-node pass
+    is two jobs: its window exchange and the count. A round adds the
+    small-star window and distinct exchanges before its own test, four
+    jobs in all. A star-forest input therefore takes 2 jobs, a graph
+    that converges in one round 6 (a confirming round would add 4
+    more), and the result is read in one job, with no exchange."""
+    from pig_spark.operators.graph import connected_components
+    from pig_spark.stats import run_with_stats
+
+    def jobs(edges):
         df = spark.createDataFrame(edges, "src: long, dst: long")
-        got = {r["node"]: r["component"] for r in connected_components(df, "src", "dst").collect()}
-        real = [(a, b) for a, b in edges if a != b]
-        nodes = sorted({x for e in real for x in e})
-        assert got == uf(real, nodes)
+        call = run_with_stats(spark, lambda: connected_components(df, canonical=True))
+        read = run_with_stats(spark, call.result.collect)
+        assert call.is_successful() and read.num_jobs == 1
+        return call.num_jobs
+
+    assert jobs([(1, 2), (1, 3), (4, 5)]) == 2  # star forest: zero rounds
+    assert jobs([(1, 2), (2, 3)]) == 6  # a path converges in one round
+
+
+def test_connected_components_frees_superseded_stores(spark):
+    """Each round frees the previous round's stored rows: once the
+    result is collected, the only new stored RDD is the final pass the
+    result reads."""
+    from pig_spark.operators.graph import connected_components
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def stored():
+        return {r.id() for r in sc.getRDDStorageInfo()}
+
+    before = stored()
+    df = spark.createDataFrame([(i, i + 1) for i in range(40)], "src: long, dst: long")
+    cc = connected_components(df)
+    assert len(cc.collect()) == 41
+    leaves = cc._jdf.queryExecution().logical().collectLeaves()
+    final = {leaves.apply(i).rdd().id() for i in range(leaves.size())}
+    assert stored() - before == final
 
 
 def test_connected_components_empty_and_selfloops(spark):
