@@ -19,8 +19,7 @@ lives here so the core DSL stays idiomatic Spark:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 
@@ -57,15 +56,3 @@ def cast_as(df: DataFrame, schema: str | T.StructType) -> DataFrame:
         for i, f in enumerate(schema.fields)
     ]
     return df.select(*cols)
-
-
-def null_if(col: Column, p: float, seed: int) -> Column:
-    """Derive *_null fixture variants (generate_data.pl:312 convention:
-    each field independently null with probability p)."""
-    return F.when(F.rand(seed) < p, F.lit(None)).otherwise(col)
-
-
-def pig_tuple_string(*cols: Column) -> Column:
-    """Render Pig's textual tuple form ``(a,b,c)``
-    (Tuple.toDelimitedString / data/utils) for golden-file diffs."""
-    return F.concat(F.lit("("), F.concat_ws(",", *[c.cast("string") for c in cols]), F.lit(")"))

@@ -214,8 +214,7 @@ def window_fingerprint_stage(
     size>0 filter whose pushdown inlines the whole level chain into
     one interpreted Filter (the q134 r13 lesson — a measured 13×
     regression class). Filter the null row above the Generate instead.
-    In-session A/B on the q137 fingerprint slice: 0.98 → 0.84 s; q137
-    body measured with the full pipeline (see OPTIMIZATION_r13.md)."""
+    In-session A/B on the q137 fingerprint slice: 0.98 → 0.84 s."""
     from .dedup import _poly_c_pow
 
     widths: list[int] = []

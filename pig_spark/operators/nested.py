@@ -70,14 +70,6 @@ def topk_per_group(
     )
 
 
-def distinct_count_per_group(
-    df: DataFrame, group_keys: Sequence[str], col: str, name: str = "distinct_count"
-) -> DataFrame:
-    """{ d = DISTINCT x.col; GENERATE COUNT(d) } → countDistinct, which
-    Catalyst plans as a partial-aggregated expand (no bags)."""
-    return df.groupBy(*group_keys).agg(F.countDistinct(col).alias(name))
-
-
 # ----------------------------------------------------------------------
 # strategy 2: bag-column functions (post collect_list(struct))
 # ----------------------------------------------------------------------

@@ -4175,15 +4175,12 @@ _ANN_INDEX_BUILT: set[str] = set()
 
 def ensure_ann_index(spark: SparkSession, sf: str) -> str:
     """Build the persisted ANN index for ``sf`` ONCE per process and
-    return its path (VERDICT r11 missing #3: q157's bench row used to
-    re-run the full encode + partitioned write inside every timed
-    sample, drowning the serving-path signal — the build now happens
-    on first touch only, and bench.py pre-builds it in the warm-up
-    section and reports the build cost as its own row). The path is
-    per-(sf, PROCESS): the returned DataFrames are evaluated lazily by
-    callers, so the directory must outlive the call — keying by pid
-    removes the cross-session overwrite race of a world-shared path,
-    and an atexit rmtree reclaims it on interpreter exit (ADVICE r11:
+    return its path, so repeated q157 runs time the serving path, not
+    the full encode + partitioned write. The path is per-(sf, PROCESS):
+    the returned DataFrames are evaluated lazily by callers, so the
+    directory must outlive the call — keying by pid removes the
+    cross-session overwrite race of a world-shared path, and an
+    atexit rmtree reclaims it on interpreter exit (ADVICE r11:
     the pid-keyed directory used to leak a full encoded index per
     process)."""
     import atexit
@@ -4658,9 +4655,7 @@ def ensure_sequence_store(spark: SparkSession, sf: str) -> str:
     per process and return its path — the ensure_ann_index convention
     verbatim (pid-keyed temp path so parallel sessions can't race,
     memoized so lazy DataFrames returned by q167 outlive the call,
-    atexit rmtree so the artifact doesn't leak across runs; bench.py
-    pre-builds it untimed and reports the build as its own row so the
-    q167 headline row times the SERVING path only)."""
+    atexit rmtree so the artifact doesn't leak across runs)."""
     import atexit
     import hashlib
     import os
@@ -5184,99 +5179,9 @@ from .pigmix import PIGMIX_QUERIES  # noqa: E402  (avoids circular import)
 
 _ALL: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     name: fn
-    for name, fn in sorted(globals().items())
+    for name, fn in globals().items()
     if name.startswith("q") and callable(fn) and name[1:3].isdigit()
 }
 _ALL.update(PIGMIX_QUERIES)
 
-# The driver's correctness gate checks the FIRST 50 entries in dict
-# order. Order by verification need, not by name. The window is now
-# GENERATED, not hand-derived (VERDICT r10 #5): tools/freshness.py
-# computes per-query latest GREEN driver evidence from the
-# CORRECTNESS_r*.json files and emits the plan; _TIER0 below is the
-# only hand-maintained input (new/changed-this-round queries), and
-# tests/test_structure.py pins the first 50 QUERIES entries to
-# freshness.window_plan(_TIER0). r11 plan (histogram r10:49 r9:50
-# r8:46 r7:23 + the new/changed tier 0 — q152's r10 row was RED, so
-# its evidence is r0):
-# r12 plan (histogram after r11: r11:50 r10:49 r9:50 r8:26 — zero
-# red rows, so tier 0 is just this round's NEW queries):
-#   tier 0 (14): the new r12 queries q161–q174 (BPE-id packing,
-#     strict-cap pack, loader batches, source mixture, FIM, length
-#     buckets, persisted sequence store, SFT mask pack, tokenizer
-#     fertility, FFD pack, BM25, position ids, batch ANN probe,
-#     epoch budget planner).
-#   tier 1 (26): the ENTIRE r8-evidence tail (q13/q14, q19, q32,
-#     q44–q51, q54, q56, q61–q64, q68–q71, q131, q133–q135) — all 26
-#     re-verified green at sf0.01 by the r11 judge, so rotation is
-#     de-risked. Floor moves r8 → r9.
-#   tier 2 (10): the r9-evidence block head, alphabetical.
-# 14 + 26 + 10 = 50.
-_TIER0 = [
-    "q161_bpe_sequence_pack",  # new: sequence family over BPE token ids
-    "q162_strict_pack",        # new: strict-cap packing, driver-gated
-    "q163_loader_batches",     # new: per-epoch fixed-size loader batches
-    "q164_source_mixture",     # new: temperature-weighted source sampling
-    "q165_fim_transform",      # new: fill-in-the-middle PSM reassembly
-    "q166_length_buckets",     # new: length-bucket padding accounting
-    "q167_sequence_store_roundtrip",  # new: persisted loader artifact
-    "q168_sft_mask_pack",      # new: SFT loss-mask packing accounting
-    "q169_tokenizer_fertility",  # new: BPE segmentation profile
-    "q170_ffd_pack",           # new: first-fit-decreasing bin packing
-    "q171_bm25_topk",          # new: Okapi BM25 top-k retrieval
-    "q172_position_ids",       # new: packed position/segment id streams
-    "q173_ann_batch_probe",    # new: multi-query ANN serving, one scan
-    "q174_epoch_budget_planner",  # new: capped water-filling data recipe
-    "q175_ann_recall_report",  # new: recall@k vs exact, driver-gated
-]
-
-
-def _order_key(name: str) -> tuple[int, int, str]:
-    # oldest-evidence-first (freshness.latest_evidence), tier 0 pinned
-    if name in _TIER0:
-        return (0, 0, name)
-    return (1, _EVIDENCE.get(name, 0), name)
-
-
-def _latest_evidence() -> dict[str, int]:
-    import sys as _sys
-    from pathlib import Path as _Path
-
-    tools = str(_Path(__file__).resolve().parent.parent / "tools")
-    _sys.path.insert(0, tools)
-    try:
-        from freshness import latest_evidence
-
-        # pass our own keys: freshness would otherwise import the
-        # entry module, which imports this module (mid-initialization)
-        return latest_evidence(_ALL)
-    except Exception as e:
-        # UNMISSABLE fallback (ADVICE r11: warnings.warn was easy to
-        # lose in driver logs): a corrupt CORRECTNESS file or tooling
-        # error must not silently collapse the gate window to
-        # alphabetical — the rotation guarantee is the point of the
-        # generated window. A stderr banner survives log scraping, and
-        # tests/test_structure.py::test_gate_window_matches_freshness_
-        # plan fails hard on the divergence (it recomputes the plan
-        # with the tool directly). Deliberately NOT raising here:
-        # bricking all 176 queries at import over one bad artifact is
-        # a worse failure mode than a stale-but-valid window.
-        print(
-            "=" * 72
-            + f"\npig_spark.queries: FRESHNESS EVIDENCE UNAVAILABLE ({e!r})\n"
-            "gate window falls back to tier0 + alphabetical — rotation\n"
-            "guarantee VOID; fix tools/freshness.py or the\n"
-            "CORRECTNESS_r*.json files before trusting this round's gate\n"
-            + "=" * 72,
-            file=_sys.stderr,
-        )
-        return {}
-    finally:
-        _sys.path.remove(tools)
-
-
-_EVIDENCE = _latest_evidence()
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    name: _ALL[name] for name in sorted(_ALL, key=_order_key)
-}
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = dict(sorted(_ALL.items()))

@@ -772,11 +772,6 @@ def store_sequence_file(df: DataFrame, path: str) -> None:
     df.rdd.map(tuple).saveAsSequenceFile(path)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Convenience: load driver test tables from a scale-factor dir."""
-    return {n: load(spark, f"{sf_dir}/{n}.parquet", "parquet") for n in names}
-
-
 def compact(
     spark: SparkSession,
     path: str,

@@ -18,7 +18,10 @@
 from __future__ import annotations
 
 import ast
+import json
+import os
 import re
+import subprocess
 import sys
 from pathlib import Path
 
@@ -67,29 +70,38 @@ def test_doc_query_counts_match_catalog():
     )
 
 
-def test_gate_window_matches_freshness_plan():
-    """The driver gates the FIRST 50 queries() entries; the window is
-    now GENERATED from driver-evidence freshness (VERDICT r10 #5),
-    not hand-derived. This pins the generated order to the tool's
-    plan so a hand edit of _TIER0 or a new CORRECTNESS file can never
-    silently desynchronize the two."""
-    sys.path.insert(0, str(REPO))
-    sys.path.insert(0, str(REPO / "tools"))
-    try:
-        from freshness import WINDOW, latest_evidence, window_plan
-
-        from pig_spark.queries import _TIER0, QUERIES
-    finally:
-        sys.path.pop(0)
-        sys.path.pop(0)
-    names = list(QUERIES)
-    plan = window_plan(_TIER0, latest_evidence(names))
-    assert names[:WINDOW] == plan, (
-        "queries() window diverges from tools/freshness.py plan; "
-        f"first diff: {next((a, b) for a, b in zip(names, plan) if a != b)}"
+def test_catalog_import_reads_only_the_package(tmp_path):
+    """``import pig_spark.queries`` opens no file of the repository
+    outside ``pig_spark/``, and the catalog is in name order. The order
+    used to be computed at import from round evidence files next to the
+    package, so it changed with repository history and the import
+    depended on files a packaged install does not ship. Runs in a
+    fresh interpreter, from a directory outside the repository, with an
+    ``open`` audit hook installed before the import."""
+    probe = """
+import json, os, sys
+opened = []
+def hook(event, args):
+    if event == "open" and isinstance(args[0], (str, bytes)):
+        opened.append(os.path.realpath(os.fsdecode(args[0])))
+sys.addaudithook(hook)
+from pig_spark.queries import QUERIES
+print(json.dumps({"opened": opened, "names": list(QUERIES)}))
+"""
+    env = {**os.environ, "PYTHONPATH": str(REPO)}
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=tmp_path, env=env,
+        capture_output=True, text=True, check=True,
     )
-    # tier 0 must lead the window (new/changed queries re-verify first)
-    assert names[: len(_TIER0)] == sorted(_TIER0)
+    seen = json.loads(out.stdout.splitlines()[-1])
+    outside = sorted(
+        {
+            p for p in seen["opened"]
+            if Path(p).is_relative_to(REPO) and not Path(p).is_relative_to(PKG)
+        }
+    )
+    assert not outside, "import pig_spark.queries opened files outside the package:\n" + "\n".join(outside)
+    assert seen["names"] == sorted(seen["names"])
 
 
 def test_no_invalid_escape_sequences():
@@ -111,33 +123,6 @@ def test_no_invalid_escape_sequences():
             except (SyntaxError, DeprecationWarning, SyntaxWarning) as e:
                 offenders.append(f"{rel}: {e}")
     assert not offenders, "escape-sequence debt:\n" + "\n".join(offenders)
-
-
-def test_freshness_green_row_definition():
-    """The evidence predicate counts only GREEN rows: the r10 file has
-    q152 as a crashed row (nulls) — round 10 must never count as q152
-    evidence. Asserted against the PINNED r10 artifact only: the
-    driver appends a new CORRECTNESS_r{N}.json every round, so any
-    assertion over the live artifact glob (the r11 incident: a ``< 10``
-    upper bound on latest_evidence) is falsified the moment a later
-    round goes green. Structure tests must be invariant to the driver
-    appending round artifacts."""
-    import json
-
-    sys.path.insert(0, str(REPO / "tools"))
-    try:
-        from freshness import is_green
-    finally:
-        sys.path.pop(0)
-    r10 = json.loads((REPO / "CORRECTNESS_r10.json").read_text())
-    # q152's r10 row is the canonicalizer crash (nulls) — not evidence
-    assert not is_green(r10["q152_pq_ann"])
-    # a sibling green row in the same artifact IS evidence
-    assert is_green(r10["q153_ivfpq_probe"])
-    # rows-only queries (no hash computed) still count as green
-    assert is_green({"rows_match": True, "hash_match": None})
-    # and a hash mismatch is red even when row counts agree
-    assert not is_green({"rows_match": True, "hash_match": False})
 
 
 def test_partition_id_only_in_running_sums():

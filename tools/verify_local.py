@@ -63,14 +63,7 @@ def rows_to_multiset(rows, colnames):
 
 
 def main():
-    args = list(sys.argv[1:])
-    window = None
-    if "--window" in args:
-        # --window N: check only the FIRST N queries() entries — the
-        # slice the driver's CORRECTNESS gate actually runs (N=50)
-        i = args.index("--window")
-        window = int(args[i + 1])
-        del args[i : i + 2]
+    args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
@@ -98,8 +91,6 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs = entrymod.queries()
-    if window is not None:
-        qs = dict(list(qs.items())[:window])
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
