@@ -23,6 +23,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a backquoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def qualify(df: DataFrame, alias: str) -> DataFrame:
     """Prefix every column with ``alias::`` — Pig's join/cogroup
     disambiguation scheme, applied *before* a join whose sides share

@@ -33,6 +33,17 @@ whole module):
   parquet between jobs); re-deriving shingles per branch costs 3 full
   corpus scans + tokenizations.
 
+Build-cost rule: fixed expressions are SQL templates. Every PySpark
+``F.*`` or ``Column`` call is about eight py4j round trips to the JVM
+(two reflection lookups, the call-site origin calls, a later proxy
+delete; see ``stats.count_py4j``), ≈0.12 ms of build wall time each.
+Built from Columns, a warm q41 build sent 2,348 of them and took
+0.62 s wall (4-vCPU VM, local[2]). Each stage's expressions are
+therefore written once as SQL text, from this module's constants, and
+applied with ``selectExpr``/``F.expr``, one call per expression
+whatever its size: 137 calls and 0.35 s, with the same optimized plan
+(``tests/test_build_cost.py``).
+
 All hashing is md5-derived (F.conv(substr(md5,…),16,10)) so the DuckDB
 oracle can reproduce values bit-for-bit (cast('0x'||substr(md5,…) as
 bigint)). Hash parameters live here and are imported by oracles.py —
@@ -51,7 +62,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .text import tokenize_ws
+from ..compat import sql_ident
+from .text import TOKENIZE_WS_SQL, sliding_grams_sql, tokenize_ws
 
 # ---------------------------------------------------------------------
 # shared deterministic hash parameters (mirrored into oracle SQL)
@@ -76,6 +88,26 @@ def _lcg(seed: int, n: int) -> list[int]:
 
 MINHASH_A = _lcg(42, MINHASH_K)
 MINHASH_B = _lcg(1337, MINHASH_K)
+
+#: md5_32 of the string expression ``{}``, as SQL text
+_MD5_32_SQL = "CAST(conv(substring(md5({}), 1, 8), 16, 10) AS BIGINT)"
+#: per-shingle hashes: md5_32 for signatures, xxhash64 for verification
+_H_SQL = f"transform(__sh, g -> {_MD5_32_SQL.format('g')}) AS __h"
+_HV_SQL = "transform(__sh, g -> xxhash64(g)) AS __hv"
+# The K permuted mins of `__h`, unrolled into K top-level
+# transform+array_min trees. r12 note (measured, kept UNROLLED on
+# purpose — the simhash rule): folding the K trees into one zip_with
+# over the (a, b) coefficient literals (`zip_with(a, b, lambda:
+# array_min(transform(__h, …)))`) measured a 5× REGRESSION in isolation
+# (1.33 → 6.75 s on documents, 1.64 → 7.80 s on paragraphs at sf0.1): a
+# lambda nested inside another lambda's body drops the whole tree to
+# interpreted per-element evaluation, while K separate top-level HOF
+# trees each evaluate efficiently. K = 16 is far below the
+# compile-cost threshold where the expression-count rewrite pays.
+_SIG_SQL = "array({}) AS signature".format(", ".join(
+    f"array_min(transform(__h, h -> (h * {a} + {b}) % {MINHASH_PRIME}))"
+    for a, b in zip(MINHASH_A, MINHASH_B)
+))
 
 
 def md5_32(col: Column) -> Column:
@@ -115,12 +147,11 @@ def shingle_stage(
     regex tokenizer runs exactly once per row). ``keep`` names extra
     passthrough columns (e.g. an event-time column a streaming caller
     must preserve for its watermark)."""
-    from .text import sliding_grams
-
-    toks = tokenize_ws(F.lower(F.col(text_col)))
-    staged = df.select(F.col(id_col), *keep, toks.alias("__t"))
-    sh = F.array_distinct(sliding_grams(F.col("__t"), n, clamp_to_one=True))
-    return staged.select(F.col(id_col), *keep, sh.alias("__sh"))
+    cols = [sql_ident(c) for c in (id_col, *keep)]
+    toks = TOKENIZE_WS_SQL.format(f"lower({sql_ident(text_col)})")
+    staged = df.selectExpr(*cols, f"{toks} AS __t")
+    sh = sliding_grams_sql("__t", n, clamp_to_one=True)
+    return staged.selectExpr(*cols, f"array_distinct({sh}) AS __sh")
 
 
 # ---------------------------------------------------------------------
@@ -164,10 +195,9 @@ def first_occurrence(
         keep = [c for c in df.columns if c not in set(order)]
     cols = [*order, *keep]
     key_col = key if isinstance(key, Column) else F.col(key)
-    agg = df.groupBy(key_col.alias("__fo_key")).agg(
-        F.min(F.struct(*[F.col(c) for c in cols])).alias("__fo")
-    )
-    return agg.select(*[F.col(f"__fo.{c}").alias(c) for c in cols])
+    fields = [sql_ident(c) for c in cols]
+    agg = df.groupBy(key_col.alias("__fo_key")).agg(F.expr(f"min(struct({', '.join(fields)})) AS __fo"))
+    return agg.selectExpr(*[f"__fo.{c} AS {c}" for c in fields])
 
 
 def paragraph_index(
@@ -225,37 +255,9 @@ def minhash_signatures(
     Stays columnar: no explode, no shuffle for the signature stage. The
     K permuted mins scan the materialized `__h` hashed-shingle array
     (column ref inside the lambdas — hashing runs once)."""
-    staged = _hashed_stage(shingle_stage(df, text_col, id_col, keep=keep), id_col, keep=keep)
-    return staged.select(F.col(id_col), *keep, _sig_expr().alias("signature"))
-
-
-def _hashed_stage(shingled: DataFrame, id_col: str, keep: Sequence[str] = ()) -> DataFrame:
-    """(id, __sh, __h): keep string shingles (verification) alongside
-    their 32-bit hashes (signatures)."""
-    return shingled.select(
-        F.col(id_col), *keep, F.col("__sh"), F.transform("__sh", md5_32).alias("__h")
-    )
-
-
-def _sig_expr() -> Column:
-    """The K permuted mins as K unrolled transform+array_min trees.
-
-    r12 note (measured, kept UNROLLED on purpose — the simhash rule):
-    folding the K trees into one zip_with over the (a, b) coefficient
-    literals (`zip_with(a, b, lambda: array_min(transform(__h, …)))`)
-    measured a 5× REGRESSION in isolation (1.33 → 6.75 s on documents,
-    1.64 → 7.80 s on paragraphs at sf0.1): a lambda nested inside
-    another lambda's body drops the whole tree to interpreted
-    per-element evaluation, while K separate top-level HOF trees each
-    evaluate efficiently. K = 16 is far below the compile-cost
-    threshold where the expression-count rewrite pays."""
-
-    def _perm(a: int, b: int):
-        return lambda h: (h * a + b) % MINHASH_PRIME
-
-    return F.array(
-        *[F.array_min(F.transform(F.col("__h"), _perm(MINHASH_A[i], MINHASH_B[i]))) for i in range(MINHASH_K)]
-    )
+    cols = [sql_ident(c) for c in (id_col, *keep)]
+    shingled = shingle_stage(df, text_col, id_col, keep=keep)
+    return shingled.selectExpr(*cols, "__sh", _H_SQL).selectExpr(*cols, _SIG_SQL)
 
 
 def minhash_lsh_pairs(
@@ -281,31 +283,19 @@ def minhash_lsh_pairs(
     1.68 → 1.45 s (−14%) at sf0.1.
     """
     rows = MINHASH_K // MINHASH_BANDS
+    idc = sql_ident(id_col)
     sh = shingle_stage(df, text_col, id_col)
-    docs = sh.select(
-        F.col(id_col),
-        F.transform("__sh", md5_32).alias("__h"),
-        F.transform("__sh", lambda g: F.xxhash64(g)).alias("__hv"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    sigs = docs.select(F.col(id_col), _sig_expr().alias("signature"))
+    docs = sh.selectExpr(idc, _H_SQL, _HV_SQL).persist(StorageLevel.MEMORY_AND_DISK)
+    sigs = docs.selectExpr(idc, _SIG_SQL)
     # band hash = xxhash64 of the signature slice (r12: was md5 of the
     # comma-joined stringified slice — string build + crypto hash per
     # band for a value that is only ever an equality join key; equal
     # slices hash equal under any hash, so candidates are identical)
-    bands = sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(F.slice("signature", b * rows + 1, rows)).alias("bh"),
-                    )
-                    for b in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bh")
+    band_structs = ", ".join(
+        f"struct({b} AS band, xxhash64(slice(signature, {b * rows + 1}, {rows})) AS bh)"
+        for b in range(MINHASH_BANDS)
+    )
+    bands = sigs.selectExpr(idc, f"explode(array({band_structs})) AS bb").selectExpr(idc, "bb.band", "bb.bh")
     # candidate pairs as ONE shuffle of the band stream: groupBy bucket
     # → sorted member array → in-array pair expansion (same scheme as
     # ngram_jaccard_pairs' posting groupBy — a band self-join exchanges
@@ -313,20 +303,13 @@ def minhash_lsh_pairs(
     # by construction (that's the point of banding), so the m²/2
     # in-bucket expansion is bounded; a degenerate corpus (all docs
     # identical) degrades identically under either formulation.
-    ids_arr = F.array_sort(F.collect_list(id_col))
-    grouped = bands.groupBy("band", "bh").agg(ids_arr.alias("__ids")).filter(F.size("__ids") > 1)
-    pair_structs = F.flatten(
-        F.transform(
-            "__ids",
-            lambda x, i: F.transform(
-                F.slice("__ids", i + 2, F.size("__ids")),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
+    ids_arr = F.expr(f"array_sort(collect_list({idc})) AS __ids")
+    grouped = bands.groupBy("band", "bh").agg(ids_arr).where("size(__ids) > 1")
+    later = "transform(slice(__ids, i + 2, size(__ids)), y -> struct(x AS a, y AS b))"
+    pairs = f"flatten(transform(__ids, (x, i) -> {later}))"
     cand = (
-        grouped.select(F.explode(pair_structs).alias("__p"))
-        .select(F.col("__p.a").alias("id_a"), F.col("__p.b").alias("id_b"))
+        grouped.selectExpr(f"explode({pairs}) AS __p")
+        .selectExpr("__p.a AS id_a", "__p.b AS id_b")
         .distinct()
     )
     return _verify_jaccard(cand, docs, id_col, threshold, sh_col="__hv")
@@ -338,17 +321,15 @@ def _verify_jaccard(
     """Exact Jaccard on candidate pairs; `docs` carries one distinct-
     shingle array per id in ``sh_col`` (gram strings, or any
     injective per-gram hash — set sizes are identical either way)."""
-    a = docs.select(F.col(id_col).alias("id_a"), F.col(sh_col).alias("sh_a"))
-    b = docs.select(F.col(id_col).alias("id_b"), F.col(sh_col).alias("sh_b"))
+    idc, shc = sql_ident(id_col), sql_ident(sh_col)
+    a = docs.selectExpr(f"{idc} AS id_a", f"{shc} AS sh_a")
+    b = docs.selectExpr(f"{idc} AS id_b", f"{shc} AS sh_b")
     joined = pairs.join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        joined.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    inter = "CAST(size(array_intersect(sh_a, sh_b)) AS DOUBLE)"
+    union = "CAST(size(array_union(sh_a, sh_b)) AS DOUBLE)"
+    jac = f"round(CASE WHEN {union} > 0 THEN {inter} / {union} ELSE 0.0D END, 6)"
+    scored = joined.selectExpr("*", f"{jac} AS jaccard")
+    return scored.where(f"jaccard >= {float(threshold)!r}D").select("id_a", "id_b", "jaccard")
 
 
 def ngram_jaccard_pairs(

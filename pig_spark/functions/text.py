@@ -45,6 +45,10 @@ def tokenize_ws(col: Column) -> Column:
     return F.filter(F.split(F.trim(col), r"\s+"), lambda t: t != "")
 
 
+#: :func:`tokenize_ws` as SQL text over the expression ``{}``
+TOKENIZE_WS_SQL = r"filter(split(trim({}), '\\s+'), t -> t != '')"
+
+
 def token_count(col: Column) -> Column:
     return F.size(tokenize_ws(col)).cast("long")
 
@@ -300,6 +304,17 @@ def sliding_grams(tokens: Column, n: int, clamp_to_one: bool = False) -> Column:
         )
     if clamp_to_one:
         out = F.when(F.size(tokens) == 0, F.array(F.lit(""))).otherwise(out)
+    return out
+
+
+def sliding_grams_sql(tokens: str, n: int, clamp_to_one: bool = False) -> str:
+    """:func:`sliding_grams` as SQL text over the column ``tokens``."""
+    n_g = f"greatest(size({tokens}) - {n - 1}, {1 if clamp_to_one else 0})"
+    out = f"slice({tokens}, 1, {n_g})"
+    for k in range(2, n + 1):
+        out = f"zip_with({out}, slice({tokens}, {k}, {n_g}), (a, b) -> concat_ws(' ', a, b))"
+    if clamp_to_one:
+        out = f"CASE WHEN size({tokens}) = 0 THEN array('') ELSE {out} END"
     return out
 
 

@@ -45,19 +45,19 @@ is materialized.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from ..compat import sql_ident
 
 __all__ = ["connected_components"]
 
 
 def _canon(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Undirected canonical edge set: (u < v), self-loops dropped."""
-    u = F.least(F.col(src), F.col(dst)).alias("u")
-    v = F.greatest(F.col(src), F.col(dst)).alias("v")
+    s, d = sql_ident(src), sql_ident(dst)
     return (
-        edges.select(u, v)
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v")))
+        edges.selectExpr(f"least({s}, {d}) AS u", f"greatest({s}, {d}) AS v")
+        .where("u IS NOT NULL AND v IS NOT NULL AND u != v")
         .distinct()
     )
 
@@ -65,14 +65,12 @@ def _canon(edges: DataFrame, src: str, dst: str) -> DataFrame:
 def _by_node(e: DataFrame) -> DataFrame:
     """The round's stored pass: every (u, v) of the bidirected edges
     with ``__mn = min(Γ(u))`` and ``__deg = |Γ(u)|``."""
-    flip = F.struct(F.col("v").alias("u"), F.col("u").alias("v"))
-    b = e.select(F.inline(F.array(F.struct("u", "v"), flip)))
-    by_node = Window.partitionBy("u")
-    return b.select(
+    b = e.selectExpr("inline(array(struct(u, v), struct(v AS u, u AS v)))")
+    return b.selectExpr(
         "u",
         "v",
-        F.min("v").over(by_node).alias("__mn"),
-        F.count(F.lit(1)).over(by_node).alias("__deg"),
+        "min(v) OVER (PARTITION BY u) AS __mn",
+        "count(1) OVER (PARTITION BY u) AS __deg",
     ).localCheckpoint(eager=False)
 
 
@@ -82,7 +80,7 @@ def _star_forest(p: DataFrame) -> bool:
     violating rows also materializes the stored pass.  An RDD count is
     one job; ``DataFrame.count`` adds a single-partition exchange (a
     second job), and ``isEmpty`` scans partitions in growing batches."""
-    bad = p.filter((F.col("__mn") < F.col("u")) & (F.col("__deg") > 1))
+    bad = p.where("__mn < u AND __deg > 1")
     return bad._jdf.rdd().count() == 0  # noqa: SLF001
 
 
@@ -90,13 +88,11 @@ def _star_round(p: DataFrame) -> DataFrame:
     """Large-star then small-star over a :func:`_by_node` pass."""
     # large-star: (m, v) for every neighbor v > u, m = least(u, __mn),
     # emitted oriented larger→smaller (u=v, v=m) for small-star; m ≤ u < v
-    big = p.filter(F.col("v") > F.col("u"))
-    b = big.select(F.col("v").alias("u"), F.least("u", "__mn").alias("v"))
+    b = p.where("v > u").selectExpr("v AS u", "least(u, __mn) AS v")
     # small-star: connect N(u) ∪ {u} to min(N(u)) (all of N(u) < u)
-    s = b.withColumn("__mn", F.min("v").over(Window.partitionBy("u")))
-    mn = F.col("__mn").alias("b")
-    pairs = F.array(F.struct(F.col("v").alias("a"), mn), F.struct(F.col("u").alias("a"), mn))
-    return _canon(s.select(F.inline(pairs)), "a", "b")
+    s = b.selectExpr("*", "min(v) OVER (PARTITION BY u) AS __mn")
+    pairs = "array(struct(v AS a, __mn AS b), struct(u AS a, __mn AS b))"
+    return _canon(s.selectExpr(f"inline({pairs})"), "a", "b")
 
 
 def _release(stored: DataFrame) -> None:
@@ -126,7 +122,7 @@ def connected_components(
     ``RuntimeError`` when ``max_iter`` star rounds do not converge.
     """
     if canonical:
-        e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        e = edges.selectExpr(f"{sql_ident(src)} AS u", f"{sql_ident(dst)} AS v")
     else:
         e = _canon(edges, src, dst)
     p = _by_node(e)
@@ -140,6 +136,4 @@ def connected_components(
     if not star:
         raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
     # one row per node: its edge to its minimum neighbor
-    return p.filter(F.col("v") == F.col("__mn")).select(
-        F.col("u").alias("node"), F.least("u", "__mn").alias("component")
-    )
+    return p.where("v = __mn").selectExpr("u AS node", "least(u, __mn) AS component")

@@ -1559,9 +1559,9 @@ def q87_dedup_groups(spark: SparkSession, sf: str) -> DataFrame:
 
     d = _t(spark, sf, "documents").df
     pairs = dedup.minhash_lsh_pairs(d, "text", "doc_id", threshold=0.4)
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    return connected_components(edges, "src", "dst", canonical=True).select(
-        F.col("node").alias("doc_id"), F.col("component").alias("group_id")
+    edges = pairs.selectExpr("id_a AS src", "id_b AS dst")
+    return connected_components(edges, "src", "dst", canonical=True).selectExpr(
+        "node AS doc_id", "component AS group_id"
     )
 
 
@@ -2331,28 +2331,28 @@ def q125_hashed_quality_classifier(spark: SparkSession, sf: str) -> DataFrame:
     zero shuffles, zero Python, map-only (plan-pinned: no Exchange).
     HASH_DIM is a power of two, so every weight is an exact multiple
     of 2^-12 and per-row sums are exactly representable: the DuckDB
-    oracle compares EXACTLY with no rounding policy."""
-    from pyspark.sql import functions as F
+    oracle compares EXACTLY with no rounding policy. The body is SQL
+    text (text.hashed_features / hashed_score_from_features)."""
+    from .functions.text import HASH_DIM, HASH_MIX, TOKENIZE_WS_SQL, sliding_grams_sql
 
-    from .functions import text as T
-
+    bucket = f"CAST(conv(substring(md5(f), 1, 15), 16, 10) AS BIGINT) % {HASH_DIM}"
+    weight = f"(({bucket} * {HASH_MIX}) % {HASH_DIM}) / {float(HASH_DIM)}D - 0.5D"
     d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
-    td = d.select("doc_id", T.tokenize_ws(F.col("text")).alias("tk"))
+    td = d.selectExpr("doc_id", f"{TOKENIZE_WS_SQL.format('text')} AS tk")
     # staged projections (the text-module rule): feats and score are
     # each referenced more than once downstream, so CollapseProject
     # keeps them materialized once per row instead of re-inlining the
     # md5/aggregate lambda at every reference
-    staged = td.select(
+    staged = td.selectExpr(
         "doc_id",
-        F.size("tk").cast("long").alias("n_tokens"),
-        T.hashed_features(F.col("tk")).alias("feats"),
+        "CAST(size(tk) AS BIGINT) AS n_tokens",
+        f"concat(tk, {sliding_grams_sql('tk', 2)}) AS feats",
     )
-    scored = staged.select(
-        "doc_id", "n_tokens", T.hashed_score_from_features(F.col("feats")).alias("score")
+    total = f"aggregate(feats, 0.0D, (acc, f) -> acc + ({weight}))"
+    scored = staged.selectExpr(
+        "doc_id", "n_tokens", f"CASE WHEN size(feats) > 0 THEN {total} / size(feats) END AS score"
     )
-    return scored.select(
-        "doc_id", "n_tokens", "score", (F.col("score") > 0).alias("keep")
-    )
+    return scored.selectExpr("doc_id", "n_tokens", "score", "score > 0 AS keep")
 
 
 def q126_dsir_importance(spark: SparkSession, sf: str) -> DataFrame:
@@ -2566,28 +2566,48 @@ def q128_classifier_broadcast_weights(spark: SparkSession, sf: str) -> DataFrame
 _PARA_TOKENS = 25
 _PARA_BOILER_HEAD = "subscribe to our newsletter for the latest updates"
 _PARA_BOILER_TAIL = "all rights reserved unauthorized reproduction prohibited"
+_NO_PARAS = "CAST(array() AS ARRAY<STRING>)"
+#: q129's boilerplate: a header on even doc_ids, a footer on doc_id % 5 == 0
+_PARA_HEAD_SQL = f"CASE WHEN doc_id % 2 = 0 THEN array('{_PARA_BOILER_HEAD}') ELSE {_NO_PARAS} END"
+_PARA_TAIL_SQL = f"CASE WHEN doc_id % 5 = 0 THEN array('{_PARA_BOILER_TAIL}') ELSE {_NO_PARAS} END"
 
 
-def _synth_paragraphs(spark: SparkSession, sf: str, head, tail):
-    """Shared paragraph synthesis for q129/q132 (the corpus carries no
-    paragraph breaks): 25-token blocks plus the caller's injected
-    boilerplate head/tail array Columns. Returns (doc_id, n_paras,
-    pos, para) rows — map-only explode."""
+def _synth_paragraphs(spark: SparkSession, sf: str, head: str, tail: str):
+    """Shared paragraph synthesis for q129/q132/q136 (the corpus
+    carries no paragraph breaks): 25-token blocks (text.token_blocks)
+    plus the caller's injected boilerplate head/tail, SQL text array
+    expressions over ``doc_id``. Returns (doc_id, n_paras, pos, para)
+    rows — map-only explode."""
+    from .functions.text import TOKENIZE_WS_SQL
+
+    n = _PARA_TOKENS
+    n_blocks = f"CAST(ceil(size(tk) / {n}) AS INT)"
+    chunks = (
+        f"CASE WHEN {n_blocks} > 0 THEN transform(sequence(0, {n_blocks} - 1), "
+        f"i -> array_join(slice(tk, i * {n} + 1, {n}), ' ')) ELSE {_NO_PARAS} END"
+    )
+    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    tk = d.selectExpr("doc_id", f"{TOKENIZE_WS_SQL.format('text')} AS tk")
+    return tk.selectExpr("doc_id", f"concat({head}, {chunks}, {tail}) AS ps").selectExpr(
+        "doc_id", "CAST(size(ps) AS BIGINT) AS n_paras", "posexplode(ps) AS (pos, para)"
+    )
+
+
+def _paragraph_dedup(spark: SparkSession, sf: str) -> DataFrame:
+    """q129's pipeline, shared with q136: (doc_id, n_paras, n_kept,
+    clean_text) per document that keeps at least one paragraph."""
     from pyspark.sql import functions as F
 
-    from .functions.text import tokenize_ws
+    from .functions.dedup import first_occurrence
 
-    from .functions.text import token_blocks
-
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
-    tk = d.select("doc_id", tokenize_ws(F.col("text")).alias("tk"))
-    chunks = token_blocks(F.col("tk"), _PARA_TOKENS)
-    return tk.select(
-        "doc_id", F.concat(head, chunks, tail).alias("ps")
-    ).select(
-        "doc_id",
-        F.size("ps").cast("long").alias("n_paras"),
-        F.posexplode("ps").alias("pos", "para"),
+    paras = _synth_paragraphs(spark, sf, _PARA_HEAD_SQL, _PARA_TAIL_SQL)
+    # first occurrence corpus-wide per paragraph hash wins
+    kept = first_occurrence(paras, F.expr("md5(para)"), ["doc_id", "pos"])
+    in_order = "transform(array_sort(collect_list(struct(pos, para))), s -> s.para)"
+    return kept.groupBy("doc_id").agg(
+        F.expr("first(n_paras) AS n_paras"),
+        F.expr("count(1) AS n_kept"),
+        F.expr(f"array_join({in_order}, ' | ') AS clean_text"),
     )
 
 
@@ -2616,31 +2636,7 @@ def q129_paragraph_dedup(spark: SparkSession, sf: str) -> DataFrame:
     doc_id regroup to rebuild documents. Paragraph synthesis, hashing
     and the rebuild transform are all whole-stage codegen; no Python,
     no Window anywhere (plan-pinned)."""
-    from pyspark.sql import functions as F
-
-    from .functions.dedup import first_occurrence
-
-    head = F.when(
-        F.col("doc_id") % 2 == 0, F.array(F.lit(_PARA_BOILER_HEAD))
-    ).otherwise(F.array().cast("array<string>"))
-    tail = F.when(
-        F.col("doc_id") % 5 == 0, F.array(F.lit(_PARA_BOILER_TAIL))
-    ).otherwise(F.array().cast("array<string>"))
-    paras = _synth_paragraphs(spark, sf, head, tail)
-    # first occurrence corpus-wide per paragraph hash wins
-    kept = first_occurrence(paras, F.md5("para"), ["doc_id", "pos"])
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.first("n_paras").alias("n_paras"),
-        F.count(F.lit(1)).alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "para"))),
-                lambda s: s["para"],
-            ),
-            " | ",
-        ).alias("clean_text"),
-    )
-    return rebuilt.select("doc_id", "n_paras", "n_kept", "clean_text")
+    return _paragraph_dedup(spark, sf)
 
 
 def q130_bigram_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
@@ -2794,15 +2790,8 @@ def q132_paragraph_near_dup(spark: SparkSession, sf: str) -> DataFrame:
 
     from .operators.graph import connected_components
 
-    k = F.col("doc_id")
-    head = F.when(
-        k % 2 == 0,
-        F.array(F.concat(F.lit(_ND_HEAD + " "), (k % 7).cast("string"))),
-    ).otherwise(F.array().cast("array<string>"))
-    tail = F.when(
-        k % 5 == 0,
-        F.array(F.concat(F.lit(_ND_TAIL + " "), (k % 3).cast("string"))),
-    ).otherwise(F.array().cast("array<string>"))
+    head = f"CASE WHEN doc_id % 2 = 0 THEN array(concat('{_ND_HEAD} ', CAST(doc_id % 7 AS STRING))) ELSE {_NO_PARAS} END"
+    tail = f"CASE WHEN doc_id % 5 = 0 THEN array(concat('{_ND_TAIL} ', CAST(doc_id % 3 AS STRING))) ELSE {_NO_PARAS} END"
     paras = _synth_paragraphs(spark, sf, head, tail).select(
         (F.col("doc_id") * (1 << 20) + F.col("pos")).alias("pid"), "para"
     )
@@ -3023,27 +3012,9 @@ def q136_corpus_clean_v2(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from .functions import text as T
-    from .functions.dedup import char_contamination_check, first_occurrence
+    from .functions.dedup import char_contamination_check
 
-    head = F.when(
-        F.col("doc_id") % 2 == 0, F.array(F.lit(_PARA_BOILER_HEAD))
-    ).otherwise(F.array().cast("array<string>"))
-    tail = F.when(
-        F.col("doc_id") % 5 == 0, F.array(F.lit(_PARA_BOILER_TAIL))
-    ).otherwise(F.array().cast("array<string>"))
-    paras = _synth_paragraphs(spark, sf, head, tail)
-    kept = first_occurrence(paras, F.md5("para"), ["doc_id", "pos"])
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.first("n_paras").alias("n_paras"),
-        F.count(F.lit(1)).alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "para"))),
-                lambda s: s["para"],
-            ),
-            " | ",
-        ).alias("clean_text"),
-    )
+    rebuilt = _paragraph_dedup(spark, sf)
     # classifier over the REBUILT text (q125 staging discipline)
     td = rebuilt.select(
         "doc_id", "n_paras", "n_kept", "clean_text",

@@ -57,7 +57,16 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Create (or reuse) a SparkSession with pig_spark defaults."""
+    """Create (or reuse) a SparkSession with pig_spark defaults.
+
+    ``spark.python.sql.dataFrameDebugging.enabled`` stays at its
+    default (on): it keeps the user's Python call site in
+    AnalysisException messages. Its cost is a few py4j calls per
+    ``F.*``/``Column`` call, about half of all calls when plans were
+    built from Columns; the corpus builders are SQL templates, and
+    there it is 10 of 557 calls per warm build of q41, q87, q125 and
+    q129, with build wall time within noise of the setting off
+    (1.69 vs 1.79 s, 4-vCPU VM, local[2])."""
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"

@@ -21,6 +21,7 @@ Catalyst — check ``PushedFilters`` in explain output.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -238,7 +239,6 @@ def load_all(
     typing), and the union is by column NAME with null-fill for
     columns a format lacks. Gz/Bz2 text is transparent (Spark codecs),
     matching the Java loader's compressed-text handling."""
-    import os
 
     ext_map = extensions or ALL_LOADER_EXTENSIONS
     present: dict[str, str] = {}
@@ -336,7 +336,24 @@ def _norm_format(fmt: str) -> str:
     return f
 
 
-_NANOS_CACHE: dict[str, bool] = {}
+_NANOS_CACHE: dict[str, tuple[tuple, bool]] = {}
+
+
+def _listing(path: str) -> tuple:
+    """(name, size, mtime_ns) of every file under a local ``path``,
+    sorted; empty when the path is not local. Rewriting any fragment
+    changes it."""
+    files = [path] if os.path.isfile(path) else [
+        os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs
+    ]
+    out = []
+    for f in files:
+        try:
+            st = os.stat(f)
+        except OSError:  # removed while listing
+            continue
+        out.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
 
 
 def _parquet_has_nanos(path: str) -> bool:
@@ -344,12 +361,14 @@ def _parquet_has_nanos(path: str) -> bool:
 
     One footer read of one fragment via pyarrow — O(KB) regardless of
     data size, so safe at 100 TB (driver-side, no row data). Cached
-    per path: repeated loads of the same table (every query in a
-    session) must not re-probe — the probe costs ~10 ms of driver
-    time, which multiplied across a catalog run is real seconds."""
+    per path and fragment listing: repeated loads of the same table
+    (every query in a session) must not re-probe — the probe costs
+    ~10 ms of driver time, which multiplied across a catalog run is
+    real seconds — but a rewritten path is probed again."""
+    listing = _listing(path)
     hit = _NANOS_CACHE.get(path)
-    if hit is not None:
-        return hit
+    if hit is not None and hit[0] == listing:
+        return hit[1]
     try:
         import pyarrow as pa
         import pyarrow.dataset as pads
@@ -360,7 +379,7 @@ def _parquet_has_nanos(path: str) -> bool:
         )
     except Exception:  # noqa: BLE001 — non-local paths / odd layouts: skip probe
         out = False
-    _NANOS_CACHE[path] = out
+    _NANOS_CACHE[path] = (listing, out)
     return out
 
 
@@ -621,7 +640,6 @@ def _check_error_budget(spark, obs, path: str, max_error_frac: float, min_error_
     usable over-budget output remains). Appended-to paths are never
     deleted (pre-existing data); the raise says whether rollback
     happened."""
-    import os
     import shutil
     import warnings
 
@@ -811,7 +829,6 @@ def compact(
 
     Returns the number of files written."""
     import math
-    import os
     import shutil
 
     total = 0

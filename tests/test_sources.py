@@ -452,3 +452,42 @@ def test_store_error_tolerance_latin_set(spark, tmp_path):
         spark.conf.set("pig.error-handling.enabled", "false")
     got = spark.read.csv(out, sep="\t", schema="id int, s string")
     assert got.count() == 47  # 3 poisoned rows skipped under the 10% budget
+
+
+def test_nanos_probe_follows_a_rewritten_path(spark, tmp_path, monkeypatch):
+    """The TIMESTAMP(NANOS) footer probe is cached per path and fragment
+    listing: a path rewritten from µs to ns timestamps loads as the raw
+    nanos long the second time, and an unchanged path reads no footer."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(conf, None)
+    ts = [datetime.datetime(2024, 3, 1, 10, 30, i) for i in range(5)]
+    path = tmp_path / "ev.parquet"
+    path.mkdir()
+    try:
+        spark.conf.unset(conf)
+        pq.write_table(pa.table({"ts": pa.array(ts, pa.timestamp("us"))}), str(path / "part-0.parquet"))
+        assert dict(load(spark, str(path)).dtypes)["ts"] != "bigint"
+        (path / "part-0.parquet").unlink()
+        pq.write_table(
+            pa.table({"ts": pa.array(ts, pa.timestamp("ns"))}),
+            str(path / "part-1.parquet"),
+            store_schema=False,
+        )
+        assert dict(load(spark, str(path)).dtypes)["ts"] == "bigint"
+
+        def no_footer(*args, **kwargs):
+            raise AssertionError("cache hit read a footer")
+
+        monkeypatch.setattr(pads, "dataset", no_footer)
+        assert dict(load(spark, str(path)).dtypes)["ts"] == "bigint"
+    finally:
+        if before is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, before)
