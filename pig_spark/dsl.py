@@ -363,12 +363,12 @@ class Relation:
         (LogicalPlanBuilder.java:251-256)."""
         return Relation(self.df.sample(fraction=fraction, seed=seed))
 
-    def split(self, *conds: str | Column, otherwise: bool = False, persist: bool = True) -> tuple["Relation", ...]:
+    def split(self, *conds: str | Column, otherwise: bool = False) -> tuple["Relation", ...]:
         """SPLIT rel INTO a IF c1, b IF c2 [, z OTHERWISE]
         (QueryParser.g:493-504, LOSplit.java)."""
         from .operators.split import split as _split
 
-        return tuple(Relation(d) for d in _split(self.df, [self._c(c) for c in conds], otherwise=otherwise, persist=persist))
+        return tuple(Relation(d) for d in _split(self.df, [self._c(c) for c in conds], otherwise=otherwise))
 
     def rank(self, *by: str | Column, ascending: bool | Sequence[bool] = True, dense: bool = False, name: str = "rank") -> "Relation":
         """RANK rel [BY cols [DENSE]] (QueryParser.g:512, LORank.java:35)."""

@@ -28,10 +28,10 @@ whole module):
   refs — 5× on the LSH pipeline at sf0.1.
 - A self-join (or sig + verify) pipeline references the shingle stage
   2-3×; Catalyst duplicates the subtree per reference. The stage is
-  persisted (MEMORY_AND_DISK) — at 100 TB this is the standard
-  "materialize signatures" step (alternatively write the stage to
-  parquet between jobs); re-deriving shingles per branch costs 3 full
-  corpus scans + tokenizations.
+  materialized (``operators.materialize``) — at 100 TB this is the
+  standard "materialize signatures" step (alternatively write the stage
+  to parquet between jobs); re-deriving shingles per branch costs 3
+  full corpus scans + tokenizations.
 
 Build-cost rule: fixed expressions are SQL templates. Every PySpark
 ``F.*`` or ``Column`` call is about eight py4j round trips to the JVM
@@ -60,9 +60,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..compat import sql_ident
+from ..operators.materialize import materialize
 from .text import TOKENIZE_WS_SQL, sliding_grams_sql, tokenize_ws
 
 # ---------------------------------------------------------------------
@@ -267,14 +267,14 @@ def minhash_lsh_pairs(
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
 
-    The shingle stage is persisted: it feeds signatures AND both sides
-    of the verification join (3 references). At cluster scale this is
-    the canonical two-job shape (materialize signatures, then bucket-
-    join); MEMORY_AND_DISK spills cleanly if the corpus exceeds RAM.
+    The shingle stage is materialized: it feeds signatures AND both
+    sides of the verification join (3 references). At cluster scale
+    this is the canonical two-job shape (materialize signatures, then
+    bucket-join).
 
-    r12: the persisted stage carries two HASH arrays per doc — __h
+    r12: the stored stage carries two HASH arrays per doc — __h
     (md5_32, the signature contract) and __hv (xxhash64, the verify
-    key) — and never the gram strings, so the cache and both verify-
+    key) — and never the gram strings, so the store and both verify-
     join shuffles move 8 bytes/gram instead of ~20-char strings.
     Verification intersects __hv: xxhash64 is injective on the
     distinct gram sets up to the same negligible 64-bit collision
@@ -285,7 +285,7 @@ def minhash_lsh_pairs(
     rows = MINHASH_K // MINHASH_BANDS
     idc = sql_ident(id_col)
     sh = shingle_stage(df, text_col, id_col)
-    docs = sh.selectExpr(idc, _H_SQL, _HV_SQL).persist(StorageLevel.MEMORY_AND_DISK)
+    docs = materialize(sh.selectExpr(idc, _H_SQL, _HV_SQL))
     sigs = docs.selectExpr(idc, _SIG_SQL)
     # band hash = xxhash64 of the signature slice (r12: was md5 of the
     # comma-joined stringified slice — string build + crypto hash per
@@ -349,14 +349,12 @@ def ngram_jaccard_pairs(
     that many docs (stopword-grams — THE skew control at corpus scale;
     None = exact, matches the oracle).
     """
-    # r13: the persisted stage carries the polynomial gram HASHES, not
-    # gram strings (word_gram_hash_stage — cache and posting shuffle
+    # r13: the stored stage carries the polynomial gram HASHES, not
+    # gram strings (word_gram_hash_stage — store and posting shuffle
     # move 8 bytes/gram; pairs + Jaccard counts are identical under an
     # injective relabeling, verified row-identical at both SFs).
     # explode_OUTER per the InferFiltersFromGenerate pushdown lesson.
-    docs = word_gram_hash_stage(df, text_col, id_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    docs = materialize(word_gram_hash_stage(df, text_col, id_col, n))
     sizes = docs.select(id_col, F.size("__gha").alias("__n"))
     posting = docs.select(F.col(id_col), F.explode_outer("__gha").alias("g"))
     if max_doc_freq is not None:

@@ -11,11 +11,11 @@ loss.
 
 Design for 100 TB (the shapes, not the defaults):
 
-- **Features staged once, persisted.** Tokenize → hashed feature
+- **Features staged once, materialized.** Tokenize → hashed feature
   buckets is the expensive pass; it runs once and the bucket arrays
-  (array<int>, ~4 B/feature) are persisted MEMORY_AND_DISK for the
-  iteration loop — the standard "materialize the design matrix" step
-  (same idiom as the LSH signature stage).
+  (array<int>, ~4 B/feature) are stored for the iteration loop
+  (``operators.materialize``) — the standard "materialize the design
+  matrix" step (same idiom as the LSH signature stage).
 - **Weights travel driver → executors as a broadcast 1-row column**
   (the q128 shape; a 4096-double literal costs a flat ~3 s janino
   compile — SCALE.md r9). Scoring is an in-row fold over the staged
@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.materialize import materialize, release
 from .text import HASH_DIM, _feature_bucket, hashed_features, tokenize_ws
 
 
@@ -70,8 +71,8 @@ def train_hashed_classifier(
     """Full-batch logistic-regression fit of the mean-score hashed
     linear model (score = mean over features of w[bucket]; the exact
     parameterization q125/q128 apply). ``feats`` is
-    :func:`stage_hashed_buckets` output; it is persisted for the loop
-    and unpersisted on exit.
+    :func:`stage_hashed_buckets` output; it is materialized for the
+    loop, and every store under it is released on exit.
 
     Returns ``(weights, history)`` — weights as a plain list (write it
     through the fixture path for q128 to apply), history as one dict
@@ -84,7 +85,7 @@ def train_hashed_classifier(
     mean-score features make L tiny (entries 1/n_feats).
     """
     spark = feats.sparkSession
-    feats = feats.persist()
+    feats = materialize(feats)
     try:
         n = feats.count()
         if n == 0:
@@ -124,7 +125,7 @@ def train_hashed_classifier(
                 w[r["b"]] -= lr * float(r["gsum"]) / n
         return w, history
     finally:
-        feats.unpersist()
+        release(feats)
 
 
 def stage_word_types(df: DataFrame, text_col: str) -> DataFrame:
@@ -132,8 +133,8 @@ def stage_word_types(df: DataFrame, text_col: str) -> DataFrame:
     lowercased whitespace words with occurrence counts, each word
     split into its initial character symbols. ONE token-sized shuffle
     (the word-count groupBy); everything after it is vocabulary-sized.
-    The returned table should be localCheckpointed by the caller
-    before the merge loop (each iteration rewrites ``syms``)."""
+    :func:`train_bpe` stores it before the merge loop (each iteration
+    rewrites ``syms``)."""
     toks = tokenize_ws(F.lower(F.col(text_col)))
     words = df.select(F.explode(toks).alias("w"))
     return (
@@ -192,8 +193,8 @@ def train_bpe(types: DataFrame, merges: int) -> tuple[list[dict], DataFrame]:
       scalar-projection exception class) with the deterministic
       (cnt DESC, a ASC, b ASC) tie-break;
     - merge application: pure in-row codegen fold (:func:`_merge_pair`
-      — no Python, no shuffle), then localCheckpoint to cut the
-      lineage so iteration k never replays iterations 1..k-1.
+      — no Python, no shuffle), then an eager localCheckpoint cuts the
+      lineage and the previous round's store is released.
 
     The selected counts are provably non-increasing (merging can only
     remove occurrences of existing pairs, and every NEW pair involves
@@ -226,5 +227,7 @@ def train_bpe(types: DataFrame, merges: int) -> tuple[list[dict], DataFrame]:
             break
         a, b, c = top[0]["a"], top[0]["b"], int(top[0]["c"])
         out.append({"step": step_no, "a": a, "b": b, "cnt": c})
-        cur = cur.withColumn("syms", _merge_pair(F.col("syms"), a, b)).localCheckpoint()
+        merged = cur.withColumn("syms", _merge_pair(F.col("syms"), a, b))
+        cur, spent = merged.localCheckpoint(), cur
+        release(spent)
     return out, cur

@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..compat import sql_ident
+from .materialize import release
 
 __all__ = ["connected_components"]
 
@@ -95,11 +96,6 @@ def _star_round(p: DataFrame) -> DataFrame:
     return _canon(s.selectExpr(f"inline({pairs})"), "a", "b")
 
 
-def _release(stored: DataFrame) -> None:
-    """Free the rows a ``localCheckpoint`` holds under ``stored``."""
-    stored._jdf.queryExecution().logical().rdd().unpersist(False)  # noqa: SLF001
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -120,6 +116,8 @@ def connected_components(
     LSH pair stream: id_a < id_b by construction, deduped, verified) —
     which skips the initial least/greatest + distinct pass.  Raises
     ``RuntimeError`` when ``max_iter`` star rounds do not converge.
+    ``edges`` is read only while this runs (each pass is stored before
+    the next), so a caller that owns it may ``release`` it on return.
     """
     if canonical:
         e = edges.selectExpr(f"{sql_ident(src)} AS u", f"{sql_ident(dst)} AS v")
@@ -132,7 +130,7 @@ def connected_components(
             break
         p, spent = _by_node(_star_round(p)), p
         star = _star_forest(p)
-        _release(spent)
+        release(spent)
     if not star:
         raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
     # one row per node: its edge to its minimum neighbor

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import materialize
 from .prefix import running_sums
 
 
@@ -365,13 +366,10 @@ def sequence_store(
     tokens at L=512): big enough that file counts stay sane at 100 TB,
     small enough that a rank's range maps to whole blocks."""
     sized = df.select(id_col, F.size(tokens_col).cast("long").alias("__n"))
-    # spans feed TWO consumers (manifest write + gather join): cut the
-    # lineage once so the prefix-sum plan and the scan under it don't
-    # re-execute (the q160 manifest-reuse convention) — the
-    # materialized spans are corpus/L rows, cheap by construction
-    spans = sequence_spans(
-        sized, "__n", seq_len, order=id_col, id_col=id_col
-    ).localCheckpoint()
+    # spans feed TWO consumers (manifest write + gather join): store
+    # them once (corpus/L rows) so the prefix-sum plan and the scan
+    # under it don't re-execute
+    spans = materialize(sequence_spans(sized, "__n", seq_len, order=id_col, id_col=id_col))
     # r12 (guide §6 output sizing): repartition by the partition
     # column before each partitioned write — otherwise every task
     # opens a writer per block it touches (tasks × blocks tiny

@@ -4,29 +4,22 @@
 Pig routes one pass over the input to multiple outputs; conditions are
 independently evaluated (a row can land in several outputs, or none —
 OTHERWISE catches rows matching no condition). Spark has no native
-multi-output operator, so a SPLIT is N filters over a shared parent.
-``persist=True`` caches the parent so the scan/upstream work runs once
-when several branches are consumed — the same goal as Pig's MultiQuery
-optimizer (MultiQueryOptimizer.java); see also operators.multisink.
+multi-output operator, so a SPLIT is N filters over a shared parent and
+stores nothing. Branches written by several STOREs share the parent's
+upstream work through ``operators.multisink`` (Pig's MultiQuery
+optimizer, MultiQueryOptimizer.java); a caller that reads several
+branches in one plan stores the parent with ``operators.materialize``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def split(
-    df: DataFrame,
-    conds: Sequence[Column],
-    otherwise: bool = False,
-    persist: bool = True,
-) -> list[DataFrame]:
-    if persist:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+def split(df: DataFrame, conds: Sequence[Column], otherwise: bool = False) -> list[DataFrame]:
     outs = [df.filter(c) for c in conds]
     if otherwise:
         none_match = None

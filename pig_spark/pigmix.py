@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from .dsl import Relation
 from .functions import event_ts
 from .operators.cogroup import cogroup
+from .operators.materialize import materialize
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> Relation:
@@ -185,11 +186,11 @@ def pm11_distinct_union(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def pm12_split_multistore(spark: SparkSession, sf: str) -> DataFrame:
-    """L12: SPLIT + two stores off one scan (MultiQuery). The split
-    parent persists so both branches share one materialization
-    (operators/split.py); branch outputs union into one tagged frame
-    for the oracle."""
-    e = _t(spark, sf, "events")
+    """L12: SPLIT + two stores off one scan (MultiQuery). Both
+    branches are read in one plan, so the split parent is
+    materialized once for them (operators/materialize.py); branch
+    outputs union into one tagged frame for the oracle."""
+    e = Relation(materialize(_t(spark, sf, "events").df))
     clicks, rest = e.split(F.col("event_type") == "click", otherwise=True)
     by_user = clicks.group_by("user_id").agg(val=F.max("value")).foreach(
         tag=F.lit("user_max"), key=F.col("user_id").cast("string"), val=F.col("val")

@@ -23,6 +23,7 @@ from . import functions as PF
 from .compat import join_qualified
 from .dsl import Relation
 from .functions import dedup, similarity, text
+from .operators.materialize import materialize, release
 from .operators.nested import topk_per_group
 
 
@@ -41,43 +42,6 @@ def davg(col: Column, scale: int = 2) -> Column:
 
 
 _DEC = "decimal(18,2)"
-
-
-def _ckpt_if_small(df: DataFrame, default_max_bytes: int = 16 << 30) -> DataFrame:
-    """Materialize a multiply-consumed stage: localCheckpoint when its
-    optimized-plan size estimate is under a threshold, persist
-    DISK_ONLY above it (r13, VERDICT r12 #3 / guide §5).
-
-    The sf-scale win of materializing a reused corpus-scale projection
-    (q130's token table, the q137/q138/q150 substring staging, q175's
-    cast embeddings) must not become the 100 TB liability the r9 rule
-    warned about. localCheckpoint has TWO at-scale problems: the copy
-    is pinned to executor storage until the session drops it, and the
-    lineage truncation means a lost executor cannot recompute — the
-    job fails. Above the threshold the stage therefore switches to
-    ``persist(DISK_ONLY)``: still ONE derivation shared by every
-    consumer (the first r13 guard simply skipped materialization,
-    which re-derived the stage per consumer — the 100× rung read
-    q130 3× and q137 2× slower for it), but the blocks are evictable
-    under pressure and the lineage is intact, so degradation is
-    recompute, never failure. Disk footprint matches the checkpoint it
-    replaces; a deployment sizes `SPARK_GRAFT_CKPT_MAX_BYTES` (bytes,
-    default 16 GiB) to a small fraction of cluster local disk.
-    Estimate failures (plans without statistics) fall back to
-    checkpointing, preserving the r12 behavior."""
-    import os
-
-    from pyspark import StorageLevel
-
-    from .operators.skew import plan_size_bytes
-
-    max_bytes = int(os.environ.get("SPARK_GRAFT_CKPT_MAX_BYTES", str(default_max_bytes)))
-    try:
-        if plan_size_bytes(df) > max_bytes:
-            return df.persist(StorageLevel.DISK_ONLY)
-    except Exception:
-        pass
-    return df.localCheckpoint()
 
 
 # ----------------------------------------------------------------------
@@ -317,7 +281,7 @@ def q21_rollup(spark: SparkSession, sf: str) -> DataFrame:
 def q22_split(spark: SparkSession, sf: str) -> DataFrame:
     """SPLIT INTO ... IF (one branch verified; routing is the operator)."""
     o = _t(spark, sf, "orders")
-    hi, lo = o.split(F.col("o_totalprice") > 150000, F.col("o_totalprice") <= 150000, persist=False)
+    hi, lo = o.split(F.col("o_totalprice") > 150000, F.col("o_totalprice") <= 150000)
     return hi.foreach("o_orderkey", "o_totalprice").df
 
 
@@ -1212,11 +1176,12 @@ def q91_dedup_survivors(spark: SparkSession, sf: str) -> DataFrame:
 
     d = _t(spark, sf, "documents").df
     pairs = dedup.minhash_lsh_pairs(d, "text", "doc_id", threshold=0.4)
-    cc = connected_components(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        canonical=True,  # LSH pairs: id_a < id_b, distinct, non-null
-    ).select(F.col("node").alias("doc_id"), F.col("component").alias("group_id"))
-    member = cc.join(d.select("doc_id", "n_chars"), "doc_id")
+    # LSH pairs are canonical: id_a < id_b, distinct, non-null
+    cc = connected_components(pairs.selectExpr("id_a AS src", "id_b AS dst"), canonical=True)
+    release(pairs)  # CC has stored its first pass: the pair stage's store is spent
+    member = cc.selectExpr("node AS doc_id", "component AS group_id").join(
+        d.select("doc_id", "n_chars"), "doc_id"
+    )
     best = F.min(F.struct((-F.col("n_chars")).alias("__negc"), F.col("doc_id")))
     return (
         member.groupBy("group_id")
@@ -1560,9 +1525,9 @@ def q87_dedup_groups(spark: SparkSession, sf: str) -> DataFrame:
     d = _t(spark, sf, "documents").df
     pairs = dedup.minhash_lsh_pairs(d, "text", "doc_id", threshold=0.4)
     edges = pairs.selectExpr("id_a AS src", "id_b AS dst")
-    return connected_components(edges, "src", "dst", canonical=True).selectExpr(
-        "node AS doc_id", "component AS group_id"
-    )
+    cc = connected_components(edges, "src", "dst", canonical=True)
+    release(edges)  # CC has stored its first pass: the pair stage's store is spent
+    return cc.selectExpr("node AS doc_id", "component AS group_id")
 
 
 def q84_quantile_rollup(spark: SparkSession, sf: str) -> DataFrame:
@@ -2653,7 +2618,7 @@ def q130_bigram_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
     bigram-conditional join probes the 8192-row top-B table as the
     BROADCAST side against the unigram counts). The unigram count has
     THREE consumers (top-V, total, conditional denominators) and Spark
-    reuses no exchange across them, so it is localCheckpointed ONCE —
+    reuses no exchange across them, so it is materialized ONCE —
     a statistics-sized table (distinct tokens), the q87 lineage-cut
     idiom; without it the plan re-scanned documents 5×. Both LM tables
     fold into ONE 1-row broadcast (two map columns, ≤12k entries)
@@ -2674,15 +2639,13 @@ def q130_bigram_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
     # "decide with small rows" — materialize the token proxy, never
     # re-derive it; contrast q76/q136 where the same move measured
     # SLOWER because their reused stage sits behind a shuffle that
-    # ReusedExchange already dedups). r13: size-guarded — this table
-    # is corpus-sized, so above SPARK_GRAFT_CKPT_MAX_BYTES it stays
-    # lazy (see _ckpt_if_small; VERDICT r12 #3).
-    td = _ckpt_if_small(d.select("doc_id", toks.alias("tk")))
+    # ReusedExchange already dedups).
+    td = materialize(d.select("doc_id", toks.alias("tk")))
 
     # unigram table: ONE aggregate, materialized once for its three
     # consumers (top-V, total, P(w2|w1) denominators)
     flat = td.select(F.explode("tk").alias("t"))
-    cnt = flat.groupBy("t").agg(F.count(F.lit(1)).alias("c")).localCheckpoint()
+    cnt = materialize(flat.groupBy("t").agg(F.count(F.lit(1)).alias("c")))
     total = cnt.agg(F.sum("c").alias("n"))
     uvocab = (
         cnt.orderBy(F.desc("c"), F.asc("t"))
@@ -2797,10 +2760,10 @@ def q132_paragraph_near_dup(spark: SparkSession, sf: str) -> DataFrame:
     )
     firstp = dedup.first_occurrence(paras, F.md5("para"), ["pid"])
     pairs = dedup.minhash_lsh_pairs(firstp, "para", "pid", threshold=0.4)
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    return connected_components(edges, "src", "dst", canonical=True).select(
-        F.col("node").alias("pid"), F.col("component").alias("group_id")
-    )
+    edges = pairs.selectExpr("id_a AS src", "id_b AS dst")
+    cc = connected_components(edges, "src", "dst", canonical=True)
+    release(edges)  # CC has stored its first pass: the pair stage's store is spent
+    return cc.selectExpr("node AS pid", "component AS group_id")
 
 
 def q131_url_canonical_dedup(spark: SparkSession, sf: str) -> DataFrame:
@@ -3069,7 +3032,7 @@ def _substr_staged(spark: SparkSession, sf: str):
     """q137/q138/q150 staging: (doc_id, n_tokens, tk) with the
     deterministic boilerplate injection (doc_id % 3 == 0).
 
-    r12: localCheckpointed — every consumer query reads this table
+    r12: materialized — every consumer query reads this table
     from divergent subtrees (q137: wins + the per-doc ledger; q138:
     wins + token posexplode + ledger; q150: old-index wins + batch
     wins + ledger), so without it the scan+tokenize pass re-ran per
@@ -3078,11 +3041,7 @@ def _substr_staged(spark: SparkSession, sf: str):
     q150 2.50 → 2.41 s (−3%) — every paired round lower. The wins
     subtree stays LAZY: its two consumers re-aggregate after the
     same exchange on h, which ReusedExchange dedups (a wins
-    checkpoint measured within noise of the staged one alone).
-
-    r13: size-guarded (_ckpt_if_small) — the staged table is
-    corpus-sized, so above SPARK_GRAFT_CKPT_MAX_BYTES it keeps the
-    lazy r9 shape (VERDICT r12 #3 / ADVICE r12; SCALE.md entry)."""
+    checkpoint measured within noise of the staged one alone)."""
     from pyspark.sql import functions as F
 
     from .functions.text import tokenize_ws
@@ -3092,7 +3051,7 @@ def _substr_staged(spark: SparkSession, sf: str):
         F.col("doc_id") % 3 == 0, F.concat(F.lit(_SUBSTR_BOILER + " "), F.col("text"))
     ).otherwise(F.col("text"))
     td = d.select("doc_id", tokenize_ws(boiled).alias("tk"))
-    return _ckpt_if_small(
+    return materialize(
         td.select("doc_id", F.size("tk").cast("long").alias("n_tokens"), "tk")
     )
 
@@ -3272,7 +3231,7 @@ def q139_classifier_training(spark: SparkSession, sf: str) -> DataFrame:
     (q78's): training itself is iterative and not SQL-expressible,
     the CONTRACT is.
 
-    100 TB design: see functions/ml.py — features staged+persisted
+    100 TB design: see functions/ml.py — features staged+stored
     once, weights broadcast per iteration, gradients = one
     partial-aggregated token-sized shuffle + a ≤4096-row driver
     collect (the model-sized exception class), loss = one tiny
@@ -3314,7 +3273,7 @@ def q140_quality_mixture(spark: SparkSession, sf: str) -> DataFrame:
     map-only codegen; the corpus never shuffles (the q95 shape). r12
     (guide §8 "decide with small rows"): the scored proxy table
     (doc_id, lang, score — ~24 bytes/row, NO text) is
-    localCheckpointed once, so the classifier (tokenize + feature
+    materialized once, so the classifier (tokenize + feature
     hash + dot product over every token) runs ONE corpus scan instead
     of two — the aggregate and the accept filter both read the proxy.
     This is the q142 idiom: materialize the lightweight decision
@@ -3325,12 +3284,12 @@ def q140_quality_mixture(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.sampling import quality_mixture_sample
 
     d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "lang", "text")
-    staged = d.select(
+    staged = materialize(d.select(
         "doc_id", "lang",
         T.hashed_score_from_features(
             T.hashed_features(T.tokenize_ws(F.col("text")))
         ).alias("__score"),
-    ).localCheckpoint()
+    ))
     weight = F.when(F.col("__score") > 0, F.lit(1.5)).otherwise(F.lit(0.5))
     kept = quality_mixture_sample(
         staged, "lang", "doc_id", weight, alpha=0.5, target_frac=0.2
@@ -3399,7 +3358,7 @@ def q142_perplexity_partition(spark: SparkSession, sf: str) -> DataFrame:
     (operators/rank.py, PORank.java:47) over the q130 LM.
 
     100 TB design: q130's two token-sized shuffles build the LM;
-    per-doc scores are then localCheckpointed ONCE (doc-count rows ×
+    per-doc scores are then materialized ONCE (doc-count rows ×
     ~40 bytes — the fan-out idiom, the table has two consumers:
     rank + total count) and ranked with the POCounter/PORank
     two-pass scheme (`operators/rank.rank` over
@@ -3413,11 +3372,10 @@ def q142_perplexity_partition(spark: SparkSession, sf: str) -> DataFrame:
 
     from .operators.rank import rank as _rank
 
-    scored = (
+    scored = materialize(
         q130_bigram_lm_perplexity(spark, sf)
         .where(F.col("n_bigrams") > 0)
         .select("doc_id", "n_tokens", "avg_logp")
-        .localCheckpoint()
     )
     ranked = _rank(
         scored,
@@ -3514,7 +3472,8 @@ def q144_bpe_train(spark: SparkSession, sf: str) -> DataFrame:
     from .functions.ml import stage_word_types, train_bpe
 
     d = spark.read.parquet(f"{sf}/documents.parquet").select("text")
-    merges, _ = train_bpe(stage_word_types(d, "text"), merges=6)
+    merges, final_types = train_bpe(stage_word_types(d, "text"), merges=6)
+    release(final_types)  # only the merge list is reported
     rows: list[tuple] = []
     seen: set[tuple[str, str]] = set()
     prev_cnt: int | None = None
@@ -4104,16 +4063,15 @@ def q156_kcenter_coreset(spark: SparkSession, sf: str) -> DataFrame:
 
     k = 6
     e = _t(spark, sf, "embeddings").df
-    # r12 (guide §5 localCheckpoint): the traversal + assignment are
-    # k+1 sequential full passes over the SAME narrow projection —
-    # checkpoint it once so each pass reads materialized rows instead
-    # of re-decoding parquet (in-session A/B: 2.17 → 1.96 s, −10%).
-    # At billions of vectors the traversal input is the centroid
-    # table / a deterministic sample (docstring above), so the
-    # checkpoint stays sample-sized there.
-    e = e.select(
+    # r12: the traversal + assignment are k+1 sequential full passes
+    # over the SAME narrow projection — materialize it once so each
+    # pass reads stored rows instead of re-decoding parquet
+    # (in-session A/B: 2.17 → 1.96 s, −10%). At billions of vectors
+    # the traversal input is the centroid table / a deterministic
+    # sample (docstring above), so the store stays sample-sized there.
+    e = materialize(e.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).localCheckpoint()
+    ))
     centers = kcenter_select(e, k)
     # the generated oracle (_kcenter_sql) always unrolls EXACTLY k
     # selection steps, while kcenter_select stops early on degenerate
@@ -4301,11 +4259,10 @@ def q160_epoch_shuffle(spark: SparkSession, sf: str) -> DataFrame:
         md5_60(F.concat(F.col("seq_id").cast("string"),
                         F.lit(":epoch:"), F.col("epoch").cast("string"))),
     )
-    # checkpoint the SEQUENCES-sized manifest so the sequence_spans
-    # lineage underneath runs once before the rank's range sampling
-    # and partitioning read it (the q142 localCheckpoint pattern —
-    # epochs × corpus/L rows, never corpus-sized)
-    keyed = keyed.localCheckpoint(eager=True)
+    # store the SEQUENCES-sized manifest before the rank's range
+    # sampling and partitioning read it, so the sequence_spans lineage
+    # underneath runs once (epochs × corpus/L rows, never corpus-sized)
+    keyed = materialize(keyed, eager=True)
     ranked = rank(
         keyed,
         by=[F.col("epoch"), F.col("shuffle_key"), F.col("seq_id")],
@@ -4897,18 +4854,14 @@ def q175_ann_recall_report(spark: SparkSession, sf: str) -> DataFrame:
     from .functions import similarity
 
     e = _t(spark, sf, "embeddings").df
-    # r12: both sides (probe: seed collect + assign/encode scan;
-    # exact: full cosine scan) re-read and re-cast the same vectors —
-    # one checkpointed narrow projection feeds all three jobs
-    # (in-session A/B: 2.97 → 2.81 s; same values, so both rankings
-    # are unchanged). r13: size-guarded — at billions of vectors this
-    # projection is data-sized, so above SPARK_GRAFT_CKPT_MAX_BYTES
-    # both sides re-cast from the parquet scan instead (ADVICE r12).
-    # The checkpoint (when taken) is EAGER, so the 2-thread pool below
-    # never serializes on a shared first materialization — each side
-    # scans the already-materialized RDD (VERDICT r12 #8).
-    e = _ckpt_if_small(
-        e.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
+    # r12: both sides (probe: seed collect + assign/encode scan; exact:
+    # full cosine scan) re-read and re-cast the same vectors — one
+    # stored narrow projection feeds all three jobs (in-session A/B:
+    # 2.97 → 2.81 s, same rankings). Stored EAGERLY, so the 2-thread
+    # pool below never serializes on a shared first materialization.
+    e = materialize(
+        e.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding")),
+        eager=True,
     )
     query = [((i * 37) % 13 - 6) / 13.0 for i in range(similarity.EMB_DIM)]
     # both collects are ordered limit-20 results — rank = position
@@ -4920,6 +4873,7 @@ def q175_ann_recall_report(spark: SparkSession, sf: str) -> DataFrame:
             lambda: [r["vec_id"] for r in similarity.cosine_topk(e, query, 20).collect()]
         )
         a_ids, e_ids = fa.result(), fe.result()
+    release(e)
     ra = {v: i + 1 for i, v in enumerate(a_ids)}
     rb = {v: i + 1 for i, v in enumerate(e_ids)}
     rows = [

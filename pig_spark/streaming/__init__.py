@@ -834,8 +834,8 @@ def write_sequence_manifest_stream(
     :func:`~pig_spark.operators.packing.sequence_store`'s blocked
     layout when the loader wants pruned reads); the appended files
     partition naturally by arrival."""
+    from ..operators.materialize import release
     from ..operators.packing import sequence_spans
-    from ..operators.prefix import release
 
     manifest = f"{path}/manifest"
 
@@ -932,8 +932,8 @@ def write_sequence_store_stream(
     via PartitionFilters (part carries floor(seq_id/block)); the docs
     side table is read filtered by the gather join's keys — compact
     it on the loader's cadence."""
+    from ..operators.materialize import release
     from ..operators.packing import gather_sequences, sequence_spans
-    from ..operators.prefix import release
 
     manifest = f"{path}/manifest"
     docs_p = f"{path}/docs"

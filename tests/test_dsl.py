@@ -47,7 +47,7 @@ def test_group_bag_shape(students):
 
 def test_split_routing_and_otherwise(students):
     young, old, other = students.split(
-        F.col("age") < 21, F.col("age") >= 21, otherwise=True, persist=False
+        F.col("age") < 21, F.col("age") >= 21, otherwise=True
     )
     assert young.df.count() == 2
     assert old.df.count() == 1

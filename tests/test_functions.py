@@ -917,6 +917,25 @@ def test_train_bpe_matches_reference(spark):
         assert "".join(r["syms"]) == r["w"]
 
 
+def test_train_bpe_frees_superseded_rounds(spark):
+    """Each merge round frees the previous round's stored table: once
+    training returns, the only new stored RDD is the final table."""
+    from pig_spark.functions.ml import stage_word_types, train_bpe
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def stored():
+        return {r.id() for r in sc.getRDDStorageInfo()}
+
+    before = stored()
+    df = spark.createDataFrame([("low lower lowest newer newest",)], "text string")
+    merges, final_types = train_bpe(stage_word_types(df, "text"), merges=4)
+    assert len(merges) == 4
+    leaves = final_types._jdf.queryExecution().logical().collectLeaves()
+    final = {leaves.apply(i).rdd().id() for i in range(leaves.size())}
+    assert stored() - before == final
+
+
 def test_kmeans_refine_converges_on_separable_clusters(spark):
     """Lloyd's refinement recovers planted cluster means: 3 tight
     clusters far apart, bootstrap centroids = the 3 lowest-id vectors

@@ -686,6 +686,24 @@ def test_utf8_round_trip(spark, tmp_path):
 def test_latin_split_multistore(spark, sf_dir, tmp_path):
     """MultiQuery e2e shape (multiquery.conf): SPLIT + two STOREs off
     one scan; both outputs correct and disjoint."""
+    _split_multistore(spark, sf_dir, tmp_path)
+
+
+@pytest.mark.parametrize("multiquery", ["true", "false"])
+def test_latin_split_leaves_no_cache(spark, sf_dir, tmp_path, multiquery):
+    """SPLIT stores nothing that outlives the script, with and without
+    -M (pig.opt.multiquery=false): the CacheManager is empty after
+    ``run``."""
+    spark.catalog.clearCache()
+    spark.conf.set("pig.opt.multiquery", multiquery)
+    try:
+        _split_multistore(spark, sf_dir, tmp_path)
+    finally:
+        spark.conf.unset("pig.opt.multiquery")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _split_multistore(spark, sf_dir, tmp_path):
     from pig_spark.latin import run
 
     a_out, b_out = tmp_path / "hi", tmp_path / "lo"

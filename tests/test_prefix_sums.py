@@ -189,7 +189,7 @@ def test_building_a_rank_runs_the_input_shuffle_stages(wide):
     """The stored layout is built with the frame, not with its first
     action: every shuffle stage below the stored rows runs as a job
     while the ranked frame is BUILT (the final stage stays lazy)."""
-    from pig_spark.operators.prefix import release
+    from pig_spark.operators.materialize import release
 
     sc = wide.sparkContext
     scan = wide.range(0, 2000, 1, numPartitions=4).select(
@@ -217,7 +217,7 @@ def test_building_a_rank_runs_the_input_shuffle_stages(wide):
 
 
 def test_release_frees_the_stored_rows(wide):
-    from pig_spark.operators.prefix import release
+    from pig_spark.operators.materialize import release
 
     jsc = wide.sparkContext._jsc
     out = pack_by_budget(wide.range(0, 1000, 1, numPartitions=4), F.lit(3), 100, order="id")

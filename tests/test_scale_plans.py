@@ -511,20 +511,23 @@ def test_bigram_lm_plan(spark, sf_dir):
 
 
 def test_corpus_checkpoint_guard(spark, sf_dir, monkeypatch):
-    """r13 (VERDICT r12 #3): the corpus-scale materializations (q130's
-    token table, the q137/q138/q150 substring staging) are
-    size-guarded — with SPARK_GRAFT_CKPT_MAX_BYTES=0 the stages
-    switch from localCheckpoint to a DISK_ONLY persist: the plan shows
-    an InMemoryTableScan whose cached relation still carries the
-    parquet scan (lineage preserved — a lost executor recomputes,
-    blocks evict under pressure), the eager-checkpoint ExistingRDD is
-    gone, and the results are row-identical."""
+    """The corpus-scale materializations (q130's token and unigram
+    tables, the q137/q138/q150 substring staging) go through
+    ``materialize``'s size guard — with SPARK_GRAFT_CKPT_MAX_BYTES=0
+    the stages switch from localCheckpoint to a DISK_ONLY persist: the
+    plan shows an InMemoryTableScan whose cached relation still
+    carries the parquet scan (lineage preserved — a lost executor
+    recomputes, blocks evict under pressure), the checkpoint's
+    ExistingRDD is gone, the results are row-identical, and
+    ``release`` leaves no cache entry behind."""
+    from pig_spark.operators.materialize import release
     from pig_spark.queries import q130_bigram_lm_perplexity, q137_exact_substring_dedup
 
     base130 = {tuple(r) for r in q130_bigram_lm_perplexity(spark, sf_dir).collect()}
     base137 = {tuple(r) for r in q137_exact_substring_dedup(spark, sf_dir).collect()}
 
     monkeypatch.setenv("SPARK_GRAFT_CKPT_MAX_BYTES", "0")
+    spark.catalog.clearCache()  # entries other tests left in the shared session
     try:
         lazy130 = q130_bigram_lm_perplexity(spark, sf_dir)
         phys = lazy130._jdf.queryExecution().executedPlan().toString()
@@ -537,31 +540,37 @@ def test_corpus_checkpoint_guard(spark, sf_dir, monkeypatch):
         phys = lazy137._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in phys, phys
         assert {tuple(r) for r in lazy137.collect()} == base137
+        release(lazy130)
+        release(lazy137)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     finally:
         spark.catalog.clearCache()
 
 
-def test_ckpt_if_small_disk_only_branch(spark, sf_dir, monkeypatch):
-    """_ckpt_if_small's two branches on real data: under the threshold
+def test_materialize_disk_only_branch(spark, sf_dir, monkeypatch):
+    """materialize's two branches on real data: under the threshold
     a localCheckpoint (no cache entry, lineage cut), above it a
-    DISK_ONLY persist — and both yield the same rows."""
+    DISK_ONLY persist — both yield the same rows, and release removes
+    the DISK_ONLY cache entry."""
     from pyspark import StorageLevel
 
-    from pig_spark.queries import _ckpt_if_small
+    from pig_spark.operators.materialize import materialize, release
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "source", F.length("text").alias("n_chars")
     )
-    ckpt = _ckpt_if_small(docs)
+    ckpt = materialize(docs)
     assert ckpt.storageLevel == StorageLevel.NONE
     assert "LogicalRDD" in ckpt._jdf.queryExecution().optimizedPlan().toString()
     monkeypatch.setenv("SPARK_GRAFT_CKPT_MAX_BYTES", "1")
-    disk = _ckpt_if_small(docs)
+    disk = materialize(docs)
     try:
         assert disk.storageLevel == StorageLevel.DISK_ONLY
         rows = disk.collect()
         assert len(rows) > 0
         assert sorted(rows) == sorted(ckpt.collect())
+        release(disk)
+        assert disk.storageLevel == StorageLevel.NONE
     finally:
         disk.unpersist()
 

@@ -9,8 +9,11 @@ import math
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
+import verify_local  # noqa: E402
 from verify_local import nested_columns, normalize, rows_to_multiset  # noqa: E402
 
 
@@ -83,3 +86,17 @@ def test_q152_output_schema_is_scalar(spark, sf_dir):
     df = q152_pq_ann(spark, sf_dir)
     assert nested_columns(df.schema) == []
     assert dict(df.dtypes)["codes"] == "string"
+
+
+def test_unknown_query_names_fail(monkeypatch, capsys):
+    # a misspelled name in a sweep list must not pass as "0 failures":
+    # the verifier names it and exits non-zero before running anything
+    monkeypatch.setattr(
+        sys, "argv", ["verify_local.py", "/nonexistent", "q41_minhash_pairs", "q150_signature_index"]
+    )
+    with pytest.raises(SystemExit) as exit_:
+        verify_local.main()
+    assert exit_.value.code != 0
+    out = capsys.readouterr().out
+    assert "q150_signature_index" in out
+    assert "q41_minhash_pairs" not in out

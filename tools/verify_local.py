@@ -67,9 +67,16 @@ def main():
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        sys.exit(2)
+
     import duckdb
 
-    import __spark_entry__ as entrymod
     if os.environ.get("VERIFY_VANILLA") == "1":
         # driver rehearsal: a PLAIN Spark 4 session (ANSI on, local tz,
         # no pig_spark confs) — the engine must produce identical
@@ -90,7 +97,6 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
