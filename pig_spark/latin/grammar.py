@@ -16,6 +16,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from .. import pigtypes
+
 # ----------------------------------------------------------------------
 # lexer
 # ----------------------------------------------------------------------
@@ -392,10 +394,7 @@ Expr = object
 # parser
 # ----------------------------------------------------------------------
 
-PIG_TYPES = {
-    "int", "long", "float", "double", "chararray", "boolean", "datetime",
-    "bytearray", "biginteger", "bigdecimal", "map", "tuple", "bag",
-}
+PIG_TYPES = frozenset(pigtypes.TYPES)
 
 
 class Parser:
@@ -1133,75 +1132,40 @@ class Parser:
         return Field(name, ftype)
 
     def _type_name(self) -> str:
-        """Scalar or complex type. Complex forms (QueryParser.g
-        type/type_cast: map ``[]``/``[type]``, tuple ``(...)``, bag
-        ``{...}``, with or without the keyword) canonicalize to a
-        pig-syntax string the translator lowers to Spark DDL."""
+        """A type (QueryParser.g type/type_cast), as its source text.
+        The grammar only finds where the type ends — a type keyword, a
+        bracketed group (``(..)``, ``{..}``, ``[..]``), or map/tuple/bag
+        followed by its own bracket; ``pigtypes.parse`` reads the text
+        (the one parser of Pig type syntax) and rejects a bad type."""
+        start = self.i
         t = self.peek()
-        if t.kind == "op" and t.text == "[":
-            return self._map_type()
-        if t.kind == "op" and t.text == "(":
-            return self._tuple_type()
-        if t.kind == "op" and t.text == "{":
-            return self._bag_type()
-        t = self.next()
-        name = t.text.lower()
-        if name not in PIG_TYPES:
-            raise SyntaxError(f"pig latin: unknown type {t.text!r}")
-        if name == "map":
-            if self.peek().kind == "op" and self.peek().text == "[":
-                return self._map_type()
-            return "map[]"
-        if name == "tuple":
-            if self.peek().kind == "op" and self.peek().text == "(":
-                return self._tuple_type()
-            return "tuple()"
-        if name == "bag":
-            if self.peek().kind == "op" and self.peek().text == "{":
-                return self._bag_type()
-            return "bag{}"
-        return name
+        if not (t.kind == "op" and t.text in ("(", "{", "[")):
+            t = self.next()
+            kw = t.text.lower()
+            if kw not in PIG_TYPES:
+                raise SyntaxError(f"pig latin: unknown type {t.text!r}")
+            opener = pigtypes.OPENERS.get(kw)
+            if not (opener and self.peek().kind == "op" and self.peek().text == opener):
+                return self._checked_type(start)
+        depth = 0
+        while True:
+            t = self.next()
+            if t.kind == "eof":
+                raise SyntaxError("pig latin: unclosed type")
+            if t.kind == "op" and t.text in ("(", "{", "["):
+                depth += 1
+            elif t.kind == "op" and t.text in (")", "}", "]"):
+                depth -= 1
+                if depth == 0:
+                    return self._checked_type(start)
 
-    def _map_type(self) -> str:
-        self.expect("op", "[")
-        inner = ""
-        if not (self.peek().kind == "op" and self.peek().text == "]"):
-            inner = self._type_name()
-        self.expect("op", "]")
-        return f"map[{inner}]"
-
-    def _tuple_type(self) -> str:
-        self.expect("op", "(")
-        parts: list[str] = []
-        if not (self.peek().kind == "op" and self.peek().text == ")"):
-            while True:
-                fname = self._ident()
-                if self.accept("op", ":"):
-                    parts.append(f"{fname}:{self._type_name()}")
-                else:
-                    parts.append(fname)
-                if not self.accept("op", ","):
-                    break
-        self.expect("op", ")")
-        return "tuple(" + ",".join(parts) + ")"
-
-    def _bag_type(self) -> str:
-        self.expect("op", "{")
-        inner = ""
-        if not (self.peek().kind == "op" and self.peek().text == "}"):
-            if self.peek().kind == "op" and self.peek().text == "(":
-                inner = self._tuple_type()
-            else:
-                tname = self._ident()
-                if tname.lower() == "tuple" and self.peek().kind == "op" and self.peek().text == "(":
-                    # bag{tuple(chararray, int)} — the CAST form's
-                    # explicit tuple keyword (QueryParser.g type_cast)
-                    inner = self._tuple_type()
-                else:
-                    self.expect("op", ":")
-                    inner = f"{tname}:{self._type_name()}"
-        self.expect("op", "}")
-        return "bag{" + inner + "}"
+    def _checked_type(self, start: int) -> str:
+        text = "".join(t.text for t in self.toks[start : self.i])
+        try:
+            pigtypes.parse(text)
+        except ValueError as err:
+            raise SyntaxError(f"pig latin: {err}") from None
+        return text
 
     # -- expression ladder: bincond > or > and > not > cmp > add > mul > unary > postfix > primary
     def expr(self):

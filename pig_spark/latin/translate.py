@@ -20,178 +20,17 @@ from __future__ import annotations
 from dataclasses import dataclass
 from dataclasses import replace as G_replace
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as SparkWindow
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructType
 
 from .. import functions as PF
+from .. import pigtypes
 from ..operators.nested import bag_distinct, bag_filter, bag_limit, bag_sort
 from ..compat import cast_as
 from ..dsl import Relation
 from . import grammar as G
-
-PIG_TO_SPARK_TYPE = {
-    "int": "int",
-    "long": "bigint",
-    "float": "float",
-    "double": "double",
-    "chararray": "string",
-    "boolean": "boolean",
-    "datetime": "timestamp",
-    # bytearray from text loaders IS utf8 text; backing it with string
-    # (same convention as sources' schema sidecar) gives Pig's
-    # coerce-on-use gradual typing for free: `age < 50` or AVG(age)
-    # over an untyped field leans on Spark's legacy string→numeric
-    # coercion, and explicit casts go through try_cast (null on
-    # garbage) — a binary backing made every such use an analysis
-    # error instead (POCast.java / Utf8StorageConverter.java)
-    "bytearray": "string",
-    "biginteger": "decimal(38,0)",
-    "bigdecimal": "decimal(38,18)",
-}
-
-def _tuple_fields(ptype: str) -> list[tuple[str, str]]:
-    """'tuple(a:int,b)' / '(a:int,b)' → [(name, pig_type), ...]."""
-    body = ptype[ptype.index("(") + 1 : ptype.rindex(")")]
-    fields = []
-    for i, part in enumerate(_split_top(body)):
-        name, sep, ftype = part.partition(":")
-        fields.append((name.strip() if sep else (name.strip() or f"t{i}"), ftype.strip() if sep else "bytearray"))
-    return fields
-
-
-def pig_field_ddl(ptype: str | None) -> str:
-    """Pig type (scalar or canonical complex string from the grammar)
-    → Spark DDL type. map[] values default chararray→string (Pig's
-    bytearray-in-maps reads as text here), bag{} → array<struct>."""
-    t = (ptype or "bytearray").strip()
-    lt = t.lower()
-    if lt in PIG_TO_SPARK_TYPE:
-        return PIG_TO_SPARK_TYPE[lt]
-    if lt.startswith("map[") or lt.startswith("["):
-        # 'map[int]' and the bare 'm:[]' spelling (QueryParser.g
-        # map_type — both are legal schema syntax)
-        inner = t[t.index("[") + 1 : t.rindex("]")].strip()
-        return f"map<string,{pig_field_ddl(inner) if inner else 'string'}>"
-    if lt.startswith("tuple(") or lt.startswith("("):
-        fields = _tuple_fields(t)
-        return "struct<" + ",".join(f"{n}:{pig_field_ddl(ft)}" for n, ft in fields) + ">"
-    if lt.startswith("bag{") or lt.startswith("{"):
-        inner = t[t.index("{") + 1 : t.rindex("}")].strip()
-        if inner and ":" in inner.split("(")[0] and not inner.startswith("("):
-            inner = inner.split(":", 1)[1].strip()  # drop the tuple alias
-        return f"array<{pig_field_ddl(inner) if inner else 'struct<t:string>'}>"
-    return "string"
-
-
-def _split_top(s: str) -> list[str]:
-    """Split on top-level commas (nested (), {}, [] kept intact)."""
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch in "({[":
-            depth += 1
-        elif ch in ")}]":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return out
-
-
-def pig_cast_ddl(t: str) -> str:
-    """Pig CAST type syntax → Spark DDL. Unlike schema declarations
-    (pig_field_ddl — name:type pairs), cast types carry BARE types:
-    ``(bag{tuple(chararray, int, float)})`` (QueryParser.g type_cast;
-    the empty-bag-default COGROUP idiom). Unnamed tuple fields get
-    positional names."""
-    lt = (t or "bytearray").strip().lower()
-    t = t.strip()
-    if lt in PIG_TO_SPARK_TYPE:
-        return PIG_TO_SPARK_TYPE[lt]
-    if lt.startswith("bag{") or lt.startswith("{"):
-        inner = t[t.index("{") + 1 : t.rindex("}")].strip()
-        return f"array<{pig_cast_ddl(inner) if inner else 'struct<t:string>'}>"
-    if lt.startswith("tuple(") or lt.startswith("("):
-        inner = t[t.index("(") + 1 : t.rindex(")")]
-        parts = [p.strip() for p in _split_top(inner) if p.strip()]
-        body = ",".join(
-            f"{p.partition(':')[0].strip() if ':' in p.split('(')[0].split('{')[0] else f'f{i}'}:"
-            f"{pig_cast_ddl(p.partition(':')[2].strip() if ':' in p.split('(')[0].split('{')[0] else p)}"
-            for i, p in enumerate(parts)
-        )
-        return f"struct<{body}>"
-    if lt.startswith("map["):
-        inner = t[4:-1].strip()
-        return f"map<string,{pig_cast_ddl(inner) if inner else 'string'}>"
-    return "string"
-
-
-def utf8_cast(col: Column, ptype: str | None) -> Column:
-    """Utf8StorageConverter.java: one TEXT field → its declared type,
-    including Pig's textual complex forms — ``[k#v,...]`` maps,
-    ``(a,b)`` tuples, ``{(a,b),(c,d)}`` bags (scalar elements, the
-    shapes PigStorage writes). Garbage → null, never an error. All
-    Column ops (str_to_map / split / regexp_extract_all) — codegen,
-    no Python."""
-    t = (ptype or "bytearray").strip()
-    lt = t.lower()
-    if lt in PIG_TO_SPARK_TYPE:
-        return col.try_cast(PIG_TO_SPARK_TYPE[lt])
-    if lt.startswith("decimal(") or lt == "date":
-        # raw Spark scalar DDL riding through a complex Pig type
-        # string (stream._pig_type_ddl keeps nested precisions)
-        return col.try_cast(lt)
-    if lt.startswith("map["):
-        inner = t[4:-1].strip()
-        body = F.regexp_replace(F.regexp_replace(col, r"^\[", ""), r"\]$", "")
-        # map_filter drops the {""→null} artifact str_to_map produces
-        # for an empty body ("[]" → empty map)
-        m = F.map_filter(
-            F.str_to_map(body, F.lit(","), F.lit("#")), lambda k, _v: F.length(k) > 0
-        )
-        if inner and inner.lower() in PIG_TO_SPARK_TYPE and inner.lower() != "chararray":
-            m = F.map_from_arrays(
-                F.map_keys(m),
-                F.transform(F.map_values(m), lambda v: v.try_cast(PIG_TO_SPARK_TYPE[inner.lower()])),
-            )
-        return F.when(col.rlike(r"^\[.*\]$"), m)
-    if lt.startswith("tuple(") or lt.startswith("("):
-        fields = _tuple_fields(t)
-        body = F.regexp_replace(F.regexp_replace(col, r"^\(", ""), r"\)$", "")
-        parts = F.split(body, ",")
-        return F.when(
-            col.rlike(r"^\(.*\)$"),
-            F.struct(
-                *[
-                    utf8_cast(F.get(parts, i), ft).alias(n)
-                    for i, (n, ft) in enumerate(fields)
-                ]
-            ),
-        )
-    if lt.startswith("bag{") or lt.startswith("{"):
-        inner = t[t.index("{") + 1 : t.rindex("}")].strip()
-        if inner and ":" in inner.split("(")[0] and not inner.startswith("("):
-            inner = inner.split(":", 1)[1].strip()
-        fields = _tuple_fields(inner) if inner else [("t", "bytearray")]
-        tuples = F.regexp_extract_all(col, F.lit(r"\(([^()]*)\)"), 1)
-        return F.when(
-            col.rlike(r"^\{.*\}$"),
-            F.transform(
-                tuples,
-                lambda s: F.struct(
-                    *[
-                        utf8_cast(F.get(F.split(s, ","), i), ft).alias(n)
-                        for i, (n, ft) in enumerate(fields)
-                    ]
-                ),
-            ),
-        )
-    return col.try_cast("string")
-
 
 LOADER_FORMAT = {
     None: "pigstorage",
@@ -325,9 +164,6 @@ _PIG_DECORATORS = {
     "schemaFunction": _deco_schemaFunction,
 }
 
-_SPARK_TO_PIG_TYPE = {v: k for k, v in reversed(PIG_TO_SPARK_TYPE.items())}
-
-
 def _pig_text_value(v):
     """Render a Python value in Pig's textual forms — bag {(..),(..)},
     tuple (..), map [k#v] — the shape a bytearray cast of a complex
@@ -371,13 +207,12 @@ class _ScriptUDF:
     def __call__(self, *cols, _rel=None):
         ddl = self.ddl
         if ddl is None and self.schema_fn is not None and _rel is not None and cols:
-            spark_t = _rel.df.select(cols[0]).schema[0].dataType.simpleString()
-            pig_in = _SPARK_TO_PIG_TYPE.get(spark_t, spark_t)
+            pig_in = pigtypes.pig_type_name(_rel.df.select(cols[0]).schema[0].dataType)
             try:
                 out = self.schema_fn(pig_in)
             except Exception:
                 out = pig_in
-            ddl = pig_field_ddl(str(out))
+            ddl = _script_udf_ddl(str(out))
         fn = self.fn
         if (ddl or "string") == "string":
             # bytearray/chararray-typed result: coerce complex Python
@@ -534,14 +369,82 @@ def _load_script_udfs(path: str, engine: str = "jython") -> dict:
 
 
 def _script_udf_ddl(schema: str) -> str:
-    """@outputSchema string → Spark DDL type: strip the outer field
-    name, then the shared Pig-type mapper handles scalars, tuples
-    (both ``(...)`` and ``tuple(...)`` spellings), bags and maps."""
-    body = schema.strip()
-    head, sep, rest = body.partition(":")
-    if sep and not any(ch in head for ch in "({["):
-        body = rest.strip()
-    return pig_field_ddl(body)
+    """@outputSchema string → Spark DDL type. One field gives its
+    type, its name dropped (``word:chararray`` → string); several
+    fields give a tuple of them."""
+    fields = pigtypes.parse_schema(schema).fields
+    return (fields[0].dataType if len(fields) == 1 else StructType(fields)).simpleString()
+
+
+def _bind_as(df: DataFrame, schema: list[G.Field]) -> DataFrame:
+    """LOAD/STREAM … AS (LoadTypeCastInserter.java): bind the declared
+    fields to the loader's columns by position. A field past the last
+    column reads null — Pig pads a schema declared wider than the data.
+    An untyped field keeps the loaded type (LogicalSchema.merge in
+    LoadForEach mode). A typed field over a text column decodes Pig's
+    text forms ([k#v], (a,b), {(a,b),...} — Utf8StorageConverter); over
+    a typed column it try_casts, which also rebinds nested names by
+    position (BinStorage stores tuples positionally, so
+    ``AS (t2:tuple(a,b,c))`` renames the stored struct's fields)."""
+    loaded = df.schema.fields
+    outs = []
+    for i, f in enumerate(schema):
+        if i >= len(loaded):
+            outs.append(F.lit(None).cast(pigtypes.ddl(f.type)).alias(f.name))
+            continue
+        c = df[loaded[i].name]
+        if f.type is not None:
+            dt = pigtypes.parse(f.type)
+            if isinstance(loaded[i].dataType, StringType):
+                c = pigtypes.utf8_decode(c, dt)
+            else:
+                c = c.try_cast(dt.simpleString())
+        outs.append(c.alias(f.name))
+    return df.select(*outs)
+
+
+def _typed(c: Column, pig_type: str | None) -> Column:
+    """``c`` try_cast to a declared Pig type (null on garbage,
+    POCast.java); unchanged when no type is declared."""
+    return c.try_cast(pigtypes.ddl(pig_type)) if pig_type else c
+
+
+def _flatten_as(cols: list[str | Column], schema: list[tuple[str, str | None]]) -> list[Column]:
+    """FLATTEN(...) AS (name[:type], ...): name the flattened columns
+    (Columns, or column names) by position and cast the typed ones.
+    The schema must name every column the flatten produced. A named
+    column the schema leaves as it is costs no alias."""
+    if len(schema) != len(cols):
+        raise ValueError(
+            f"pig latin: FLATTEN AS schema has {len(schema)} fields, got {len(cols)} columns"
+        )
+    return [
+        F.col(c) if isinstance(c, str) and c == n and t is None
+        else _typed(F.col(c) if isinstance(c, str) else c, t).alias(n)
+        for c, (n, t) in zip(cols, schema)
+    ]
+
+
+def _group_selects(g: "GroupedInfo", item: G.GenItem) -> list[Column]:
+    """``group`` in a grouped GENERATE, over the aggregated frame."""
+    if isinstance(item.alias, list):
+        # FLATTEN(group) AS (a[:t], ...): the key fields by position
+        return _flatten_as([n for n, _ in g.key_exprs] or [F.lit("all")], item.alias)
+    keys = [F.col(n) for n, _ in g.key_exprs]
+    if not keys:
+        # GROUP ALL: Pig's group value is the literal 'all'
+        # (LOCogroup GROUP ALL semantics)
+        return [F.lit("all").alias(item.alias or "group")]
+    if len(keys) == 1:
+        # FLATTEN(group) of a single key is Pig's no-op flatten of a
+        # scalar: the field stays named 'group' (LogicalSchema), so a
+        # downstream `generate group` keeps resolving
+        return [keys[0].alias(item.alias or "group")]
+    if item.flatten:
+        return keys
+    # tuple key: 'group' is one tuple-typed field (LogicalSchema) —
+    # deref later via g.$0 / g.field
+    return [F.struct(*keys).alias(item.alias or "group")]
 
 
 def _sub_positional(e, sub: dict[str, str]):
@@ -1488,9 +1391,7 @@ class PigTranslator:
             rel = self._rel(op.rel)
             cmd = op.cmd
             # the command's stdout is Pig TEXT: land every declared
-            # field as a string, then utf8_cast applies the declared
-            # type — scalars try_cast (null on garbage), complex types
-            # parse their textual forms ([k#v], (a,b), {(a,b)})
+            # field as a string, then bind the AS clause as LOAD does
             str_ddl = (
                 ", ".join(f"{f.name} string" for f in op.schema)
                 if op.schema is not None
@@ -1500,10 +1401,7 @@ class PigTranslator:
             def typed(rel2: Relation) -> RelInfo:
                 if op.schema is None:
                     return RelInfo(rel2)
-                df = rel2.df
-                return RelInfo(Relation(df.select(
-                    *[utf8_cast(df[f.name], f.type).alias(f.name) for f in op.schema]
-                )))
+                return RelInfo(Relation(_bind_as(rel2.df, op.schema)))
 
             if cmd.startswith("\x00alias:"):
                 name = cmd[len("\x00alias:"):]
@@ -1525,6 +1423,11 @@ class PigTranslator:
 
     # ------------------------------------------------------------------
     def _load(self, op: G.Load) -> Relation:
+        df = self._load_df(op)
+        return Relation(_bind_as(df, op.schema) if op.schema else df)
+
+    def _load_df(self, op: G.Load) -> DataFrame:
+        """The loader's frame, before the AS clause binds to it."""
         # a LOAD of a path some pending STORE will write is a job
         # dependency (Pig orders these jobs): flush the writes first
         if any(
@@ -1540,36 +1443,19 @@ class PigTranslator:
             # (sources/hcatalog.py; hcat.conf)
             from ..sources.hcatalog import load_hcat
 
-            df = load_hcat(self.spark, op.path)
-            if op.schema:
-                outs = []
-                for i, f in enumerate(op.schema):
-                    if i >= len(df.columns):
-                        outs.append(
-                            F.lit(None)
-                            .cast(pig_field_ddl(f.type) if f.type else "string")
-                            .alias(f.name)
-                        )
-                        continue
-                    c = df[df.columns[i]]
-                    outs.append(
-                        (c.try_cast(pig_field_ddl(f.type)) if f.type else c).alias(f.name)
-                    )
-                df = df.select(*outs)
-            return Relation(df)
+            return load_hcat(self.spark, op.path)
         if loader == "hbasestorage":
             # HBaseStorage(columnList[, options]) — the client-less
             # cell-model facade (sources/hbase.py; HBaseStorage.java:146).
             # Values decode to strings (the bytearray→POCast flow), so
             # the AS clause applies Pig gradual typing per field; map
-            # fields (cf:* / cf:prefix*) arrive as map<string,string>
-            # and rename positionally.
+            # fields (cf:* / cf:prefix*) arrive as map<string,string>.
             from ..sources.hbase import load_hbase
 
             hargs = list(op.loader_args or [])
             if not hargs:
                 raise ValueError("HBaseStorage needs a column list argument")
-            df = load_hbase(
+            return load_hbase(
                 self.spark,
                 op.path,
                 hargs[0],
@@ -1578,23 +1464,6 @@ class PigTranslator:
                 # decode (the Java HBaseBinaryConverter contract)
                 field_types=[f.type for f in op.schema] if op.schema else None,
             )
-            if op.schema:
-                outs = []
-                for i, f in enumerate(op.schema):
-                    if i >= len(df.columns):
-                        outs.append(
-                            F.lit(None)
-                            .cast(pig_field_ddl(f.type) if f.type else "string")
-                            .alias(f.name)
-                        )
-                        continue
-                    c = df[df.columns[i]]
-                    if df.schema[df.columns[i]].dataType.simpleString().startswith("map"):
-                        outs.append(c.alias(f.name))
-                    else:
-                        outs.append(utf8_cast(c, f.type).alias(f.name))
-                df = df.select(*outs)
-            return Relation(df)
         if loader == "accumulostorage":
             # AccumuloStorage(columns[, options]) — the sibling facade
             # (sources/accumulo.py; AccumuloStorage.java). Row key is
@@ -1602,30 +1471,13 @@ class PigTranslator:
             from ..sources.accumulo import load_accumulo
 
             aargs = list(op.loader_args or [])
-            df = load_accumulo(
+            return load_accumulo(
                 self.spark,
                 op.path,
                 aargs[0] if aargs else "",
                 aargs[1] if len(aargs) > 1 else "",
                 field_types=[f.type for f in op.schema] if op.schema else None,
             )
-            if op.schema:
-                outs = []
-                for i, f in enumerate(op.schema):
-                    if i >= len(df.columns):
-                        outs.append(
-                            F.lit(None)
-                            .cast(pig_field_ddl(f.type) if f.type else "string")
-                            .alias(f.name)
-                        )
-                        continue
-                    c = df[df.columns[i]]
-                    if df.schema[df.columns[i]].dataType.simpleString().startswith("map"):
-                        outs.append(c.alias(f.name))
-                    else:
-                        outs.append(utf8_cast(c, f.type).alias(f.name))
-                df = df.select(*outs)
-            return Relation(df)
         if loader == "dumploader":
             # test-UDF jar DumpLoader (storefunc/DumpLoader.java): one
             # tuple per line '(f1, f2, ... )' — the Java strips char 0
@@ -1642,17 +1494,9 @@ class PigTranslator:
             arr = F.transform(F.split(body, ","), lambda x: F.trim(x))
             n_row = raw.agg(F.max(F.size(arr)).alias("n")).first()
             n = int(n_row["n"]) if n_row is not None and n_row["n"] is not None else 0
-            df = raw.select(
+            return raw.select(
                 *[F.element_at(arr, i + 1).alias(f"_c{i}") for i in range(max(n, 1))]
             )
-            if op.schema:
-                df = df.select(*[
-                    utf8_cast(df[df.columns[i]], f.type).alias(f.name)
-                    if i < len(df.columns)
-                    else F.lit(None).cast(pig_field_ddl(f.type) if f.type else "string").alias(f.name)
-                    for i, f in enumerate(op.schema)
-                ])
-            return Relation(df)
         fmt = LOADER_FORMAT.get(loader, loader)
         opts = {}
         # PigStorage args: first non-flag = delimiter; '-tagFile' flag
@@ -1670,54 +1514,9 @@ class PigTranslator:
         if fmt in ("myregexloader", "regexloader") and args:
             # MyRegExLoader('regex') — the pattern is the loader arg
             opts["pattern"] = args[0]
-        rel = Relation.load(self.spark, op.path, fmt, **opts)
-        if op.schema:
-            # with -tagFile the filename is $0 and the user's AS clause
-            # includes it (Pig semantics) — positional cast covers both
-            if fmt in ("csv", "pigstorage", "text", "myregexloader", "regexloader",
-                       "commonlogloader", "combinedlogloader"):
-                # gradual typing: strings → declared types, null on
-                # garbage; complex types parse Pig's textual forms
-                # ([k#v], (a,b), {(a,b),...} — Utf8StorageConverter)
-                df = rel.df
-                # Pig pads a schema declared WIDER than the data with
-                # nulls (LoadTypeCastInserter: missing trailing fields
-                # read as null, never an error)
-                rel = Relation(
-                    df.select(
-                        *[
-                            (
-                                utf8_cast(df[df.columns[i]], f.type)
-                                if i < len(df.columns)
-                                else F.lit(None).cast(pig_field_ddl(f.type))
-                            ).alias(f.name)
-                            for i, f in enumerate(op.schema)
-                        ]
-                    )
-                )
-            else:
-                # typed containers (parquet/orc/avro/BinStorage): the
-                # AS clause renames positionally. A declared COMPLEX
-                # type additionally renames/casts the NESTED fields —
-                # BinStorage.java stores tuples positionally, so
-                # `AS (t2:tuple(a,b,c))` over stored (col1,col2,col3)
-                # rebinds the inner names (try_cast over struct/array
-                # is positional in Spark, exactly Pig's rebinding)
-                df = rel.df
-                outs = []
-                for i, f in enumerate(op.schema):
-                    if i >= len(df.columns):
-                        outs.append(
-                            F.lit(None).cast(pig_field_ddl(f.type) if f.type else "string").alias(f.name)
-                        )
-                        continue
-                    c = df[df.columns[i]]
-                    t = (f.type or "").strip().lower()
-                    if t.startswith(("tuple", "(", "bag", "{", "map")):
-                        c = c.try_cast(pig_field_ddl(f.type))
-                    outs.append(c.alias(f.name))
-                rel = Relation(df.select(*outs))
-        return rel
+        # with -tagFile the filename is $0 and the user's AS clause
+        # includes it (Pig semantics) — the positional binding covers both
+        return Relation.load(self.spark, op.path, fmt, **opts).df
 
     # ------------------------------------------------------------------
     def _group(self, op: G.Group) -> RelInfo:
@@ -2014,12 +1813,7 @@ class PigTranslator:
                 # null), don't explode rows
                 df = out.df
                 others = [c for c in df.columns if c != name]
-                fields = []
-                for i, (new_name, ftype) in enumerate(schema):
-                    c = F.get(df[name], i)
-                    if ftype is not None:
-                        c = c.try_cast(PIG_TO_SPARK_TYPE.get(ftype, ftype))
-                    fields.append(c.alias(new_name))
+                fields = _flatten_as([F.get(df[name], i) for i in range(len(schema))], schema)
                 out = Relation(df.select(*others, *fields))
                 continue
             before_cols = out.df.columns
@@ -2051,17 +1845,9 @@ class PigTranslator:
                         stacklevel=2,
                     )
                     schema = None
-                elif len(splat) != len(schema):
-                    raise ValueError(
-                        f"pig latin: FLATTEN AS schema has {len(schema)} fields, got {len(splat)} columns"
-                    )
             if schema is not None:
-                for cur, (new_name, ftype) in zip(splat, schema):
-                    col = df[cur]
-                    if ftype is not None:
-                        col = col.try_cast(PIG_TO_SPARK_TYPE.get(ftype, ftype))
-                    df = df.withColumn(cur, col).withColumnRenamed(cur, new_name)
-                out = Relation(df)
+                named = dict(zip(splat, _flatten_as(splat, schema)))
+                out = Relation(df.select(*[named.get(c, df[c]) for c in df.columns]))
         return RelInfo(out)
 
     def _all_algebraic(self, items: list[G.GenItem], g: GroupedInfo) -> bool:
@@ -2130,24 +1916,7 @@ class PigTranslator:
                 name = f"{name}_{i}"
             seen_names.add(name)
             if isinstance(e, G.Col) and e.name == "group":
-                if not g.key_exprs:
-                    # GROUP ALL: Pig's group value is the literal
-                    # 'all' (LOCogroup GROUP ALL semantics)
-                    selects.append(F.lit("all").alias(item.alias or "group"))
-                elif len(g.key_exprs) == 1:
-                    # FLATTEN(group) of a single key is Pig's no-op
-                    # flatten of a scalar: the field stays named
-                    # 'group' (LogicalSchema), so a downstream
-                    # `generate group` keeps resolving
-                    selects.append(F.col(g.key_exprs[0][0]).alias(item.alias or "group"))
-                elif item.flatten:
-                    selects.extend(F.col(n) for n, _ in g.key_exprs)
-                else:
-                    # tuple key: 'group' is one tuple-typed field
-                    # (LogicalSchema) — deref later via g.$0 / g.field
-                    selects.append(
-                        F.struct(*[F.col(n) for n, _ in g.key_exprs]).alias(item.alias or "group")
-                    )
+                selects.extend(_group_selects(g, item))
                 continue
             if isinstance(e, G.Col) and e.name.startswith("group."):
                 kname = _group_key(e.name.split(".", 1)[1], g.key_exprs)
@@ -2184,15 +1953,7 @@ class PigTranslator:
                 if not isinstance(dt, T.StructType):
                     continue  # FLATTEN of a scalar aggregate: Pig no-op
                 if isinstance(it.alias, list):
-                    if len(it.alias) != len(dt.names):
-                        raise ValueError(
-                            f"pig latin: FLATTEN AS schema has {len(it.alias)} "
-                            f"fields, got {len(dt.names)}"
-                        )
-                    repl = [
-                        (out[nm][f].try_cast(PIG_TO_SPARK_TYPE.get(t2, t2)) if t2 else out[nm][f]).alias(n2)
-                        for f, (n2, t2) in zip(dt.names, it.alias)
-                    ]
+                    repl = _flatten_as([out[nm][f] for f in dt.names], it.alias)
                 else:
                     repl = [out[nm][f].alias(f) for f in dt.names]
                 selects[idx:idx + 1] = repl
@@ -2378,22 +2139,7 @@ class PigTranslator:
                 name = f"{name}_{i}"
             seen_names.add(name)
             if isinstance(e, G.Col) and e.name == "group":
-                if not g.key_exprs:
-                    # GROUP ALL: Pig's group value is the literal
-                    # 'all' (LOCogroup GROUP ALL semantics)
-                    selects.append(F.lit("all").alias(item.alias or "group"))
-                elif len(g.key_exprs) == 1:
-                    # FLATTEN(group) of a single key is Pig's no-op
-                    # flatten of a scalar: the field stays named
-                    # 'group' (LogicalSchema), so a downstream
-                    # `generate group` keeps resolving
-                    selects.append(F.col(g.key_exprs[0][0]).alias(item.alias or "group"))
-                elif item.flatten:
-                    selects.extend(F.col(n) for n, _ in g.key_exprs)
-                else:
-                    selects.append(
-                        F.struct(*[F.col(n) for n, _ in g.key_exprs]).alias(item.alias or "group")
-                    )
+                selects.extend(_group_selects(g, item))
                 continue
             aggs.append(self._nested_agg(e, g, pipes).alias(name))
             selects.append(F.col(name))
@@ -2680,23 +2426,10 @@ class PigTranslator:
             elif pipe.col is not None:
                 out = rename.get(pipe.col, pipe.col)
                 aname, atype = _single_alias(it.alias)
-                c = F.col(pipe.col)
-                if atype is not None:
-                    c = c.try_cast(PIG_TO_SPARK_TYPE.get(atype, atype))
-                selects.append(c.alias(aname or out.split("::")[-1]))
+                selects.append(_typed(F.col(pipe.col), atype).alias(aname or out.split("::")[-1]))
             elif isinstance(it.alias, list):
                 # FLATTEN(pipe) AS (a[:t], ...) — positional splat
-                # rename (+ casts), arity-checked
-                if len(it.alias) != len(others):
-                    raise ValueError(
-                        f"pig latin: FLATTEN AS schema has {len(it.alias)} "
-                        f"fields, got {len(others)}"
-                    )
-                for c, (new_name, ftype) in zip(others, it.alias):
-                    col = F.col(c)
-                    if ftype is not None:
-                        col = col.try_cast(PIG_TO_SPARK_TYPE.get(ftype, ftype))
-                    selects.append(col.alias(new_name))
+                selects.extend(_flatten_as(others, it.alias))
             elif isinstance(it.alias, str) and len(others) == 1:
                 selects.append(F.col(others[0]).alias(it.alias))
             else:
@@ -2893,20 +2626,7 @@ class PigTranslator:
             [c for c in df.columns if c not in g.derived] if stitched else []
         )
         if isinstance(item.alias, list):
-            if len(item.alias) != len(base_cols) + len(over_cols):
-                raise SyntaxError(
-                    f"FLATTEN AS schema has {len(item.alias)} fields; Stitch emits "
-                    f"{len(base_cols) + len(over_cols)} ({len(base_cols)} tuple + {len(over_cols)} Over)"
-                )
-
-            def typed(c: Column, n: str, t: str | None) -> Column:
-                return (c.cast(PIG_TO_SPARK_TYPE[t]) if t else c).alias(n)
-
-            flat_sel = [
-                typed(F.col(c), n, t) for c, (n, t) in zip(base_cols, item.alias)
-            ] + [
-                typed(c, n, t) for c, (n, t) in zip(over_cols, item.alias[len(base_cols):])
-            ]
+            flat_sel = _flatten_as(base_cols + over_cols, item.alias)
         elif isinstance(item.alias, str):
             raise SyntaxError("FLATTEN(Stitch(...)) AS needs a parenthesized schema, not one name")
         else:
@@ -3292,24 +3012,10 @@ class PigTranslator:
                     if rest:
                         cname = fproj.get(rest, rest)
                         aname, atype = _single_alias(payload.alias)
-                        c = F.col(cname)
-                        if atype is not None:
-                            c = c.try_cast(PIG_TO_SPARK_TYPE.get(atype, atype))
-                        selects.append(c.alias(aname or rest))
+                        selects.append(_typed(F.col(cname), atype).alias(aname or rest))
                     elif isinstance(payload.alias, list):
                         # FLATTEN(l) AS (a[:t], ...) — positional splat
-                        # rename (+ casts), arity-checked like the
-                        # multiflatten path
-                        if len(payload.alias) != len(others):
-                            raise ValueError(
-                                f"pig latin: FLATTEN AS schema has "
-                                f"{len(payload.alias)} fields, got {len(others)}"
-                            )
-                        for c, (new_name, ftype) in zip(others, payload.alias):
-                            col = F.col(c)
-                            if ftype is not None:
-                                col = col.try_cast(PIG_TO_SPARK_TYPE.get(ftype, ftype))
-                            selects.append(col.alias(new_name))
+                        selects.extend(_flatten_as(others, payload.alias))
                     elif isinstance(payload.alias, str) and len(others) == 1:
                         # FLATTEN(l) AS name — single flattened field
                         selects.append(F.col(others[0]).alias(payload.alias))
@@ -3384,7 +3090,7 @@ class PigTranslator:
         if isinstance(e, (G.Num, G.Str)):
             return self._expr(e, g.child)
         if isinstance(e, G.Cast):
-            return self._topk_agg(e.operand, topk, lname, g, pipes).cast(PIG_TO_SPARK_TYPE[e.type])
+            return self._topk_agg(e.operand, topk, lname, g, pipes).cast(pigtypes.ddl(e.type))
         if isinstance(e, G.Call) and e.func.lower() in AGG_FUNCS:
             fn = e.func.lower()
             if not e.args:
@@ -3462,23 +3168,17 @@ class PigTranslator:
         """Pig-style schema string for a nested pipe's tuple —
         DESCRIBE of an inner alias (describe C::D)."""
         ch = g.child.df
+        name = pigtypes.pig_type_name
         if p.arr:
             elem = ch.schema[p.arr].dataType.elementType
-            fields = [(f.name, f.dataType.simpleString()) for f in elem.fields]
+            fields = [(f.name, name(f.dataType)) for f in elem.fields]
         elif p.proj:
-            fields = [
-                (out, ch.schema[m].dataType.simpleString()) for out, m in p.proj.items()
-            ]
+            fields = [(out, name(ch.schema[m].dataType)) for out, m in p.proj.items()]
         elif p.col is not None:
             leaf = p.col.split("::")[-1]
-            t = ch.schema[p.col].dataType.simpleString() if p.col in ch.columns else "bytearray"
-            fields = [(leaf, t)]
+            fields = [(leaf, name(ch.schema[p.col].dataType) if p.col in ch.columns else "bytearray")]
         else:
-            fields = [
-                (c, ch.schema[c].dataType.simpleString())
-                for c in ch.columns
-                if c not in g.derived
-            ]
+            fields = [(c, name(ch.schema[c].dataType)) for c in ch.columns if c not in g.derived]
         return "{(" + ", ".join(f"{n}: {t}" for n, t in fields) + ")}"
 
     def _pipe_fields(self, p: "_Pipe", g: GroupedInfo) -> list[str]:
@@ -3551,17 +3251,7 @@ class PigTranslator:
         def make(el):
             if isinstance(elem, T.StructType):
                 if isinstance(fitem.alias, list):
-                    if len(fitem.alias) != len(elem.names):
-                        raise ValueError(
-                            f"pig latin: FLATTEN AS schema has {len(fitem.alias)} "
-                            f"fields, got {len(elem.names)}"
-                        )
-                    cols = []
-                    for f, (n2, t2) in zip(elem.names, fitem.alias):
-                        c = el[f]
-                        if t2 is not None:
-                            c = c.try_cast(PIG_TO_SPARK_TYPE.get(t2, t2))
-                        cols.append(c.alias(n2))
+                    cols = _flatten_as([el[f] for f in elem.names], fitem.alias)
                 elif isinstance(fitem.alias, str) and len(elem.names) == 1:
                     # FLATTEN(<bag of 1-field tuples>) AS name — the AS
                     # renames the single flattened field (LogicalSchema;
@@ -3572,9 +3262,7 @@ class PigTranslator:
                     cols = [el[f].alias(f) for f in elem.names]
             else:
                 aname, atype = _single_alias(fitem.alias)
-                if atype is not None:
-                    el = el.try_cast(PIG_TO_SPARK_TYPE.get(atype, atype))
-                cols = [el.alias(aname or _default_name(fitem.expr, fi))]
+                cols = [_typed(el, atype).alias(aname or _default_name(fitem.expr, fi))]
             return F.struct(*cols, *[c.alias(n) for n, c in scalars])
 
         build = F.transform(arr_expr, make)
@@ -3793,15 +3481,7 @@ class PigTranslator:
             elem = df.schema[bag_name].dataType
             fields = list(elem.names)
             if isinstance(item.alias, list):
-                if len(item.alias) != len(fields):
-                    raise ValueError(
-                        f"pig latin: FLATTEN AS schema has {len(item.alias)} fields, got {len(fields)}"
-                    )
-                for fld, (new_name, ftype) in zip(fields, item.alias):
-                    c = df[bag_name][fld]
-                    if ftype is not None:
-                        c = c.try_cast(PIG_TO_SPARK_TYPE.get(ftype, ftype))
-                    flat_cols.append(c.alias(new_name))
+                flat_cols.extend(_flatten_as([df[bag_name][fld] for fld in fields], item.alias))
             elif isinstance(item.alias, str) and len(fields) == 1:
                 # FLATTEN(pipe.col) AS name — single flattened field
                 flat_cols.append(df[bag_name][fields[0]].alias(item.alias))
@@ -3822,7 +3502,7 @@ class PigTranslator:
         if isinstance(e, (G.Num, G.Str)):
             return self._expr(e, g.child)
         if isinstance(e, G.Cast):
-            return self._nested_agg(e.operand, g, pipes).cast(PIG_TO_SPARK_TYPE[e.type])
+            return self._nested_agg(e.operand, g, pipes).cast(pigtypes.ddl(e.type))
         if not (isinstance(e, G.Call) and e.func.lower() in AGG_FUNCS and e.args):
             hooked = self._bag_udf(e, g, pipes)
             if hooked is not None:
@@ -4319,7 +3999,7 @@ class PigTranslator:
         if isinstance(e, G.BinCond):
             return F.when(sub(e.cond), sub(e.then)).otherwise(sub(e.otherwise))
         if isinstance(e, G.Cast):
-            return sub(e.operand).try_cast(PIG_TO_SPARK_TYPE.get(e.type, e.type))
+            return sub(e.operand).try_cast(pigtypes.ddl(e.type))
         if isinstance(e, G.Call):
             # scalar builtin over element fields (CONCAT, ABS…);
             # aggregates don't belong inside a per-element lambda
@@ -4417,8 +4097,8 @@ class PigTranslator:
                     # The explicitly-CAST branch converges on the other
                     # side's names, so real field names survive.
                     def _complex_cast(b) -> bool:
-                        return isinstance(b, G.Cast) and b.type.lower().startswith(
-                            ("bag{", "tuple(", "map[", "{", "(")
+                        return isinstance(b, G.Cast) and isinstance(
+                            pigtypes.parse(b.type), (T.StructType, T.ArrayType, T.MapType)
                         )
 
                     if _complex_cast(e.then) and not _complex_cast(e.otherwise):
@@ -4437,15 +4117,7 @@ class PigTranslator:
         if isinstance(e, G.Cast):
             # try_cast: Pig casts garbage to null (POCast.java), on any
             # session — must not depend on spark.sql.ansi.enabled.
-            spark_t = PIG_TO_SPARK_TYPE.get(e.type, None)
-            if spark_t is None:
-                lt = e.type.lower()
-                spark_t = (
-                    pig_cast_ddl(e.type)
-                    if lt.startswith(("bag{", "tuple(", "map[", "{", "("))
-                    else e.type
-                )
-            return self._expr(e.operand, rel).try_cast(spark_t)
+            return self._expr(e.operand, rel).try_cast(pigtypes.ddl(e.type))
         if isinstance(e, G.MapLookup):
             # try_element_at: missing map key → null even under ANSI
             # (POMapLookUp.java returns null, never throws).
@@ -4565,7 +4237,14 @@ class PigTranslator:
             args = [self._expr(a, rel) for a in e.args]
             ptypes = params.split() if params else []
             for i, pt in enumerate(ptypes[: len(args)]):
-                args[i] = args[i].cast(pig_field_ddl(pt))
+                # Invoker.stringToClass names Java classes, in any case:
+                # 'String' (java.lang.String) and the array forms are no
+                # Pig type and pass as string
+                try:
+                    pddl = pigtypes.ddl(pt)
+                except ValueError:
+                    pddl = "string"
+                args[i] = args[i].cast(pddl)
             return F.java_method(F.lit(cls), F.lit(method), *args).cast(ret)
         if callable(fname) and not isinstance(fname, (str, tuple, dict)):
             # DEFINE-bound column function (ctor-arg eval classes)

@@ -23,37 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# scalar Spark → Pig type names, for re-parsing complex stdout fields
-# through utf8_cast's Pig textual forms (Utf8StorageConverter.java)
-_SPARK_TO_PIG_SCALAR = {
-    "string": "chararray",
-    "int": "int",
-    "bigint": "long",
-    "float": "float",
-    "double": "double",
-    "boolean": "boolean",
-    "timestamp": "datetime",
-    "decimal(38,0)": "biginteger",
-    "decimal(38,18)": "bigdecimal",
-}
-
-
-def _pig_type_ddl(dt: T.DataType) -> str:
-    """Spark DataType → the Pig type string utf8_cast understands.
-    Decimal/date pass through as Spark DDL (utf8_cast try_casts any
-    castable scalar name) so nested precisions survive instead of
-    degrading to chararray."""
-    if isinstance(dt, T.MapType):
-        return f"map[{_pig_type_ddl(dt.valueType)}]"
-    if isinstance(dt, T.StructType):
-        return "(" + ",".join(f"{f.name}:{_pig_type_ddl(f.dataType)}" for f in dt.fields) + ")"
-    if isinstance(dt, T.ArrayType):
-        el = dt.elementType
-        inner = _pig_type_ddl(el) if isinstance(el, T.StructType) else f"(v:{_pig_type_ddl(el)})"
-        return "{" + inner + "}"
-    if isinstance(dt, (T.DecimalType, T.DateType)):
-        return dt.simpleString()
-    return _SPARK_TO_PIG_SCALAR.get(dt.simpleString(), "chararray")
+from ..pigtypes import utf8_decode
 
 
 def _resolve_cmd(cmd: str, task_cwd: str) -> str:
@@ -178,7 +148,7 @@ def stream_through(
         # delimited text, null → empty field (PigStreaming.java with
         # its delimiter argument) — pure Column ops; complex columns
         # render in Pig's text forms ([k#v], (a,b), {(a,b)}) so the
-        # command sees what PigStorage would write (and utf8_cast can
+        # command sees what PigStorage would write (and utf8_decode can
         # parse the declared types back from its stdout)
         from ..sources import _complex_to_pig_text
 
@@ -257,16 +227,7 @@ def stream_through(
     str_schema = T.StructType([T.StructField(f.name, T.StringType(), True) for f in schema.fields])
     raw = spark.createDataFrame(split_rows, schema=str_schema)
     # Pig LoadCaster semantics: cast each field, null on failure —
-    # try_cast (never .cast: plain cast raises on garbage under an
-    # ANSI-on session) for scalars; utf8_cast's Pig textual-form
-    # parsers ([k#v], (a,b), {(a,b)}) for complex declared types.
-    from ..latin.translate import utf8_cast
-
-    out_cols = []
-    for f in schema.fields:
-        c = F.col(f.name)
-        if isinstance(f.dataType, (T.MapType, T.StructType, T.ArrayType)):
-            out_cols.append(utf8_cast(c, _pig_type_ddl(f.dataType)).alias(f.name))
-        else:
-            out_cols.append(c.try_cast(f.dataType).alias(f.name))
-    return raw.select(*out_cols)
+    # try_cast for scalars (never .cast: plain cast raises on garbage
+    # under an ANSI-on session); Pig's textual forms ([k#v], (a,b),
+    # {(a,b)}) for complex declared types.
+    return raw.select(*[utf8_decode(F.col(f.name), f.dataType).alias(f.name) for f in schema.fields])

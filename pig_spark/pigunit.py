@@ -27,6 +27,7 @@ from pyspark.sql import SparkSession
 
 from .dsl import Relation
 from .latin.translate import PigTranslator, RelInfo
+from .pigtypes import parse_schema
 from .render import render_rows
 
 
@@ -59,9 +60,9 @@ class PigTest:
     def mock_alias(self, alias: str, rows: list, schema: str) -> None:
         """Bind `alias` to inline rows (the LOAD-mocking idiom —
         PigUnit's override of a LOAD with a constant relation).
-        `schema` uses Pig AS-clause syntax: ``name:type, ...``."""
-        spark_schema = _pig_schema_to_ddl(schema)
-        self._mocks[alias] = Relation(self.spark.createDataFrame(rows, spark_schema))
+        `schema` uses Pig AS-clause syntax: ``name:type, ...``, read
+        as a LOAD reads it (bytearray holds text)."""
+        self._mocks[alias] = Relation(self.spark.createDataFrame(rows, parse_schema(schema)))
 
     # ------------------------------------------------------------------
     def _run(self) -> PigTranslator:
@@ -91,27 +92,3 @@ class PigTest:
         a, e = (sorted(actual), sorted(exp)) if sort else (actual, exp)
         if a != e:
             raise PigAssertionError(f"alias '{alias}' mismatch:\n  expected: {e}\n  actual:   {a}")
-
-
-_PIG_TO_SPARK_TYPE = {
-    "int": "int",
-    "long": "bigint",
-    "float": "float",
-    "double": "double",
-    "chararray": "string",
-    "bytearray": "binary",
-    "boolean": "boolean",
-    "datetime": "timestamp",
-    "biginteger": "decimal(38,0)",
-    "bigdecimal": "decimal(38,18)",
-}
-
-
-def _pig_schema_to_ddl(schema: str) -> str:
-    """`name:type, ...` (Pig AS-clause scalars) → Spark DDL string."""
-    parts = []
-    for field in schema.split(","):
-        name, _, typ = field.strip().partition(":")
-        typ = typ.strip().lower() or "string"
-        parts.append(f"{name.strip()} {_PIG_TO_SPARK_TYPE.get(typ, typ)}")
-    return ", ".join(parts)

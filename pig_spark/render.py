@@ -23,6 +23,8 @@ from decimal import Decimal
 
 from pyspark.sql import Row
 
+from .pigtypes import pig_type_name
+
 
 def _java_double(v: float) -> str:
     # Java Double.toString: plain decimal in [1e-3, 1e7), always a
@@ -68,48 +70,6 @@ def pig_repr(v) -> str:
     if isinstance(v, _dt.date):
         return v.isoformat()
     return str(v)
-
-
-#: Spark scalar simpleString → Pig type name (Schema.toString
-#: vocabulary — org/apache/pig/data/DataType.findTypeName)
-_SPARK_TO_PIG_TYPE = {
-    "string": "chararray",
-    "binary": "bytearray",
-    "int": "int",
-    "smallint": "int",
-    "tinyint": "int",
-    "bigint": "long",
-    "float": "float",
-    "double": "double",
-    "boolean": "boolean",
-    "timestamp": "datetime",
-    "timestamp_ntz": "datetime",
-    "date": "datetime",
-    "decimal(38,0)": "biginteger",
-}
-
-
-def pig_type_name(dt) -> str:
-    """Spark DataType → Pig schema-type string
-    (Schema.stringifySchema): struct → tuple ``(f: t,..)``, array →
-    bag ``{(f: t,..)}`` (a bag's inner schema is one anonymous TUPLE
-    field, so the parens print — `B: {group: bytearray,A: {(name:
-    bytearray,...)}}`), map → ``map[t]``, decimals →
-    biginteger/bigdecimal."""
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.StructType):
-        return "(" + ",".join(f"{f.name}: {pig_type_name(f.dataType)}" for f in dt.fields) + ")"
-    if isinstance(dt, T.ArrayType):
-        el = dt.elementType
-        if isinstance(el, T.StructType):
-            return "{" + pig_type_name(el) + "}"
-        return "{(" + pig_type_name(el) + ")}"
-    if isinstance(dt, T.MapType):
-        return f"map[{pig_type_name(dt.valueType)}]"
-    if isinstance(dt, T.DecimalType):
-        return _SPARK_TO_PIG_TYPE.get(dt.simpleString(), "bigdecimal")
-    return _SPARK_TO_PIG_TYPE.get(dt.simpleString(), dt.simpleString())
 
 
 def pig_schema_str(schema) -> str:

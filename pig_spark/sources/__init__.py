@@ -27,40 +27,15 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..pigtypes import TYPES, pig_type_name
+
 _FORMATS = {"parquet", "orc", "avro", "json", "csv", "text", "xml"}
 SCHEMA_SIDECAR = ".pig_schema"
 
-# Pig type names <-> Spark types (reference: JsonMetadata.java writes a
-# ResourceSchema JSON sidecar named .pig_schema next to PigStorage
-# output when the '-schema' option is set; PigStorage reads it back on
-# load. DataType.java defines the type lattice.)
-_SPARK_TO_PIG = {
-    "integer": "int",
-    "short": "int",
-    "byte": "int",
-    "long": "long",
-    "float": "float",
-    "double": "double",
-    "string": "chararray",
-    "boolean": "boolean",
-    "binary": "bytearray",
-    "timestamp": "datetime",
-    "date": "datetime",
-}
-# bytearray maps to string on load: in delimited text, undeclared/raw
-# fields ARE strings (Pig's gradual typing; Utf8StorageConverter)
-_PIG_TO_SPARK: dict[str, T.DataType] = {
-    "int": T.IntegerType(),
-    "long": T.LongType(),
-    "float": T.FloatType(),
-    "double": T.DoubleType(),
-    "chararray": T.StringType(),
-    "boolean": T.BooleanType(),
-    "bytearray": T.StringType(),
-    "datetime": T.TimestampType(),
-    "bigdecimal": T.DecimalType(38, 18),
-    "biginteger": T.DecimalType(38, 0),
-}
+# PigStorage's '-schema' option writes a ResourceSchema JSON sidecar
+# named .pig_schema next to its output and reads it back on load
+# (JsonMetadata.java); the type codes and their Spark types come from
+# pigtypes.TYPES (DataType.java).
 
 
 def _hadoop_path(df_or_spark, path: str):
@@ -69,38 +44,6 @@ def _hadoop_path(df_or_spark, path: str):
     p = jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, p
-
-
-# Pig DataType byte codes (DataType.java:60-79) — the `type` field of
-# a Jackson-serialized ResourceSchema sidecar is this numeric code, not
-# a type-name string (ResourceSchema.ResourceFieldSchema.type is byte).
-_PIG_CODE = {
-    "boolean": 5,
-    "int": 10,
-    "long": 15,
-    "float": 20,
-    "double": 25,
-    "datetime": 30,
-    "bytearray": 50,
-    "chararray": 55,
-    "biginteger": 65,
-    "bigdecimal": 70,
-    "map": 100,
-    "tuple": 110,
-    "bag": 120,
-}
-_CODE_TO_SPARK: dict[int, T.DataType] = {
-    5: T.BooleanType(),
-    10: T.IntegerType(),
-    15: T.LongType(),
-    20: T.FloatType(),
-    25: T.DoubleType(),
-    30: T.TimestampType(),
-    50: T.StringType(),  # bytearray loads as string (gradual typing)
-    55: T.StringType(),
-    65: T.DecimalType(38, 0),
-    70: T.DecimalType(38, 18),
-}
 
 
 def write_schema_sidecar(df: DataFrame, dir_path: str) -> None:
@@ -114,16 +57,17 @@ def write_schema_sidecar(df: DataFrame, dir_path: str) -> None:
     object store); a one-file driver-side write, no data motion."""
     import json
 
-    fields = []
-    for f in df.schema.fields:
-        t = f.dataType
-        if t.typeName().startswith("decimal"):
-            pig_t = "bigdecimal"
-        else:
-            pig_t = _SPARK_TO_PIG.get(t.typeName(), "bytearray")
-        fields.append(
-            {"name": f.name, "type": _PIG_CODE[pig_t], "description": None, "schema": None}
-        )
+    # a complex column is stored as Pig text, which reads back as
+    # bytearray: only scalars keep their own code
+    fields = [
+        {
+            "name": f.name,
+            "type": TYPES.get(pig_type_name(f.dataType), TYPES["bytearray"]).code,
+            "description": None,
+            "schema": None,
+        }
+        for f in df.schema.fields
+    ]
     payload = json.dumps(
         {"fields": fields, "version": 0, "sortKeys": [], "sortKeyOrders": []},
         indent=2,
@@ -152,17 +96,16 @@ def read_schema_sidecar(spark: SparkSession, dir_path: str) -> T.StructType | No
     finally:
         stream.close()
     doc = json.loads(data)
+    # a scalar's code or its name (the legacy shape) → its Spark type
+    known = {k: t.spark for n, t in TYPES.items() if t.spark is not None for k in (t.code, n)}
     out = []
     for f in doc["fields"]:
         t = f.get("type", "bytearray")
-        if isinstance(t, int):
-            spark_t = _CODE_TO_SPARK.get(t)
-        else:
-            spark_t = _PIG_TO_SPARK.get(t)
+        spark_t = known.get(t)
         if spark_t is None:
             raise ValueError(
                 f".pig_schema field {f.get('name')!r} has unsupported type {t!r} "
-                f"(known codes: {sorted(_CODE_TO_SPARK)}; known names: {sorted(_PIG_TO_SPARK)})"
+                f"(known: {sorted(known, key=str)})"
             )
         out.append(T.StructField(f["name"], spark_t, True))
     return T.StructType(out)
@@ -729,7 +672,7 @@ def _pig_text_col(col: "Column", dtype) -> "Column":
 def _complex_to_pig_text(df: DataFrame) -> DataFrame:
     """Delimited-text stores can't hold nested types natively; render
     map/struct/array columns in Pig's textual forms instead of failing
-    (the forms `utf8_cast` parses back on LOAD — a lossless text
+    (the forms `pigtypes.utf8_decode` parses back on LOAD — a lossless text
     round-trip for the shapes PigStorage supports)."""
     from pyspark.sql import types as T
 

@@ -16,6 +16,23 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def no_cache_left_behind():
+    """Fail a test that leaves an entry in Spark's session-wide
+    CacheManager: tests share one session, and a later plan that
+    ``sameResult``s a leaked entry reads its old rows. The entries are
+    cleared so the next test starts clean. A no-op when no session is
+    active."""
+    yield
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.getActiveSession()
+    if spark is None or spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        return
+    spark.catalog.clearCache()
+    pytest.fail("the test left entries in Spark's CacheManager: unpersist what it caches")
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

@@ -143,6 +143,23 @@ def test_pigunit_params(spark):
     t.assert_output("out", ["(6)"])
 
 
+@pytest.mark.parametrize(
+    "schema, rows, expected, dtypes",
+    [
+        # bytearray holds text, as at LOAD
+        ("a:bytearray, n:int", [("x", 1)], ["(x,1)"], [("a", "string"), ("n", "int")]),
+        ("t:tuple(x:int,y:int)", [((1, 2),)], ["((1,2))"], [("t", "struct<x:int,y:int>")]),
+        ("b:bag{(x:int)}", [([(1,), (2,)],)], ["({(1),(2)})"], [("b", "array<struct<x:int>>")]),
+    ],
+)
+def test_pigunit_mock_any_as_schema(spark, schema, rows, expected, dtypes):
+    """mock_alias reads its schema as a LOAD's AS clause reads it."""
+    t = PigTest(spark, "data = LOAD 'input' AS (a);")
+    t.mock_alias("data", rows, schema)
+    assert t.get_alias("data").df.dtypes == dtypes
+    t.assert_output("data", expected)
+
+
 def test_bind_no_args_harvests_caller_variables(spark):
     """Pig.java:269 bind() — no-arg bind resolves $params from the
     host-language caller's variables (getParamsFromVariables)."""

@@ -1430,7 +1430,7 @@ def test_latin_over_errors(spark, sf_dir):
         run(spark, base + "c = FOREACH g { f = FILTER n BY n_nationkey >= 0; GENERATE FLATTEN(Stitch(f, Over(f.n_nationkey, 'sum(long)'))); }")
     with pytest.raises(NameError, match="unknown function"):
         run(spark, base + "c = FOREACH g { s = ORDER n BY n_nationkey; GENERATE FLATTEN(Stitch(s, Over(s.n_nationkey, 'median'))); }")
-    with pytest.raises(SyntaxError, match="AS schema"):
+    with pytest.raises(ValueError, match="AS schema has 2 fields, got 4 columns"):
         run(spark, base + "c = FOREACH g { s = ORDER n BY n_nationkey; GENERATE FLATTEN(Stitch(s, Over(s.n_nationkey, 'sum(long)'))) AS (a, b); }")
 
 
@@ -2540,14 +2540,16 @@ def test_invoker_static_java_methods(spark, tmp_path):
         DEFINE Pow  InvokeForDouble('java.lang.Math.pow', 'double double');
         DEFINE Hex  InvokeForString('java.lang.Integer.toHexString', 'int');
         DEFINE MaxI InvokeForInt('java.lang.Math.max', 'int int');
+        DEFINE ValL InvokeForLong('java.lang.Long.valueOf', 'String');
         a = LOAD '{src}' AS (x:int, d:double);
         b = FOREACH a GENERATE Sqrt(x) AS sq, Pow(x, d) AS pw,
-                               Hex(x + 6) AS hx, MaxI(x, 7) AS mx;
+                               Hex(x + 6) AS hx, MaxI(x, 7) AS mx,
+                               ValL((chararray)x) AS vl;
     """)
     rows = sorted(map(tuple, rels["b"].df.collect()))
-    assert rows == [(2.0, 16.0, "a", 7), (3.0, 3.0, "f", 9)]
+    assert rows == [(2.0, 16.0, "a", 7, 4), (3.0, 3.0, "f", 9, 9)]
     sch = {f.name: f.dataType.simpleString() for f in rels["b"].df.schema.fields}
-    assert sch == {"sq": "double", "pw": "double", "hx": "string", "mx": "int"}
+    assert sch == {"sq": "double", "pw": "double", "hx": "string", "mx": "int", "vl": "bigint"}
     with _pytest.raises(NotImplementedError, match="STATIC"):
         run(spark, "DEFINE Up InvokeForString('java.lang.String.toUpperCase', '', 'false');")
 
@@ -2662,3 +2664,60 @@ def test_register_path_with_embedded_using_keyword(spark, tmp_path):
     tr = translator(spark)
     tr.run(f"REGISTER {jar};")
     assert tr.registered == [str(jar)]
+
+
+def test_load_as_tuple_of_bare_types(spark, tmp_path):
+    """A tuple of bare types names its fields by position, as CAST
+    does, and types each one."""
+    p = tmp_path / "t.tsv"
+    p.write_text("7\t(7,abc)\n")
+    df = run(spark, f"a = LOAD '{p}' AS (k:int, t:tuple(int,chararray));")["a"].df
+    assert df.schema["t"].dataType.simpleString() == "struct<f0:int,f1:string>"
+    assert [tuple(r["t"]) for r in df.collect()] == [(7, "abc")]
+
+
+def test_cast_to_named_bag(spark, tmp_path):
+    """CAST to a bag whose tuple carries an alias types the tuple's
+    fields."""
+    p = tmp_path / "xy.tsv"
+    p.write_text("7\t8\n1\t2\n")
+    df = run(spark, f"""
+        a = LOAD '{p}' AS (x:int, y:int);
+        g = GROUP a ALL;
+        b = FOREACH g GENERATE (bag{{t:(x:int,y:long)}}) a AS b;
+    """)["b"].df
+    assert df.schema["b"].dataType.simpleString() == "array<struct<x:int,y:bigint>>"
+    assert sorted(tuple(t) for t in df.first()["b"]) == [(1, 2), (7, 8)]
+
+
+def test_load_as_over_typed_parquet(spark, tmp_path):
+    """LOAD … AS over a typed container binds the declared fields by
+    position and try_casts each declared scalar type — the same rule as
+    CAST, so ``AS (n:int)`` and ``(int)n`` agree. A same-type field
+    keeps its value; a field past the last column reads a typed null.
+    A narrowing that does not fit reads null: a long of 2**40 declared
+    int (Pig's POCast wraps it; Spark's try_cast, which every CAST here
+    uses, gives null) and a decimal of 1e20 declared bigdecimal, whose
+    decimal(38,18) holds 20 integer digits."""
+    from decimal import Decimal
+
+    src = str(tmp_path / "t.parquet")
+    spark.createDataFrame(
+        [(1, 2**40, Decimal("1.5"), Decimal("1e20"), "x")],
+        "a bigint, big bigint, d decimal(38,10), wide decimal(38,10), s string",
+    ).write.parquet(src)
+    rels = run(spark, f"""
+        t = LOAD '{src}' USING ParquetLoader()
+            AS (a:long, big:int, d:bigdecimal, wide:bigdecimal, s:chararray, pad:int);
+        raw = LOAD '{src}' USING ParquetLoader();
+        c = FOREACH raw GENERATE (int)big AS bi;
+    """)
+    df = rels["t"].df
+    sch = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    assert sch == {
+        "a": "bigint", "big": "int", "d": "decimal(38,18)",
+        "wide": "decimal(38,18)", "s": "string", "pad": "int",
+    }
+    assert [tuple(r) for r in df.collect()] == [(1, None, Decimal("1.5"), None, "x", None)]
+    # the explicit CAST of the same long reads null too
+    assert [tuple(r) for r in rels["c"].df.collect()] == [(None,)]

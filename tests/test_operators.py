@@ -189,7 +189,7 @@ def test_stream_garbage_stdout_nulls_under_ansi(spark):
         out = stream_through(df, "sed 's/^1/garbage/'", "a int, b string")
         got = sorted(((r["a"], r["b"]) for r in out.collect()), key=str)
         assert got == [(2, "y"), (None, "x")]
-        # complex declared type: map parses back via utf8_cast's Pig
+        # complex declared type: map parses back via pigtypes.utf8_decode's Pig
         # textual form; garbage → null, still no ANSI raise
         df2 = spark.createDataFrame([Row(a="[k#v]",), Row(a="notamap",)])
         out2 = stream_through(df2, "cat", "m map<string,string>")
@@ -1218,20 +1218,22 @@ def test_pq_seed_vectors_reconstruct_exactly(spark, sf_dir):
     )
     cbs = pq_codebooks(e)
     enc = pq_encode(e, cbs).cache()
-    seeds = {r["vec_id"]: r for r in enc.where("vec_id < 16").collect()}
-    for j, r in seeds.items():
-        assert r["codes"] == [j] * 8, (j, r["codes"])
-        assert r["recon_err"] == 0.0
-    assert enc.where("vec_id >= 16 AND recon_err <= 0").count() == 0
-    # ADC spot check vs a driver-side recompute for one row
-    q = _lcg_floats(4242, 64)
-    row = pq_adc_distances(enc, q, cbs).where("vec_id = 3").first()
-    want = sum(
-        sum((a - b) * (a - b) for a, b in zip(q[m * 8 : m * 8 + 8], cbs[m][row["codes"][m]]))
-        for m in range(8)
-    )
-    assert abs(row["adc_dist"] - want) < 1e-9
-    enc.unpersist()
+    try:
+        seeds = {r["vec_id"]: r for r in enc.where("vec_id < 16").collect()}
+        for j, r in seeds.items():
+            assert r["codes"] == [j] * 8, (j, r["codes"])
+            assert r["recon_err"] == 0.0
+        assert enc.where("vec_id >= 16 AND recon_err <= 0").count() == 0
+        # ADC spot check vs a driver-side recompute for one row
+        q = _lcg_floats(4242, 64)
+        row = pq_adc_distances(enc, q, cbs).where("vec_id = 3").first()
+        want = sum(
+            sum((a - b) * (a - b) for a, b in zip(q[m * 8 : m * 8 + 8], cbs[m][row["codes"][m]]))
+            for m in range(8)
+        )
+        assert abs(row["adc_dist"] - want) < 1e-9
+    finally:
+        enc.unpersist()
 
 
 def test_residual_pq_seed_vectors_reconstruct_exactly(spark, sf_dir):
@@ -1257,22 +1259,24 @@ def test_residual_pq_seed_vectors_reconstruct_exactly(spark, sf_dir):
     rcbs = pq_residual_codebooks(e, cents)
     res = pq_residuals(e, cents)
     enc = pq_encode(res, rcbs, vec_col="__res").cache()
-    lo = PQ_RES_SEED_LO
-    seeds = {
-        r["vec_id"]: r
-        for r in enc.where(f"vec_id >= {lo} AND vec_id < {lo + 16}").collect()
-    }
-    assert len(seeds) == 16
-    for vid, r in seeds.items():
-        j = vid - lo
-        assert r["codes"] == [j] * 8, (vid, r["codes"])
-        assert r["recon_err"] == 0.0, (vid, r["recon_err"])
-    # the distributed residual of one seed equals the Python residual
-    # used to build the codebook (cross-checks the argmax tie-break)
-    row = res.where(f"vec_id = {lo}").select("__res").first()
-    flat = [x for sub in (rcbs[m][0] for m in range(8)) for x in sub]
-    assert [float(x) for x in row["__res"]] == flat
-    enc.unpersist()
+    try:
+        lo = PQ_RES_SEED_LO
+        seeds = {
+            r["vec_id"]: r
+            for r in enc.where(f"vec_id >= {lo} AND vec_id < {lo + 16}").collect()
+        }
+        assert len(seeds) == 16
+        for vid, r in seeds.items():
+            j = vid - lo
+            assert r["codes"] == [j] * 8, (vid, r["codes"])
+            assert r["recon_err"] == 0.0, (vid, r["recon_err"])
+        # the distributed residual of one seed equals the Python residual
+        # used to build the codebook (cross-checks the argmax tie-break)
+        row = res.where(f"vec_id = {lo}").select("__res").first()
+        flat = [x for sub in (rcbs[m][0] for m in range(8)) for x in sub]
+        assert [float(x) for x in row["__res"]] == flat
+    finally:
+        enc.unpersist()
 
 
 def test_pq_refined_pipeline_contract_and_generalization(spark, sf_dir):
@@ -1428,32 +1432,34 @@ def test_pack_strict_hard_cap_and_stability(spark):
     df = spark.createDataFrame(rows, "id long, tok long")
     budget = 400
     out = pack_strict(df, "tok", budget, order="id").cache()
-    assert out.count() == len(rows)  # every doc exactly once
-    groups = out.groupBy("bucket", "pack").agg(
-        F.sum("tok").alias("tot"), F.count("*").alias("n")
-    ).collect()
-    for g in groups:
-        assert g["tot"] <= budget or g["n"] == 1, dict(g.asDict())
-    # the oversized doc sits alone in its pack
-    big = out.where("id = 1000").first()
-    mates = out.where(
-        f"bucket = {big['bucket']} AND pack = {big['pack']}"
-    ).count()
-    assert mates == 1
-    # greedy sequence: within a coarse bucket, pack index is
-    # non-decreasing in the order key
-    seq = out.orderBy("bucket", "id").select("bucket", "id", "pack").collect()
-    by_bucket: dict = {}
-    for r in seq:
-        prev = by_bucket.get(r["bucket"], -1)
-        assert r["pack"] >= prev, dict(r.asDict())
-        by_bucket[r["bucket"]] = r["pack"]
-    # retry stability across partition layouts
-    again = pack_strict(df.repartition(13), "tok", budget, order="id")
-    a = {r["id"]: (r["bucket"], r["pack"]) for r in out.collect()}
-    b = {r["id"]: (r["bucket"], r["pack"]) for r in again.collect()}
-    assert a == b
-    out.unpersist()
+    try:
+        assert out.count() == len(rows)  # every doc exactly once
+        groups = out.groupBy("bucket", "pack").agg(
+            F.sum("tok").alias("tot"), F.count("*").alias("n")
+        ).collect()
+        for g in groups:
+            assert g["tot"] <= budget or g["n"] == 1, dict(g.asDict())
+        # the oversized doc sits alone in its pack
+        big = out.where("id = 1000").first()
+        mates = out.where(
+            f"bucket = {big['bucket']} AND pack = {big['pack']}"
+        ).count()
+        assert mates == 1
+        # greedy sequence: within a coarse bucket, pack index is
+        # non-decreasing in the order key
+        seq = out.orderBy("bucket", "id").select("bucket", "id", "pack").collect()
+        by_bucket: dict = {}
+        for r in seq:
+            prev = by_bucket.get(r["bucket"], -1)
+            assert r["pack"] >= prev, dict(r.asDict())
+            by_bucket[r["bucket"]] = r["pack"]
+        # retry stability across partition layouts
+        again = pack_strict(df.repartition(13), "tok", budget, order="id")
+        a = {r["id"]: (r["bucket"], r["pack"]) for r in out.collect()}
+        b = {r["id"]: (r["bucket"], r["pack"]) for r in again.collect()}
+        assert a == b
+    finally:
+        out.unpersist()
 
 
 def test_kcenter_greedy_invariants(spark, sf_dir):
@@ -1486,12 +1492,14 @@ def test_kcenter_greedy_invariants(spark, sf_dir):
     assert all(a >= b - 1e-9 for a, b in zip(gaps, gaps[1:])), gaps
 
     out = q156_kcenter_coreset(spark, sf_dir).cache()
-    cen = {r["vec_id"]: r for r in out.where("is_center").collect()}
-    assert sorted(cen) == sorted(ids)
-    for vid, r in cen.items():
-        assert r["center_id"] == vid and r["dist"] == 0.0, dict(r.asDict())
-    assert out.count() == e.count()
-    out.unpersist()
+    try:
+        cen = {r["vec_id"]: r for r in out.where("is_center").collect()}
+        assert sorted(cen) == sorted(ids)
+        for vid, r in cen.items():
+            assert r["center_id"] == vid and r["dist"] == 0.0, dict(r.asDict())
+        assert out.count() == e.count()
+    finally:
+        out.unpersist()
 
 
 def test_sequence_spans_tile_exactly(spark, sf_dir):
@@ -1562,52 +1570,55 @@ def test_pack_ffd_invariants(spark):
     df = spark.createDataFrame(rows, "id long, tok long")
     budget = 400
     out = pack_ffd(df, "tok", budget, order="id").cache()
-    assert out.count() == len(rows)
-    groups = out.groupBy("bucket", "bin").agg(
-        F.sum("tok").alias("tot"), F.count("*").alias("n")
-    ).collect()
-    for g in groups:
-        assert g["tot"] <= budget or g["n"] == 1, dict(g.asDict())
+    try:
+        assert out.count() == len(rows)
+        groups = out.groupBy("bucket", "bin").agg(
+            F.sum("tok").alias("tot"), F.count("*").alias("n")
+        ).collect()
+        for g in groups:
+            assert g["tot"] <= budget or g["n"] == 1, dict(g.asDict())
 
-    # Python FFD replay per bucket — exact assignment parity
-    got = {r["id"]: (r["bucket"], r["bin"]) for r in out.collect()}
-    from collections import defaultdict
+        # Python FFD replay per bucket — exact assignment parity
+        got = {r["id"]: (r["bucket"], r["bin"]) for r in out.collect()}
+        from collections import defaultdict
 
-    buckets = defaultdict(list)
-    for r in out.collect():
-        buckets[r["bucket"]].append((r["tok"], r["id"]))
-    for b, docs in buckets.items():
-        bins: list = []
-        for tok, did in sorted(docs, key=lambda p: (-p[0], p[1])):
-            for j, rem in enumerate(bins):
-                if rem >= tok:
-                    bins[j] -= tok
-                    break
-            else:
-                j = len(bins)
-                bins.append(budget - tok)
-            assert got[did] == (b, j), (did, got[did], (b, j))
+        buckets = defaultdict(list)
+        for r in out.collect():
+            buckets[r["bucket"]].append((r["tok"], r["id"]))
+        for b, docs in buckets.items():
+            bins: list = []
+            for tok, did in sorted(docs, key=lambda p: (-p[0], p[1])):
+                for j, rem in enumerate(bins):
+                    if rem >= tok:
+                        bins[j] -= tok
+                        break
+                else:
+                    j = len(bins)
+                    bins.append(budget - tok)
+                assert got[did] == (b, j), (did, got[did], (b, j))
 
-    # FFD uses no more bins per bucket than the IN-ORDER greedy pack
-    # of the same bucket (the point of decreasing-first)
-    for b, docs in buckets.items():
-        n_ffd_bins = len({got[did][1] for _, did in docs})
-        cur, n_greedy_bins = 0, 0
-        for tok, _ in sorted(docs, key=lambda p: p[1]):  # id order
-            if cur and cur + tok > budget:
-                cur = tok
-                n_greedy_bins += 1
-            else:
-                if cur == 0:
+        # FFD uses no more bins per bucket than the IN-ORDER greedy pack
+        # of the same bucket (the point of decreasing-first)
+        for b, docs in buckets.items():
+            n_ffd_bins = len({got[did][1] for _, did in docs})
+            cur, n_greedy_bins = 0, 0
+            for tok, _ in sorted(docs, key=lambda p: p[1]):  # id order
+                if cur and cur + tok > budget:
+                    cur = tok
                     n_greedy_bins += 1
-                cur += tok
-        assert n_ffd_bins <= n_greedy_bins, (b, n_ffd_bins, n_greedy_bins)
+                else:
+                    if cur == 0:
+                        n_greedy_bins += 1
+                    cur += tok
+            assert n_ffd_bins <= n_greedy_bins, (b, n_ffd_bins, n_greedy_bins)
 
-    # retry stability across partition layouts
-    again = pack_ffd(df.repartition(13), "tok", budget, order="id")
-    assert {tuple(r) for r in again.select("id", "bucket", "bin").collect()} == {
-        tuple(r) for r in out.select("id", "bucket", "bin").collect()
-    }
+        # retry stability across partition layouts
+        again = pack_ffd(df.repartition(13), "tok", budget, order="id")
+        assert {tuple(r) for r in again.select("id", "bucket", "bin").collect()} == {
+            tuple(r) for r in out.select("id", "bucket", "bin").collect()
+        }
+    finally:
+        out.unpersist()
 
 
 def test_plan_epoch_budget_caps_and_redistribution():

@@ -207,22 +207,65 @@ _SCALARS = ["int", "long", "float", "double", "chararray", "boolean", "bytearray
     bag=st.booleans(),
 )
 @settings(max_examples=60, deadline=None)
-def test_pig_cast_ddl_roundtrips_to_valid_spark_ddl(spark, types, bag):
-    """pig_cast_ddl (r6 — complex-type CASTS) must emit a string Spark's
+def test_pig_type_ddl_is_valid_spark_ddl(spark, types, bag):
+    """pigtypes.ddl (complex-type CASTS) must emit a string Spark's
     DDL parser accepts for every combination of scalar types nested in
     tuple()/bag{} — a malformed DDL would surface as an opaque
     try_cast analysis error mid-script."""
     from pyspark.sql.types import _parse_datatype_string
 
-    from pig_spark.latin.translate import pig_cast_ddl
+    from pig_spark.pigtypes import ddl as pig_ddl
 
     inner = "tuple(" + ", ".join(types) + ")"
     t = "bag{" + inner + "}" if bag else inner
-    ddl = pig_cast_ddl(t)
+    ddl = pig_ddl(t)
     parsed = _parse_datatype_string(ddl)  # raises on malformed DDL
     s = parsed.simpleString()
     assert (s.startswith("array<struct<") if bag else s.startswith("struct<"))
     assert s.count(",") >= len(types) - 1
+
+
+_ALL_SCALARS = _SCALARS + ["datetime", "biginteger", "bigdecimal"]
+# field names that are not Pig type keywords
+_FIELD_NAMES = st.sampled_from(["a", "b1", "name", "x_y", "grp"])
+
+
+def _pig_type_text():
+    """Pig type text: every scalar, and tuples (both spellings), bags
+    (every spelling) and maps nested in each other, with named fields,
+    bare types and bare names."""
+
+    def complex_of(inner):
+        field = st.one_of(
+            st.tuples(_FIELD_NAMES, inner).map(lambda p: f"{p[0]}:{p[1]}"),
+            inner,
+            _FIELD_NAMES,
+        )
+        body = st.lists(field, max_size=3).map(", ".join)
+        paren = body.map(lambda b: f"({b})")
+        tup = st.one_of(paren, body.map(lambda b: f"tuple({b})"))
+        bag = st.one_of(
+            paren.map(lambda t: "bag{t:" + t + "}"),
+            body.map(lambda b: "bag{t:tuple(" + b + ")}"),
+            tup.map(lambda t: "bag{" + t + "}"),
+            paren.map(lambda t: "{" + t + "}"),
+            st.just("bag{}"),
+        )
+        mp = st.one_of(st.just("map[]"), st.just("[]"), inner.map(lambda t: f"map[{t}]"))
+        return st.one_of(tup, bag, mp)
+
+    return st.recursive(st.sampled_from(_ALL_SCALARS), complex_of, max_leaves=8)
+
+
+@given(text=_pig_type_text())
+@settings(max_examples=300, deadline=None)
+def test_pig_type_text_round_trips_through_the_printer(text):
+    """What DESCRIBE prints of a parsed type parses back to the same
+    type: parse(print(parse(p))) == parse(p)."""
+    from pig_spark.pigtypes import parse, pig_type_name
+
+    t = parse(text)
+    assert parse(pig_type_name(t)) == t, (text, pig_type_name(t))
 
 
 @given(picks=st.lists(st.sampled_from(_SCALARS + ["null"]), min_size=1, max_size=6))

@@ -527,7 +527,6 @@ def test_corpus_checkpoint_guard(spark, sf_dir, monkeypatch):
     base137 = {tuple(r) for r in q137_exact_substring_dedup(spark, sf_dir).collect()}
 
     monkeypatch.setenv("SPARK_GRAFT_CKPT_MAX_BYTES", "0")
-    spark.catalog.clearCache()  # entries other tests left in the shared session
     try:
         lazy130 = q130_bigram_lm_perplexity(spark, sf_dir)
         phys = lazy130._jdf.queryExecution().executedPlan().toString()

@@ -125,27 +125,43 @@ def test_pig_schema_sidecar_round_trip(spark, tmp_path):
     """PigStorage('-schema') parity (JsonMetadata.java): STORE writes a
     .pig_schema JSON beside the text output; a schemaless LOAD with the
     option restores names AND types."""
+    import datetime
+    import json
+    from decimal import Decimal
+
     from pyspark.sql import types as T
 
     from pig_spark.sources import load, store
 
-    df = spark.createDataFrame(
-        [(1, 9.5, "a", True), (2, -0.25, "b", False)],
-        "k int, v double, s string, flag boolean",
-    )
+    df = spark.sql("""
+        SELECT * FROM VALUES
+          (1, 9.5D, 'a', true, CAST('12345678901234567890' AS DECIMAL(38,0)),
+           CAST('1.25' AS DECIMAL(38,18)), TIMESTAMP'2024-01-02 03:04:05'),
+          (2, -0.25D, 'b', false, CAST('-7' AS DECIMAL(38,0)),
+           CAST('-0.5' AS DECIMAL(38,18)), TIMESTAMP'1999-12-31 23:59:59')
+        AS t(k, v, s, flag, bi, bd, dt)
+    """)
     path = str(tmp_path / "sidecar_out")
     store(df, path, format="pigstorage", schema_sidecar=True)
-    assert (tmp_path / "sidecar_out" / ".pig_schema").exists()
+    sidecar = json.loads((tmp_path / "sidecar_out" / ".pig_schema").read_text())
+    # DataType.java codes: biginteger is 65, bigdecimal 70, datetime 30
+    assert [f["type"] for f in sidecar["fields"]] == [10, 25, 55, 5, 65, 70, 30]
 
     back = load(spark, path, format="pigstorage", schema_sidecar=True)
-    assert back.columns == ["k", "v", "s", "flag"]
+    assert back.columns == ["k", "v", "s", "flag", "bi", "bd", "dt"]
     assert isinstance(back.schema["k"].dataType, T.IntegerType)
     assert isinstance(back.schema["v"].dataType, T.DoubleType)
     assert isinstance(back.schema["flag"].dataType, T.BooleanType)
-    assert sorted((r.k, r.v, r.s, r.flag) for r in back.collect()) == [
-        (1, 9.5, "a", True),
-        (2, -0.25, "b", False),
+    assert back.schema["bi"].dataType == T.DecimalType(38, 0)
+    assert back.schema["bd"].dataType == T.DecimalType(38, 18)
+    assert isinstance(back.schema["dt"].dataType, T.TimestampType)
+    assert sorted(tuple(r) for r in back.collect()) == [
+        (1, 9.5, "a", True, Decimal("12345678901234567890"), Decimal("1.25"),
+         datetime.datetime(2024, 1, 2, 3, 4, 5)),
+        (2, -0.25, "b", False, Decimal("-7"), Decimal("-0.5"),
+         datetime.datetime(1999, 12, 31, 23, 59, 59)),
     ]
+    assert str(back.where("k = 1").first()["bi"]) == "12345678901234567890"
 
 
 def test_pig_schema_sidecar_absent_returns_none(spark, tmp_path):

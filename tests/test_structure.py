@@ -161,3 +161,62 @@ def test_one_bag_comparator():
             if name == "array_sort":
                 offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
     assert not offenders, "array_sort comparator outside operators/nested.py:\n" + "\n".join(offenders)
+
+
+# Pig's own type names. int/long/float/double/boolean are Spark DDL
+# names too, so a dict holding only those says nothing about Pig.
+_PIG_TYPE_NAMES = {"chararray", "bytearray", "datetime", "biginteger", "bigdecimal"}
+# dicts that map Pig input types to aggregate RESULT types (Over's
+# SUM and MIN/MAX), not Pig types to Spark types
+_PIG_TYPE_DICT_EXCEPTIONS = {"_OVER_SUM_CAST", "_OVER_MINMAX_CAST"}
+
+
+def test_pig_type_tables_only_in_pigtypes():
+    """The Pig↔Spark type decision lives in ``pigtypes.py``: nine
+    tables in five modules had drifted apart (bytearray was binary in
+    PigUnit and string everywhere else; the sidecar wrote biginteger
+    as bigdecimal). A dict literal keyed or valued by a Pig type name
+    may appear only there, bar the named exceptions."""
+    allowed = PKG / "pigtypes.py"
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == allowed:
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        excused = {
+            id(node.value)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Assign)
+            and any(getattr(t, "id", None) in _PIG_TYPE_DICT_EXCEPTIONS for t in node.targets)
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Dict) or id(node) in excused:
+                continue
+            if any(
+                isinstance(x, ast.Constant) and x.value in _PIG_TYPE_NAMES
+                for x in [*node.keys, *node.values]
+            ):
+                offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert not offenders, "Pig type table outside pigtypes.py:\n" + "\n".join(offenders)
+
+
+def test_operators_and_sources_do_not_import_latin():
+    """Operators and sources sit below the Latin front end: nothing
+    under ``pig_spark/operators/`` or ``pig_spark/sources/`` imports
+    from ``pig_spark/latin/``."""
+    offenders = []
+    for layer in ("operators", "sources"):
+        for path in sorted((PKG / layer).rglob("*.py")):
+            package = ["pig_spark", *path.relative_to(PKG).parent.parts]
+            for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+                if isinstance(node, ast.ImportFrom):
+                    base = package[: len(package) - node.level + 1] if node.level else []
+                    module = ".".join([*base, *([node.module] if node.module else [])])
+                    names = [module, *(f"{module}.{a.name}" for a in node.names)]
+                elif isinstance(node, ast.Import):
+                    names = [a.name for a in node.names]
+                else:
+                    continue
+                if any(n == "pig_spark.latin" or n.startswith("pig_spark.latin.") for n in names):
+                    offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert not offenders, "imports from pig_spark/latin/ below it:\n" + "\n".join(offenders)
