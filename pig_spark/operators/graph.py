@@ -1,4 +1,5 @@
-"""Distributed connected components — alternating large-star / small-star.
+"""Connected components: on the driver for a small graph, alternating
+large-star / small-star rounds on the cluster for a large one.
 
 Pig itself has no graph operator; this belongs to the training-data
 pipeline surface: the near-dup detectors (``dedup.minhash_lsh_pairs``,
@@ -41,16 +42,48 @@ iteration count never deepens the plan (on a cluster with a
 checkpoint dir, ``DataFrame.checkpoint`` is the durable variant, same
 call shape); each round frees the previous round's store once its own
 is materialized.
+
+Two paths.  Each Spark job costs tens of milliseconds of driver CPU
+whatever its size, and a round is four of them, so a dedup graph of a
+few hundred edges spent most of its time launching jobs.  The
+canonical edges are therefore stored once (a lazy local checkpoint)
+and at most ``DRIVER_MAX_EDGES + 1`` of them collected as Arrow in one
+job.  If no more came back, a union-find on the driver (each root the
+minimum id) finishes, and its result is a local frame over Arrow
+batches, read with no job.  Otherwise the star-forest loop runs on the
+stored edges, so the upstream plan is not computed twice.  Only
+integer, decimal, date and plain string ids take the driver path, the
+types whose Python order is Spark's; any other id type takes the loop.
+
+``DRIVER_MAX_EDGES`` is a driver-memory bound, not a crossover: on
+random sparse graphs (local[2], 4-vCPU VM) the driver path used
+0.35/0.20/0.96/2.8/11.3 CPU-s at 1k/10k/100k/300k/1M edges against
+4.2/3.6/7.7/19.9/50.3 for the loop, so the loop never won up to 1M
+edges.  The union-find's Python heap grows by ~150 bytes per edge
+(15 MB at 100k, 137 MB at 1M, plus 16 bytes per edge of Arrow), and a
+graph over the bound pays one wasted collect of that size before the
+loop.  100k edges keeps both to ~16 MB and well under a second; it
+sits beside ``SPARK_GRAFT_CKPT_MAX_BYTES`` in ``materialize``'s rule.
 """
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from ..compat import sql_ident
 from .materialize import release
 
-__all__ = ["connected_components"]
+if TYPE_CHECKING:
+    import pyarrow as pa
+
+__all__ = ["connected_components", "DRIVER_MAX_EDGES"]
+
+# Canonical edges up to which the components are found on the driver
+# (the module docstring gives the measurements behind it).
+DRIVER_MAX_EDGES = 100_000
 
 
 def _canon(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -96,6 +129,37 @@ def _star_round(p: DataFrame) -> DataFrame:
     return _canon(s.selectExpr(f"inline({pairs})"), "a", "b")
 
 
+def _driver_orderable(dt: T.DataType) -> bool:
+    """Id types whose Python order is Spark's (UTF-8 byte order is code
+    point order); not floats (NaN, -0.0) nor collated strings."""
+    return isinstance(dt, (T.IntegralType, T.DecimalType, T.DateType)) or dt == T.StringType()
+
+
+def _driver_components(spark, head: "pa.Table", dt: T.DataType) -> DataFrame:
+    """(node, component) of the canonical edges in ``head`` by
+    union-find, each root the minimum id of its component, as a local
+    frame over Arrow batches (a frame built from a Python list would
+    run a pickled Python RDD through the workers instead)."""
+    import pyarrow as pa
+
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = x = parent[parent[x]]
+        return x
+
+    for a, b in zip(head.column("u").to_pylist(), head.column("v").to_pylist()):
+        ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    t = head.schema.field("u").type
+    table = pa.table({"node": pa.array(nodes, t), "component": pa.array([find(n) for n in nodes], t)})
+    schema = T.StructType([T.StructField("node", dt), T.StructField("component", dt)])
+    return spark.createDataFrame(table, schema)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -115,7 +179,8 @@ def connected_components(
     ALREADY canonical — src < dst, distinct, no nulls (true for every
     LSH pair stream: id_a < id_b by construction, deduped, verified) —
     which skips the initial least/greatest + distinct pass.  Raises
-    ``RuntimeError`` when ``max_iter`` star rounds do not converge.
+    ``RuntimeError`` when ``max_iter`` star rounds do not converge (a
+    graph the driver finishes takes none).
     ``edges`` is read only while this runs (each pass is stored before
     the next), so a caller that owns it may ``release`` it on return.
     """
@@ -123,8 +188,24 @@ def connected_components(
         e = edges.selectExpr(f"{sql_ident(src)} AS u", f"{sql_ident(dst)} AS v")
     else:
         e = _canon(edges, src, dst)
+    dt = e.schema["u"].dataType
+    stored = DRIVER_MAX_EDGES > 0 and _driver_orderable(dt)
+    if stored:
+        # stored, so a graph too large for the driver is not computed
+        # again (a local checkpoint like every pass here: ``materialize``
+        # would persist, since a pair stream's size estimate inherits
+        # its join's blow-up, and AQE builds a persist in a job of its
+        # own); one job: a single task reads the partitions in turn and
+        # stops after DRIVER_MAX_EDGES + 1 rows
+        e = e.localCheckpoint(eager=False)
+        head = e.coalesce(1).limit(DRIVER_MAX_EDGES + 1).toArrow()
+        if head.num_rows <= DRIVER_MAX_EDGES:
+            release(e)
+            return _driver_components(e.sparkSession, head, dt)
     p = _by_node(e)
     star = _star_forest(p)
+    if stored:
+        release(e)
     for _ in range(max_iter):
         if star:
             break

@@ -21,6 +21,12 @@ Lineage cuts inside an iteration (``prefix.running_sums``,
 ``graph.connected_components``, ``ml.train_bpe``) checkpoint directly
 and free with :func:`release`; ``multisink.multi_store`` persists,
 because it needs the CacheManager to substitute the shared subplan.
+
+The driver holds rows under one bound of its own:
+``graph.DRIVER_MAX_EDGES`` (100k edges, ~16 MB of driver heap), up to
+which connected components collects its edges and finishes on the
+driver. Like the checkpoint bound it is a memory decision; unlike it,
+it is a module constant, not a deployment setting.
 """
 
 from __future__ import annotations

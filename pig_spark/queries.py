@@ -1178,7 +1178,7 @@ def q91_dedup_survivors(spark: SparkSession, sf: str) -> DataFrame:
     pairs = dedup.minhash_lsh_pairs(d, "text", "doc_id", threshold=0.4)
     # LSH pairs are canonical: id_a < id_b, distinct, non-null
     cc = connected_components(pairs.selectExpr("id_a AS src", "id_b AS dst"), canonical=True)
-    release(pairs)  # CC has stored its first pass: the pair stage's store is spent
+    release(pairs)  # CC no longer reads the pairs: the pair stage's store is spent
     member = cc.selectExpr("node AS doc_id", "component AS group_id").join(
         d.select("doc_id", "n_chars"), "doc_id"
     )
@@ -1515,18 +1515,21 @@ def q106_cms_frequencies(spark: SparkSession, sf: str) -> DataFrame:
 
 def q87_dedup_groups(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup GROUPS: the q41 minhash-LSH pair stream transitively
-    closed into connected components (operators/graph.py large-star/
-    small-star, O(log n) rounds) — group_id = min doc_id of the
-    component, the deterministic "canonical survivor" a 100 TB dedup
-    keeps. Pairs alone under-delete: A~B, B~C must collapse even when
-    LSH never emitted A~C."""
+    closed into connected components (operators/graph.py) — group_id =
+    min doc_id of the component, the deterministic "canonical survivor"
+    a 100 TB dedup keeps. Pairs alone under-delete: A~B, B~C must
+    collapse even when LSH never emitted A~C. A pair stream of at most
+    ``graph.DRIVER_MAX_EDGES`` edges (the benchmark's and the oracle
+    scales' are a few hundred) is collected in one job and closed by a
+    union-find on the driver; a larger one takes the large-star/
+    small-star rounds, O(log n) of them, on the cluster."""
     from .operators.graph import connected_components
 
     d = _t(spark, sf, "documents").df
     pairs = dedup.minhash_lsh_pairs(d, "text", "doc_id", threshold=0.4)
     edges = pairs.selectExpr("id_a AS src", "id_b AS dst")
     cc = connected_components(edges, "src", "dst", canonical=True)
-    release(edges)  # CC has stored its first pass: the pair stage's store is spent
+    release(edges)  # CC no longer reads the pairs: the pair stage's store is spent
     return cc.selectExpr("node AS doc_id", "component AS group_id")
 
 
@@ -2071,7 +2074,7 @@ def q121_unigram_lm_score(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     V, OOV, THRESH = 4096, 1e-9, -8.7654321
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text")
     toks = F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda x: x != "")
     td = d.select("doc_id", toks.alias("tk"))
     flat = td.select(F.explode("tk").alias("t"))
@@ -2211,7 +2214,7 @@ def q124_tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     V, K = 4096, 3
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text")
     toks = F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda x: x != "")
     td = d.select("doc_id", toks.alias("tk"))
     n_docs = td.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -2302,7 +2305,7 @@ def q125_hashed_quality_classifier(spark: SparkSession, sf: str) -> DataFrame:
 
     bucket = f"CAST(conv(substring(md5(f), 1, 15), 16, 10) AS BIGINT) % {HASH_DIM}"
     weight = f"(({bucket} * {HASH_MIX}) % {HASH_DIM}) / {float(HASH_DIM)}D - 0.5D"
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text")
     td = d.selectExpr("doc_id", f"{TOKENIZE_WS_SQL.format('text')} AS tk")
     # staged projections (the text-module rule): feats and score are
     # each referenced more than once downstream, so CollapseProject
@@ -2340,7 +2343,7 @@ def q126_dsir_importance(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     V, OOV = 4096, 1e-9
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "lang", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "lang", "text")
     toks = F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda x: x != "")
     td = d.select("doc_id", "lang", toks.alias("tk"))
 
@@ -2419,7 +2422,7 @@ def q127_referrer_analysis(spark: SparkSession, sf: str) -> DataFrame:
         SearchTermExtractor,
     )
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "lang")
+    d = _t(spark, sf, "documents").df.select("doc_id", "lang")
     domains = F.array(
         F.lit("www.google.com"),
         F.lit("search.yahoo.com"),
@@ -2510,7 +2513,7 @@ def q128_classifier_broadcast_weights(spark: SparkSession, sf: str) -> DataFrame
     from .functions import text as T
 
     wdf = spark.createDataFrame([(_load_classifier_weights(),)], "w array<double>")
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text")
     td = d.select("doc_id", T.tokenize_ws(F.col("text")).alias("tk"))
     staged = td.select(
         "doc_id",
@@ -2551,7 +2554,7 @@ def _synth_paragraphs(spark: SparkSession, sf: str, head: str, tail: str):
         f"CASE WHEN {n_blocks} > 0 THEN transform(sequence(0, {n_blocks} - 1), "
         f"i -> array_join(slice(tk, i * {n} + 1, {n}), ' ')) ELSE {_NO_PARAS} END"
     )
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text")
     tk = d.selectExpr("doc_id", f"{TOKENIZE_WS_SQL.format('text')} AS tk")
     return tk.selectExpr("doc_id", f"concat({head}, {chunks}, {tail}) AS ps").selectExpr(
         "doc_id", "CAST(size(ps) AS BIGINT) AS n_paras", "posexplode(ps) AS (pos, para)"
@@ -2629,7 +2632,7 @@ def q130_bigram_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     V, B, OOV, LAMBDA, THRESH = 4096, 8192, 1e-9, 0.7, -3.5
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text")
     toks = F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda x: x != "")
     # r12: the token table itself is checkpointed — it feeds THREE
     # corpus-scale consumers (unigram explode, bigram explode via gs,
@@ -2762,7 +2765,7 @@ def q132_paragraph_near_dup(spark: SparkSession, sf: str) -> DataFrame:
     pairs = dedup.minhash_lsh_pairs(firstp, "para", "pid", threshold=0.4)
     edges = pairs.selectExpr("id_a AS src", "id_b AS dst")
     cc = connected_components(edges, "src", "dst", canonical=True)
-    release(edges)  # CC has stored its first pass: the pair stage's store is spent
+    release(edges)  # CC no longer reads the pairs: the pair stage's store is spent
     return cc.selectExpr("node AS pid", "component AS group_id")
 
 
@@ -2787,7 +2790,7 @@ def q131_url_canonical_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
     from .functions.text import canonical_url
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id")
+    d = _t(spark, sf, "documents").df.select("doc_id")
     page = F.floor(F.col("doc_id") / 4).cast("long")
     variant = (F.col("doc_id") % 4).cast("int")
     p = page.cast("string")
@@ -2905,7 +2908,7 @@ def q135_corpus_zipf_profile(spark: SparkSession, sf: str) -> DataFrame:
     from .functions.text import tokenize_ws
 
     TOPK, SHARE_K = 1000, 100
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("text")
+    d = _t(spark, sf, "documents").df.select("text")
     flat = d.select(F.explode(tokenize_ws(F.lower(F.trim(F.col("text"))))).alias("t"))
     cnt = flat.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
     scal = cnt.agg(
@@ -2995,7 +2998,7 @@ def q136_corpus_clean_v2(spark: SparkSession, sf: str) -> DataFrame:
     # decontaminate the REBUILT train docs against the ORIGINAL eval
     # split (eval text never went through the rebuild — it is the
     # held-out benchmark, not pipeline data)
-    orig = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    orig = _t(spark, sf, "documents").df.select("doc_id", "text")
     bench = orig.where(F.col("doc_id") % 97 == 0)
     train = td.where(F.col("doc_id") % 97 != 0).select(
         "doc_id", F.col("clean_text").alias("text")
@@ -3046,7 +3049,7 @@ def _substr_staged(spark: SparkSession, sf: str):
 
     from .functions.text import tokenize_ws
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text")
     boiled = F.when(
         F.col("doc_id") % 3 == 0, F.concat(F.lit(_SUBSTR_BOILER + " "), F.col("text"))
     ).otherwise(F.col("text"))
@@ -3241,7 +3244,7 @@ def q139_classifier_training(spark: SparkSession, sf: str) -> DataFrame:
 
     from .functions.ml import stage_hashed_buckets, train_hashed_classifier
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text", "lang")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text", "lang")
     feats = stage_hashed_buckets(d, "text", F.col("lang") == "en")
     _, hist = train_hashed_classifier(feats, iters=5, lr=800.0)
     rows = []
@@ -3283,7 +3286,7 @@ def q140_quality_mixture(spark: SparkSession, sf: str) -> DataFrame:
     from .functions import text as T
     from .operators.sampling import quality_mixture_sample
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "lang", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "lang", "text")
     staged = materialize(d.select(
         "doc_id", "lang",
         T.hashed_score_from_features(
@@ -3328,7 +3331,7 @@ def q141_fuzzy_decontamination(spark: SparkSession, sf: str) -> DataFrame:
 
     from .functions import dedup
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text")
     bench = d.where(F.col("doc_id") % 97 == 0)
     clones = bench.select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"),
@@ -3425,7 +3428,7 @@ def q143_training_shards(spark: SparkSession, sf: str) -> DataFrame:
     from .functions.text import tokenize_ws
     from .operators.packing import shard_assign
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
+    d = _t(spark, sf, "documents").df.select(
         "doc_id", "n_chars", "text"
     )
     staged = shard_assign(d, "doc_id", 16, salt=":shard:v1", key_name="k").select(
@@ -3471,7 +3474,7 @@ def q144_bpe_train(spark: SparkSession, sf: str) -> DataFrame:
     bit-for-bit against a reference implementation."""
     from .functions.ml import stage_word_types, train_bpe
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("text")
+    d = _t(spark, sf, "documents").df.select("text")
     merges, final_types = train_bpe(stage_word_types(d, "text"), merges=6)
     release(final_types)  # only the merge list is reported
     rows: list[tuple] = []
@@ -3518,7 +3521,7 @@ def q145_bpe_tokenize(spark: SparkSession, sf: str) -> DataFrame:
     from .functions.ml import _merge_pair, stage_word_types, train_bpe
     from .functions.text import tokenize_ws
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text")
     merges, final_types = train_bpe(stage_word_types(d, "text"), merges=6)
     a1, b1 = merges[0]["a"], merges[0]["b"]
     dictionary = final_types.select(
@@ -3573,7 +3576,7 @@ def q146_kmeans_refine(spark: SparkSession, sf: str) -> DataFrame:
         kmeans_refine_l2,
     )
 
-    e = spark.read.parquet(f"{sf}/embeddings.parquet").select(
+    e = _t(spark, sf, "embeddings").df.select(
         "vec_id", "embedding"
     )
     boot = bootstrap_centroids(e)
@@ -3615,7 +3618,7 @@ def q147_contamination_audit(spark: SparkSession, sf: str) -> DataFrame:
 
     from .functions import dedup
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text")
     bench = d.where(F.col("doc_id") % 97 == 0)
     train = d.where(F.col("doc_id") % 97 != 0)
     exact = dedup.contamination_check(
@@ -3671,7 +3674,7 @@ def q148_c4_rules(spark: SparkSession, sf: str) -> DataFrame:
 
     from .functions.text import token_blocks, tokenize_ws
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text")
     tk = d.select("doc_id", tokenize_ws(F.lower(F.col("text"))).alias("tk"))
     blocks = token_blocks(F.col("tk"), 12)
     did = F.col("doc_id")
@@ -3740,7 +3743,7 @@ def q149_balanced_shards(spark: SparkSession, sf: str) -> DataFrame:
     from .functions.text import tokenize_ws
     from .operators.packing import balanced_shards, shard_assign
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text")
     staged = shard_assign(d, "doc_id", 16, salt=":bshard:v1", key_name="k").select(
         "doc_id",
         F.size(tokenize_ws(F.col("text"))).cast("long").alias("n_tokens"),
@@ -3865,7 +3868,7 @@ def q151_hcat_partitioned(spark: SparkSession, sf: str) -> DataFrame:
         f"CREATE TABLE {tbl}(doc_id bigint, n_chars bigint, source string) "
         "USING parquet PARTITIONED BY (lang string)"
     )
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
+    d = _t(spark, sf, "documents").df.select(
         "doc_id", F.col("n_chars").cast("long").alias("n_chars"), "source", "lang"
     )
     store_hcat(d, tbl)
@@ -3911,7 +3914,7 @@ def q152_pq_ann(spark: SparkSession, sf: str) -> DataFrame:
         pq_encode,
     )
 
-    e = spark.read.parquet(f"{sf}/embeddings.parquet").select("vec_id", "embedding")
+    e = _t(spark, sf, "embeddings").df.select("vec_id", "embedding")
     cbs = pq_codebooks(e)
     enc = pq_encode(e, cbs)
     query = _lcg_floats(4242, 64)
@@ -3968,7 +3971,7 @@ def q154_epoch_schedule(spark: SparkSession, sf: str) -> DataFrame:
     from .functions.dedup import md5_60
     from .functions.text import quality_score_from_tokens, tokenize_ws
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text")
     toks = d.select("doc_id", tokenize_ws(F.col("text")).alias("__tk"))
     staged = toks.select(
         "doc_id",
@@ -4177,7 +4180,7 @@ def q158_sequence_manifest(spark: SparkSession, sf: str) -> DataFrame:
     from .functions.text import tokenize_ws
     from .operators.packing import sequence_spans
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
+    d = _t(spark, sf, "documents").df.select(
         "doc_id",
         F.size(tokenize_ws(F.col("text"))).cast("long").alias("n_tokens"),
     )
@@ -4203,7 +4206,7 @@ def q159_sequence_gather(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.packing import gather_sequences, sequence_spans
 
     L = 512
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
+    d = _t(spark, sf, "documents").df.select(
         "doc_id", tokenize_ws(F.col("text")).alias("tk")
     )
     sized = d.select("doc_id", F.size("tk").cast("long").alias("n"))
@@ -4240,7 +4243,7 @@ def q160_epoch_shuffle(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.rank import rank
 
     epochs = 3
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
+    d = _t(spark, sf, "documents").df.select(
         "doc_id",
         F.size(tokenize_ws(F.col("text"))).cast("long").alias("n"),
     )
@@ -4309,7 +4312,7 @@ def q161_bpe_sequence_pack(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.packing import gather_sequences, sequence_spans
 
     L = 256
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text")
     _, final_types = train_bpe(stage_word_types(d, "text"), merges=6)
     # dense alphabetical ids over the FINAL vocabulary — model-sized
     # collect (≤ alphabet + 6 merged symbols), shipped as a plan
@@ -4376,7 +4379,7 @@ def q162_strict_pack(spark: SparkSession, sf: str) -> DataFrame:
     from .functions.text import token_count
     from .operators.packing import pack_strict
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
+    d = _t(spark, sf, "documents").df.select(
         "doc_id", token_count(F.col("text")).alias("n_tokens")
     )
     packed = pack_strict(d, "n_tokens", 1024, order="doc_id")
@@ -4449,7 +4452,7 @@ def q164_source_mixture(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
 
     D = 200  # total draws per mixture round
-    t = spark.read.parquet(f"{sf}/documents.parquet").select(
+    t = _t(spark, sf, "documents").df.select(
         "doc_id", "source", token_count(F.col("text")).alias("n")
     )
     stats = sorted(
@@ -4511,7 +4514,7 @@ def q165_fim_transform(spark: SparkSession, sf: str) -> DataFrame:
     from .functions.dedup import md5_60
     from .functions.text import tokenize_ws
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
+    d = _t(spark, sf, "documents").df.select(
         "doc_id", tokenize_ws(F.col("text")).alias("tk")
     )
     n = F.size("tk").cast("long")
@@ -4554,7 +4557,7 @@ def q166_length_buckets(spark: SparkSession, sf: str) -> DataFrame:
     groupBy on a ≤9-value key; output is buckets-sized."""
     from .functions.text import token_count
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
+    d = _t(spark, sf, "documents").df.select(
         token_count(F.col("text")).alias("n")
     )
     bounds = [16, 32, 64, 128, 256, 512, 1024, 2048, 4096]
@@ -4599,7 +4602,7 @@ def ensure_sequence_store(spark: SparkSession, sf: str) -> str:
     )
     if path in _SEQ_STORE_BUILT:
         return path
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
+    d = _t(spark, sf, "documents").df.select(
         "doc_id", tokenize_ws(F.col("text")).alias("tk")
     )
     sequence_store(d, path, 512)
@@ -4628,7 +4631,7 @@ def q167_sequence_store_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     src/org/apache/pig/builtin/PigStorage.java) applied to the
     training-loader artifact."""
     path = ensure_sequence_store(spark, sf)
-    stored = spark.read.parquet(f"{path}/sequences")
+    stored = Relation.load(spark, f"{path}/sequences").df
     return stored.select(
         "seq_id",
         F.col("n_spans").cast("long").alias("n_spans"),
@@ -4678,7 +4681,7 @@ def q171_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     from .functions.text import tokenize_ws
 
     k1, b = 1.2, 0.75
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
+    d = _t(spark, sf, "documents").df.select(
         "doc_id", F.explode(tokenize_ws(F.lower(F.col("text")))).alias("t")
     )
     # doc length straight off the token stream — narrow, map-side
@@ -4801,7 +4804,7 @@ def q174_epoch_budget_planner(spark: SparkSession, sf: str) -> DataFrame:
     (F.round ≙ DuckDB round — never Python's banker's round)."""
     from .functions.text import token_count
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
+    d = _t(spark, sf, "documents").df.select(
         "source", token_count(F.col("text")).alias("n")
     )
     agg = d.groupBy("source").agg(F.sum("n").alias("n_tokens"))
@@ -4947,7 +4950,7 @@ def q172_position_ids(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.packing import sequence_spans
 
     L = 512
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
+    d = _t(spark, sf, "documents").df.select(
         "doc_id", F.size(tokenize_ws(F.col("text"))).cast("long").alias("n")
     )
     spans = sequence_spans(d.where(F.col("n") > 0), "n", L, order="doc_id")
@@ -4999,7 +5002,7 @@ def q170_ffd_pack(spark: SparkSession, sf: str) -> DataFrame:
     from .functions.text import token_count
     from .operators.packing import pack_ffd
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
+    d = _t(spark, sf, "documents").df.select(
         "doc_id", token_count(F.col("text")).alias("n_tokens")
     )
     packed = pack_ffd(d, "n_tokens", 1024, order="doc_id")
@@ -5037,7 +5040,7 @@ def q168_sft_mask_pack(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.packing import sequence_spans
 
     L = 512
-    d = spark.read.parquet(f"{sf}/documents.parquet").select(
+    d = _t(spark, sf, "documents").df.select(
         "doc_id", F.size(tokenize_ws(F.col("text"))).cast("long").alias("n")
     )
     sized = d.where(F.col("n") > 0).withColumn(
@@ -5083,7 +5086,7 @@ def q169_tokenizer_fertility(spark: SparkSession, sf: str) -> DataFrame:
     second corpus scan."""
     from .functions.ml import stage_word_types, train_bpe
 
-    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    d = _t(spark, sf, "documents").df.select("doc_id", "text")
     _, final_types = train_bpe(stage_word_types(d, "text"), merges=6)
     g = final_types.groupBy(F.size("syms").alias("n_pieces")).agg(
         F.count(F.lit(1)).alias("n_types"),

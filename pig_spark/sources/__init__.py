@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -279,7 +280,36 @@ def _norm_format(fmt: str) -> str:
     return f
 
 
-_NANOS_CACHE: dict[str, tuple[tuple, bool]] = {}
+@dataclass
+class _ParquetMeta:
+    """What one listing of a parquet path answered: whether a footer
+    declares TIMESTAMP(NANOS), and the schema Spark inferred under the
+    parquet read confs ``read_conf``."""
+
+    listing: tuple
+    nanos: bool
+    read_conf: tuple | None = None
+    schema: T.StructType | None = None
+
+
+# Parquet file metadata per path, valid while the path's listing is
+# unchanged, as Impala's catalog service caches it (CIDR 2015). Spark's
+# own FileStatusCache keeps listings but infers the schema again, one
+# Spark job per LOAD. A rewritten path is probed and inferred again.
+# Bounded; the oldest entry goes first.
+_PARQUET_META: dict[str, _ParquetMeta] = {}
+_PARQUET_META_MAX = 256
+
+# the session confs that change the schema a parquet footer infers to
+_PARQUET_READ_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.files.ignoreCorruptFiles",
+)
 
 
 def _listing(path: str) -> tuple:
@@ -299,31 +329,42 @@ def _listing(path: str) -> tuple:
     return tuple(sorted(out))
 
 
-def _parquet_has_nanos(path: str) -> bool:
-    """True when the parquet footer declares a TIMESTAMP(NANOS) field.
+def _local_path(paths: list[str]) -> str | None:
+    """The one existing local file or directory a LOAD names; None for
+    a path list, a glob or another file system."""
+    if len(paths) != 1:
+        return None
+    p = paths[0].removeprefix("file://")
+    if "://" in p or any(c in p for c in "*?[{"):
+        return None
+    return p if os.path.exists(p) else None
 
-    One footer read of one fragment via pyarrow — O(KB) regardless of
-    data size, so safe at 100 TB (driver-side, no row data). Cached
-    per path and fragment listing: repeated loads of the same table
-    (every query in a session) must not re-probe — the probe costs
-    ~10 ms of driver time, which multiplied across a catalog run is
-    real seconds — but a rewritten path is probed again."""
+
+def _parquet_meta(path: str) -> _ParquetMeta:
+    """The cache entry of a parquet ``path`` for its current listing.
+
+    A miss reads one footer of one fragment via pyarrow, O(KB)
+    regardless of data size, so safe at 100 TB (driver-side, no row
+    data); the probe costs ~10 ms of driver time, which multiplied
+    across a catalog run is real seconds."""
     listing = _listing(path)
-    hit = _NANOS_CACHE.get(path)
-    if hit is not None and hit[0] == listing:
-        return hit[1]
+    hit = _PARQUET_META.get(path)
+    if hit is not None and hit.listing == listing:
+        return hit
     try:
         import pyarrow as pa
         import pyarrow.dataset as pads
 
         schema = pads.dataset(path, format="parquet").schema
-        out = any(
+        nanos = any(
             pa.types.is_timestamp(f.type) and f.type.unit == "ns" for f in schema
         )
     except Exception:  # noqa: BLE001 — non-local paths / odd layouts: skip probe
-        out = False
-    _NANOS_CACHE[path] = (listing, out)
-    return out
+        nanos = False
+    if hit is None and len(_PARQUET_META) >= _PARQUET_META_MAX:
+        del _PARQUET_META[next(iter(_PARQUET_META))]
+    _PARQUET_META[path] = meta = _ParquetMeta(listing, nanos)
+    return meta
 
 
 def ensure_pig_session_semantics(spark: SparkSession) -> None:
@@ -438,19 +479,31 @@ def load(
             # '"' quoting so embedded quotes round-trip byte-identical.
             options.setdefault("quote", "")
             options.setdefault("escape", "")
-    if fmt == "parquet" and _parquet_has_nanos(path):
-        # This file carries INT64 TIMESTAMP(NANOS) (the events table).
-        # Vanilla Spark 4 silently truncates it to timestamp_ntz micros;
-        # the engine's contract (TESTDATA.md, PF.ns_to_timestamp) is the
-        # raw nanos long. Scoped per ADVICE: the conf is set only when a
-        # load actually touches a nanos file — never as a blanket side
-        # effect — and must stay on afterwards because execution-time
-        # row conversion consults it too (save-and-restore would break
-        # the very read it enabled).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reader = reader.options(**{k: str(v) for k, v in options.items()})
     paths = _pig_paths(path)
+    meta = read_conf = None
+    if fmt == "parquet":
+        local = _local_path(paths)
+        meta = _parquet_meta(local or path)
+        if meta.nanos:
+            # This file carries INT64 TIMESTAMP(NANOS) (the events table).
+            # Vanilla Spark 4 silently truncates it to timestamp_ntz micros;
+            # the engine's contract (TESTDATA.md, PF.ns_to_timestamp) is the
+            # raw nanos long. The conf is set only when a load actually
+            # touches a nanos file — never as a blanket side effect — and
+            # must stay on afterwards because execution-time row
+            # conversion consults it too (save-and-restore would break the
+            # very read it enabled).
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        if local is None or schema is not None or options or not meta.listing:
+            meta = None  # inferred as Spark does, every time
+        else:
+            read_conf = tuple(spark.conf.get(k, None) for k in _PARQUET_READ_CONFS)
+            if meta.read_conf == read_conf:
+                reader = reader.schema(meta.schema)  # no inference job
+    reader = reader.options(**{k: str(v) for k, v in options.items()})
     df = reader.format(fmt).load(paths if len(paths) > 1 else paths[0])
+    if meta is not None and meta.read_conf != read_conf:
+        meta.read_conf, meta.schema = read_conf, df.schema
     if tag_file:
         from pyspark.sql import functions as F
 

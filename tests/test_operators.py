@@ -616,13 +616,28 @@ def _union_find(edges):
 
 
 def _cc_matches_union_find(spark, edges, schema="src: long, dst: long", **kw):
-    from pig_spark.operators.graph import connected_components
+    """Both paths equal a union-find: the star-forest loop (driver
+    bound 0) and the driver path (a bound above any graph here)."""
+    from unittest import mock
+
+    from pig_spark.operators import graph
 
     df = spark.createDataFrame(edges, schema)
-    rows = connected_components(df, "src", "dst", **kw).collect()
-    got = {r["node"]: r["component"] for r in rows}
-    assert len(rows) == len(got)  # one row per node
-    assert got == _union_find(edges)
+    for bound in (0, 10**6):
+        with mock.patch.object(graph, "DRIVER_MAX_EDGES", bound):
+            rows = graph.connected_components(df, "src", "dst", **kw).collect()
+        got = {r["node"]: r["component"] for r in rows}
+        assert len(rows) == len(got), bound  # one row per node
+        assert got == _union_find(edges), bound
+
+
+@pytest.fixture
+def star_forest_path(monkeypatch):
+    """Connected components with the driver path off: every graph takes
+    the star-forest loop."""
+    from pig_spark.operators import graph
+
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
 
 
 def test_connected_components_vs_union_find(spark):
@@ -660,7 +675,7 @@ def test_connected_components_adversarial_graphs(spark):
     _cc_matches_union_find(spark, strs, "src: string, dst: string")
 
 
-def test_connected_components_max_iter_raises(spark):
+def test_connected_components_max_iter_raises(spark, star_forest_path):
     from pig_spark.operators.graph import connected_components
 
     df = spark.createDataFrame([(i, i + 1) for i in range(299)], "src: long, dst: long")
@@ -668,7 +683,7 @@ def test_connected_components_max_iter_raises(spark):
         connected_components(df, max_iter=1)
 
 
-def test_connected_components_job_counts(spark):
+def test_connected_components_job_counts(spark, star_forest_path):
     """Jobs per call, pinned exactly. The stop test on a by-node pass
     is two jobs: its window exchange and the count. A round adds the
     small-star window and distinct exchanges before its own test, four
@@ -689,31 +704,104 @@ def test_connected_components_job_counts(spark):
     assert jobs([(1, 2), (2, 3)]) == 6  # a path converges in one round
 
 
-def test_connected_components_frees_superseded_stores(spark):
-    """Each round frees the previous round's stored rows: once the
-    result is collected, the only new stored RDD is the final pass the
-    result reads."""
+def _cc_stores(spark, edges):
+    """Connected components of ``edges``, collected: (its rows, the
+    stored RDDs it added, the result)."""
     from pig_spark.operators.graph import connected_components
 
     sc = spark.sparkContext._jsc.sc()
+    before = {r.id() for r in sc.getRDDStorageInfo()}
+    cc = connected_components(spark.createDataFrame(edges, "src: long, dst: long"))
+    rows = {r["node"]: r["component"] for r in cc.collect()}
+    return rows, {r.id() for r in sc.getRDDStorageInfo()} - before, cc
 
-    def stored():
-        return {r.id() for r in sc.getRDDStorageInfo()}
 
-    before = stored()
-    df = spark.createDataFrame([(i, i + 1) for i in range(40)], "src: long, dst: long")
-    cc = connected_components(df)
-    assert len(cc.collect()) == 41
-    leaves = cc._jdf.queryExecution().logical().collectLeaves()
-    final = {leaves.apply(i).rdd().id() for i in range(leaves.size())}
-    assert stored() - before == final
+def _leaf_rdds(df):
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    return {leaves.apply(i).rdd().id() for i in range(leaves.size())}
+
+
+def test_connected_components_frees_superseded_stores(spark, star_forest_path):
+    """Each round frees the previous round's stored rows: once the
+    result is collected, the only new stored RDD is the final pass the
+    result reads."""
+    rows, added, cc = _cc_stores(spark, [(i, i + 1) for i in range(40)])
+    assert len(rows) == 41
+    assert added == _leaf_rdds(cc)
 
 
 def test_connected_components_empty_and_selfloops(spark):
+    _cc_matches_union_find(spark, [(1, 1), (2, 2)])
+
+
+def _cc_calls(spark, edges, schema="src: long, dst: long", **kw):
+    """(jobs of the call, jobs to read its result, its rows) of one
+    connected-components call."""
+    from pig_spark.operators.graph import connected_components
+    from pig_spark.stats import run_with_stats
+
+    df = spark.createDataFrame(edges, schema)
+    call = run_with_stats(spark, lambda: connected_components(df, **kw))
+    read = run_with_stats(spark, call.result.collect)
+    assert call.is_successful() and read.is_successful(), (call.error, read.error)
+    return call.num_jobs, read.num_jobs, {r["node"]: r["component"] for r in read.result}
+
+
+def test_connected_components_driver_path_job_counts(spark):
+    """A graph under the driver bound is collected in one job and read
+    from Arrow batches with none. Non-canonical edges add the distinct's
+    exchange; a path that takes one star round on the cluster (6 jobs
+    there) takes the same one job."""
+    assert _cc_calls(spark, [(1, 2), (2, 3)], canonical=True)[:2] == (1, 0)
+    assert _cc_calls(spark, [(1, 2), (1, 3), (4, 5)], canonical=True)[:2] == (1, 0)
+    assert _cc_calls(spark, [(2, 1), (3, 2), (2, 1)])[:2] == (2, 0)
+
+
+def test_connected_components_driver_path_semantics(spark):
+    """The driver path's output contract: null ids and self-loops
+    dropped, duplicate and reversed edges collapse, string ids,
+    component = the minimum id of the component, nodes without an edge
+    absent."""
+    edges = [(5, None), (None, None), (9, 9), (3, 2), (2, 3), (3, 2), (4, 7), (7, 3), (8, 6)]
+    assert _cc_calls(spark, edges)[2] == {2: 2, 3: 2, 4: 2, 7: 2, 6: 6, 8: 6}
+    strs = [("b", "ab"), ("ab", "b"), ("c", "b"), ("é", "z"), ("z", "y")]
+    got = _cc_calls(spark, strs, "src: string, dst: string")[2]
+    assert got == {"ab": "ab", "b": "ab", "c": "ab", "y": "y", "z": "y", "é": "y"}
+
+
+def test_connected_components_driver_path_types(spark):
+    """Ids keep their Spark type on the driver path; ids whose Python
+    order is not Spark's (doubles: NaN, -0.0) take the star-forest loop."""
     from pig_spark.operators.graph import connected_components
 
-    df = spark.createDataFrame([(1, 1), (2, 2)], "src: long, dst: long")
-    assert connected_components(df).count() == 0
+    ints = spark.createDataFrame([(3, 1), (2, 3)], "src: int, dst: int")
+    assert connected_components(ints).schema.simpleString() == "struct<node:int,component:int>"
+    dec = spark.createDataFrame([(3, 1), (2, 3)], "src: int, dst: int").selectExpr(
+        "CAST(src AS DECIMAL(10,2)) AS src", "CAST(dst AS DECIMAL(10,2)) AS dst"
+    )
+    assert {r[1] for r in connected_components(dec).collect()} == {1}
+    jobs, _, got = _cc_calls(spark, [(2.0, 1.0), (3.0, 2.0)], "src: double, dst: double")
+    assert got == {1.0: 1.0, 2.0: 1.0, 3.0: 1.0} and jobs > 1
+
+
+def test_connected_components_driver_path_leaves_no_store(spark):
+    """The driver path frees its stored edges: once the result is read,
+    no stored RDD is left."""
+    rows, added, _ = _cc_stores(spark, [(i, i + 1) for i in range(40)])
+    assert len(rows) == 41 and added == set()
+
+
+def test_connected_components_over_the_driver_bound(spark, monkeypatch):
+    """A graph over the driver bound runs the star-forest loop on the
+    edges stored for the collect: the same rows, and the edge store and
+    the rounds' stores freed but for the final pass."""
+    from pig_spark.operators import graph
+
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 5)
+    edges = [(i, i + 1) for i in range(40)]
+    rows, added, cc = _cc_stores(spark, edges)
+    assert rows == _union_find(edges)
+    assert added == _leaf_rdds(cc)
 
 
 def test_gapfill_locf_and_zero(spark):

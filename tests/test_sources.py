@@ -507,3 +507,107 @@ def test_nanos_probe_follows_a_rewritten_path(spark, tmp_path, monkeypatch):
             spark.conf.unset(conf)
         else:
             spark.conf.set(conf, before)
+
+
+def _write_parquet(path, **cols):
+    """One pyarrow-written fragment (no Spark schema in its footer)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path.mkdir(exist_ok=True)
+    n = len(list(path.iterdir()))
+    pq.write_table(pa.table(cols), str(path / f"part-{n}.parquet"))
+
+
+def test_parquet_schema_cache_second_load_runs_no_job(spark, tmp_path, monkeypatch):
+    """A second LOAD of an unchanged parquet path reuses the inferred
+    schema: no Spark job, one listing, the schema and rows of a fresh
+    ``spark.read.parquet``."""
+    import pyarrow as pa
+
+    from pig_spark import sources
+    from pig_spark.stats import run_with_stats
+
+    path = tmp_path / "t.parquet"
+    _write_parquet(path, a=pa.array([1, 2, 3], pa.int32()), s=pa.array(["x", None, "z"]))
+    load(spark, str(path))
+    listings = []
+    real = sources._listing
+    monkeypatch.setattr(sources, "_listing", lambda p: listings.append(p) or real(p))
+    again = run_with_stats(spark, lambda: load(spark, str(path)))
+    assert again.is_successful() and again.num_jobs == 0
+    assert listings == [str(path)]
+    fresh = spark.read.parquet(str(path))
+    assert again.result.schema == fresh.schema
+    assert sorted(again.result.collect()) == sorted(fresh.collect())
+
+
+def test_parquet_schema_cache_follows_a_rewritten_path(spark, tmp_path):
+    """Rewriting a path with one column retyped and one added: the next
+    LOAD reads the new types."""
+    import pyarrow as pa
+
+    path = tmp_path / "t.parquet"
+    _write_parquet(path, a=pa.array([1, 2], pa.int32()), s=pa.array(["x", "y"]))
+    assert load(spark, str(path)).dtypes == [("a", "int"), ("s", "string")]
+    assert load(spark, str(path)).dtypes == [("a", "int"), ("s", "string")]
+    (path / "part-0.parquet").unlink()
+    _write_parquet(path, a=pa.array([2**40], pa.int64()), s=pa.array(["x"]), d=pa.array([0.5]))
+    got = load(spark, str(path))
+    assert got.dtypes == [("a", "bigint"), ("s", "string"), ("d", "double")]
+    assert got.collect()[0]["a"] == 2**40
+
+
+def test_parquet_schema_cache_keys_on_read_conf(spark, tmp_path):
+    """The parquet read confs are part of the key: toggling
+    ``binaryAsString`` changes the type the next LOAD reads."""
+    import pyarrow as pa
+
+    conf = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(conf, None)
+    path = tmp_path / "b.parquet"
+    _write_parquet(path, b=pa.array([b"ab", b"c"], pa.binary()))
+    try:
+        spark.conf.set(conf, "false")
+        assert dict(load(spark, str(path)).dtypes)["b"] == "binary"
+        spark.conf.set(conf, "true")
+        assert dict(load(spark, str(path)).dtypes)["b"] == "string"
+        spark.conf.set(conf, "false")
+        assert dict(load(spark, str(path)).dtypes)["b"] == "binary"
+    finally:
+        if before is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, before)
+
+
+def test_parquet_schema_cache_bypass(spark, tmp_path):
+    """LOADs with reader options, globs and comma lists infer as Spark
+    does, every time; only a single local path (or ``file://`` URI)
+    takes the cache."""
+    import pyarrow as pa
+
+    from pig_spark.sources import _local_path
+    from pig_spark.stats import run_with_stats
+
+    p1, p2 = tmp_path / "p1", tmp_path / "p2"
+    _write_parquet(p1, a=pa.array([1], pa.int64()))
+    _write_parquet(p2, a=pa.array([2], pa.int64()))
+
+    def jobs(path, **options):
+        return run_with_stats(spark, lambda: load(spark, path, **options)).num_jobs
+
+    for path, options in [
+        (str(p1), {"mergeSchema": "false"}),
+        (f"{tmp_path}/p*", {}),
+        (f"{p1},{p2}", {}),
+    ]:
+        jobs(path, **options)
+        assert jobs(path, **options) > 0, (path, options)
+    jobs(f"file://{p1}")
+    assert jobs(f"file://{p1}") == 0
+    assert _local_path([f"file://{p1}"]) == str(p1)
+    for uri in ("hdfs://nn:8020/x", "s3a://bucket/x", "gs://b/x"):
+        assert _local_path([uri]) is None
+    assert _local_path([str(p1), str(p2)]) is None
+    assert _local_path([str(tmp_path / "missing")]) is None

@@ -220,3 +220,10 @@ def test_operators_and_sources_do_not_import_latin():
                 if any(n == "pig_spark.latin" or n.startswith("pig_spark.latin.") for n in names):
                     offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
     assert not offenders, "imports from pig_spark/latin/ below it:\n" + "\n".join(offenders)
+
+
+def test_catalog_loads_go_through_sources_load():
+    """Every catalog LOAD takes ``sources.load`` (the schema cache, the
+    nanos probe, Pig's session semantics): ``queries.py`` calls no
+    ``spark.read.`` reader directly."""
+    assert "spark.read." not in (PKG / "queries.py").read_text()
