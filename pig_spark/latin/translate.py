@@ -27,7 +27,7 @@ from pyspark.sql.types import StringType, StructType
 
 from .. import functions as PF
 from .. import pigtypes
-from ..operators.nested import bag_distinct, bag_filter, bag_limit, bag_sort
+from ..operators.nested import bag_distinct, bag_filter, bag_limit, bag_sort, topk_per_group
 from ..compat import cast_as
 from ..dsl import Relation
 from . import grammar as G
@@ -425,26 +425,41 @@ def _flatten_as(cols: list[str | Column], schema: list[tuple[str, str | None]]) 
     ]
 
 
-def _group_selects(g: "GroupedInfo", item: G.GenItem) -> list[Column]:
-    """``group`` in a grouped GENERATE, over the aggregated frame."""
+def _is_group_ref(e) -> bool:
+    """``group`` or ``group.<ref>`` — a GENERATE item that projects the
+    group key (_group_selects)."""
+    return isinstance(e, G.Col) and (e.name == "group" or e.name.startswith("group."))
+
+
+def _group_selects(g: "GroupedInfo", item: G.GenItem) -> list[tuple[str, Column]]:
+    """``group`` / ``group.<ref>`` in a grouped GENERATE, as (output
+    name, column) pairs over a frame that carries the key columns under
+    their key names."""
+    if item.expr.name != "group":
+        # group.<ref>: one key field, by name or position
+        kname = _group_key(item.expr.name.split(".", 1)[1], g.key_exprs)
+        name = item.alias or kname
+        return [(name, F.col(kname).alias(name))]
+    keys = [n for n, _ in g.key_exprs]
     if isinstance(item.alias, list):
         # FLATTEN(group) AS (a[:t], ...): the key fields by position
-        return _flatten_as([n for n, _ in g.key_exprs] or [F.lit("all")], item.alias)
-    keys = [F.col(n) for n, _ in g.key_exprs]
+        cols = _flatten_as(keys or [F.lit("all")], item.alias)
+        return [(n, c) for (n, _), c in zip(item.alias, cols)]
+    name = item.alias or "group"
     if not keys:
         # GROUP ALL: Pig's group value is the literal 'all'
         # (LOCogroup GROUP ALL semantics)
-        return [F.lit("all").alias(item.alias or "group")]
+        return [(name, F.lit("all").alias(name))]
     if len(keys) == 1:
         # FLATTEN(group) of a single key is Pig's no-op flatten of a
         # scalar: the field stays named 'group' (LogicalSchema), so a
         # downstream `generate group` keeps resolving
-        return [keys[0].alias(item.alias or "group")]
+        return [(name, F.col(keys[0]).alias(name))]
     if item.flatten:
-        return keys
+        return [(n, F.col(n)) for n in keys]
     # tuple key: 'group' is one tuple-typed field (LogicalSchema) —
     # deref later via g.$0 / g.field
-    return [F.struct(*keys).alias(item.alias or "group")]
+    return [(name, F.struct(*[F.col(n) for n in keys]).alias(name))]
 
 
 def _sub_positional(e, sub: dict[str, str]):
@@ -555,24 +570,49 @@ class _Pipe:
     # after the slice — Pig's dataflow order, not the flag order
     post_ops: list | None = None
 
-    def copy(self) -> "_Pipe":
-        return _Pipe(
-            self.col, self.distinct, self.cond, self.ordered, self.limited,
-            self.order_keys, self.limit_n, self.proj, self.arr,
-            list(self.post_ops) if self.post_ops else None,
-        )
-
 
 @dataclass
 class _SortedCollect:
     """Internal topk-frame aggregate: collect one LIMIT pipe's column
-    as an array in the pipe's bag iteration order (declared ORDER keys
-    or the pinned stand-in) — the bounded (≤ limit_n) bag arguments of
-    the multi-bag aggregates COR/COV (builtin/COR.java computeAll walks
-    both bags with paired iterators, so positional order matters)."""
+    as an array in the pipe's bag order (_pipe_order) — the bounded
+    (≤ limit_n) bag arguments of the multi-bag aggregates COR/COV
+    (builtin/COR.java computeAll walks both bags with paired
+    iterators, so positional order matters)."""
 
     col: str
-    order: list | None = None  # [(frame col, asc)] — set once the frame is built
+
+
+def _pipe_order(pipe: _Pipe, fields: list[str], orderable) -> list[tuple[str, bool]]:
+    """The order a pipe's bag iterates in, as [(field, asc)]: its ORDER
+    keys; after a DISTINCT the whole tuple ascending (Pig's
+    DistinctDataBag iterates in sorted order); under a LIMIT with no
+    ORDER the same stand-in, so Pig's "any n rows" is the first n of a
+    fixed order (retry-stable); otherwise none. Map fields cannot sort
+    and are left out."""
+    if pipe.ordered:
+        return pipe.order_keys
+    if pipe.distinct or pipe.limited:
+        return [(f, True) for f in fields if orderable(f)]
+    return []
+
+
+def _pick_field(fields: list[tuple[str, str]], ref: str, pipe: str) -> tuple[str, str]:
+    """The (leaf name, column) of the tuple field a ``pipe.ref``
+    projection names (_field_ref)."""
+    f = _field_ref(ref, [n for n, _ in fields])
+    if f is None:
+        raise NameError(f"nested pipe {pipe!r} has no field {ref!r}")
+    return f.split("::")[-1], dict(fields)[f]
+
+
+def _fill_empty(df: DataFrame, fill: dict[str, str]) -> DataFrame:
+    """Coalesce the COUNT columns to 0 and the bag columns to {} that a
+    group missing from a pipe's frame leaves null (Pig aggregates the
+    group's empty bag)."""
+    for n, kind in fill.items():
+        empty = F.lit(0).cast("long") if kind == "count" else F.array().cast(df.schema[n].dataType)
+        df = df.withColumn(n, F.coalesce(F.col(n), empty))
+    return df
 
 
 def _pairwise_stats(fn: str, argrefs: list[str]) -> Column:
@@ -1853,9 +1893,7 @@ class PigTranslator:
     def _all_algebraic(self, items: list[G.GenItem], g: GroupedInfo) -> bool:
         for item in items:
             e = item.expr
-            if isinstance(e, G.Col) and (e.name == "group" or e.name.startswith("group.")):
-                continue
-            if self._is_agg_expr(e, g):
+            if _is_group_ref(e) or self._is_agg_expr(e, g):
                 continue
             return False
         return True
@@ -1915,12 +1953,8 @@ class PigTranslator:
                 # leaves them nameless/positional — disambiguate
                 name = f"{name}_{i}"
             seen_names.add(name)
-            if isinstance(e, G.Col) and e.name == "group":
-                selects.extend(_group_selects(g, item))
-                continue
-            if isinstance(e, G.Col) and e.name.startswith("group."):
-                kname = _group_key(e.name.split(".", 1)[1], g.key_exprs)
-                selects.append(F.col(kname).alias(item.alias or kname))
+            if _is_group_ref(e):
+                selects.extend(c for _, c in _group_selects(g, item))
                 continue
             aggs.append(self._agg_expr(e, g).alias(name))
             selects.append(F.col(name))
@@ -1961,41 +1995,64 @@ class PigTranslator:
 
     # -- nested FOREACH { ... } blocks ---------------------------------
     def _foreach_nested(self, op: G.Foreach, info: RelInfo) -> Relation:
-        """Lower a nested block over a GROUP — flat plans first, bags
+        """Lower a nested block over a GROUP: flat plans first, bags
         only where the statement needs them.
 
         Pig streams each group's bag through the inner pipeline
-        (POForEach.java inner plans + SecondaryKeyOptimizer for nested
-        order). Each statement is recorded once on its pipe (_Pipe),
-        ORDER keys already resolved to real field names; the GENERATE
-        shape then picks one lowering:
+        (POForEach.java inner plans; SecondaryKeyOptimizer for nested
+        order). Here the block is read once into per-pipe plans
+        (_nested_plan: one _Pipe per inner alias — filter, distinct,
+        order keys, limit, projection, ops after a LIMIT). GENERATE
+        items are ``group`` refs, FLATTENs (of a pipe, or of
+        Stitch/Over) and aggregates, lowered by one of two strategies:
 
-          aggregates only          → plain groupBy aggregates
-                                     (FILTER → when(p, ...), DISTINCT of
-                                     a column → distinct aggregates,
-                                     ORDER dropped; DISTINCT tuples
-                                     aggregate the collected bag)
-          LIMIT pipe consumed      → per-group top-k window
-                                     (operators.nested.topk_per_group)
-          FLATTEN(<ordered pipe>)  → sortWithinPartitions per group key
-          Over/Stitch              → partitioned window functions
-          two FLATTENs, array
-          pipes or ops after LIMIT → collected bags (_pipe_bag), the
-                                     ops replayed by _apply_bag_ops
-        """
-        g = info.grouped
-        if g is None:
-            raise SyntaxError("nested FOREACH { ... } requires FOREACH over a GROUP/COGROUP alias")
+          flat   every FLATTEN is one row frame (_pipe_rows: filter →
+                 project → distinct → top-k window if LIMIT; else a
+                 per-group sortWithinPartitions if ordered; Over/Stitch
+                 add window columns), the aggregates one grouped frame
+                 (_nested_aggregates: plain aggregates, LIMIT pipes over
+                 their top-k survivors) joined back on the group keys
+          bags   several FLATTENed pipes, or a FLATTENed array pipe or
+                 pipe with ops after its LIMIT: each FLATTENed pipe
+                 collects as a bag (_pipe_bag) beside the aggregates,
+                 then the bags explode — their per-group cross product
+
+        Both emit GENERATE through _nested_generate."""
+        g, pipes = self._nested_plan(op.nested, info.grouped)
+        for pname, p in pipes.items():  # describe C::D
+            self.nested_schemas[f"{self._current_alias}::{pname}"] = self._pipe_schema(p, g)
+        overs, flats = [], []
+        for i, it in enumerate(op.items):
+            if _is_group_ref(it.expr):
+                continue
+            if self._has_over_call(it.expr):
+                overs.append(i)
+            elif it.flatten and self._pipe_heads(it.expr) & set(pipes):
+                if not isinstance(it.expr, G.Col):
+                    raise NotImplementedError("FLATTEN of an inner pipe takes the pipe or pipe.column")
+                flats.append(i)
+        heads = self._nested_heads(op.items, g, set(overs + flats))
+        flat_pipes = [pipes[op.items[i].expr.name.partition(".")[0]] for i in flats]
+        if len(flats) > 1 or any(p.arr or p.post_ops for p in flat_pipes):
+            if overs:
+                raise NotImplementedError("Stitch/Over cannot mix with several FLATTENed pipes")
+            frame, splats = self._nested_bags(op.items, g, pipes, heads, flats)
+        else:
+            frame, splats = self._nested_flat(op.items, g, pipes, heads, sorted(overs + flats))
+        return self._nested_generate(op.items, frame, heads, splats)
+
+    def _nested_plan(self, nested: list, g: GroupedInfo) -> tuple[GroupedInfo, dict[str, "_Pipe"]]:
+        """Read a nested block's statements once: one _Pipe per inner
+        alias, ORDER keys resolved to real field names when recorded.
+        Expression aliases and inner-FOREACH projections materialize as
+        pre-shuffle child columns (recorded in ``g.derived``)."""
         pipes: dict[str, _Pipe] = {}
-        for st in op.nested:
+        for st in nested:
             if st.kind == "expr":
                 # nested expression alias (QueryParser.g nested_command
                 # 'alias = expression'): a derived per-tuple value of
-                # the child — materialized as a pre-shuffle column, so
-                # downstream aggregates/pipes treat it as a plain
-                # column pipe (the projection runs in the scan stage,
-                # never in a reducer bag); recorded in g.derived so
-                # whole-tuple pipes keep emitting the ORIGINAL tuple.
+                # the child, consumed as a plain column pipe — the
+                # projection runs in the scan stage, never in a bag
                 g = G_replace(
                     g,
                     child=Relation(
@@ -2007,29 +2064,19 @@ class PigTranslator:
                 continue
             if st.kind == "nforeach":
                 # inner FOREACH (nested_op since Pig 0.10): a per-tuple
-                # projection of the source pipe. The projection
-                # commutes with grouping, so each generated item
-                # materializes as a pre-shuffle derived column (mangled
-                # name); the pipe's tuple becomes exactly those fields
-                # via the proj mapping — still no reducer bags.
+                # projection of the source pipe. It commutes with
+                # grouping, so each generated item materializes as a
+                # pre-shuffle derived column (mangled name); the pipe's
+                # tuple becomes exactly those fields (proj)
                 base = self._resolve_pipe(st.source, g, pipes)
-                ch = g.child
                 if any(item.flatten for item in st.cond):
-                    # FLATTEN inside the inner FOREACH (QueryParser.g
-                    # nested_foreach — r4 residual corner): per-tuple
-                    # expansion of an array field. The pipe's tuples
-                    # become the ELEMENTS of a per-row array column
-                    # (transform over the bag — multiplicity lives
-                    # INSIDE the array, so the child row count and
-                    # every sibling pipe stay untouched); a nested
-                    # FILTER on the source pipe nulls the row's array
-                    # (collect/size/sum all skip nulls). Consumers:
-                    # aggregates (_arr_pipe_agg two-level partials),
-                    # GENERATE <pipe> (bag = flatten ∘ collect_list),
-                    # FLATTEN in GENERATE (multiflatten explode).
-                    g, pipe = self._nforeach_flatten_pipe(st, base, g)
-                    pipes[st.alias] = pipe
+                    # FLATTEN inside the inner FOREACH: the pipe's
+                    # tuples become the ELEMENTS of a per-row array
+                    # column, so the child row count and every sibling
+                    # pipe stay untouched (_nforeach_flatten_pipe)
+                    g, pipes[st.alias] = self._nforeach_flatten_pipe(st, base, g)
                     continue
+                ch = g.child
                 proj: dict[str, str] = {}
                 for i, item in enumerate(st.cond):
                     name = item.alias or _default_name(item.expr, i)
@@ -2061,18 +2108,13 @@ class PigTranslator:
                 # record it for replay on the sliced bag (_pipe_bag)
                 base.post_ops = [*(base.post_ops or []), _bag_op(st, fields, scope, proj)]
             elif st.kind == "distinct":
-                if base.ordered:
-                    # Pig's nested DISTINCT is POSortedDistinct: it
-                    # re-sorts by the FULL tuple (natural order),
-                    # discarding the prior ORDER's keys
-                    base.order_keys = [(n, True) for n in fields]
-                base.distinct = True
+                # Pig's nested DISTINCT (POSortedDistinct,
+                # DistinctDataBag) iterates in full-tuple sorted order:
+                # it drops a prior ORDER (_pipe_order)
+                base.distinct, base.ordered, base.order_keys = True, False, None
             elif st.kind == "filter" and base.arr:
-                # FILTER on a FLATTENed inner-FOREACH pipe is exact per
-                # element: rewrite the per-row array in place, no
-                # shuffle. Its DISTINCT/ORDER/LIMIT are group-level flags
-                # applied when the bag assembles (_pipe_bag) — Pig's
-                # own reducer-bag footprint.
+                # FILTER on an array pipe is exact per element: rewrite
+                # the per-row array in place, no shuffle
                 ch = g.child
                 mangled = f"__nfa_{st.alias}"
                 filtered = self._apply_bag_ops(ch.df[base.arr], [("filter", st.cond)], fields)
@@ -2090,61 +2132,282 @@ class PigTranslator:
             elif st.kind == "limit":
                 base.limited = True
                 base.limit_n = int(st.cond)
-        for pname, p in pipes.items():
-            try:  # describe C::D support — best-effort schema record
-                self.nested_schemas[f"{self._current_alias}::{pname}"] = self._pipe_schema(p, g)
-            except Exception:
-                pass
-        if any(self._has_over_call(item.expr) for item in op.items):
-            return self._foreach_nested_over(op, g, pipes)
-        n_flat_pipes = sum(
-            1 for it in op.items if it.flatten and (self._pipe_heads(it.expr) & set(pipes))
-        )
-        arr_flat = any(
-            it.flatten
-            and any(h in pipes and pipes[h].arr for h in self._pipe_heads(it.expr))
-            for it in op.items
-        )
-        post_flat = any(
-            it.flatten
-            and any(h in pipes and pipes[h].post_ops for h in self._pipe_heads(it.expr))
-            for it in op.items
-        )
-        if n_flat_pipes > 1 or arr_flat or post_flat:
-            return self._foreach_nested_multiflatten(op, g, pipes)
-        # arr pipes handle their own LIMIT at bag-assembly time
-        # (_pipe_bag slice) — keep them out of the row-level topk path;
-        # post_ops pipes assemble as bags too (the window path can't
-        # replay ops that must see the sliced bag)
-        limited_names = {n for n, p in pipes.items() if p.limited and not p.arr and not p.post_ops}
-        if limited_names and any(
-            self._pipe_heads(item.expr) & limited_names
-            for item in op.items
-            if not (isinstance(item.expr, G.Col) and (item.expr.name == "group" or item.expr.name.startswith("group.")))
-        ):
-            return self._foreach_nested_topk(op, g, pipes, limited_names)
-        if any(
-            item.flatten and (self._pipe_heads(item.expr) & set(pipes))
-            for item in op.items
-        ):
-            return self._foreach_nested_flatten(op, g, pipes)
-        key_cols = [c.alias(n) for n, c in g.key_exprs]
-        aggs: list[Column] = []
+        return g, pipes
+
+    def _nested_heads(self, items: list, g: GroupedInfo, splat: set[int]) -> list:
+        """Each GENERATE item's output, named once before any frame is
+        built: a ``group`` ref → its _group_selects (name, column)
+        pairs; a FLATTEN splat → None (named by _nested_generate); an
+        aggregate → its column name — the alias or the default name,
+        ``<name>_<i>`` when an earlier item took it."""
+        seen: set[str] = set()
+        heads: list = []
+        for i, it in enumerate(items):
+            if i in splat:
+                heads.append(None)
+            elif _is_group_ref(it.expr):
+                heads.append(_group_selects(g, it))
+                seen.update(n for n, _ in heads[-1])
+            else:
+                name = it.alias if isinstance(it.alias, str) else _default_name(it.expr, i)
+                if name in seen:
+                    name = f"{name}_{i}"
+                seen.add(name)
+                heads.append(name)
+        return heads
+
+    def _nested_generate(self, items: list, frame: DataFrame, heads: list, splats: dict) -> Relation:
+        """The one GENERATE layout of a nested block, in item order:
+        ``group`` refs as _group_selects projects them, aggregates by
+        their names, and each FLATTEN splatted once — AS (...) names
+        and casts its fields by position, AS name renames a single
+        field, otherwise the fields keep their names, qualified
+        ``<pipe>::<field>`` when the name is taken."""
+        seen = {n for h in heads if h is not None for n in ([h] if isinstance(h, str) else [n for n, _ in h])}
         selects: list[Column] = []
-        seen_names: set[str] = set()
-        for i, item in enumerate(op.items):
-            e = item.expr
-            name = item.alias if isinstance(item.alias, str) else _default_name(e, i)
-            if name in seen_names:  # un-aliased collisions → positional suffix
-                name = f"{name}_{i}"
-            seen_names.add(name)
-            if isinstance(e, G.Col) and e.name == "group":
-                selects.extend(_group_selects(g, item))
-                continue
-            aggs.append(self._nested_agg(e, g, pipes).alias(name))
-            selects.append(F.col(name))
-        grouped = g.child.df.groupBy(*key_cols) if key_cols else g.child.df.groupBy()
-        return Relation(grouped.agg(*aggs).select(*selects))
+        for i, h in enumerate(heads):
+            if isinstance(h, str):
+                selects.append(F.col(h))
+            elif h is not None:
+                selects.extend(c for _, c in h)
+            else:
+                pipe, fields = splats[i]
+                schema = items[i].alias
+                if isinstance(schema, str) and len(fields) == 1:
+                    schema = [(schema, None)]
+                elif not isinstance(schema, list):
+                    schema = []
+                    for n, _ in fields:
+                        schema.append((f"{pipe}::{n}" if n in seen else n, None))
+                        seen.add(schema[-1][0])
+                selects.extend(_flatten_as([c for _, c in fields], schema))
+        return Relation(frame.select(*selects))
+
+    def _nested_flat(self, items: list, g: GroupedInfo, pipes: dict, heads: list, rows_at: list[int]) -> tuple[DataFrame, dict]:
+        """Flat strategy: one row frame per FLATTEN (_pipe_rows or
+        _over_rows; several cross on the group keys), the aggregates as
+        one grouped frame joined back on the keys — left from the rows,
+        since FLATTEN of an empty bag drops the group. A FLATTENed
+        ordered pipe without LIMIT then sorts within its group's
+        partition after the join (SecondaryKeyOptimizer's secondary
+        sort: one shuffle, no bags). Returns (frame, splats)."""
+        keys = [n for n, _ in g.key_exprs]
+        built: dict[str, tuple] = {}
+
+        def pipe_rows(name: str) -> tuple:
+            # once per pipe: one both aggregated and FLATTENed builds its
+            # window-over-shuffle subtree once
+            if name not in built:
+                built[name] = self._pipe_rows(pipes[name], g)
+            return built[name]
+
+        frames, splats, sort = [], {}, None
+        for i in rows_at:
+            it = items[i]
+            if self._has_over_call(it.expr):
+                name, df, fields = self._over_rows(it, g, pipes, pipe_rows)
+            else:
+                name, _, rest = it.expr.name.partition(".")
+                df, tup, order = pipe_rows(name)
+                if rest:
+                    tup = [_pick_field(tup, rest, name)]
+                fields = tup
+                sort = None if pipes[name].limited else order
+            frames.append((i, df, fields))
+            splats[i] = (name, fields)
+        limited = {n for n, p in pipes.items() if p.limited and not p.arr and not p.post_ops}
+        aggs = [(h, items[i].expr) for i, h in enumerate(heads) if isinstance(h, str)]
+        agg, fill = None, {}
+        if aggs or not frames:
+            agg, fill = self._nested_aggregates(aggs, g, pipes, limited, pipe_rows, anchor=not frames)
+        if not frames:
+            return agg, splats
+        if len(frames) == 1:
+            frame = frames[0][1]
+        else:
+            frame, sort = self._cross_rows(frames, splats, keys), None
+        if agg is not None:
+            frame = _fill_empty(frame.join(agg, keys, "left") if keys else frame.crossJoin(agg), fill)
+        if sort:
+            order = [F.col(c).asc() if a else F.col(c).desc() for c, a in sort]
+            if keys:
+                frame = frame.repartition(*[F.col(n) for n in keys])
+            frame = frame.sortWithinPartitions(*[F.col(n) for n in keys], *order)
+        return frame, splats
+
+    @staticmethod
+    def _cross_rows(frames: list, splats: dict, keys: list[str]) -> DataFrame:
+        """Several FLATTENs' row frames → their per-group CROSS PRODUCT
+        (Pig's FLATTEN of several bags): a null-safe equi-join on the
+        group keys, co-partitioned with the frames' own shuffles, never
+        a global cartesian. Each frame's fields move to unique names
+        first; ``splats`` is repointed at them."""
+        out = None
+        for i, df, fields in frames:
+            tmp = [f"__x{i}_{m}" for m in range(len(fields))]
+            kn = keys if out is None else [f"__k{q}" for q in range(len(keys))]
+            df = df.select(
+                *[F.col(k).alias(n) for k, n in zip(keys, kn)],
+                *[(F.col(c) if isinstance(c, str) else c).alias(t) for (_, c), t in zip(fields, tmp)],
+            )
+            splats[i] = (splats[i][0], [(n, t) for (n, _), t in zip(fields, tmp)])
+            if out is None:
+                out = df
+            elif keys:
+                out = out.join(df, [out[k].eqNullSafe(df[n]) for k, n in zip(keys, kn)]).drop(*kn)
+            else:
+                out = out.crossJoin(df)
+        return out
+
+    def _nested_bags(self, items: list, g: GroupedInfo, pipes: dict, heads: list, flats: list[int]) -> tuple[DataFrame, dict]:
+        """Bag strategy: each FLATTENed pipe collects as a bag
+        (_pipe_bag: ordered, LIMIT-sliced, later ops replayed) beside the
+        aggregates (_nested_agg) in ONE grouped frame; the bags then
+        explode one after another — explode × explode is the per-group
+        cross product, and FLATTEN of an empty bag drops the group, as
+        in Pig. The collected bags are Pig's own reducer-bag footprint
+        for these statements; LIMIT pipes slice before the explode."""
+        cols: list[Column] = []
+        for i, it in enumerate(items):
+            if i in flats:
+                head, _, rest = it.expr.name.partition(".")
+                cols.append(self._pipe_bag(pipes[head], rest or None, g).alias(f"__mfb{i}"))
+            elif isinstance(heads[i], str):
+                cols.append(self._nested_agg(it.expr, g, pipes).alias(heads[i]))
+        df = g.child.df.groupBy(*[c.alias(n) for n, c in g.key_exprs]).agg(*cols)
+        elems = {i: df.schema[f"__mfb{i}"].dataType.elementType for i in flats}
+        splats = {}
+        for i in flats:
+            bag = f"__mfb{i}"
+            df = df.withColumn(bag, F.explode(bag))
+            splats[i] = (items[i].expr.name.partition(".")[0], [(f, F.col(bag)[f]) for f in elems[i].names])
+        return df, splats
+
+    def _pipe_rows(self, pipe: "_Pipe", g: GroupedInfo) -> tuple[DataFrame, list[tuple[str, str]], list[tuple[str, bool]]]:
+        """A pipe's tuples as rows beside the group keys: filter →
+        project → distinct (dropDuplicates over keys + tuple) → if
+        LIMIT, the per-group top-k window
+        (operators.nested.topk_per_group: one shuffle, row_number ≤ n,
+        no bags). Returns (frame, the tuple's (field, frame column)
+        pairs, the bag order as [(frame column, asc)] — _pipe_order)."""
+        child = g.child
+        df = child.df
+        if pipe.cond is not None:
+            df = df.filter(self._expr(pipe.cond, child))
+        keys = [n for n, _ in g.key_exprs]
+        fields = self._pipe_tuple(pipe, g)
+        cols = [c for _, c in fields]
+        others = list(pipe.proj.values()) if pipe.proj else [c for c in df.columns if c not in g.derived]
+        others += [c for c in cols if c not in others]
+        kdf = df.select(
+            *[c.alias(n) for n, c in g.key_exprs if n not in others],
+            *[df[c] for c in others],
+        )
+        if pipe.distinct:
+            kdf = kdf.select(*[F.col(n) for n in keys if n not in cols], *[F.col(c) for c in cols]).dropDuplicates()
+            others = cols
+        order = _pipe_order(pipe, others, lambda c: _orderable(kdf.schema[c].dataType))
+        if pipe.limited:
+            if not order:
+                # an all-map tuple: a group key (constant within the
+                # window — any n rows, as Pig allows, just not
+                # retry-stable)
+                order = [(k, True) for k in keys if _orderable(kdf.schema[k].dataType)][:1]
+            if not order:
+                raise NotImplementedError(
+                    "unordered nested LIMIT over a tuple of only map-typed "
+                    "fields has no orderable column; add an ORDER clause"
+                )
+            kdf = topk_per_group(
+                kdf, keys, [c for c, _ in order], pipe.limit_n, ascending=[a for _, a in order]
+            )
+        return kdf, fields, order
+
+    def _nested_aggregates(self, aggs: list, g: GroupedInfo, pipes: dict, limited: set, pipe_rows, anchor: bool) -> tuple[DataFrame, dict]:
+        """A nested GENERATE's aggregates ``[(name, expr)]`` as one frame
+        keyed on the group keys. An aggregate over a LIMIT pipe runs over
+        that pipe's top-k survivors (one grouped frame per pipe,
+        _topk_agg); COR/COV spanning LIMIT pipes zip their bounded bags
+        (_pairwise_stats); an expression combining aggregates splits
+        into leaves (_split_agg_leaves) and recombines over the joined
+        frame; every other aggregate runs over the child (_nested_agg).
+        The frames stitch with full_outer equi-joins on the keys (AQE
+        broadcasts small sides). Returns the frame and ``{column: fill}``
+        for COUNT/bag columns a group missing from a pipe's frame leaves
+        null (Pig: 0 / {} over the empty bag)."""
+        per_pipe: dict[str, list] = {}
+        other, combos, pairs = [], [], []
+        for name, e in aggs:
+            heads = self._pipe_heads(e) & limited
+            if not heads:
+                other.append((name, e))
+            elif isinstance(e, G.Col) or (
+                isinstance(e, G.Call) and e.func.lower() in AGG_FUNCS and len(self._pipe_heads(e)) == 1
+            ):
+                # one aggregate over one pipe, or GENERATE <pipe> (a bag)
+                per_pipe.setdefault(next(iter(heads)), []).append((name, e))
+            elif (
+                isinstance(e, G.Call)
+                and e.func.lower() in ("cor", "cov")
+                and len(e.args) >= 2
+                and all(isinstance(a, G.Col) and a.name.partition(".")[0] in limited for a in e.args)
+            ):
+                # ONE call spanning LIMIT pipes (builtin/COR.java:66-101
+                # computeAll walks the bags with paired iterators): each
+                # argument collects as a bounded array in bag order
+                refs = []
+                for ai, a in enumerate(e.args):
+                    ln, _, c = a.name.partition(".")
+                    if not c:
+                        raise SyntaxError(
+                            f"{e.func.upper()} over a whole-tuple pipe needs a column (e.g. {ln}.field)"
+                        )
+                    refs.append(f"__mp{len(pairs)}_{ai}")
+                    per_pipe.setdefault(ln, []).append((refs[-1], _SortedCollect(c)))
+                pairs.append((name, refs, e.func.lower()))
+            else:
+                leaves: list = []
+                rewritten = self._split_agg_leaves(e, limited, leaves, len(combos))
+                for gen, head, call in leaves:
+                    (per_pipe.setdefault(head, []) if head else other).append((gen, call))
+                combos.append((name, rewritten))
+        keys = [n for n, _ in g.key_exprs]
+        child = g.child.df
+        parts, fill = [], {}
+        for ln, named in per_pipe.items():
+            topk, fields, order = pipe_rows(ln)
+            parts.append(
+                topk.groupBy(*[F.col(n) for n in keys]).agg(
+                    *[self._topk_agg(e, ln, topk, fields, order, g).alias(n) for n, e in named]
+                )
+            )
+            for n, e in named:
+                if isinstance(e, G.Col):
+                    fill[n] = "bag"
+                elif isinstance(e, G.Call) and e.func.lower() in ("count", "count_star"):
+                    fill[n] = "count"
+        grouped = child.groupBy(*[c.alias(n) for n, c in g.key_exprs])
+        if other:
+            parts.append(grouped.agg(*[self._nested_agg(e, g, pipes).alias(n) for n, e in other]))
+        elif not parts:
+            parts.append(grouped.agg(F.count(F.lit(1)).alias("__n")).drop("__n"))
+        elif anchor and keys and any(pipes[ln].cond is not None for ln in per_pipe):
+            # every frame comes from a FILTERed pipe: a group the FILTER
+            # emptied is in none of them, yet Pig still emits it (empty
+            # bag: COUNT 0, SUM null) — the group keys anchor the join
+            parts.insert(0, child.select(*[c.alias(n) for n, c in g.key_exprs]).distinct())
+        out = parts[0]
+        for p in parts[1:]:
+            # full_outer: a group a pipe's FILTER emptied is absent from
+            # that pipe's frame but present in the others
+            out = out.join(p, keys, "full_outer") if keys else out.crossJoin(p)
+        if len(parts) > 1 and keys:
+            out = _fill_empty(out, fill)
+        for name, rewritten in combos:
+            out = out.withColumn(name, self._expr(rewritten, Relation(out)))
+        for name, refs, fn in pairs:
+            out = out.withColumn(name, _pairwise_stats(fn, refs))
+        return out, fill
 
     def _strip_pipe_prefix(self, e, lname: str):
         """Rewrite ``lname.x`` column refs to bare ``x`` so a scalar
@@ -2309,10 +2572,10 @@ class PigTranslator:
             )
         if isinstance(e, (G.Num, G.Str, G.Bool)):
             return e
-        if isinstance(e, G.Col) and e.name == "group":
-            return e  # single-key group ref — rewritten by the caller's frame
-        if isinstance(e, G.Col) and e.name.startswith("group."):
-            return G.Col(e.name.split(".", 1)[1])  # stitched frame carries key columns
+        if _is_group_ref(e):
+            # group.<key> → the stitched frame's key column; a bare
+            # single-key group ref is left to the caller's frame
+            return G.Col(e.name.partition(".")[2]) if "." in e.name else e
         raise NotImplementedError(
             f"unaggregated pipe reference {getattr(e, 'name', type(e).__name__)!r} "
             "in an expression combining aggregates"
@@ -2335,110 +2598,9 @@ class PigTranslator:
             return {e.rel.split(".", 1)[0]}
         return set()
 
-    def _foreach_nested_flatten(self, op: G.Foreach, g: GroupedInfo, pipes: dict[str, "_Pipe"]) -> Relation:
-        """{ s = ORDER x BY f; GENERATE group, FLATTEN(s[.col]) } — the
-        SecondarySort idiom (SecondaryKeyOptimizer.java: Pig moves the
-        nested sort into the shuffle's secondary key instead of sorting
-        reducer bags). Spark-first equivalent: hash-partition on the
-        group key and sortWithinPartitions(key, order) — per-group
-        sorted row output, no bags, one shuffle. A nested FILTER in the
-        pipe becomes a pre-shuffle predicate."""
-        flat_items = [it for it in op.items if it.flatten and (self._pipe_heads(it.expr) & set(pipes))]
-        if len(flat_items) != 1:
-            raise NotImplementedError("exactly one FLATTEN(<inner pipe>) per nested GENERATE is supported")
-        # aggregates alongside the FLATTEN (Pig bag×scalar cross
-        # product — each flattened row carries the group's aggregate
-        # values): computed in one grouped frame and joined back on
-        # the group keys, same scheme as the LIMIT-pipe path
-        agg_like = [
-            (i, it) for i, it in enumerate(op.items)
-            if not any(it is f for f in flat_items)
-            and not (isinstance(it.expr, G.Col) and (it.expr.name == "group" or it.expr.name.startswith("group.")))
-        ]
-        item = flat_items[0]
-        if not isinstance(item.expr, G.Col):
-            raise NotImplementedError("FLATTEN of an inner pipe takes the pipe or pipe.column")
-        pipe = self._resolve_pipe(item.expr.name, g, pipes)
-
-        child = g.child
-        df = child.df
-        if pipe.cond is not None:
-            df = df.filter(self._expr(pipe.cond, child))
-        key_names = [n for n, _ in g.key_exprs]
-        # inner-FOREACH pipes: the tuple is the projection's fields
-        # (mangled pre-shuffle columns, renamed back on output).
-        # Whole-tuple pipes carry the FULL child tuple — key source
-        # columns included (LogicalSchema: the inner bag keeps every
-        # field; r5 fix of the key-column omission divergence)
-        rename = {v: k for k, v in pipe.proj.items()} if pipe.proj else {}
-        others = (
-            list(pipe.proj.values()) if pipe.proj
-            else [c for c in df.columns if c not in g.derived]
-        )
-        kdf = df.select(
-            *[c.alias(n) for n, c in g.key_exprs if n not in others],
-            *[df[c] for c in others],
-        )
-        if pipe.distinct:
-            # { d = DISTINCT B[.col]; GENERATE group, FLATTEN(d) } —
-            # per-group distinct rows of the pipe's projection: one
-            # dropDuplicates over (keys + projection), no bags
-            cols = [pipe.col] if pipe.col is not None else others
-            kdf = kdf.select(*[F.col(n) for n in key_names], *[F.col(c) for c in cols]).dropDuplicates()
-            others = cols
-        agg_names: dict[int, str] = {}
-        if agg_like:
-            aggs = []
-            seen: set[str] = set()
-            for i, it in agg_like:
-                name = it.alias if isinstance(it.alias, str) else _default_name(it.expr, i)
-                if name in seen:  # un-aliased collisions → positional suffix
-                    name = f"{name}_{i}"
-                seen.add(name)
-                agg_names[i] = name
-                aggs.append(self._nested_agg(it.expr, g, pipes).alias(name))
-            aggf = (
-                child.df.groupBy(*[c.alias(n) for n, c in g.key_exprs]) if key_names else child.df.groupBy()
-            ).agg(*aggs)
-            kdf = kdf.join(aggf, key_names, "left") if key_names else kdf.crossJoin(aggf)
-
-        if pipe.ordered and pipe.order_keys:
-            order_cols = [F.col(c).asc() if a else F.col(c).desc() for c, a in pipe.order_keys]
-            if key_names:
-                kdf = kdf.repartition(*[F.col(n) for n in key_names]).sortWithinPartitions(
-                    *[F.col(n) for n in key_names], *order_cols
-                )
-            else:
-                kdf = kdf.sortWithinPartitions(*order_cols)
-
-        selects: list[Column] = []
-        for i, it in enumerate(op.items):
-            if isinstance(it.expr, G.Col) and it.expr.name == "group":
-                if len(g.key_exprs) == 1:
-                    selects.append(F.col(g.key_exprs[0][0]).alias(it.alias or "group"))
-                else:
-                    selects.extend(F.col(n) for n, _ in g.key_exprs)
-            elif isinstance(it.expr, G.Col) and it.expr.name.startswith("group."):
-                kname = _group_key(it.expr.name.split(".", 1)[1], g.key_exprs)
-                selects.append(F.col(kname).alias(it.alias or kname))
-            elif i in agg_names:
-                selects.append(F.col(agg_names[i]))
-            elif pipe.col is not None:
-                out = rename.get(pipe.col, pipe.col)
-                aname, atype = _single_alias(it.alias)
-                selects.append(_typed(F.col(pipe.col), atype).alias(aname or out.split("::")[-1]))
-            elif isinstance(it.alias, list):
-                # FLATTEN(pipe) AS (a[:t], ...) — positional splat
-                selects.extend(_flatten_as(others, it.alias))
-            elif isinstance(it.alias, str) and len(others) == 1:
-                selects.append(F.col(others[0]).alias(it.alias))
-            else:
-                selects.extend(F.col(c).alias(rename.get(c, c)) for c in others)
-        return Relation(kdf.select(*selects))
-
     def _has_over_call(self, e) -> bool:
         """True when the expression contains a Stitch/Over call — the
-        piggybank window idiom handled by _foreach_nested_over."""
+        piggybank window idiom lowered by _over_rows."""
         if isinstance(e, G.Call):
             if e.func.lower() in ("stitch", "over"):
                 return True
@@ -2464,176 +2626,55 @@ class PigTranslator:
         "chararray": "string", "bytearray": "string", "bigdecimal": "decimal(38,18)",
     }
 
-    def _foreach_nested_over(self, op: G.Foreach, g: GroupedInfo, pipes: dict[str, "_Pipe"]) -> Relation:
-        """{ s = ORDER B BY d; GENERATE FLATTEN(Stitch(s, Over(s.f,
-        'sum(double)'), ...)) } — the piggybank window surface
+    def _over_rows(self, item, g: GroupedInfo, pipes: dict, pipe_rows) -> tuple[str, DataFrame, list]:
+        """FLATTEN(Stitch(s, Over(s.f, 'sum(double)'), ...)) or
+        FLATTEN(Over(s.f, ...)) — the piggybank window surface
         (Over.java:74-140: row_number/rank/dense_rank/ntile/
         percent_rank/cume_dist/lead/lag/first_value/last_value and
         windowed count/sum/avg/min/max with rows frames; Stitch.java
-        zips results back onto the ordered tuples).
-
-        Pig evaluates the function over each group's ordered bag;
-        the Spark-first lowering is the exact native construct:
-        ``Window.partitionBy(group keys).orderBy(pipe order)`` with
-        Over's (window_start, window_end) mapped to ``rowsBetween`` —
-        one shuffle, whole-stage-codegen window evaluation, no bags.
-        Output rows = the pipe's tuples + one column per Over call
-        (named ``result`` / ``result_i`` after Over.java's default
-        returnName, renameable with FLATTEN ... AS (...))."""
-        flat_items = [it for it in op.items if self._has_over_call(it.expr)]
-        for it in op.items:
-            if any(it is f for f in flat_items):
-                continue
-            if not (isinstance(it.expr, G.Col) and (it.expr.name == "group" or it.expr.name.startswith("group."))):
-                raise NotImplementedError("Stitch/Over cannot mix with other GENERATE expressions")
-        if len(flat_items) > 1:
-            return self._foreach_multi_over(op, g, pipes, flat_items)
-        item = flat_items[0]
-        flat_sel, df = self._stitch_frame(item, g, pipes)
-        # GENERATE order: group refs before/after the FLATTEN keep
-        # their position (keys are in the pipe's tuples too — Stitch
-        # emits the full ordered tuple — but Pig lets both appear)
-        selects: list[Column] = []
-        for it in op.items:
-            if it is item:
-                selects.extend(flat_sel)
-            elif isinstance(it.expr, G.Col) and it.expr.name == "group":
-                if len(g.key_exprs) == 1:
-                    selects.append(g.key_exprs[0][1].alias(it.alias or "group"))
-                else:
-                    selects.extend(c.alias(n) for n, c in g.key_exprs)
-            else:  # group.key
-                kname = _group_key(it.expr.name.split(".", 1)[1], g.key_exprs)
-                expr = dict(g.key_exprs).get(kname)
-                if expr is None:
-                    raise NameError(f"unknown group key {kname!r}")
-                selects.append(expr.alias(it.alias or kname))
-        return Relation(df.select(*selects))
-
-    def _foreach_multi_over(
-        self, op: G.Foreach, g: GroupedInfo, pipes: dict[str, "_Pipe"], flat_items: list
-    ) -> Relation:
-        """Several FLATTENed Stitch/Over bags in one GENERATE. Pig's
-        FLATTEN contract for multiple bags is their per-group CROSS
-        PRODUCT (LogicalPlanBuilder flatten semantics — flattening two
-        bags in one GENERATE crosses their tuples), so each Stitch
-        builds its own windowed frame over the same group-key
-        partitioning and the cross product lowers to a null-safe
-        equi-JOIN on the group keys — co-partitioned with the window
-        exchanges, never a global cartesian, and row counts stay the
-        honest n_i×n_j per group. Callers wanting parallel COLUMNS
-        (one row per tuple) should put all Over calls in ONE Stitch.
-        Each item must carry an AS (...) schema so the joined frames'
-        column names are unique."""
-        gk_names = [f"__gk{k}" for k in range(len(g.key_exprs))]
-        frames: list[DataFrame] = []
-        seen: set[str] = set()
-        for item in flat_items:
-            if not isinstance(item.alias, list):
-                raise SyntaxError(
-                    "multiple FLATTEN(Stitch/Over) expressions in one GENERATE need "
-                    "AS (...) schemas to disambiguate their column names"
-                )
-            names = [n for n, _ in item.alias]
-            dup = seen.intersection(names)
-            if dup:
-                raise SyntaxError(
-                    f"duplicate column names across Stitch AS schemas: {sorted(dup)}"
-                )
-            seen.update(names)
-            flat_sel, df = self._stitch_frame(item, g, pipes)
-            gk = [c.alias(nm) for nm, (_, c) in zip(gk_names, g.key_exprs)]
-            frames.append(df.select(*flat_sel, *gk))
-        out = frames[0]
-        for f in frames[1:]:
-            renames = {nm: f"{nm}_r" for nm in gk_names}
-            for a, b in renames.items():
-                f = f.withColumnRenamed(a, b)
-            cond = [out[a].eqNullSafe(f[b]) for a, b in renames.items()]
-            out = out.join(f, on=cond).drop(*renames.values())
-        selects: list[Column] = []
-        for it in op.items:
-            if any(it is fi for fi in flat_items):
-                selects.extend(F.col(n) for n, _ in it.alias)
-            elif isinstance(it.expr, G.Col) and it.expr.name == "group":
-                if len(g.key_exprs) == 1:
-                    selects.append(F.col(gk_names[0]).alias(it.alias or "group"))
-                else:
-                    selects.extend(
-                        F.col(nm).alias(n) for nm, (n, _) in zip(gk_names, g.key_exprs)
-                    )
-            else:  # group.key
-                kname = _group_key(it.expr.name.split(".", 1)[1], g.key_exprs)
-                key_names = [n for n, _ in g.key_exprs]
-                if kname not in key_names:
-                    raise NameError(f"unknown group key {kname!r}")
-                selects.append(
-                    F.col(gk_names[key_names.index(kname)]).alias(it.alias or kname)
-                )
-        return Relation(out.select(*selects))
-
-    def _stitch_frame(
-        self, item, g: GroupedInfo, pipes: dict[str, "_Pipe"]
-    ) -> tuple[list[Column], DataFrame]:
-        """One FLATTEN(Stitch/Over) item → (select columns, source df):
-        the windowed projection of its ordered pipe (tuple columns when
-        stitched, plus one column per Over call, AS-schema applied)."""
+        zips the results back onto the ordered tuples). Pig runs the
+        function over each group's ordered bag; here it is the native
+        window ``partitionBy(group keys).orderBy(pipe order)`` over the
+        pipe's rows, Over's (window_start, window_end) as
+        ``rowsBetween`` — one shuffle, codegen, no bags. Returns (pipe,
+        row frame, fields): the pipe's tuple when stitched, then one
+        column per Over call (``result`` / ``result_i``, Over.java's
+        default returnName)."""
         e = item.expr
         if not item.flatten:
             raise NotImplementedError(
                 "Over/Stitch must be FLATTENed (bag-valued results are not materialized); "
                 "write GENERATE FLATTEN(Stitch(s, Over(...)))"
             )
-        # resolve the ordered pipe + the Over calls
-        if isinstance(e, G.Call) and e.func.lower() == "stitch":
+        fn = e.func.lower() if isinstance(e, G.Call) else None
+        if fn == "stitch":
             if not (e.args and isinstance(e.args[0], G.Col)):
                 raise SyntaxError("Stitch takes the ordered pipe as its first argument")
-            pipe_ref = e.args[0].name
             overs = e.args[1:]
-            stitched = True
-        elif isinstance(e, G.Call) and e.func.lower() == "over":
-            pipe_ref = e.args[0].name.split(".", 1)[0] if isinstance(e.args[0], G.Col) else None
-            if pipe_ref is None:
+        elif fn == "over":
+            if not (e.args and isinstance(e.args[0], G.Col)):
                 raise SyntaxError("Over takes pipe[.column] as its first argument")
             overs = [e]
-            stitched = False
         else:
             raise NotImplementedError("Stitch/Over must be the whole FLATTEN expression")
-        for oc in overs:
-            if not (isinstance(oc, G.Call) and oc.func.lower() == "over"):
-                raise SyntaxError("Stitch arguments after the pipe must be Over(...) calls")
-
-        pipe = self._resolve_pipe(pipe_ref.split(".", 1)[0], g, pipes)
+        if not all(isinstance(oc, G.Call) and oc.func.lower() == "over" for oc in overs):
+            raise SyntaxError("Stitch arguments after the pipe must be Over(...) calls")
+        name = e.args[0].name.split(".", 1)[0]
+        pipe = self._resolve_pipe(name, g, pipes)
         if pipe.distinct or pipe.limited:
             raise NotImplementedError("Over works on an ORDERed pipe (no nested DISTINCT/LIMIT)")
-        if not (pipe.ordered and pipe.order_keys):
+        if not pipe.ordered:
             raise SyntaxError(
                 "Over requires the bag ordered first (Over.java contract): add s = ORDER x BY ...;"
             )
-
-        child = g.child
-        df = child.df
-        if pipe.cond is not None:
-            df = df.filter(self._expr(pipe.cond, child))
-        order_cols = [F.col(c).asc() if a else F.col(c).desc() for c, a in pipe.order_keys]
-        w = SparkWindow.partitionBy(*[c for _, c in g.key_exprs]).orderBy(*order_cols)
-
+        df, tup, order = pipe_rows(name)
+        w = SparkWindow.partitionBy(*[F.col(n) for n, _ in g.key_exprs]).orderBy(
+            *[F.col(c).asc() if a else F.col(c).desc() for c, a in order]
+        )
         over_cols = [self._over_column(oc, g, w) for oc in overs]
-        names = (
-            ["result"] if len(over_cols) == 1 else [f"result_{i}" for i in range(len(over_cols))]
-        )
-        base_cols = (
-            [c for c in df.columns if c not in g.derived] if stitched else []
-        )
-        if isinstance(item.alias, list):
-            flat_sel = _flatten_as(base_cols + over_cols, item.alias)
-        elif isinstance(item.alias, str):
-            raise SyntaxError("FLATTEN(Stitch(...)) AS needs a parenthesized schema, not one name")
-        else:
-            flat_sel = [F.col(c) for c in base_cols] + [
-                c.alias(n) for c, n in zip(over_cols, names)
-            ]
-        return flat_sel, df
+        names = ["result"] if len(over_cols) == 1 else [f"result_{i}" for i in range(len(over_cols))]
+        base = tup if fn == "stitch" else []
+        return name, df, base + list(zip(names, over_cols))
 
     def _over_column(self, oc: G.Call, g: GroupedInfo, w) -> Column:
         """One Over(...) call → a Spark window Column over ``w``."""
@@ -2735,402 +2776,64 @@ class PigTranslator:
             f"row_number/rank/dense_rank/ntile/percent_rank/cume_dist/lead/lag/first_value/last_value)"
         )
 
-    def _foreach_nested_topk(self, op: G.Foreach, g: GroupedInfo, pipes: dict[str, "_Pipe"], limited_names: set) -> Relation:
-        """{ s = ORDER x BY f [DESC]; l = LIMIT s k; GENERATE ... } — the
-        nested top-k idiom (reference nightly.conf Nested cases,
-        QueryParser.g:921-971). Lowered to
-        operators.nested.topk_per_group: one shuffle on the group keys
-        and a partitioned window row_number ≤ k — no reducer bags, no
-        global sort, scale-safe on hot keys. The k survivors then feed
-        either flat rows (FLATTEN(l)) or aggregates (SUM(l.f), COUNT(l)).
-
-        Multiple independent LIMIT pipes are supported (r3): each gets
-        its own topk_per_group candidate frame; their per-group
-        aggregates — plus aggregates over *unlimited* pipes from the
-        normal flat-agg path — are stitched with full_outer equi-joins
-        on the group keys (AQE broadcasts small aggregate sides;
-        COUNT-shaped aggregates coalesce to 0 for groups the pipe's
-        FILTER emptied, matching Pig's empty-bag semantics).
-        DISTINCT-then-ORDER-then-LIMIT in one pipe dedupes the pipe's
-        projection per group before the window rank."""
-        from ..operators.nested import topk_per_group
-
-        child = g.child
-        key_names = [n for n, _ in g.key_exprs]
-
-        _topk_cache: dict[str, tuple] = {}
-
-        def build_topk(lname: str):
-            """Top-k candidate frame for one LIMIT pipe: returns
-            (frame, its non-key columns) — memoized so a pipe consumed
-            by BOTH aggregates and a FLATTEN builds its window-over-
-            shuffle subtree once."""
-            if lname in _topk_cache:
-                return _topk_cache[lname]
-            pipe = pipes[lname]
-            df = child.df
-            if pipe.cond is not None:
-                df = df.filter(self._expr(pipe.cond, child))
-            # whole-tuple pipes carry the FULL child tuple, key source
-            # columns included (LogicalSchema; r5 divergence fix)
-            others = (
-                list(pipe.proj.values()) if pipe.proj
-                else [c for c in df.columns if c not in g.derived]
-            )
-            kdf = df.select(
-                *[c.alias(n) for n, c in g.key_exprs if n not in others],
-                *[df[c] for c in others],
-            )
-            if pipe.distinct:
-                # DISTINCT before ORDER/LIMIT: dedupe the pipe's
-                # projection per group ahead of the window rank
-                cols = [pipe.col] if pipe.col is not None else others
-                kdf = kdf.select(*[F.col(n) for n in key_names], *[F.col(c) for c in cols]).dropDuplicates()
-                others = cols
-            if pipe.ordered and pipe.order_keys:
-                order_names = [c for c, _ in pipe.order_keys]
-                asc = [a for _, a in pipe.order_keys]
-            else:
-                # Pig allows LIMIT without ORDER inside FOREACH {}
-                # (QueryParser.g:921-971): the contract is "ANY n rows
-                # of the bag". An arbitrary pick isn't reproducible
-                # across retries/stragglers, so we pin a deterministic
-                # stand-in: the pipe's ORDERABLE columns ascending
-                # (nulls first; map-typed columns can't sort and any
-                # n rows is legal anyway). Documented divergence:
-                # Pig's choice is arbitrary, ours is the first n of
-                # this order.
-                order_names = [c for c in others if _orderable(kdf.schema[c].dataType)]
-                if not order_names:
-                    # all-map tuple: fall back to a group key (constant
-                    # within the window — the pick is then arbitrary,
-                    # which 'any n rows' permits, just not retry-stable)
-                    order_names = [
-                        k for k in key_names if _orderable(kdf.schema[k].dataType)
-                    ][:1]
-                if not order_names:
-                    raise NotImplementedError(
-                        "unordered nested LIMIT over a tuple of only map-typed "
-                        "fields has no orderable column; add an ORDER clause"
-                    )
-                asc = [True] * len(order_names)
-            _topk_cache[lname] = (
-                topk_per_group(kdf, key_names, order_names, pipe.limit_n, ascending=asc),
-                others,
-                list(zip(order_names, asc)),  # bag iteration order (declared or pinned)
-            )
-            return _topk_cache[lname]
-
-        # classify GENERATE items
-        flat_items = []
-        topk_aggs: list[tuple[str, str, object]] = []  # (name, pipe, expr)
-        other_aggs: list[tuple[str, object]] = []
-        combos: list[tuple[str, object]] = []  # (name, rewritten scalar over agg leaves)
-        multi_exprs: list[tuple[str, list[str], str]] = []  # (name, collected refs, cor|cov)
-        layout: list[tuple[str, object]] = []  # (kind, payload) in output order
-        seen_names: set[str] = set()
-        for i, item in enumerate(op.items):
-            e = item.expr
-            name = item.alias if isinstance(item.alias, str) else _default_name(e, i)
-            if name in seen_names:  # un-aliased collisions → positional suffix
-                name = f"{name}_{i}"
-            seen_names.add(name)
-            if isinstance(e, G.Col) and (e.name == "group" or e.name.startswith("group.")):
-                layout.append(("group", item))
-                continue
-            heads = self._pipe_heads(e) & limited_names
-            if heads and item.flatten:
-                if len(heads) > 1:
-                    raise NotImplementedError("cannot FLATTEN two LIMIT pipes in one expression")
-                flat_items.append(item)
-                layout.append(("flatten", item))
-            elif heads and isinstance(e, G.Call) and e.func.lower() in AGG_FUNCS and len(self._pipe_heads(e)) == 1:
-                # whole expression is one aggregate over one pipe
-                topk_aggs.append((name, next(iter(heads)), e))
-                layout.append(("col", name))
-            elif (
-                heads
-                and isinstance(e, G.Col)
-                and e.name.partition(".")[0] in limited_names
-            ):
-                # GENERATE <limit-pipe> — the survivors as a BAG column
-                # (bag of top-k tuples); collected from the topk frame
-                topk_aggs.append((name, e.name.partition(".")[0], e))
-                layout.append(("col", name))
-            elif (
-                heads
-                and isinstance(e, G.Call)
-                and e.func.lower() in ("cor", "cov")
-                and len(e.args) >= 2
-                and all(
-                    isinstance(a, G.Col) and a.name.partition(".")[0] in limited_names
-                    for a in e.args
-                )
-            ):
-                # ONE aggregate call spanning two+ LIMIT pipes
-                # (builtin/COR.java:66-101, COV.java — the multi-bag
-                # aggregates; QueryParser.g:921-971 residual corner,
-                # closed r6): each bag argument collects as an ORDERED
-                # bounded array (≤ limit_n) inside its pipe's top-k
-                # frame, and the pairwise stats zip the stitched arrays
-                # positionally — exactly computeAll's dual-iterator
-                # walk over the two bags.
-                argrefs: list[str] = []
-                for ai, a in enumerate(e.args):
-                    ln, _, c = a.name.partition(".")
-                    if not c:
-                        raise SyntaxError(
-                            f"{e.func.upper()} over a whole-tuple pipe needs a "
-                            f"column (e.g. {ln}.field)"
-                        )
-                    gen = f"__mp{len(multi_exprs)}_{ai}"
-                    topk_aggs.append((gen, ln, _SortedCollect(c)))
-                    argrefs.append(gen)
-                multi_exprs.append((name, argrefs, e.func.lower()))
-                layout.append(("col", name))
-            elif heads:
-                # r3: expression COMBINING aggregates — possibly over
-                # several LIMIT pipes and/or the full bag, e.g.
-                # SUM(a.x) / COUNT(b) — split into aggregate leaves
-                # (each computed in its pipe's frame / the flat path),
-                # then re-evaluate the combining scalar over the
-                # stitched aggregate columns
-                leaves: list[tuple[str, str | None, object]] = []
-                rewritten = self._split_agg_leaves(e, limited_names, leaves, len(combos))
-                for gen, head, call in leaves:
-                    if head is not None:
-                        topk_aggs.append((gen, head, call))
-                    else:
-                        other_aggs.append((gen, call))
-                combos.append((name, rewritten))
-                layout.append(("combo", name))
-            else:
-                other_aggs.append((name, e))
-                layout.append(("col", name))
-        if len(flat_items) > 1:
-            raise NotImplementedError(
-                "cross product of two FLATTENed LIMIT pipes in one GENERATE is not supported"
-            )
-        if len({ln for _, ln, _ in topk_aggs} | {next(iter(self._pipe_heads(it.expr) & limited_names)) for it in flat_items}) == 0:
-            raise NotImplementedError("LIMIT pipe defined but never consumed in GENERATE")
-
-        def group_selects(item) -> list[Column]:
-            if isinstance(item.expr, G.Col) and item.expr.name.startswith("group."):
-                kname = _group_key(item.expr.name.split(".", 1)[1], g.key_exprs)
-                return [F.col(kname).alias(item.alias or kname)]
-            if len(g.key_exprs) == 1 and not item.flatten:
-                return [F.col(g.key_exprs[0][0]).alias(item.alias or "group")]
-            return [F.col(n) for n, _ in g.key_exprs]
-
-        # one aggregate frame per consumed LIMIT pipe, in first-use order
-        parts: list = []
-        count_cols: list[str] = []
-        bag_cols: list[str] = []
-        seen_pipes: list[str] = []
-        for _, ln, _ in topk_aggs:
-            if ln not in seen_pipes:
-                seen_pipes.append(ln)
-        for ln in seen_pipes:
-            aggs_for = [(n, e) for n, pl, e in topk_aggs if pl == ln]
-            topk, _, bag_order = build_topk(ln)
-            for _, e in aggs_for:  # sorted collects pair in bag order
-                if isinstance(e, _SortedCollect):
-                    e.order = bag_order
-            parts.append(
-                topk.groupBy(*[F.col(n) for n in key_names]).agg(
-                    *[self._topk_agg(e, topk, ln, g, pipes).alias(n) for n, e in aggs_for]
-                )
-            )
-            count_cols.extend(
-                n for n, e in aggs_for
-                if isinstance(e, G.Call) and e.func.lower() in ("count", "count_star")
-            )
-            bag_cols.extend(n for n, e in aggs_for if isinstance(e, G.Col))
-        if other_aggs:
-            parts.append(
-                (child.df.groupBy(*[c.alias(n) for n, c in g.key_exprs]) if key_names else child.df.groupBy()).agg(
-                    *[self._nested_agg(e, g, pipes).alias(n) for n, e in other_aggs]
-                )
-            )
-        elif key_names and not flat_items and any(pipes[ln].cond is not None for ln in seen_pipes):
-            # every frame comes from a FILTERed pipe: a group the FILTER
-            # emptied is in none of them, yet Pig still emits it (empty
-            # bag: COUNT 0, SUM null) — the group keys anchor the join
-            parts.insert(0, child.df.select(*[c.alias(n) for n, c in g.key_exprs]).distinct())
-        agg_out = None
-        if parts:
-            out = parts[0]
-            for p in parts[1:]:
-                if not key_names:
-                    # GROUP ALL: single-row aggregates — 1×1 crossJoin
-                    out = out.crossJoin(p)
-                else:
-                    # full_outer, not inner: a group whose rows are all
-                    # removed by a pipe's nested FILTER is absent from that
-                    # pipe's topk frame, but Pig still emits it — null SUM,
-                    # 0 COUNT over the empty bag (POForEach on empty DataBag)
-                    out = out.join(p, key_names, "full_outer")
-            if len(parts) > 1 and key_names:
-                for n in count_cols:
-                    out = out.withColumn(n, F.coalesce(F.col(n), F.lit(0).cast("long")))
-                for n in bag_cols:  # GENERATE <pipe> of an emptied group: {}
-                    out = out.withColumn(n, F.coalesce(F.col(n), F.array().cast(out.schema[n].dataType)))
-            for name, rewritten in combos:
-                out = out.withColumn(name, self._expr(rewritten, Relation(out)))
-            for name, argrefs, fnname in multi_exprs:
-                out = out.withColumn(name, _pairwise_stats(fnname, argrefs))
-            agg_out = out
-
-        if flat_items:
-            # FLATTEN(l[...]) [+ aggregates]: Pig's bag×scalar cross
-            # product — every flattened survivor row carries the
-            # group's aggregate values. The aggregate frame joins back
-            # on the group keys (left from the flattened side: FLATTEN
-            # of an empty bag drops the record, so the topk frame
-            # decides which groups appear; a COUNT whose own pipe was
-            # emptied coalesces to 0, Pig's empty-bag count).
-            item = flat_items[0]
-            lname = next(iter(self._pipe_heads(item.expr) & limited_names))
-            topk, others, _ = build_topk(lname)
-            fproj = pipes[lname].proj or {}
-            frename = {v: k for k, v in fproj.items()}
-            frame = topk
-            if agg_out is not None:
-                frame = (
-                    topk.join(agg_out, key_names, "left") if key_names else topk.crossJoin(agg_out)
-                )
-                for n in count_cols:
-                    frame = frame.withColumn(n, F.coalesce(F.col(n), F.lit(0).cast("long")))
-            # row output: group keys + the limited pipe's tuple/column
-            selects: list[Column] = []
-            for kind, payload in layout:
-                if kind == "group":
-                    selects.extend(group_selects(payload))
-                elif kind == "flatten":
-                    ref = payload.expr.name if isinstance(payload.expr, G.Col) else None
-                    _, _, rest = (ref or "").partition(".")
-                    if rest:
-                        cname = fproj.get(rest, rest)
-                        aname, atype = _single_alias(payload.alias)
-                        selects.append(_typed(F.col(cname), atype).alias(aname or rest))
-                    elif isinstance(payload.alias, list):
-                        # FLATTEN(l) AS (a[:t], ...) — positional splat
-                        selects.extend(_flatten_as(others, payload.alias))
-                    elif isinstance(payload.alias, str) and len(others) == 1:
-                        # FLATTEN(l) AS name — single flattened field
-                        selects.append(F.col(others[0]).alias(payload.alias))
-                    else:
-                        selects.extend(F.col(c).alias(frename.get(c, c)) for c in others)
-                else:  # "col" / "combo" — stitched aggregate column
-                    selects.append(F.col(payload))
-            return Relation(frame.select(*selects))
-
-        selects = []
-        for kind, payload in layout:
-            if kind == "group":
-                selects.extend(group_selects(payload))
-            else:
-                selects.append(F.col(payload))
-        return Relation(agg_out.select(*selects))
-
-    def _topk_agg(self, e, topk, lname: str, g: GroupedInfo, pipes: dict[str, "_Pipe"] | None = None) -> Column:
-        """Aggregate expression over the top-k survivors (references to
-        the LIMIT pipe resolve against the topk DataFrame's columns)."""
+    def _topk_agg(self, e, lname: str, topk: DataFrame, fields: list, order: list, g: GroupedInfo) -> Column:
+        """Aggregate expression over a LIMIT pipe's top-k survivors
+        (_pipe_rows: ``fields`` its tuple as (field, frame column),
+        ``order`` its bag order)."""
         if isinstance(e, _SortedCollect):
             # bag-value array for a multi-bag aggregate (COR/COV):
-            # collect (order keys, value), sort in bag iteration order,
-            # strip to the values — bounded by limit_n, pure codegen
-            pipe = pipes[lname] if pipes else _Pipe()
-            src = pipe.proj.get(e.col, e.col) if pipe.proj else e.col
-            if src not in topk.columns:
-                raise NameError(f"nested pipe {lname!r} has no field {e.col!r}")
-            ocols = [(c, a) for c, a in (e.order or []) if c in topk.columns]
+            # collect (order keys, value), sort in bag order, strip to
+            # the values — bounded by limit_n, pure codegen
             bag = F.collect_list(
                 F.struct(
-                    *[topk[c].alias(f"__o{i}") for i, (c, _) in enumerate(ocols)],
-                    topk[src].alias("__v"),
+                    *[topk[c].alias(f"__o{i}") for i, (c, _) in enumerate(order)],
+                    topk[_pick_field(fields, e.col, lname)[1]].alias("__v"),
                 )
             )
-            if ocols:
-                bag = bag_sort(bag, [(f"__o{i}", a) for i, (_, a) in enumerate(ocols)])
+            if order:
+                bag = bag_sort(bag, [(f"__o{i}", a) for i, (_, a) in enumerate(order)])
             return F.transform(bag, lambda t: t["__v"])
         if isinstance(e, G.Col) and e.name.partition(".")[0] == lname:
-            # GENERATE <limit-pipe>[.field] — the survivors as a BAG
-            # (bag of top-k tuples, ordered by the pipe's ORDER keys);
-            # ≤ limit_n elements, so the collected state is bounded
-            rest = e.name.partition(".")[2] or None
-            pipe = pipes[lname] if pipes else _Pipe()
-            rename = {v: k for k, v in pipe.proj.items()} if pipe.proj else {}
-            keyset = {n for n, _ in g.key_exprs}
-            if rest:
-                src = pipe.proj.get(rest, rest) if pipe.proj else rest
-                cols = [(rest.split("::")[-1], topk[src])]
-            elif pipe.proj or pipe.col or pipe.distinct:
-                cols = [
-                    (rename.get(c, c).split("::")[-1], topk[c])
-                    for c in topk.columns
-                    if c not in keyset
-                ]
-            else:
-                # whole-tuple pipe: bag elements follow the CHILD's
-                # column order (LogicalSchema keeps the inner bag's
-                # tuple layout), key columns included
-                child_cols = [c for c in g.child.df.columns if c in topk.columns]
-                extra = [c for c in topk.columns if c not in child_cols]
-                cols = [(c.split("::")[-1], topk[c]) for c in child_cols + extra]
-            bag = F.collect_list(F.struct(*[c.alias(n) for n, c in cols]))
-            if pipe.ordered and pipe.order_keys:
-                keys = _bag_keys(pipe.order_keys, [n for n, _ in cols], rename)
-                order = [(f, a) for f, a in keys if f is not None]
-                if order:
-                    bag = bag_sort(bag, order)
-            return bag
+            # GENERATE <limit-pipe>[.field] — the survivors as a BAG in
+            # bag order; ≤ limit_n elements, so the state is bounded
+            rest = e.name.partition(".")[2]
+            sel = [_pick_field(fields, rest, lname)] if rest else fields
+            sel = [(n.split("::")[-1], c) for n, c in sel]
+            bag = F.collect_list(F.struct(*[topk[c].alias(n) for n, c in sel]))
+            keys = _bag_keys(order, [n for n, _ in sel], {c: n for n, c in sel})
+            keys = [(f, a) for f, a in keys if f is not None]
+            return bag_sort(bag, keys) if keys else bag
         if isinstance(e, G.Bin):
-            return _binop(e.op, self._topk_agg(e.left, topk, lname, g, pipes), self._topk_agg(e.right, topk, lname, g, pipes))
+            return _binop(
+                e.op,
+                self._topk_agg(e.left, lname, topk, fields, order, g),
+                self._topk_agg(e.right, lname, topk, fields, order, g),
+            )
         if isinstance(e, (G.Num, G.Str)):
             return self._expr(e, g.child)
         if isinstance(e, G.Cast):
-            return self._topk_agg(e.operand, topk, lname, g, pipes).cast(pigtypes.ddl(e.type))
+            return self._topk_agg(e.operand, lname, topk, fields, order, g).cast(pigtypes.ddl(e.type))
         if isinstance(e, G.Call) and e.func.lower() in AGG_FUNCS:
             fn = e.func.lower()
-            if not e.args:
+            if fn == "count_star" or not e.args:
                 return F.count(F.lit(1))
+            agg = {"count": F.count, "sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max}[fn]
             arg = e.args[0]
             if not isinstance(arg, G.Col):
-                # SUM(l.a * l.b + 2) over the survivors: rewrite every
-                # l.x ref to the topk frame's x and evaluate the scalar
-                # expression there, then aggregate (QueryParser.g lets
-                # nested aggregates take arbitrary projections)
-                from ..dsl import Relation as _Rel
-
-                stripped = self._strip_pipe_prefix(arg, lname)
-                scalar = self._expr(stripped, _Rel(topk))
-                return {
-                    "sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max,
-                    "count": F.count, "count_star": lambda _c: F.count(F.lit(1)),
-                }[fn](scalar)
+                # SUM(l.a * l.b + 2): evaluate the scalar over the top-k
+                # frame, then aggregate (QueryParser.g lets nested
+                # aggregates take arbitrary projections)
+                return agg(self._expr(self._strip_pipe_prefix(arg, lname), Relation(topk)))
             head, _, rest = arg.name.partition(".")
             if head != lname:
                 raise NotImplementedError(f"aggregate over {head!r} mixed into the LIMIT-pipe expression")
             if rest:
-                val: Column = topk[rest]
-            elif fn in ("count", "count_star"):
-                # COUNT(bag) counts non-null first fields (COUNT.java:40).
-                # Whole-tuple pipes follow the CHILD's column order
-                # (key columns included since the r5 divergence fix);
-                # DISTINCT/proj-narrowed pipes fall back to the first
-                # non-key frame column.
-                keyset = {n for n, _ in g.key_exprs}
-                cand = [c for c in g.child.df.columns if c in topk.columns and c not in g.derived]
-                first = (
-                    cand[0]
-                    if cand
-                    else next((c for c in topk.columns if c not in keyset), topk.columns[0])
-                )
-                val = topk[first] if fn == "count" else F.lit(1)
-            else:
-                raise SyntaxError(f"{fn.upper()} over a whole-tuple pipe needs a column (e.g. {lname}.field)")
-            return {"count": F.count, "count_star": F.count, "sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max}[fn](val)
+                return agg(topk[_pick_field(fields, rest, lname)[1]])
+            if fn == "count":
+                # COUNT(bag) counts tuples with a non-null first field
+                # (COUNT.java:40)
+                return F.count(topk[fields[0][1]])
+            raise SyntaxError(f"{fn.upper()} over a whole-tuple pipe needs a column (e.g. {lname}.field)")
         raise NotImplementedError(f"unsupported expression over LIMIT pipe: {e}")
 
     def _scalar_value(self, e):
@@ -3165,21 +2868,32 @@ class PigTranslator:
         raise ValueError("pig latin: LIMIT/SAMPLE takes a constant or single-row scalar expression")
 
     def _pipe_schema(self, p: "_Pipe", g: GroupedInfo) -> str:
-        """Pig-style schema string for a nested pipe's tuple —
-        DESCRIBE of an inner alias (describe C::D)."""
+        """Pig-style schema string for a nested pipe's tuple — DESCRIBE
+        of an inner alias (describe C::D) — read off the tuple the
+        lowerings build (_pipe_tuple, or an array pipe's elements)."""
         ch = g.child.df
-        name = pigtypes.pig_type_name
         if p.arr:
             elem = ch.schema[p.arr].dataType.elementType
-            fields = [(f.name, name(f.dataType)) for f in elem.fields]
-        elif p.proj:
-            fields = [(out, name(ch.schema[m].dataType)) for out, m in p.proj.items()]
-        elif p.col is not None:
-            leaf = p.col.split("::")[-1]
-            fields = [(leaf, name(ch.schema[p.col].dataType) if p.col in ch.columns else "bytearray")]
+            fields = [(n, elem[n].dataType) for n in self._pipe_fields(p, g)]
         else:
-            fields = [(c, name(ch.schema[c].dataType)) for c in ch.columns if c not in g.derived]
-        return "{(" + ", ".join(f"{n}: {t}" for n, t in fields) + ")}"
+            fields = [
+                (n, ch.schema[c].dataType if c in ch.columns
+                 else ch.select(self._expr(G.Col(c), g.child)).schema[0].dataType)
+                for n, c in self._pipe_tuple(p, g)
+            ]
+        return "{(" + ", ".join(f"{n}: {pigtypes.pig_type_name(t)}" for n, t in fields) + ")}"
+
+    def _pipe_tuple(self, p: "_Pipe", g: GroupedInfo) -> list[tuple[str, str]]:
+        """A non-array pipe's tuple as (field name, child column): one
+        projected column, an inner FOREACH's fields, or the whole child
+        tuple — every original field, the key's source columns included
+        (LogicalSchema), the block's derived columns excluded."""
+        if p.col is not None:
+            name = next((k for k, v in (p.proj or {}).items() if v == p.col), p.col)
+            return [(name.split("::")[-1], p.col)]
+        if p.proj:
+            return list(p.proj.items())
+        return [(c, c) for c in g.child.df.columns if c not in g.derived]
 
     def _pipe_fields(self, p: "_Pipe", g: GroupedInfo) -> list[str]:
         """The fields of a nested pipe's tuple, as real names: element
@@ -3189,16 +2903,12 @@ class PigTranslator:
             if p.col is not None:
                 return [p.col.split("::")[-1]]
             return list(g.child.df.schema[p.arr].dataType.elementType.names)
-        if p.col is not None:
-            return [p.col]
-        if p.proj:
-            return list(p.proj.values())
-        return [c for c in g.child.df.columns if c not in g.derived]
+        return [c for _, c in self._pipe_tuple(p, g)]
 
     def _resolve_pipe(self, source: str, g: GroupedInfo, pipes: dict[str, "_Pipe"]) -> "_Pipe":
         head, _, rest = source.partition(".")
         if head in pipes:
-            p = pipes[head].copy()
+            p = G_replace(pipes[head])
             if rest:
                 if p.col is not None:
                     raise SyntaxError(f"nested ref {source!r}: {head!r} is already a column pipe")
@@ -3213,7 +2923,12 @@ class PigTranslator:
                     p.col = rest
             return p
         if head == g.child_alias or head == "$1":
-            # $1 after GROUP = the bag field (LogicalSchema positional)
+            # $1 after GROUP = the bag field (LogicalSchema positional);
+            # a field ref ($N, a qualified name's leaf) names its child
+            # column
+            fields = [c for c in g.child.df.columns if c not in g.derived]
+            if rest and "." not in rest and not (rest.startswith("$") and int(rest[1:]) >= len(fields)):
+                rest = _field_ref(rest, fields) or rest
             return _Pipe(col=rest or None)
         raise NameError(f"nested FOREACH: unknown inner source {source!r}")
 
@@ -3320,7 +3035,8 @@ class PigTranslator:
             if kind == "filter":
                 bag = bag_filter(bag, lambda el: self._elem_expr(payload, el, fields))
             elif kind == "distinct":
-                bag = bag_distinct(bag)
+                # DistinctDataBag iterates in full-tuple sorted order
+                bag = bag_sort(bag_distinct(bag), [(f, True) for f in fields] or [("*", True)])
             elif kind == "order":
                 order = _bag_keys(payload, fields, rename or {})
                 missing = [c for (c, _), (f, _) in zip(payload, order) if f is None]
@@ -3333,170 +3049,69 @@ class PigTranslator:
                 bag = bag_limit(bag, payload)
         return bag
 
-    def _pipe_bag(self, lname: str, rest: str | None, g: GroupedInfo, pipes: dict[str, "_Pipe"]) -> Column:
-        """GENERATE <pipe> — the pipe itself as a BAG column (Pig emits
-        the inner relation as a bag of tuples; POForEach inner-plan
-        output). Lowered to collect_list of the pipe's tuple struct
-        (FILTER → when(cond)), then the pipe's flags replayed in Pig's
-        stage order — DISTINCT, ORDER, LIMIT — and the ops recorded
-        after the LIMIT in statement order (_apply_bag_ops). Scale note:
-        the bag is the WHOLE group in executor memory — exactly Pig's
-        reducer-bag footprint for the same statement; prefer
-        FLATTEN/aggregate forms for giant groups."""
-        pipe = pipes[lname]
+    def _pipe_bag(self, pipe: "_Pipe", rest: str | None, g: GroupedInfo, ordered: bool = True) -> Column:
+        """A pipe as a BAG column (Pig emits the inner relation as a bag
+        of tuples; POForEach inner-plan output): collect_list of its
+        tuple structs (FILTER → when(cond); an array pipe's per-row
+        arrays concatenate), then its flags in Pig's stage order —
+        DISTINCT, the bag order (_pipe_order; ``ordered=False`` skips it
+        for order-blind consumers), LIMIT — then the ops recorded after
+        the LIMIT in statement order (_apply_bag_ops), and last the
+        consumption-time projection ``rest``. Scale note: the bag is
+        the WHOLE group in executor memory — Pig's reducer-bag
+        footprint for the same statement."""
         child = g.child
         df = child.df
-        rename: dict[str, str] = {}
         hidden: list[tuple[str, Column]] = []
-        order: list[tuple[str, bool]] = []
         if pipe.arr:
-            # array-pipe: the per-row arrays concatenate into the
-            # group's bag (collect_list skips FILTER-nulled rows). Its
-            # DISTINCT/ORDER/LIMIT run on the CONCATENATED group bag:
-            # pipe-level projection first (d = DISTINCT p.x), then
-            # dedupe/sort/slice, then the consumption-time projection.
             bag = F.flatten(F.collect_list(df[pipe.arr]))
-            field_names = self._pipe_fields(pipe, g)
+            names = self._pipe_fields(pipe, g)
             if pipe.col is not None:
-                pleaf = field_names[0]
-                bag = F.transform(bag, lambda t: F.struct(t[pleaf].alias(pleaf)))
-            if pipe.ordered and pipe.order_keys:
-                order = pipe.order_keys
-            elif pipe.limited:
-                # LIMIT without ORDER = Pig's "any n rows"; pin a
-                # deterministic slice order (orderable fields asc)
-                elem = df.schema[pipe.arr].dataType.elementType
-                order = [(n, True) for n in field_names if _orderable(elem[n].dataType)]
+                bag = F.transform(bag, lambda t: F.struct(t[names[0]].alias(names[0])))
+            elem = df.schema[pipe.arr].dataType.elementType
+            keys = _pipe_order(pipe, names, lambda f: _orderable(elem[f].dataType))
+            rename: dict[str, str] = {}
         else:
-            cond = self._expr(pipe.cond, child) if pipe.cond is not None else None
-            rename = {v: k for k, v in pipe.proj.items()} if pipe.proj else {}
-            if rest:
-                src = pipe.proj.get(rest, rest) if pipe.proj else rest
-                cols = [(rest.split("::")[-1], self._expr(G.Col(src), child))]
-            elif pipe.col is not None:
-                cols = [(pipe.col.split("::")[-1], self._expr(G.Col(pipe.col), child))]
-            elif pipe.proj:
-                cols = [(out, F.col(m)) for out, m in pipe.proj.items()]
-            else:
-                # whole-tuple pipe: the bag element is the FULL child tuple
-                # (LogicalSchema: the inner bag carries every field,
-                # including the group key's source columns)
-                cols = [(c, df[c]) for c in df.columns if c not in g.derived]
-            field_names = [n for n, _ in cols]
-            if pipe.ordered and pipe.order_keys:
-                # a key OUTSIDE the projected fields (ORDER by acctbal,
-                # project custkey) rides along as a HIDDEN struct field
-                # so the sort — and any LIMIT slice — sees it, then
-                # strips after. DISTINCT + ORDER orders by the distinct
-                # projection's own fields: no hidden keys possible.
-                keys = _bag_keys(pipe.order_keys, field_names, rename)
-                for idx, ((cname, a), (fld, _)) in enumerate(zip(pipe.order_keys, keys)):
-                    if fld is None and not pipe.distinct:
-                        fld = f"__ok{idx}"
-                        hidden.append((fld, self._expr(G.Col(cname), child)))
-                    if fld is not None:
-                        order.append((fld, a))
-            el = F.struct(*[c.alias(n) for n, c in cols], *[c.alias(n) for n, c in hidden])
-            if cond is not None:
-                el = F.when(cond, el)  # collect_list skips nulls
+            fields = self._pipe_tuple(pipe, g)
+            names = [n for n, _ in fields]
+            rename = {c: n for n, c in fields}
+            keys = _pipe_order(pipe, [c for _, c in fields], lambda c: _orderable(df.schema[c].dataType))
+            cols = [(n, df[c] if c in df.columns else self._expr(G.Col(c), child)) for n, c in fields]
+        order = []
+        for i, ((c, a), (f, _)) in enumerate(zip(keys if ordered else [], _bag_keys(keys, names, rename))):
+            if f is None and not pipe.distinct:
+                # an ORDER key outside the projected fields (ORDER by
+                # acctbal, project custkey) rides along as a hidden
+                # field, so the sort and LIMIT see it, stripped after
+                f = f"__ok{i}"
+                hidden.append((f, self._expr(G.Col(c), child)))
+            if f is not None:
+                order.append((f, a))
+        if not pipe.arr:
+            el = F.struct(*[c.alias(n) for n, c in cols + hidden])
+            if pipe.cond is not None:
+                el = F.when(self._expr(pipe.cond, child), el)  # collect_list skips nulls
             bag = F.collect_list(el)
-        flags = [("distinct", None)] if pipe.distinct else []
+        if pipe.distinct:
+            bag = bag_distinct(bag)
         if order:
-            flags.append(("order", order))
+            bag = bag_sort(bag, order)
         if pipe.limited:
-            # an unordered LIMIT over a non-array pipe is Pig's "any n
-            # rows": here the first n in collection order
-            flags.append(("limit", pipe.limit_n))
-        bag = self._apply_bag_ops(bag, flags, field_names + [n for n, _ in hidden])
+            bag = bag_limit(bag, pipe.limit_n)
         if hidden:
-            bag = F.transform(bag, lambda t: F.struct(*[t[n].alias(n) for n in field_names]))
+            bag = F.transform(bag, lambda t: F.struct(*[t[n].alias(n) for n in names]))
         if pipe.post_ops:
-            bag = self._apply_bag_ops(bag, pipe.post_ops, field_names, rename)
-        if pipe.arr and rest:
-            leaf = rest.split("::")[-1]
-            bag = F.transform(bag, lambda t: F.struct(t[leaf].alias(leaf)))
+            bag = self._apply_bag_ops(bag, pipe.post_ops, names, rename)
+        if rest:
+            leaf = _field_ref(rest, names) or rest
+            bag = F.transform(bag, lambda t: F.struct(t[leaf].alias(leaf.split("::")[-1])))
         return bag
 
-    def _foreach_nested_multiflatten(self, op: G.Foreach, g: GroupedInfo, pipes: dict[str, "_Pipe"]) -> Relation:
-        """TWO+ FLATTEN(<pipe>) in one nested GENERATE — Pig's
-        per-group CROSS PRODUCT of the bags (POForEach cross of inner
-        plan outputs; the limit_desc × limit_asc idiom in
-        nightly.conf). Each pipe materializes as an ordered (and
-        LIMIT-sliced) bag column in ONE grouped frame, then the bags
-        explode sequentially — explode × explode IS the per-row cross
-        product, and FLATTEN of an empty bag drops the group, matching
-        Pig. Closes the r4 'exactly one FLATTEN per nested GENERATE'
-        corner. Scale: the collected bags are the same reducer-bag
-        footprint Pig uses for this statement; LIMIT pipes slice to
-        ≤ n elements before the explode."""
-        key_cols = [c.alias(n) for n, c in g.key_exprs]
-        aggs: list[Column] = []
-        layout: list[tuple[str, object]] = []
-        seen: set[str] = set()
-        for i, item in enumerate(op.items):
-            e = item.expr
-            if isinstance(e, G.Col) and (e.name == "group" or e.name.startswith("group.")):
-                layout.append(("group", item))
-                continue
-            name = item.alias if isinstance(item.alias, str) else _default_name(e, i)
-            if name in seen:
-                name = f"{name}_{i}"
-            seen.add(name)
-            if item.flatten and (self._pipe_heads(e) & set(pipes)):
-                if not isinstance(e, G.Col):
-                    raise NotImplementedError("FLATTEN of an inner pipe takes the pipe or pipe.column")
-                head, _, rest = e.name.partition(".")
-                bag_name = f"__mfb{i}"
-                aggs.append(self._pipe_bag(head, rest or None, g, pipes).alias(bag_name))
-                layout.append(("bag", (bag_name, head, item)))
-            else:
-                aggs.append(self._nested_agg(e, g, pipes).alias(name))
-                layout.append(("col", name))
-        grouped = g.child.df.groupBy(*key_cols) if key_cols else g.child.df.groupBy()
-        out = Relation(grouped.agg(*aggs))
-        selects: list[Column] = []
-        for kind, payload in layout:
-            if kind == "group":
-                item = payload
-                if isinstance(item.expr, G.Col) and item.expr.name.startswith("group."):
-                    kname = _group_key(item.expr.name.split(".", 1)[1], g.key_exprs)
-                    selects.append(F.col(kname).alias(item.alias or kname))
-                elif len(g.key_exprs) == 1:
-                    selects.append(F.col(g.key_exprs[0][0]).alias(item.alias or "group"))
-                elif not g.key_exprs:
-                    # GROUP ALL: Pig's group value is the literal
-                    # 'all' (LOCogroup GROUP ALL semantics)
-                    selects.append(F.lit("all").alias(item.alias or "group"))
-                else:
-                    selects.extend(F.col(n) for n, _ in g.key_exprs)
-            elif kind == "col":
-                selects.append(F.col(payload))
-        # explode the bags one by one (cross product), splatting each
-        # element struct's fields qualified <pipe>::<field> on collision
-        flat_cols: list[Column] = []
-        df = out.df
-        for j, (kind, payload) in enumerate(x for x in layout if x[0] == "bag"):
-            bag_name, head, item = payload
-            df = df.withColumn(bag_name, F.explode(df[bag_name]))
-            elem = df.schema[bag_name].dataType
-            fields = list(elem.names)
-            if isinstance(item.alias, list):
-                flat_cols.extend(_flatten_as([df[bag_name][fld] for fld in fields], item.alias))
-            elif isinstance(item.alias, str) and len(fields) == 1:
-                # FLATTEN(pipe.col) AS name — single flattened field
-                flat_cols.append(df[bag_name][fields[0]].alias(item.alias))
-            else:
-                for fld in fields:
-                    out_name = fld if fld not in seen else f"{head}::{fld}"
-                    seen.add(out_name)
-                    flat_cols.append(df[bag_name][fld].alias(out_name))
-        return Relation(df.select(*selects, *flat_cols))
-
     def _nested_agg(self, e, g: GroupedInfo, pipes: dict[str, "_Pipe"]) -> Column:
-        if isinstance(e, G.Col) and not (e.name == "group" or e.name.startswith("group.")):
+        if isinstance(e, G.Col) and not _is_group_ref(e):
             head, _, rest = e.name.partition(".")
             if head in pipes:
-                return self._pipe_bag(head, rest or None, g, pipes)
+                return self._pipe_bag(pipes[head], rest or None, g)
         if isinstance(e, G.Bin):
             return _binop(e.op, self._nested_agg(e.left, g, pipes), self._nested_agg(e.right, g, pipes))
         if isinstance(e, (G.Num, G.Str)):
@@ -3523,8 +3138,9 @@ class PigTranslator:
             # array pipe, or a DISTINCT over whole tuples (distinct
             # aggregates would dedupe one field's values, not the
             # tuples). Aggregate over the assembled group bag — the
-            # reducer-bag footprint Pig uses for these statements.
-            bag = self._pipe_bag(head, None, g, pipes)
+            # reducer-bag footprint Pig uses for these statements. Only
+            # a LIMIT makes the bag's order matter.
+            bag = self._pipe_bag(base, None, g, ordered=base.limited)
             elem = (
                 g.child.df.limit(0).groupBy().agg(bag.alias("__pb")).schema["__pb"].dataType.elementType
             )
@@ -3810,7 +3426,7 @@ class PigTranslator:
             return None
         head, _, rest = e.args[0].name.partition(".")
         if pipes and head in pipes:
-            bag = self._pipe_bag(head, rest or None, g, pipes)
+            bag = self._pipe_bag(pipes[head], rest or None, g)
         elif head == g.child_alias:
             child = g.child
             if rest:

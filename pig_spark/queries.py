@@ -1793,7 +1793,7 @@ def q107_latin_multi_stitch(spark: SparkSession, sf: str) -> DataFrame:
     (row_number by nationkey; rank by name DESC) and the cross product
     lowers to a null-safe equi-join on the group key — co-partitioned
     with the window exchanges, never a global cartesian
-    (translate.py _foreach_multi_over; closes the r3 verdict's nested
+    (translate.py _cross_rows; closes the r3 verdict's nested
     corner #2)."""
     from .latin import run
 

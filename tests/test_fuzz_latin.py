@@ -370,6 +370,8 @@ def _udf_file() -> str:
 def _norm(v):
     if isinstance(v, float):
         return f"{v:.9g}"
+    if isinstance(v, tuple):  # a struct: Spark Row, DuckDB row
+        return str(tuple(_norm(x) for x in v))
     return str(v)
 
 
@@ -477,20 +479,20 @@ def _nested_order(rng):
     return ", ".join(lat), ", ".join(sql)
 
 
-def _gen_nested(rng, path, i):
-    """One nested-FOREACH script and its SQL twin. Returns (script,
-    sql, ordered): ``ordered`` is true when a GENERATEd bag has a
-    defined order (its SQL twin carries the position). Stratified by
-    case number: even cases lead with ORDER + LIMIT, so the random ops
-    after it replay on the sliced bag; the consumer cycles through
-    aggregates, the bag and FLATTEN."""
+def _nested_chain(rng, i, cols, part, keys):
+    """A random FILTER / ORDER / LIMIT / DISTINCT chain over ``r`` and
+    its SQL twin as CTEs over the ``cols`` tuple (``part`` is the
+    window's PARTITION BY clause, ``keys`` the group key columns).
+    Returns (statements, ctes, last pipe, SQL order of its bag or
+    None). Even cases lead with ORDER + LIMIT, so the random ops after
+    it replay on the sliced bag."""
     kinds = ["FILTER", "ORDER", "LIMIT", "DISTINCT"]
     plan = [rng.choices(kinds, weights=[4, 3, 3, 1])[0] for _ in range(rng.randint(1, 3))]
     if i % 2 == 0:
         plan = ["FILTER"] * rng.randint(0, 1) + ["ORDER", "LIMIT"] + plan
     else:
         plan = [rng.choice(["FILTER", "ORDER", "DISTINCT"])] + plan
-    stmts, ctes = [], ["s0 AS (SELECT k, id, a, b FROM r)"]
+    stmts, ctes = [], [f"s0 AS (SELECT {cols} FROM r)"]
     src, order = "r", None
     for step, kind in enumerate(plan, 1):
         if kind == "LIMIT" and order is None:
@@ -499,8 +501,8 @@ def _gen_nested(rng, path, i):
             n = rng.randint(1, 4)
             stmts.append(f"s{step} = LIMIT {src} {n};")
             ctes.append(
-                f"s{step} AS (SELECT k, id, a, b FROM s{step - 1} QUALIFY "
-                f"row_number() OVER (PARTITION BY k ORDER BY {order}) <= {n})"
+                f"s{step} AS (SELECT {cols} FROM s{step - 1} QUALIFY "
+                f"row_number() OVER ({part}ORDER BY {order}) <= {n})"
             )
         elif kind == "ORDER":
             lat, sql = _nested_order(rng)
@@ -513,13 +515,21 @@ def _gen_nested(rng, path, i):
             stmts.append(f"s{step} = FILTER {src} BY {lp.format(v=v, s=s)};")
             ctes.append(f"s{step} AS (SELECT * FROM s{step - 1} WHERE {sp.format(v=v, s=s)})")
         else:
-            # DISTINCT's output order is its own (Pig sorts the
-            # distinct bag): LIMIT waits for the next ORDER
+            # the distinct bag iterates in full-tuple order (Pig's
+            # DistinctDataBag); the group keys are constant within it
             stmts.append(f"s{step} = DISTINCT {src};")
             ctes.append(f"s{step} AS (SELECT DISTINCT * FROM s{step - 1})")
-            order = None
+            order = ", ".join(f"{c} ASC NULLS FIRST" for c in cols.split(", ") if c not in keys)
         src = f"s{step}"
-    last = src
+    return stmts, ctes, src, order
+
+
+def _gen_nested(rng, path, i):
+    """One nested-FOREACH script and its SQL twin. Returns (script,
+    sql, ordered): ``ordered`` is true when a GENERATEd bag has a
+    defined order (its SQL twin carries the position). The consumer
+    cycles through aggregates, the bag and FLATTEN."""
+    stmts, ctes, last, order = _nested_chain(rng, i, "k, id, a, b", "PARTITION BY k ", ("k",))
     groups = "gk AS (SELECT DISTINCT k FROM r)"
     consumer = i % 3
     if consumer == 0:
@@ -550,18 +560,106 @@ def _gen_nested(rng, path, i):
     return script, sql, ordered
 
 
-def _nested_bag_rows(got, want_rows, ordered):
-    """Bag consumer: Spark's (kk, bag) rows vs the SQL twin's one row
-    per element (an element-less LEFT JOIN row for an empty bag) —
-    sequences when the bag is ordered, sorted multisets otherwise."""
+# two-key and GROUP ALL groupings of the (k, k2, id, a, b) table, and
+# the GENERATE heads over them: (latin, SQL twin over the gk groups)
+N_NESTED_GROUPS = 15
+_NESTED_HEADS = {
+    ("k", "k2"): [
+        ("group", '(gk.k, gk.k2) AS "group"'),
+        ("FLATTEN(group) AS (p, q:long)", "gk.k AS p, CAST(gk.k2 AS BIGINT) AS q"),
+        ("group.$0 AS g0", "gk.k AS g0"),
+    ],
+    (): [
+        ("group", "'all' AS \"group\""),
+        ("FLATTEN(group) AS (p)", "'all' AS p"),
+    ],
+}
+
+
+def _gen_nested_group(rng, path, i):
+    """One nested-FOREACH case over GROUP r BY (k, k2) or GROUP r ALL,
+    its head one of ``group``, ``FLATTEN(group) AS (...)`` and
+    ``group.$0``, its consumer aggregates, the bag, FLATTEN, an
+    aggregate beside a FLATTEN, or ORDER + Stitch(s, Over(s.a,
+    'sum(long)')) twinned with a SQL window. Returns (script, sql,
+    ordered, number of head columns)."""
+    keys = [("k", "k2"), ()][i % 2]
+    head, head_sql = rng.choice(_NESTED_HEADS[keys])
+    cols = "k, k2, id, a, b"
+    on = " AND ".join(f"gk.{c} = t.{c}" for c in keys) or "TRUE"
+    tup = "t.k, t.k2, t.id, t.a, t.b"
+    consumer = ["agg", "bag", "flatten", "mixed", "over"][i % 5]
+    if consumer == "over":
+        stmts, ctes, last = [], [f"s0 AS (SELECT {cols} FROM r)"], "r"
+        if rng.random() < 0.5:
+            lp, sp = rng.choice(_NESTED_PREDS)
+            v, s = rng.randint(1, 8), rng.choice("xyz")
+            stmts.append(f"s1 = FILTER r BY {lp.format(v=v, s=s)};")
+            ctes.append(f"s1 AS (SELECT * FROM s0 WHERE {sp.format(v=v, s=s)})")
+            last = "s1"
+        lat, order = _nested_order(rng)
+        stmts.append(f"s9 = ORDER {last} BY {lat};")
+        ctes.append(f"s9 AS (SELECT * FROM {'s0' if last == 'r' else last})")
+        last = "s9"
+    else:
+        part = f"PARTITION BY {', '.join(keys)} " if keys else ""
+        stmts, ctes, last, order = _nested_chain(rng, i, cols, part, keys)
+    ordered = False
+    if consumer == "agg":
+        gen = f"COUNT({last}) AS n, SUM({last}.a) AS sa, MIN({last}.b) AS mb, MAX({last}.a) AS xa"
+        group_by = f" GROUP BY {', '.join('gk.' + c for c in keys)}" if keys else ""
+        tail = (
+            f"SELECT {head_sql}, COUNT(t.k) AS n, SUM(t.a) AS sa, MIN(t.b) AS mb, MAX(t.a) AS xa "
+            f"FROM gk LEFT JOIN {last} t ON {on}{group_by}"
+        )
+    elif consumer == "bag":
+        gen = f"{last} AS bag"
+        gpart = f"PARTITION BY {', '.join('gk.' + c for c in keys)} " if keys else ""
+        pos = f"row_number() OVER ({gpart}ORDER BY {order})" if order else "0"
+        tail = f"SELECT {head_sql}, {tup}, {pos} AS pos FROM gk LEFT JOIN {last} t ON {on}"
+        ordered = order is not None
+    elif consumer == "flatten":
+        gen = f"FLATTEN({last})"
+        tail = f"SELECT {head_sql}, {tup} FROM gk JOIN {last} t ON {on}"
+    elif consumer == "mixed":
+        gen = f"COUNT({last}) AS n, FLATTEN({last})"
+        counts = (
+            f"JOIN (SELECT {', '.join(keys)}, COUNT(*) AS n FROM {last} GROUP BY {', '.join(keys)}) c "
+            f"ON {' AND '.join(f'c.{k} = t.{k}' for k in keys)}"
+            if keys else f"CROSS JOIN (SELECT COUNT(*) AS n FROM {last}) c"
+        )
+        tail = f"SELECT {head_sql}, c.n, {tup} FROM gk JOIN {last} t ON {on} {counts}"
+    else:
+        gen = f"FLATTEN(Stitch({last}, Over({last}.a, 'sum(long)')))"
+        opart = f"PARTITION BY {', '.join('t.' + c for c in keys)} " if keys else ""
+        tail = (
+            f"SELECT {head_sql}, {tup}, SUM(t.a) OVER ({opart}ORDER BY {order} ROWS BETWEEN "
+            f"UNBOUNDED PRECEDING AND CURRENT ROW) AS result FROM gk JOIN {last} t ON {on}"
+        )
+    grp = f"GROUP r BY ({', '.join(keys)})" if keys else "GROUP r ALL"
+    script = (
+        f"r = LOAD '{path}' USING ParquetLoader();\n"
+        f"g = {grp};\n"
+        "out = FOREACH g {\n    " + "\n    ".join(stmts) + f"\n    GENERATE {head}, {gen};\n}};"
+    )
+    groups = f"gk AS (SELECT DISTINCT {', '.join(keys)} FROM r)" if keys else "gk AS (SELECT 1 AS one)"
+    sql = "WITH " + ", ".join(["r AS (SELECT * FROM r2)", groups, *ctes]) + " " + tail
+    return script, sql, ordered, 2 if head.endswith("(p, q:long)") else 1
+
+
+def _nested_bag_rows(got, want_rows, ordered, nh=1):
+    """Bag consumer: Spark's (head, bag) rows vs the SQL twin's one row
+    per element — the ``nh`` head columns, the tuple, its position (an
+    element-less LEFT JOIN row for an empty bag) — sequences when the
+    bag is ordered, sorted multisets otherwise."""
     import collections
 
     want = collections.defaultdict(list)
     for r in want_rows:
-        if r[1] is None:
-            want[r[0]]
+        if r[nh] is None:
+            want[tuple(r[:nh])]
         else:
-            want[r[0]].append((r[5], tuple(_norm(v) for v in r[1:5])))
+            want[tuple(r[:nh])].append((r[-1], tuple(_norm(v) for v in r[nh:-1])))
     want = {
         kk: [t for _, t in sorted(els)] if ordered else sorted(t for _, t in els)
         for kk, els in want.items()
@@ -573,41 +671,56 @@ def _nested_bag_rows(got, want_rows, ordered):
     return have, want
 
 
+def _nested_case_diff(spark, con, script, sql, ordered, nh=1):
+    """Run one nested case on Spark and its twin on DuckDB: None when
+    their column names and rows agree, else the difference."""
+    try:
+        df = run(spark, script)["out"].df
+        cols = df.columns
+        got_rows = df.collect()
+        duck_rel = con.execute(sql)
+        dcols = [d[0] for d in duck_rel.description]
+        want_rows = duck_rel.fetchall()
+        if "bag" in cols:
+            got, want = _nested_bag_rows(
+                [(tuple(r[:nh]), r["bag"]) for r in got_rows], want_rows, ordered, nh
+            )
+            got, want = (cols[:nh], got), (dcols[:nh], want)
+        else:
+            got = (cols, sorted(tuple(_norm(v) for v in r) for r in got_rows))
+            want = (dcols, sorted(tuple(_norm(v) for v in r) for r in want_rows))
+    except Exception as ex:  # pragma: no cover - diagnostic path
+        return f"raised {type(ex).__name__}: {ex}\n{script}\n{sql}"
+    if got != want:
+        return f"diff\n{script}\n{sql}\nspark: {got}\nduck:  {want}"
+    return None
+
+
 def test_latin_nested_fuzz_differential(spark, tmp_path):
     """Nested FOREACH scripts over nullable columns: each statement
     chain runs through the nested lowerings (flat aggregates, top-k
     window, collected bags with ops replayed after the LIMIT) and must
     equal the SQL twin built from FILTER clauses and row_number
-    windows."""
+    windows. Then the same chains under GROUP BY (k, k2) and GROUP
+    ALL, with ``group`` heads, mixed consumers and Over windows."""
     rng = random.Random(NESTED_SEED)
     path = str(tmp_path / "nested.parquet")
+    path2 = str(tmp_path / "nested2.parquet")
     con = duckdb.connect()
     rows = _nested_rows(rng)
     con.execute("CREATE TABLE r (k INTEGER, id INTEGER, a INTEGER, b VARCHAR)")
     con.executemany("INSERT INTO r VALUES (?, ?, ?, ?)", rows)
     con.execute(f"COPY r TO '{path}' (FORMAT PARQUET)")
+    con.execute("CREATE TABLE r2 AS SELECT k, id % 2 AS k2, id, a, b FROM r")
+    con.execute(f"COPY r2 TO '{path2}' (FORMAT PARQUET)")
     failures = []
     for i in range(N_NESTED):
-        script, sql, ordered = _gen_nested(rng, path, i)
-        try:
-            df = run(spark, script)["out"].df
-            cols = df.columns
-            got_rows = df.collect()
-            duck_rel = con.execute(sql)
-            dcols = [d[0] for d in duck_rel.description]
-            want_rows = duck_rel.fetchall()
-            if "bag" in cols:
-                got, want = _nested_bag_rows(
-                    [(r["kk"], r["bag"]) for r in got_rows], want_rows, ordered
-                )
-            else:
-                got = sorted(tuple(_norm(v) for v in r) for r in got_rows)
-                order = [dcols.index(c) for c in cols]
-                want = sorted(tuple(_norm(r[j]) for j in order) for r in want_rows)
-        except Exception as ex:  # pragma: no cover - diagnostic path
-            failures.append(f"case {i} raised {type(ex).__name__}: {ex}\n{script}\n{sql}")
-            continue
-        if got != want:
-            failures.append(f"case {i} diff\n{script}\n{sql}\nspark: {got}\nduck:  {want}")
+        diff = _nested_case_diff(spark, con, *_gen_nested(rng, path, i))
+        if diff:
+            failures.append(f"case {i} {diff}")
+    for i in range(N_NESTED_GROUPS):
+        diff = _nested_case_diff(spark, con, *_gen_nested_group(rng, path2, i))
+        if diff:
+            failures.append(f"group case {i} {diff}")
     con.close()
     assert not failures, "\n\n".join(failures)

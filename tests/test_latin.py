@@ -725,7 +725,7 @@ def _split_multistore(spark, sf_dir, tmp_path):
 
 
 # ----------------------------------------------------------------------
-# nested ORDER+LIMIT (r2: translate._foreach_nested_topk)
+# nested ORDER+LIMIT (translate._pipe_rows: the per-group top-k window)
 # ----------------------------------------------------------------------
 
 
@@ -2721,3 +2721,137 @@ def test_load_as_over_typed_parquet(spark, tmp_path):
     assert [tuple(r) for r in df.collect()] == [(1, None, Decimal("1.5"), None, "x", None)]
     # the explicit CAST of the same long reads null too
     assert [tuple(r) for r in rels["c"].df.collect()] == [(None,)]
+
+
+# `group` in a nested GENERATE, per _group_selects: FLATTEN(group) AS
+# names and casts the key fields, a tuple key is ONE struct field, and
+# GROUP ALL's group is the literal 'all' — whichever lowering the
+# block's consumer takes (flat row frame, grouped aggregate, top-k
+# window, collected bags)
+_GROUP_ROWS = [(1, 1, 5), (1, 1, -1), (1, 2, 7), (2, 3, 0), (2, 3, 9)]
+_GROUP_HEADS = {
+    # name: (GROUP clause, GENERATE head, group key, head values, head schema)
+    "key1_as": ("GROUP a BY x", "FLATTEN(group) AS (p:long)",
+                lambda r: r[0], lambda r: (r[0],), [("p", "bigint")]),
+    "key2_as": ("GROUP a BY (x, y)", "FLATTEN(group) AS (p:long, q)",
+                lambda r: r[:2], lambda r: r[:2], [("p", "bigint"), ("q", "int")]),
+    "tuple": ("GROUP a BY (x, y)", "group",
+              lambda r: r[:2], lambda r: (r[:2],), [("group", "struct<x:int,y:int>")]),
+    "all": ("GROUP a ALL", "group", lambda r: (), lambda r: ("all",), [("group", "string")]),
+}
+_XYZ = [("x", "int"), ("y", "int"), ("z", "int")]
+_GROUP_CONSUMERS = {
+    "filter": ("s = FILTER a BY z > 0;", "FLATTEN(s)", _XYZ),
+    "aggregate": ("s = FILTER a BY z > 0;", "COUNT(s) AS n, SUM(s.z) AS sz", [("n", "bigint"), ("sz", "bigint")]),
+    "topk": ("o = ORDER a BY z DESC; s = LIMIT o 1;", "FLATTEN(s)", _XYZ),
+    "flatten": ("s = FILTER a BY z > 0; t = FILTER a BY z > 6;", "FLATTEN(s), FLATTEN(t)",
+                _XYZ + [("t::x", "int"), ("t::y", "int"), ("t::z", "int")]),
+}
+
+
+def _group_shape_rows(key, head, consumer):
+    groups: dict = {}
+    for r in _GROUP_ROWS:
+        groups.setdefault(key(r), []).append(r)
+    out = []
+    for rs in groups.values():
+        h, s = head(rs[0]), [r for r in rs if r[2] > 0]
+        if consumer == "filter":
+            out += [h + r for r in s]
+        elif consumer == "aggregate":
+            out.append(h + (len(s), sum(r[2] for r in s)))
+        elif consumer == "topk":
+            out.append(h + max(rs, key=lambda r: r[2]))
+        else:
+            out += [h + r + t for r in s for t in rs if t[2] > 6]
+    return sorted(out, key=str)
+
+
+@pytest.mark.parametrize("consumer", sorted(_GROUP_CONSUMERS))
+@pytest.mark.parametrize("head", sorted(_GROUP_HEADS))
+def test_nested_group_projection(spark, tmp_path, head, consumer):
+    """Every nested-FOREACH lowering projects ``group`` as
+    _group_selects does: schema and rows for the single- and two-key
+    ``FLATTEN(group) AS``, the tuple ``group`` and GROUP ALL, each
+    beside a filter, aggregate, top-k and two-FLATTEN consumer."""
+    src = tmp_path / "xyz.tsv"
+    src.write_text("".join(f"{x}\t{y}\t{z}\n" for x, y, z in _GROUP_ROWS))
+    grp, gen_head, key, values, schema = _GROUP_HEADS[head]
+    stmts, gen, cols = _GROUP_CONSUMERS[consumer]
+    df = run(spark, f"""
+        a = LOAD '{src}' AS (x:int, y:int, z:int);
+        g = {grp};
+        b = FOREACH g {{ {stmts} GENERATE {gen_head}, {gen}; }};
+    """)["b"].df
+    assert df.dtypes == schema + cols
+    got = sorted((tuple(tuple(v) if isinstance(v, tuple) else v for v in r) for r in df.collect()), key=str)
+    assert got == _group_shape_rows(key, values, consumer)
+
+
+def test_nested_describe_reads_the_pipe_plan(spark, tmp_path, capsys):
+    """DESCRIBE of a nested alias prints the tuple its lowering builds:
+    a whole-tuple pipe carries every field, an inner FOREACH its
+    generated fields, and a positional projection its source field's
+    name and type."""
+    src = tmp_path / "s.tsv"
+    src.write_text("a\t20\t3.5\nb\t30\t2.5\nb\t31\t2.6\n")
+    run(spark, f"""
+        A = LOAD '{src}' AS (name:chararray, age:long, gpa:double);
+        B = GROUP A BY name;
+        C = FOREACH B {{
+            D = FILTER A BY age > 0;
+            P = FOREACH D GENERATE age * 2 AS d2, name;
+            E = DISTINCT A.$1;
+            GENERATE group, COUNT(D) AS n, SUM(P.d2) AS s, COUNT(E) AS e;
+        }};
+        describe C::D;
+        describe C::P;
+        describe C::E;
+    """)
+    out = capsys.readouterr().out
+    assert "C::D: {(name: chararray, age: long, gpa: double)}" in out
+    assert "C::P: {(d2: long, name: chararray)}" in out
+    assert "C::E: {(age: long)}" in out
+
+
+def test_nested_distinct_bag_iterates_sorted(spark, tmp_path):
+    """A nested DISTINCT's bag iterates in full-tuple sorted order
+    wherever it is consumed (Pig's DistinctDataBag): with no ORDER
+    before it, after an ORDER, and replayed after a LIMIT — and a LIMIT
+    right after it takes the first n of that order."""
+    src = tmp_path / "t.tsv"
+    src.write_text("1\tc\n1\ta\n1\tc\n1\tb\n")
+    base = f"a = LOAD '{src}' AS (k:int, v:chararray); g = GROUP a BY k;"
+    cases = {
+        "d = DISTINCT a;": ["a", "b", "c"],
+        "o = ORDER a BY v DESC; d = DISTINCT o;": ["a", "b", "c"],
+        "o = ORDER a BY v DESC; l = LIMIT o 3; d = DISTINCT l;": ["b", "c"],
+    }
+    for stmts, want in cases.items():
+        rels = run(spark, base + f"r = FOREACH g {{ {stmts} GENERATE d AS bag; }};")
+        assert [t.v for t in rels["r"].df.first()["bag"]] == want, stmts
+    rels = run(spark, base + "r = FOREACH g { d = DISTINCT a; l = LIMIT d 2; GENERATE FLATTEN(l); };")
+    assert sorted(r.v for r in rels["r"].df.collect()) == ["a", "b"]
+
+
+def test_nested_one_lowering_consumers(spark, tmp_path):
+    """Shapes the separate nested lowerings got wrong: FLATTEN of one
+    pipe beside an aggregate over a LIMITed pipe (it came out as a bag
+    column), FLATTEN(d.f) over a DISTINCT pipe (it deduplicated f, not
+    the tuples), and COUNT over a LIMITed inner-FOREACH pipe (it counted
+    the group key, not the pipe's first field)."""
+    src = tmp_path / "c.tsv"
+    src.write_text("1\t5\ta\n1\t7\ta\n1\t3\tb\n2\t4\tc\n")
+    base = f"a = LOAD '{src}' AS (k:int, z:int, v:chararray); g = GROUP a BY k;"
+    cases = {
+        "s = FILTER a BY z > 3; o = ORDER a BY z DESC; l = LIMIT o 1; GENERATE group, SUM(l.z) AS top, FLATTEN(s);":
+            (["group", "top", "k", "z", "v"], [(1, 7, 1, 5, "a"), (1, 7, 1, 7, "a"), (2, 4, 2, 4, "c")]),
+        "d = DISTINCT a; GENERATE group, FLATTEN(d.v);":
+            (["group", "v"], [(1, "a"), (1, "a"), (1, "b"), (2, "c")]),
+        "p = FOREACH a GENERATE (z > 4 ? z : null) AS w, v; o = ORDER p BY v; l = LIMIT o 3; "
+        "GENERATE group, COUNT(l) AS n;":
+            (["group", "n"], [(1, 2), (2, 0)]),
+    }
+    for gen, (cols, rows) in cases.items():
+        df = run(spark, base + f"b = FOREACH g {{ {gen} }};")["b"].df
+        assert (df.columns, sorted(map(tuple, df.collect()))) == (cols, rows), gen

@@ -227,3 +227,39 @@ def test_catalog_loads_go_through_sources_load():
     nanos probe, Pig's session semantics): ``queries.py`` calls no
     ``spark.read.`` reader directly."""
     assert "spark.read." not in (PKG / "queries.py").read_text()
+
+
+def test_one_group_projection():
+    """A grouped GENERATE projects ``group`` through ONE function,
+    ``translate._group_selects``: the nested-FOREACH lowerings each had
+    a hand-written copy, and they disagreed (a tuple key as one struct
+    or two loose columns, ``FLATTEN(group) AS`` ignored or crashing,
+    GROUP ALL's 'all' dropped). GROUP ALL's ``lit("all")``, a
+    ``.name == "group"`` test and a ``startswith("group.")`` test may
+    appear only in ``_group_selects`` and its predicate
+    ``_is_group_ref``."""
+    path = PKG / "latin" / "translate.py"
+    allowed = {"_group_selects", "_is_group_ref"}
+    offenders = []
+
+    def hits(node) -> bool:
+        if isinstance(node, ast.Call):
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            args = [a.value for a in node.args if isinstance(a, ast.Constant)]
+            return (name == "lit" and args == ["all"]) or (name == "startswith" and args == ["group."])
+        if isinstance(node, ast.Compare) and isinstance(node.left, ast.Attribute) and node.left.attr == "name":
+            return any(isinstance(c, ast.Constant) and c.value == "group" for c in node.comparators)
+        return False
+
+    def walk(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                walk(child, child.name if scope is None or child.name in allowed else scope)
+                continue
+            if hits(child) and scope not in allowed:
+                offenders.append(f"{path.relative_to(REPO)}:{child.lineno} (in {scope})")
+            walk(child, scope)
+
+    walk(ast.parse(path.read_text(), filename=str(path)), None)
+    assert not offenders, "group projection outside _group_selects:\n" + "\n".join(offenders)
