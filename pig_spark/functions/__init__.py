@@ -3,14 +3,16 @@
 Mirrors Pig's builtin package (src/org/apache/pig/builtin/, 188 files —
 SURVEY §2.4) on pyspark.sql.functions, plus training-data-pipeline
 extensions (text analysis, dedup, similarity). Aggregates (COUNT, SUM,
-AVG, MIN, MAX, COUNT_STAR — all Algebraic in Pig, COUNT.java:54) map
-straight to Spark aggregate expressions, which already do map-side
-partial aggregation (Pig's combiner).
+AVG, MIN, MAX, COUNT_STAR, COR, COV — Algebraic in Pig, COUNT.java:54)
+are the row lowering of ``pig_spark.aggregates``, Spark aggregate
+expressions that already do map-side partial aggregation (Pig's
+combiner).
 """
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .. import aggregates as _agg
 from . import bags, datetime, dedup, math, ml, piggybank, similarity, string, text
 from .bags import *  # noqa: F401,F403
 from .testudf import *  # noqa: F401,F403 — reference e2e test-UDF jar, engine-side
@@ -19,21 +21,22 @@ from .math import *  # noqa: F401,F403
 from .piggybank import *  # noqa: F401,F403
 from .string import *  # noqa: F401,F403
 
-# --- aggregates (builtin/COUNT.java, SUM.java, AVG.java, MIN/MAX, COR, COV)
-COUNT = F.count  # counts non-null first field (COUNT.java:40-49)
+# --- aggregates (builtin/COUNT.java, SUM.java, AVG.java, MIN/MAX, COR,
+# COV): the row lowering of the one aggregate table (aggregates.BUILTINS)
+COUNT = _agg.BUILTINS["count"].rows  # counts non-null values (COUNT.java:40-49)
 
 
 def COUNT_STAR(col: Column | str = "*") -> Column:
     """COUNT_STAR.java — counts all tuples incl. nulls."""
-    return F.count(F.lit(1))
+    return _agg.over_rows("count_star")
 
 
-SUM = F.sum
-AVG = F.avg
-MIN = F.min
-MAX = F.max
-COR = F.corr
-COV = F.covar_samp
+SUM = _agg.BUILTINS["sum"].rows
+AVG = _agg.BUILTINS["avg"].rows
+MIN = _agg.BUILTINS["min"].rows
+MAX = _agg.BUILTINS["max"].rows
+COR = _agg.BUILTINS["cor"].rows  # Pearson's r of one pair
+COV = _agg.BUILTINS["cov"].rows  # population covariance of one pair (COV.java)
 
 
 def UniqueID() -> Column:

@@ -25,6 +25,7 @@ from pyspark.sql import Window as SparkWindow
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructType
 
+from .. import aggregates
 from .. import functions as PF
 from .. import pigtypes
 from ..operators.nested import bag_distinct, bag_filter, bag_limit, bag_sort, topk_per_group
@@ -60,8 +61,6 @@ LOADER_FORMAT = {
     # collected-group path keys on the clause, not the loader)
     "simplecollectableloader": "pigstorage",
 }
-
-AGG_FUNCS = {"count", "count_star", "sum", "avg", "min", "max"}
 
 # jar bundles whose classes are implemented ENGINE-SIDE — REGISTERing
 # them succeeds without the file (functions/piggybank.py,
@@ -605,56 +604,44 @@ def _pick_field(fields: list[tuple[str, str]], ref: str, pipe: str) -> tuple[str
     return f.split("::")[-1], dict(fields)[f]
 
 
+def _grouped_builtin(e, alias: str) -> str | None:
+    """The builtin aggregate a GENERATE item over a GROUP of ``alias``
+    calls: a one-bag builtin, COR/COV over fields of the grouped bag, or
+    SIZE(bag) — BagSize ≡ COUNT_STAR. None for any other item."""
+    if not isinstance(e, G.Call):
+        return None
+    fn = e.func.lower()
+    if fn in aggregates.ONE_BAG:
+        return fn
+    if fn in aggregates.PAIRWISE and len(e.args) >= 2:
+        if all(isinstance(a, G.Col) and a.name.startswith(alias + ".") for a in e.args):
+            return fn
+    elif fn in ("size", "arity") and len(e.args) == 1 and isinstance(e.args[0], G.Col) and e.args[0].name == alias:
+        return "count_star"
+    return None
+
+
 def _fill_empty(df: DataFrame, fill: dict[str, str]) -> DataFrame:
-    """Coalesce the COUNT columns to 0 and the bag columns to {} that a
-    group missing from a pipe's frame leaves null (Pig aggregates the
-    group's empty bag)."""
+    """Coalesce the columns a group missing from a pipe's frame leaves
+    null to an aggregate's value over an empty bag, or {} (``"bag"``)."""
     for n, kind in fill.items():
-        empty = F.lit(0).cast("long") if kind == "count" else F.array().cast(df.schema[n].dataType)
+        empty = F.array().cast(df.schema[n].dataType) if kind == "bag" else aggregates.empty(kind)
         df = df.withColumn(n, F.coalesce(F.col(n), empty))
     return df
 
 
-def _pairwise_stats(fn: str, argrefs: list[str]) -> Column:
-    """COR/COV over collected bag-value arrays (builtin/COR.java:66-101
-    exec + computeAll; COV.java:60-95): for each argument pair i<j emit
-    (var_i, var_j, stat) — Pig's output bag — with the running sums of
-    computeAll's dual-iterator walk computed via array aggregates over
-    the zipped arrays, pure codegen. Pig returns null for the whole
-    bag when a pair's iterators misalign (computeAll throws, exec
-    catches); here that is a size mismatch → null result."""
-    eq = F.lit(True)
-    for r in argrefs[1:]:
-        eq = eq & (F.size(F.col(argrefs[0])) == F.size(F.col(r)))
-    pairs = []
-    for i in range(len(argrefs)):
-        for j in range(i + 1, len(argrefs)):
-            a = F.transform(F.col(argrefs[i]), lambda x: x.cast("double"))
-            b = F.transform(F.col(argrefs[j]), lambda x: x.cast("double"))
-            n = F.size(F.col(argrefs[i])).cast("double")
-            sx = F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x)
-            sy = F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x)
-            sxx = F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
-            syy = F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x)
-            sxy = F.aggregate(
-                F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-            )
-            if fn == "cor":
-                # (n·Σxy − Σx·Σy) / √((n·Σx² − (Σx)²)(n·Σy² − (Σy)²))
-                stat = (n * sxy - sx * sy) / F.sqrt(
-                    (n * sxx - sx * sx) * (n * syy - sy * sy)
-                )
-            else:
-                # COV.java: (n·Σxy − Σx·Σy) / n²  (population covariance)
-                stat = (n * sxy - sx * sy) / (n * n)
-            pairs.append(
-                F.struct(
-                    F.lit(f"var{i}").alias("var_x"),
-                    F.lit(f"var{j}").alias("var_y"),
-                    stat.alias(fn),
-                )
-            )
-    return F.when(eq, F.array(*pairs))
+def _key_join(left: DataFrame, right: DataFrame, keys: list[str], how: str = "inner") -> DataFrame:
+    """Join two frames on the group keys null-safely — a null key is one
+    group, as in Pig's GROUP — keeping ``left``'s key columns (their
+    non-null side for a full outer join); a cross join without keys."""
+    if not keys:
+        return left.crossJoin(right)
+    kn = [f"__k{q}" for q in range(len(keys))]
+    right = right.withColumnsRenamed(dict(zip(keys, kn)))
+    out = left.join(right, [left[k].eqNullSafe(right[n]) for k, n in zip(keys, kn)], how)
+    if how == "full_outer":
+        out = out.withColumns({k: F.coalesce(left[k], right[n]) for k, n in zip(keys, kn)})
+    return out.drop(*kn)
 
 
 class PigTranslator:
@@ -1532,7 +1519,7 @@ class PigTranslator:
             raw = self.spark.read.text(op.path)
             body = F.expr("substring(value, 2, greatest(length(value) - 3, 0))")
             arr = F.transform(F.split(body, ","), lambda x: F.trim(x))
-            n_row = raw.agg(F.max(F.size(arr)).alias("n")).first()
+            n_row = raw.agg(aggregates.over_rows("max", [F.size(arr)]).alias("n")).first()
             n = int(n_row["n"]) if n_row is not None and n_row["n"] is not None else 0
             return raw.select(
                 *[F.element_at(arr, i + 1).alias(f"_c{i}") for i in range(max(n, 1))]
@@ -1898,44 +1885,17 @@ class PigTranslator:
             return False
         return True
 
-    def _is_agg_expr(self, e, g: GroupedInfo | None = None) -> bool:
+    def _is_agg_expr(self, e, g: GroupedInfo) -> bool:
         if self._hive_udaf(e) is not None:
             # DEFINE f HiveUDAF('name'): an aggregate call in Pig
             # (HiveUDAF.java extends AlgebraicEvalFunc) — keep the
             # GENERATE algebraic so it lowers to a grouped agg
             return True
-        if isinstance(e, G.Call) and e.func.lower() in AGG_FUNCS:
-            return True
-        if (
-            g is not None
-            and isinstance(e, G.Call)
-            and e.func.lower() in ("cor", "cov")
-            and len(e.args) >= 2
-            and all(
-                isinstance(a, G.Col) and a.name.startswith(g.child_alias + ".")
-                for a in e.args
-            )
-        ):
-            # COR/COV over same-bag projections (builtin/COR.java,
-            # COV.java — Algebraic): aggregate, keep the GENERATE
-            # algebraic so it lowers to native corr/covar_pop
-            return True
-        if (
-            g is not None
-            and isinstance(e, G.Call)
-            and e.func.lower() in ("size", "arity")
-            and len(e.args) == 1
-            and isinstance(e.args[0], G.Col)
-            and e.args[0].name == g.child_alias
-        ):
-            # SIZE(bag) in a grouped FOREACH is an aggregate in Pig
-            # (BagSize ≡ COUNT_STAR) — keep the GENERATE algebraic
+        if _grouped_builtin(e, g.child_alias) is not None:
             return True
         if isinstance(e, G.Bin):
             return self._is_agg_expr(e.left, g) and self._is_agg_expr(e.right, g)
-        if isinstance(e, (G.Num, G.Str)):
-            return True
-        return False
+        return isinstance(e, (G.Num, G.Str))
 
     def _foreach_agg(self, op: G.Foreach, g: GroupedInfo) -> Relation:
         child = g.child
@@ -1969,7 +1929,7 @@ class PigTranslator:
             grouped = child.df.groupBy(*key_cols)
         else:
             grouped = child.df.groupBy()
-        out = grouped.agg(*aggs) if aggs else grouped.agg(F.count(F.lit(1)).alias("__n")).drop("__n")
+        out = grouped.agg(*aggs) if aggs else grouped.agg(aggregates.over_rows("count_star").alias("__n")).drop("__n")
         if flat_aggs:
             # FLATTEN(<bag-valued aggregate>) — e.g. FLATTEN(COR(A.x,
             # A.y)) in the reference corpus: explode the result bag
@@ -2227,7 +2187,7 @@ class PigTranslator:
         else:
             frame, sort = self._cross_rows(frames, splats, keys), None
         if agg is not None:
-            frame = _fill_empty(frame.join(agg, keys, "left") if keys else frame.crossJoin(agg), fill)
+            frame = _fill_empty(_key_join(frame, agg, keys, "left"), fill)
         if sort:
             order = [F.col(c).asc() if a else F.col(c).desc() for c, a in sort]
             if keys:
@@ -2245,18 +2205,12 @@ class PigTranslator:
         out = None
         for i, df, fields in frames:
             tmp = [f"__x{i}_{m}" for m in range(len(fields))]
-            kn = keys if out is None else [f"__k{q}" for q in range(len(keys))]
             df = df.select(
-                *[F.col(k).alias(n) for k, n in zip(keys, kn)],
+                *[F.col(k) for k in keys],
                 *[(F.col(c) if isinstance(c, str) else c).alias(t) for (_, c), t in zip(fields, tmp)],
             )
             splats[i] = (splats[i][0], [(n, t) for (n, _), t in zip(fields, tmp)])
-            if out is None:
-                out = df
-            elif keys:
-                out = out.join(df, [out[k].eqNullSafe(df[n]) for k, n in zip(keys, kn)]).drop(*kn)
-            else:
-                out = out.crossJoin(df)
+            out = df if out is None else _key_join(out, df, keys)
         return out
 
     def _nested_bags(self, items: list, g: GroupedInfo, pipes: dict, heads: list, flats: list[int]) -> tuple[DataFrame, dict]:
@@ -2328,13 +2282,11 @@ class PigTranslator:
         keyed on the group keys. An aggregate over a LIMIT pipe runs over
         that pipe's top-k survivors (one grouped frame per pipe,
         _topk_agg); COR/COV spanning LIMIT pipes zip their bounded bags
-        (_pairwise_stats); an expression combining aggregates splits
+        (aggregates.over_bag); an expression combining aggregates splits
         into leaves (_split_agg_leaves) and recombines over the joined
         frame; every other aggregate runs over the child (_nested_agg).
-        The frames stitch with full_outer equi-joins on the keys (AQE
-        broadcasts small sides). Returns the frame and ``{column: fill}``
-        for COUNT/bag columns a group missing from a pipe's frame leaves
-        null (Pig: 0 / {} over the empty bag)."""
+        The frames stitch with null-safe full_outer joins on the keys
+        (_key_join). Returns the frame and the ``_fill_empty`` map."""
         per_pipe: dict[str, list] = {}
         other, combos, pairs = [], [], []
         for name, e in aggs:
@@ -2342,13 +2294,13 @@ class PigTranslator:
             if not heads:
                 other.append((name, e))
             elif isinstance(e, G.Col) or (
-                isinstance(e, G.Call) and e.func.lower() in AGG_FUNCS and len(self._pipe_heads(e)) == 1
+                isinstance(e, G.Call) and e.func.lower() in aggregates.ONE_BAG and len(self._pipe_heads(e)) == 1
             ):
                 # one aggregate over one pipe, or GENERATE <pipe> (a bag)
                 per_pipe.setdefault(next(iter(heads)), []).append((name, e))
             elif (
                 isinstance(e, G.Call)
-                and e.func.lower() in ("cor", "cov")
+                and e.func.lower() in aggregates.PAIRWISE
                 and len(e.args) >= 2
                 and all(isinstance(a, G.Col) and a.name.partition(".")[0] in limited for a in e.args)
             ):
@@ -2365,6 +2317,10 @@ class PigTranslator:
                     refs.append(f"__mp{len(pairs)}_{ai}")
                     per_pipe.setdefault(ln, []).append((refs[-1], _SortedCollect(c)))
                 pairs.append((name, refs, e.func.lower()))
+            elif isinstance(e, G.Call) and e.func.lower() in aggregates.PAIRWISE:
+                # COR/COV over a LIMIT pipe and another pipe: the bags
+                # assemble over the group's rows and pair by position
+                other.append((name, e))
             else:
                 leaves: list = []
                 rewritten = self._split_agg_leaves(e, limited, leaves, len(combos))
@@ -2384,13 +2340,13 @@ class PigTranslator:
             for n, e in named:
                 if isinstance(e, G.Col):
                     fill[n] = "bag"
-                elif isinstance(e, G.Call) and e.func.lower() in ("count", "count_star"):
-                    fill[n] = "count"
+                elif isinstance(e, G.Call) and aggregates.BUILTINS[e.func.lower()].empty is not None:
+                    fill[n] = e.func.lower()
         grouped = child.groupBy(*[c.alias(n) for n, c in g.key_exprs])
         if other:
             parts.append(grouped.agg(*[self._nested_agg(e, g, pipes).alias(n) for n, e in other]))
         elif not parts:
-            parts.append(grouped.agg(F.count(F.lit(1)).alias("__n")).drop("__n"))
+            parts.append(grouped.agg(aggregates.over_rows("count_star").alias("__n")).drop("__n"))
         elif anchor and keys and any(pipes[ln].cond is not None for ln in per_pipe):
             # every frame comes from a FILTERed pipe: a group the FILTER
             # emptied is in none of them, yet Pig still emits it (empty
@@ -2400,13 +2356,14 @@ class PigTranslator:
         for p in parts[1:]:
             # full_outer: a group a pipe's FILTER emptied is absent from
             # that pipe's frame but present in the others
-            out = out.join(p, keys, "full_outer") if keys else out.crossJoin(p)
+            out = _key_join(out, p, keys, "full_outer")
         if len(parts) > 1 and keys:
             out = _fill_empty(out, fill)
         for name, rewritten in combos:
             out = out.withColumn(name, self._expr(rewritten, Relation(out)))
         for name, refs, fn in pairs:
-            out = out.withColumn(name, _pairwise_stats(fn, refs))
+            bags = [(F.col(r), out.schema[r].dataType.elementType, None) for r in refs]
+            out = out.withColumn(name, aggregates.over_bag(fn, bags))
         return out, fill
 
     def _strip_pipe_prefix(self, e, lname: str):
@@ -2439,35 +2396,34 @@ class PigTranslator:
         )
 
     def _bag_agg(self, fname: str, e: G.Call, rel: Relation) -> Column | None:
-        """Aggregates applied to a MATERIALIZED bag column — FOREACH
-        over a COGROUP alias (`FOREACH cg GENERATE group, COUNT(c),
-        MAX(o.o_totalprice)`). Pig evaluates the aggregate UDF per
-        tuple over the bag; here the bag is an array column, so the
-        aggregate lowers to array functions (map-only, no shuffle —
-        POForEach over DataBag ≅ higher-order functions over arrays).
-        Returns None when not applicable (plain aggregate contexts)."""
+        """A builtin aggregate over MATERIALIZED bag columns — FOREACH
+        over a COGROUP alias (`GENERATE group, COUNT(c), MAX(o.price)`):
+        the bag lowering (aggregates.over_bag), map-only — POForEach
+        over a DataBag. None when an argument is no bag."""
+        lfn = fname.lower()
+        if not ((lfn in aggregates.ONE_BAG and len(e.args) == 1) or (lfn in aggregates.PAIRWISE and len(e.args) > 1)):
+            return None
+        bags = [self._bag_arg(a, rel) for a in e.args]
+        if any(b is None for b in bags):
+            return None
+        return aggregates.over_bag(lfn, bags)
+
+    def _bag_arg(self, arg, rel: Relation):
+        """An aggregate argument as an aggregates.Bag when it is a bag:
+        a bag column (``c``, ``$1``), its field (``c.f``, ``c.$N``), or a
+        bag-valued expression (COUNT(TOKENIZE(text)) is Pig's per-tuple
+        bag count; the type is probed, as SIZE does). Else None."""
         from pyspark.sql import types as T
 
-        lfn = fname.lower()
-        if lfn not in ("count", "count_star", "sum", "avg", "min", "max") or len(e.args) != 1:
-            return None
-        arg = e.args[0]
         if not isinstance(arg, G.Col):
             if isinstance(arg, (G.Num, G.Str, G.Bool)):
                 return None
-            # bag-valued EXPRESSION: COUNT(TOKENIZE(text)) in a plain
-            # FOREACH is Pig's per-tuple bag count (COUNT.java applied
-            # to the evaluated bag), not a grouped aggregate — probe
-            # the expression's type (the SIZE dispatch pattern) and
-            # lower to array functions when it is a bag
             try:
                 c = self._expr(arg, rel)
                 dtype = rel.df.select(c.alias("__bag")).schema[0].dataType
             except Exception:
                 return None
-            if not isinstance(dtype, T.ArrayType):
-                return None
-            return self._agg_over_bag(lfn, c, dtype.elementType, None)
+            return (c, dtype.elementType, None) if isinstance(dtype, T.ArrayType) else None
         head, _, rest = arg.name.partition(".")
         if head.startswith("$") and head[1:].isdigit() and int(head[1:]) < len(rel.df.columns):
             # positional bag ref: COUNT($1) over a COGROUP row
@@ -2478,56 +2434,14 @@ class PigTranslator:
         if not isinstance(dtype, T.ArrayType):
             return None
         elem = dtype.elementType
-        if rest and isinstance(elem, T.StructType) and rest not in elem.names:
+        if rest and isinstance(elem, T.StructType):
             # qualifier-chain history: Pig's LogicalSchema keeps the
             # full d::field name even where our flatten dropped the
             # prefix for a non-colliding field — match by leaf when
-            # unique (same contract as _resolve's :: handling)
-            leaf = rest.split("::")[-1]
-            cand = [n for n in elem.names if n.split("::")[-1] == leaf]
-            if len(cand) == 1:
-                rest = cand[0]
-        return self._agg_over_bag(lfn, F.col(head), elem, rest or None)
-
-    @staticmethod
-    def _agg_over_bag(lfn: str, arr: Column, elem, rest: str | None) -> Column:
-        """count/sum/avg/min/max over an ASSEMBLED bag (array) column —
-        array functions only, no extra shuffle (POForEach over DataBag
-        ≅ higher-order functions over arrays; COUNT skips null first
-        fields per COUNT.java:40)."""
-        from pyspark.sql import types as T
-
-        if lfn == "count_star":
-            return F.size(arr).cast("long")
-        if rest:
-            vals = F.transform(arr, lambda t: t[rest])
-            velem = elem[rest].dataType if isinstance(elem, T.StructType) else elem
-        elif isinstance(elem, T.StructType):
-            first = elem.names[0]  # COUNT(bag): non-null FIRST field (COUNT.java:40)
-            vals = F.transform(arr, lambda t: t[first])
-            velem = elem[first].dataType
-        else:
-            vals, velem = arr, elem
-        nn = F.filter(vals, lambda x: x.isNotNull())
-        if lfn == "count":
-            return F.size(nn).cast("long")
-        if lfn == "min":
-            return F.array_min(nn)
-        if lfn == "max":
-            return F.array_max(nn)
-        if isinstance(velem, (T.StringType, T.BinaryType)):
-            # SUM/AVG over an untyped (bytearray) bag field: Pig casts
-            # to double (no implicit coercion inside HOF lambdas)
-            nn = F.filter(
-                F.transform(nn, lambda x: x.try_cast("double")), lambda x: x.isNotNull()
-            )
-            velem = T.DoubleType()
-        zero = F.lit(0).cast(velem.simpleString())
-        total = F.aggregate(nn, zero, lambda acc, x: acc + x)
-        # SUM/AVG of a bag with no non-null value is null (SUM.java)
-        if lfn == "sum":
-            return F.when(F.size(nn) > 0, total)
-        return F.when(F.size(nn) > 0, total.cast("double") / F.size(nn))
+            # unique (_field_ref, the contract of _resolve's ::
+            # handling); $N is positional
+            rest = _field_ref(rest, elem.names) or rest
+        return F.col(head), elem, rest or None
 
     def _split_agg_leaves(self, e, limited_names: set, leaves: list, combo_idx: int):
         """Decompose a combining expression into aggregate-call leaves:
@@ -2536,7 +2450,7 @@ class PigTranslator:
         its pipe's top-k frame (or the flat-agg path) and stitched; the
         returned rewritten expression is pure scalar over those
         columns (plus group-key refs)."""
-        if isinstance(e, G.Call) and e.func.lower() in AGG_FUNCS:
+        if isinstance(e, G.Call) and e.func.lower() in aggregates.ONE_BAG:
             lheads = self._pipe_heads(e) & limited_names
             if len(lheads) > 1:
                 # COUNT/SUM/AVG/MIN/MAX take ONE bag; an argument mixing
@@ -2813,26 +2727,24 @@ class PigTranslator:
             return self._expr(e, g.child)
         if isinstance(e, G.Cast):
             return self._topk_agg(e.operand, lname, topk, fields, order, g).cast(pigtypes.ddl(e.type))
-        if isinstance(e, G.Call) and e.func.lower() in AGG_FUNCS:
+        if isinstance(e, G.Call) and e.func.lower() in aggregates.ONE_BAG:
             fn = e.func.lower()
             if fn == "count_star" or not e.args:
-                return F.count(F.lit(1))
-            agg = {"count": F.count, "sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max}[fn]
+                return aggregates.over_rows("count_star")
             arg = e.args[0]
             if not isinstance(arg, G.Col):
                 # SUM(l.a * l.b + 2): evaluate the scalar over the top-k
                 # frame, then aggregate (QueryParser.g lets nested
                 # aggregates take arbitrary projections)
-                return agg(self._expr(self._strip_pipe_prefix(arg, lname), Relation(topk)))
+                return aggregates.over_rows(fn, [self._expr(self._strip_pipe_prefix(arg, lname), Relation(topk))])
             head, _, rest = arg.name.partition(".")
             if head != lname:
                 raise NotImplementedError(f"aggregate over {head!r} mixed into the LIMIT-pipe expression")
             if rest:
-                return agg(topk[_pick_field(fields, rest, lname)[1]])
+                return aggregates.over_rows(fn, [topk[_pick_field(fields, rest, lname)[1]]])
             if fn == "count":
-                # COUNT(bag) counts tuples with a non-null first field
-                # (COUNT.java:40)
-                return F.count(topk[fields[0][1]])
+                # COUNT(bag) reads the first field (COUNT.java:40)
+                return aggregates.over_rows(fn, [topk[fields[0][1]]])
             raise SyntaxError(f"{fn.upper()} over a whole-tuple pipe needs a column (e.g. {lname}.field)")
         raise NotImplementedError(f"unsupported expression over LIMIT pipe: {e}")
 
@@ -2991,38 +2903,6 @@ class PigTranslator:
         )
         return g, _Pipe(arr=mangled)
 
-    def _arr_pipe_agg(self, fn: str, arg: "G.Col", pipe: "_Pipe", g: GroupedInfo) -> Column:
-        """Aggregate over an array-pipe: per-ROW partials via array
-        functions (size/aggregate — codegen, the bag never explodes),
-        then the cross-row aggregate. COUNT skips null first fields
-        (COUNT.java:40); SUM/AVG over untyped fields coerce to double
-        like _bag_agg."""
-        from pyspark.sql import types as T
-
-        arr = g.child.df[pipe.arr]
-        elem = g.child.df.schema[pipe.arr].dataType.elementType
-        rest = arg.name.partition(".")[2]
-        fld = rest or elem.names[0]
-        vals = F.transform(arr, lambda t: t[fld])
-        velem = elem[fld].dataType
-        nn = F.filter(vals, lambda x: x.isNotNull())
-        if fn == "count_star":
-            return F.coalesce(F.sum(F.size(arr)), F.lit(0)).cast("long")
-        if fn == "count":
-            return F.coalesce(F.sum(F.size(nn)), F.lit(0)).cast("long")
-        if fn == "min":
-            return F.min(F.array_min(nn))
-        if fn == "max":
-            return F.max(F.array_max(nn))
-        if isinstance(velem, (T.StringType, T.BinaryType)):
-            nn = F.filter(F.transform(nn, lambda x: x.try_cast("double")), lambda x: x.isNotNull())
-            velem = T.DoubleType()
-        zero = F.lit(0).cast(velem.simpleString())
-        row_sum = F.when(F.size(nn) > 0, F.aggregate(nn, zero, lambda a, x: a + x))
-        if fn == "sum":
-            return F.sum(row_sum)
-        return F.sum(row_sum).cast("double") / F.sum(F.size(nn))
-
     def _apply_bag_ops(self, bag: Column, ops: list, fields: list[str], rename: dict | None = None) -> Column:
         """Replay recorded nested ops — ("filter", predicate),
         ("distinct", None), ("order", [(field, asc)]), ("limit", n) —
@@ -3118,66 +2998,64 @@ class PigTranslator:
             return self._expr(e, g.child)
         if isinstance(e, G.Cast):
             return self._nested_agg(e.operand, g, pipes).cast(pigtypes.ddl(e.type))
-        if not (isinstance(e, G.Call) and e.func.lower() in AGG_FUNCS and e.args):
+        fn = e.func.lower() if isinstance(e, G.Call) else None
+        args = e.args if fn in aggregates.BUILTINS else []
+        heads = {a.name.partition(".")[0] if isinstance(a, G.Col) else None for a in args}
+        if not args or (fn in aggregates.ONE_BAG) != (len(args) == 1) or not heads <= {*pipes, g.child_alias}:
+            # not a builtin over pipes: a bag UDF, else the plain
+            # grouped path
             hooked = self._bag_udf(e, g, pipes)
-            if hooked is not None:
-                return hooked
-            # not a pipe aggregate — fall back to the plain grouped path
-            return self._agg_expr(e, g)
-        fn = e.func.lower()
-        arg = e.args[0]
-        if not isinstance(arg, G.Col):
-            return self._agg_expr(e, g)
-        head = arg.name.split(".", 1)[0]
-        if head not in pipes and head != g.child_alias:
-            return self._agg_expr(e, g)
-        base = pipes.get(head)
-        if base is not None and (base.limited or (base.distinct and (base.arr or base.col is None))):
-            # the aggregate must see the bag itself: a LIMIT slice (and
-            # the ops replayed after it), a group-level DISTINCT over an
-            # array pipe, or a DISTINCT over whole tuples (distinct
+            return hooked if hooked is not None else self._agg_expr(e, g)
+        base = pipes.get(next(iter(heads))) if len(heads) == 1 else None
+        if (
+            len(heads) > 1
+            or (base is not None and (base.limited or (base.distinct and (base.arr or base.col is None))))
+            or (fn in aggregates.PAIRWISE and base is not None and (base.distinct or base.arr))
+        ):
+            # the aggregate must see the bags themselves: a LIMIT slice
+            # (and the ops replayed after it), a group-level DISTINCT
+            # over an array pipe or over whole tuples (distinct
             # aggregates would dedupe one field's values, not the
-            # tuples). Aggregate over the assembled group bag — the
-            # reducer-bag footprint Pig uses for these statements. Only
-            # a LIMIT makes the bag's order matter.
-            bag = self._pipe_bag(base, None, g, ordered=base.limited)
-            elem = (
-                g.child.df.limit(0).groupBy().agg(bag.alias("__pb")).schema["__pb"].dataType.elementType
-            )
-            rest = arg.name.partition(".")[2]
-            return self._agg_over_bag(fn, bag, elem, rest and (_field_ref(rest, elem.names) or rest))
+            # tuples), COR/COV pairing two bags by position. Aggregate
+            # over the assembled group bags — the reducer-bag footprint
+            # Pig uses for these statements; order matters only to a
+            # LIMIT and to the pairing.
+            bags, out = {}, []
+            for a in args:
+                head, _, rest = a.name.partition(".")
+                if head not in bags:
+                    pipe = self._resolve_pipe(head, g, pipes)
+                    bag = self._pipe_bag(pipe, None, g, ordered=pipe.limited or fn in aggregates.PAIRWISE)
+                    bags[head] = bag, self._bag_elem(bag, g)
+                bag, elem = bags[head]
+                out.append((bag, elem, rest and (_field_ref(rest, elem.names) or rest)))
+            return aggregates.over_bag(fn, out)
         if base is not None and base.arr:
-            return self._arr_pipe_agg(fn, arg, base, g)
-        pipe = self._resolve_pipe(arg.name, g, pipes)
+            # per-row partials over the array pipe, merged across rows
+            elem = g.child.df.schema[base.arr].dataType.elementType
+            return aggregates.over_row_arrays(fn, (g.child.df[base.arr], elem, args[0].name.partition(".")[2] or None))
+        # one pipe's rows, under its FILTER and DISTINCT
+        pipe = self._resolve_pipe(next(iter(heads)), g, pipes)
         cond = self._expr(pipe.cond, g.child) if pipe.cond is not None else None
-        if pipe.col is not None:
-            val: Column = self._expr(G.Col(pipe.col), g.child)
-        else:
-            # whole-tuple pipe: COUNT uses the non-null first field
-            # (COUNT.java:40); other aggs need a column
-            if fn in ("count", "count_star"):
-                val = F.col(self._pipe_fields(pipe, g)[0]) if fn == "count" else F.lit(1)
-            else:
-                raise SyntaxError(f"{fn.upper()} over a whole-tuple pipe needs a column (e.g. x.field)")
-        if cond is not None:
-            val = F.when(cond, val)
-        if pipe.distinct:
-            if fn == "count":
-                return F.countDistinct(val)
-            if fn == "sum":
-                return F.sum_distinct(val)
-            if fn == "avg":
-                return F.sum_distinct(val).cast("double") / F.countDistinct(val)
-            if fn in ("min", "max"):  # distinct is a no-op for min/max
-                return {"min": F.min, "max": F.max}[fn](val)
-            raise NotImplementedError(f"DISTINCT pipe with {fn.upper()}")
-        mapping = {"count": F.count, "count_star": F.count, "sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max}
-        return mapping[fn](val)
+        vals = []
+        for a in args:
+            col = self._resolve_pipe(a.name, g, pipes).col
+            if col is None:
+                # a whole-tuple pipe: COUNT reads the first field (COUNT.java:40)
+                if fn not in ("count", "count_star"):
+                    raise SyntaxError(f"{fn.upper()} over a whole-tuple pipe needs a column (e.g. x.field)")
+                col = self._pipe_fields(pipe, g)[0]
+            vals.append(self._expr(G.Col(col), g.child))
+        return aggregates.over_rows(fn, vals, cond, pipe.distinct)
+
+    def _bag_elem(self, bag: Column, g: GroupedInfo):
+        """The element type of a bag assembled over the group's rows."""
+        return g.child.df.limit(0).groupBy().agg(bag.alias("__pb")).schema["__pb"].dataType.elementType
 
     def _hive_udaf(self, e) -> str | None:
         """Hive function name if ``e`` is a call to a DEFINEd
         HiveUDAF alias (builtin/HiveUDAF.java), else None. Checked
-        BEFORE the builtin AGG_FUNCS table so a define shadowing a
+        BEFORE the builtin aggregate table so a define shadowing a
         builtin name (``define avg HiveUDAF('percentile')``) resolves
         to the Hive function, matching Pig's alias precedence."""
         if not isinstance(e, G.Call):
@@ -3314,86 +3192,37 @@ class PigTranslator:
         return F.lit(rows[0][0])
 
     def _agg_expr(self, e, g: GroupedInfo) -> Column:
+        """An algebraic GENERATE item over a plain GROUP as a Spark
+        aggregate: builtins take the row lowering (aggregates.over_rows)
+        over the child's columns — map-side partials, no bag."""
         child = g.child
         hname = self._hive_udaf(e)
         if hname is not None:
             return self._hive_agg(hname, e, g)
-        if (
-            isinstance(e, G.Call)
-            and e.func.lower() in ("cor", "cov")
-            and len(e.args) >= 2
-            and all(
-                isinstance(a, G.Col) and a.name.startswith(g.child_alias + ".")
-                for a in e.args
-            )
-        ):
-            # COR/COV over same-bag projections (builtin/COR.java exec:
-            # bag of (var_i, var_j, stat) per pair i<j). Positional
-            # pairing of same-bag projections IS row pairing, so the
-            # stats lower to native corr/covar_pop — COV.java's
-            # (n·Σxy − ΣxΣy)/n² is exactly covar_pop; COR.java's
-            # formula is Pearson r ≡ Spark corr. Map-side partials,
-            # no bag ever materializes.
-            cols = [
-                self._expr(G.Col(a.name.split(".", 1)[1]), child) for a in e.args
-            ]
-            fn = e.func.lower()
-            pairs = []
-            for i in range(len(cols)):
-                for j in range(i + 1, len(cols)):
-                    stat = (
-                        F.corr(cols[i], cols[j]) if fn == "cor"
-                        else F.covar_pop(cols[i], cols[j])
+        fn = _grouped_builtin(e, g.child_alias)
+        if fn in aggregates.PAIRWISE:
+            # same-bag projections pair by row
+            return aggregates.over_rows(fn, [self._expr(G.Col(a.name.split(".", 1)[1]), child) for a in e.args])
+        if fn == "count_star" or (fn is not None and not e.args):
+            return aggregates.over_rows("count_star")
+        if fn is not None:
+            arg = e.args[0]
+            if isinstance(arg, G.Col) and arg.name == g.child_alias:
+                # COUNT(rel) reads the first field (COUNT.java:40);
+                # SUM/AVG/MIN/MAX(rel) need a bag of single-field
+                # tuples and aggregate that field (SUM.java:58)
+                if fn != "count" and len(child.df.columns) != 1:
+                    raise SyntaxError(
+                        f"{fn.upper()}({arg.name}) needs a single-field bag "
+                        f"(got {len(child.df.columns)} fields); project the "
+                        f"field first or use {arg.name}.field"
                     )
-                    pairs.append(
-                        F.struct(
-                            F.lit(f"var{i}").alias("var_x"),
-                            F.lit(f"var{j}").alias("var_y"),
-                            stat.alias(fn),
-                        )
-                    )
-            return F.array(*pairs)
-        if isinstance(e, G.Call):
-            fn = e.func.lower()
-            if (
-                fn in ("size", "arity")
-                and len(e.args) == 1
-                and isinstance(e.args[0], G.Col)
-                and e.args[0].name == g.child_alias
-            ):
-                # SIZE(bag) over the grouped relation ≡ COUNT_STAR
-                return F.count(F.lit(1))
-            if fn in AGG_FUNCS:
-                if fn == "count_star" or not e.args:
-                    return F.count(F.lit(1))
-                arg = e.args[0]
-                if isinstance(arg, G.Col):
-                    name = arg.name
-                    if name == g.child_alias:
-                        if fn == "count":
-                            # COUNT(rel): counts tuples with non-null first field (COUNT.java:40)
-                            return F.count(child.df[child.df.columns[0]])
-                        if fn == "count_star":
-                            return F.count(F.lit(1))
-                        # SUM/AVG/MIN/MAX(rel): Pig requires a bag of
-                        # single-field tuples and aggregates that field
-                        # (SUM.java:58 input schema check)
-                        if len(child.df.columns) != 1:
-                            raise SyntaxError(
-                                f"{fn.upper()}({name}) needs a single-field bag "
-                                f"(got {len(child.df.columns)} fields); project the "
-                                f"field first or use {name}.field"
-                            )
-                        return {"sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max}[fn](
-                            child.df[child.df.columns[0]]
-                        )
-                    if name.startswith(g.child_alias + "."):
-                        inner: Column = self._expr(G.Col(name.split(".", 1)[1]), child)
-                    else:
-                        inner = self._expr(arg, child)
-                else:
-                    inner = self._expr(arg, child)
-                return {"count": F.count, "sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max}[fn](inner)
+                inner: Column = child.df[child.df.columns[0]]
+            elif isinstance(arg, G.Col) and arg.name.startswith(g.child_alias + "."):
+                inner = self._expr(G.Col(arg.name.split(".", 1)[1]), child)
+            else:
+                inner = self._expr(arg, child)
+            return aggregates.over_rows(fn, [inner])
         if isinstance(e, G.Bin):
             return _binop(e.op, self._agg_expr(e.left, g), self._agg_expr(e.right, g))
         if isinstance(e, (G.Num, G.Str)):
@@ -3425,29 +3254,10 @@ class PigTranslator:
         if fn is None or not getattr(fn, "__wants_elem_type__", False):
             return None
         head, _, rest = e.args[0].name.partition(".")
-        if pipes and head in pipes:
-            bag = self._pipe_bag(pipes[head], rest or None, g)
-        elif head == g.child_alias:
-            child = g.child
-            if rest:
-                leaf = rest.split("::")[-1]
-                bag = F.collect_list(
-                    F.struct(self._expr(G.Col(rest), child).alias(leaf))
-                )
-            else:
-                bag = F.collect_list(
-                    F.struct(*[child.df[c] for c in child.df.columns])
-                )
-        else:
+        if head not in pipes and head != g.child_alias:
             return None
-        elem = (
-            g.child.df.limit(0)
-            .groupBy()
-            .agg(bag.alias("__pb"))
-            .schema["__pb"]
-            .dataType.elementType
-        )
-        return fn(bag, _elem=elem)
+        bag = self._pipe_bag(self._resolve_pipe(head, g, pipes), rest or None, g)
+        return fn(bag, _elem=self._bag_elem(bag, g))
 
     # ------------------------------------------------------------------
     def _join(self, op: G.Join) -> Relation:
@@ -3619,7 +3429,7 @@ class PigTranslator:
         if isinstance(e, G.Call):
             # scalar builtin over element fields (CONCAT, ABS…);
             # aggregates don't belong inside a per-element lambda
-            if e.func.lower() in AGG_FUNCS:
+            if e.func.lower() in aggregates.BUILTINS:
                 raise NotImplementedError(
                     f"aggregate {e.func.upper()} inside a nested bag pipe; "
                     "aggregate in the outer GENERATE instead"

@@ -755,7 +755,10 @@ def q61_median(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q62_corr_cov(spark: SparkSession, sf: str) -> DataFrame:
-    """COR/COV builtins (COR.java, COV.java) → corr/covar_samp."""
+    """Grouped correlation and SAMPLE covariance through Spark's own
+    corr/covar_samp. COR.java is Pearson's r (≡ corr); COV.java is the
+    population covariance (``functions.COV``, covar_pop), so cov_qd is
+    not Pig's COV."""
     li = _t(spark, sf, "lineitem")
     return (
         li.group_by("l_linestatus")

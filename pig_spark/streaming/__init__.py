@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import aggregates
+
 
 def read_stream(spark: SparkSession, format: str, **options) -> DataFrame:
     return spark.readStream.format(format).options(**{k: str(v) for k, v in options.items()}).load()
@@ -234,10 +236,9 @@ def rollup_stream(
         if not m:
             raise ValueError(f"rollup_stream agg {spec!r}: count/sum/min/max(col) only (mergeable partials)")
         fn, col = m.group(1).lower(), m.group(2)
-        if fn == "count":
-            parsed.append(F.count(F.lit(1) if col == "*" else F.col(col)).alias(out_col))
-        else:
-            parsed.append(getattr(F, fn)(F.col(col)).alias(out_col))
+        if fn == "count" and col == "*":
+            fn = "count_star"
+        parsed.append(aggregates.over_rows(fn, [F.col(col)]).alias(out_col))
     grouped = df.withWatermark(ts_col, watermark).groupBy(
         F.window(F.col(ts_col), window), *(keys or [])
     )

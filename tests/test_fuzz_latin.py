@@ -10,6 +10,7 @@ value diff. Aggregates are restricted to COUNT/MIN/MAX and integer
 SUM so both engines are IEEE-exact.
 """
 
+import math
 import random
 
 import duckdb
@@ -722,5 +723,167 @@ def test_latin_nested_fuzz_differential(spark, tmp_path):
         diff = _nested_case_diff(spark, con, *_gen_nested_group(rng, path2, i))
         if diff:
             failures.append(f"group case {i} {diff}")
+    con.close()
+    assert not failures, "\n\n".join(failures)
+
+
+# ----------------------------------------------------------------------
+# COGROUP of two inputs with null keys on both sides, every builtin
+# aggregate over the COGROUP bags (the bag lowering of
+# pig_spark/aggregates.py), fields by name or position — vs per-input
+# SQL GROUP BYs joined FULL OUTER on plain equality (a null key groups
+# within its input and matches no other input's, operators/cogroup.py)
+# ----------------------------------------------------------------------
+
+N_COGROUP = 12
+COGROUP_SEED = 20261019
+
+# per input: its columns (name, SQL type) — the key first, so COUNT of
+# the bag skips the null-key tuples (COUNT.java:40)
+_CG_COLS = {
+    "a": [("k", "INTEGER"), ("id", "INTEGER"), ("v", "INTEGER"), ("s", "INTEGER"), ("x", "DOUBLE")],
+    "b": [("k", "INTEGER"), ("w", "INTEGER"), ("t", "INTEGER"), ("z", "DOUBLE")],
+}
+# COR/COV read the small columns: exact sums, so both engines agree
+_CG_PAIR = {"a": ("s", "x"), "b": ("t", "z")}
+_CG_BUILTINS = ["COUNT", "COUNT_STAR", "COUNT.f", "SUM", "AVG", "MIN", "MAX", "COR", "COV"]
+
+
+def _cogroup_rows(rng, name):
+    """A few rows per input: keys 1..4 or null on both sides, ints near
+    2³¹ (an int SUM overflows), nullable small ints and small-integer
+    doubles."""
+    rows = []
+    for i in range(rng.randint(6, 12)):
+        k = rng.choice([None, 1, 2, 3, 4])
+        big = None if rng.random() < 0.2 else rng.choice([2_000_000_000, 2_147_483_647, -7, 3])
+        small = None if rng.random() < 0.2 else rng.randint(-3, 3)
+        dbl = None if rng.random() < 0.2 else float(rng.randint(-4, 6))
+        rows.append((k, i, big, small, dbl) if name == "a" else (k, big, small, dbl))
+    return rows
+
+
+def _cogroup_agg(rng, side, alias, pos):
+    """One builtin over the bag of input ``side`` (COGROUPed as
+    ``alias``): (latin, sql, pairwise). ``pos`` names the bag ($1/$2)
+    and most fields ($n) by position."""
+    cols = [c for c, _ in _CG_COLS[side]]
+    bag = f"${1 + 'ab'.index(side)}" if pos else alias
+
+    def field(c):
+        return f"{bag}.${cols.index(c)}" if pos and rng.random() < 0.7 else f"{bag}.{c}"
+
+    num = [c for c in cols if c not in ("k", "id")]
+    fn = rng.choice(_CG_BUILTINS)
+    if fn == "COUNT":
+        return f"COUNT({bag})", "COUNT(k)::BIGINT", False
+    if fn == "COUNT_STAR":
+        return f"COUNT_STAR({bag})", "COUNT(*)::BIGINT", False
+    if fn == "COUNT.f":
+        c = rng.choice(num)
+        return f"COUNT({field(c)})", f"COUNT({c})::BIGINT", False
+    if fn in ("COR", "COV"):
+        c1, c2 = _CG_PAIR[side]
+        sql = "corr" if fn == "COR" else "covar_pop"
+        return f"{fn}({field(c1)}, {field(c2)})", f"{sql}({c1}, {c2})", True
+    c = rng.choice(num)
+    typ = dict(_CG_COLS[side])[c]
+    sql = {
+        "SUM": f"SUM({c})::{'BIGINT' if typ == 'INTEGER' else 'DOUBLE'}",
+        "AVG": f"AVG({c})::DOUBLE",
+        "MIN": f"MIN({c})",
+        "MAX": f"MAX({c})",
+    }[fn]
+    return f"{fn}({field(c)})", sql, False
+
+
+def _gen_cogroup(rng, paths):
+    """One COGROUP script (an optional FILTER on the first input) and
+    its SQL twin; returns (script, sql, pairwise output columns)."""
+    pos = rng.random() < 0.4
+    pred = rng.choice([None, ("x > 0", "x > 0"), ("v IS NOT NULL", "v IS NOT NULL"), ("k != 2", "k <> 2")])
+    items, parts, pairwise = [], {"a": [], "b": []}, set()
+    for j in range(rng.randint(3, 6)):
+        side = rng.choice("ab")
+        lat, sql, pw = _cogroup_agg(rng, side, "fa" if pred and side == "a" else side, pos)
+        items.append(f"{lat} AS c{j}")
+        parts[side].append((f"c{j}", sql, "COUNT" in sql))
+        if pw:
+            pairwise.add(f"c{j}")
+    first = "fa" if pred else "a"
+    script = (
+        f"a = LOAD '{paths['a']}' USING ParquetLoader();\n"
+        f"b = LOAD '{paths['b']}' USING ParquetLoader();\n"
+        + (f"fa = FILTER a BY {pred[0]};\n" if pred else "")
+        + f"c = COGROUP {first} BY k, b BY k;\n"
+        + f"out = FOREACH c GENERATE group AS kk, {', '.join(items)};"
+    )
+    src = {"a": f"(SELECT * FROM a WHERE {pred[1]})" if pred else "a", "b": "b"}
+    ctes = [
+        f"g{s} AS (SELECT k{''.join(f', {sql} AS {n}' for n, sql, _ in parts[s])} FROM {src[s]} GROUP BY k)"
+        for s in "ab"
+    ]
+    outs = [
+        f"COALESCE({n}, 0) AS {n}" if cnt else n
+        for j in range(len(items))
+        for s in "ab"
+        for n, _, cnt in parts[s]
+        if n == f"c{j}"
+    ]
+    sql = (
+        "WITH " + ", ".join(ctes)
+        + f" SELECT COALESCE(ga.k, gb.k) AS kk, {', '.join(outs)} FROM ga FULL OUTER JOIN gb ON ga.k = gb.k"
+    )
+    return script, sql, pairwise
+
+
+def _close(a, b) -> bool:
+    if isinstance(a, float) and isinstance(b, float):
+        return (math.isnan(a) and math.isnan(b)) or math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-9)
+    return a == b
+
+
+def test_latin_cogroup_fuzz_differential(spark, tmp_path):
+    """Two-input COGROUP with null keys on both sides, each builtin over
+    the COGROUP bags by name or position, against DuckDB: values
+    (floats to 1e-9) and result types."""
+    rng = random.Random(COGROUP_SEED)
+    con = duckdb.connect()
+    paths = {}
+    for name, cols in _CG_COLS.items():
+        con.execute(f"CREATE TABLE {name} ({', '.join(f'{c} {t}' for c, t in cols)})")
+        con.executemany(f"INSERT INTO {name} VALUES ({', '.join('?' * len(cols))})", _cogroup_rows(rng, name))
+        paths[name] = str(tmp_path / f"{name}.parquet")
+        con.execute(f"COPY {name} TO '{paths[name]}' (FORMAT PARQUET)")
+    types = {"bigint": "BIGINT", "int": "INTEGER", "double": "DOUBLE"}
+    failures = []
+    for i in range(N_COGROUP):
+        script, sql, pairwise = _gen_cogroup(rng, paths)
+        try:
+            df = run(spark, script)["out"].df
+            rel = con.sql(sql)
+            got_types = {}
+            for f in df.schema.fields:
+                t = f.dataType.elementType.fields[2].dataType if f.name in pairwise else f.dataType
+                got_types[f.name] = types.get(t.simpleString(), t.simpleString())
+            want_types = dict(zip(rel.columns, map(str, rel.types)))
+
+            def row(r):
+                return tuple(
+                    (None if r[c] is None else r[c][0][2]) if c in pairwise else r[c] for c in rel.columns
+                )
+
+            got = sorted((row(r) for r in df.collect()), key=repr)
+            want = sorted(rel.fetchall(), key=repr)
+        except Exception as ex:  # pragma: no cover - diagnostic path
+            failures.append(f"case {i} raised {type(ex).__name__}: {ex}\n{script}\n{sql}")
+            continue
+        same = len(got) == len(want) and all(
+            len(g) == len(w) and all(_close(x, y) for x, y in zip(g, w)) for g, w in zip(got, want)
+        )
+        if got_types != want_types or not same:
+            failures.append(
+                f"case {i} diff\n{script}\n{sql}\ntypes {got_types} vs {want_types}\nspark {got}\nduck  {want}"
+            )
     con.close()
     assert not failures, "\n\n".join(failures)

@@ -263,3 +263,53 @@ def test_one_group_projection():
 
     walk(ast.parse(path.read_text(), filename=str(path)), None)
     assert not offenders, "group projection outside _group_selects:\n" + "\n".join(offenders)
+
+
+def test_one_aggregate_table():
+    """Pig's builtin aggregates have ONE rule each, in
+    ``pig_spark/aggregates.py``, with two lowerings (over rows, over a
+    bag). The Latin translator and the DSL's ``functions.COUNT`` …
+    ``COV`` had seven copies — inline ``{"count": F.count, …}``
+    dispatch dicts, two array SUM/AVG folds, three COR/COV lowerings and
+    two COV definitions — that returned different answers (an int SUM
+    over a bag wrapped, a DSL COV was the sample covariance). Spark
+    aggregate functions, ``array_min``/``array_max`` and an
+    ``F.aggregate`` sum fold may appear in ``latin/translate.py`` and
+    ``functions/__init__.py`` only in ``_over_column`` (Over.java's
+    typed window aggregates)."""
+    banned = {
+        "count", "countDistinct", "count_distinct", "sum", "sum_distinct", "sumDistinct",
+        "avg", "mean", "min", "max", "corr", "covar_pop", "covar_samp", "array_min", "array_max",
+    }
+    allowed = {"_over_column"}
+    offenders = []
+
+    def sum_fold(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "aggregate"
+            and any(
+                isinstance(a, ast.Lambda) and isinstance(a.body, ast.BinOp) and isinstance(a.body.op, ast.Add)
+                for a in node.args
+            )
+        )
+
+    def hits(node) -> bool:
+        if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name) and node.value.id == "F":
+            return node.attr in banned
+        return sum_fold(node)
+
+    for path in (PKG / "latin" / "translate.py", PKG / "functions" / "__init__.py"):
+
+        def walk(node, scope):
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    walk(child, child.name if scope not in allowed else scope)
+                    continue
+                if hits(child) and scope not in allowed:
+                    offenders.append(f"{path.relative_to(REPO)}:{child.lineno} (in {scope})")
+                walk(child, scope)
+
+        walk(ast.parse(path.read_text(), filename=str(path)), None)
+    assert not offenders, "builtin aggregate lowered outside pig_spark/aggregates.py:\n" + "\n".join(offenders)
