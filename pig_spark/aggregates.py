@@ -49,7 +49,7 @@ class Builtin:
     final: Callable[..., Column]
     parts: tuple[str, ...] = ()
     distinct: Callable[[Column], Column] | None = None
-    tuples: bool = False  # counts tuples, reads no value (COUNT_STAR)
+    tuples: bool = False  # counts tuples, not values (COUNT_STAR)
     pairwise: bool = False
 
 
@@ -63,7 +63,7 @@ def _cov(n, sx, sy, sxx, syy, sxy) -> Column:
 
 BUILTINS: dict[str, Builtin] = {
     "count": Builtin(0, F.count, lambda n: n.cast("long"), ("n",), F.countDistinct),
-    "count_star": Builtin(0, F.count, lambda n: n.cast("long"), ("rows",), tuples=True),
+    "count_star": Builtin(0, F.count, lambda n: n.cast("long"), ("rows",), F.countDistinct, tuples=True),
     "sum": Builtin(None, F.sum, lambda s: s, ("sum",), F.sum_distinct),
     "avg": Builtin(
         None, F.avg, lambda s, n: F.when(n > 0, s.cast("double") / n), ("sum", "num"),
@@ -93,10 +93,14 @@ def _pairs(name: str, stat: Callable[[int, int], Column], k: int) -> Column:
 
 def over_rows(name: str, args=(), cond: Column | None = None, distinct: bool = False) -> Column:
     """The builtin over a group's rows: ``args`` its argument columns
-    (COUNT_STAR reads none), ``cond`` a nested FILTER's condition,
-    ``distinct`` a nested DISTINCT over the one argument."""
+    (COUNT_STAR reads them only under a DISTINCT), ``cond`` a nested
+    FILTER's condition, ``distinct`` a nested DISTINCT over the one
+    argument."""
     b = BUILTINS[name]
-    args = [F.lit(1)] if b.tuples else list(args)
+    if b.tuples:
+        # a tuple is never null, so COUNT_STAR over a DISTINCT counts
+        # the distinct one-field tuples, the one holding null included
+        args = [F.array(*args)] if distinct else [F.lit(1)]
     if cond is not None:
         args = [F.when(cond, a) for a in args]
     if distinct:

@@ -25,42 +25,12 @@ from pyspark.sql import Window as SparkWindow
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructType
 
-from .. import aggregates
+from .. import aggregates, pigtypes, sources
 from .. import functions as PF
-from .. import pigtypes
+from ..sources import storage
 from ..operators.nested import bag_distinct, bag_filter, bag_limit, bag_sort, topk_per_group
-from ..compat import cast_as
 from ..dsl import Relation
 from . import grammar as G
-
-LOADER_FORMAT = {
-    None: "pigstorage",
-    "pigstorage": "pigstorage",
-    "textloader": "text",
-    "jsonloader": "json",
-    "jsonstorage": "json",
-    "avrostorage": "avro",
-    "orcstorage": "orc",
-    "parquetloader": "parquet",
-    "parquetstorer": "parquet",
-    # piggybank IndexedStorage(delim, index-cols): the data file is
-    # plain delimited text; the .index sidecar is random-access
-    # metadata with no Spark analogue (columnar min/max pruning and
-    # bucketing cover that role — sources.store(bucket_by=, sort_by=))
-    "indexedstorage": "pigstorage",
-    # BinStorage is Pig's INTERNAL typed intermediate — its contract
-    # is "readable by the same Pig version that wrote it" (docs warn
-    # against external use). The same-engine contract here is parquet:
-    # full type fidelity for store-then-load within/between scripts.
-    # Byte-level interop with Java Pig's BinStorage files is out of
-    # scope (COVERAGE.md §2.5), exactly as version-interop is in Pig.
-    "binstorage": "parquet",
-    # test-UDF jar (test/e2e/pig/udfs): SimpleCollectableLoader IS
-    # PigStorage plus the CollectableLoadFunc marker (map-side
-    # `group ... using 'collected'` eligibility — the engine's
-    # collected-group path keys on the clause, not the loader)
-    "simplecollectableloader": "pigstorage",
-}
 
 # jar bundles whose classes are implemented ENGINE-SIDE — REGISTERing
 # them succeeds without the file (functions/piggybank.py,
@@ -668,7 +638,7 @@ class PigTranslator:
         # STOREs are deferred to end-of-script (Pig batch semantics:
         # PigServer executes the whole plan at the last STORE) so the
         # MultiQuery planner can cache subplans shared between sinks
-        self._pending_stores: list[tuple[Relation, str, str, str, dict]] = []
+        self._pending_stores: list[tuple[Relation, str, object]] = []
         # False for describe/explain/illustrate: the reference's
         # BoundScript plan-inspection methods never run the sinks
         self.execute_stores = execute_stores
@@ -840,100 +810,20 @@ class PigTranslator:
         elif isinstance(stmt, G.Realias):
             self.aliases[stmt.alias] = self.aliases[stmt.src]
         elif isinstance(stmt, G.Store):
-            # fully-qualified class storers resolve by leaf name
+            # the storage function resolves by leaf name
             # (org.apache.pig.piggybank.storage.CSVExcelStorage →
             # CSVExcelStorage), as Pig resolves registered classes
-            storer = (stmt.storer or "pigstorage").rsplit(".", 1)[-1].lower()
-            args = list(stmt.storer_args or [])
-            if storer == "hbasestorage":
-                # HBaseStorage(columnList[, options]) — cell-model
-                # facade store (putNext: field 0 = row key, scalars one
-                # cell each, maps one cell per entry); appends (puts
-                # are upserts), so no clobber check applies
-                from ..sources.hbase import store_hbase
-
-                if not args:
-                    raise ValueError("HBaseStorage needs a column list argument")
-                store_fn = lambda d, p=stmt.path, cl=args[0], o=(args[1] if len(args) > 1 else ""): store_hbase(d, p, cl, o)  # noqa: E731
-            elif storer == "accumulostorage":
-                from ..sources.accumulo import store_accumulo
-
-                if not args:
-                    raise ValueError("AccumuloStorage needs a columns argument")
-                store_fn = lambda d, p=stmt.path, cl=args[0], o=(args[1] if len(args) > 1 else ""): store_accumulo(d, p, cl, o)  # noqa: E731
-            elif storer == "hcatstorer":
-                # HCatStorer([partitionSpec]) — catalog-native append
-                # into an existing table (sources/hcatalog.py; the INTO
-                # target is the table name, not a path)
-                from ..sources.hcatalog import store_hcat
-
-                store_fn = lambda d, t=stmt.path, ps=(args[0] if args else ""): store_hcat(d, t, ps)  # noqa: E731
-            elif storer == "dbstorage":
-                # DBStorage(driver, url[, table]) — builtin/DBStorage.java
-                # ctor order; the INTO target doubles as the table name
-                # when no explicit table arg is given, and as the url for
-                # `STORE x INTO 'sqlite:///db' USING DBStorage()`.
-                from ..sources.db import store_db
-
-                url = next((a for a in args if "://" in a or a.lower().startswith("jdbc:")), None)
-                if url is None:
-                    url, table = stmt.path, (args[-1] if args else "pig_out")
-                else:
-                    table = stmt.path
-                store_fn = lambda d, u=url, t=table: store_db(d, u, t)  # noqa: E731
-            elif storer == "stringstore":
-                # test-UDF jar StringStore (storefunc/StringStore.java):
-                # putNext writes tuple.toString() — one Pig-rendered
-                # tuple per line, complex values in their Pig text forms
-                def _store_stringstore(d, p=stmt.path):
-                    from ..sources import _complex_to_pig_text
-
-                    dfs = _complex_to_pig_text(d)
-                    line = F.concat(
-                        F.lit("("),
-                        F.concat_ws(",", *[
-                            F.coalesce(dfs[c].cast("string"), F.lit(""))
-                            for c in dfs.columns
-                        ]),
-                        F.lit(")"),
-                    )
-                    dfs.select(line.alias("value")).write.text(p)
-
-                store_fn = _store_stringstore
-            elif storer in LOADER_FORMAT:
-                fmt = LOADER_FORMAT[storer]
-                opts = {}
-                if any(a.strip().lower() == "-schema" for a in args):
-                    opts["schema_sidecar"] = True
-                args = [a for a in args if not a.strip().lower().startswith("-")]
-                sep = _unescape_delim(args[0]) if args else "\t"
-                from ..sources import store as _sstore
-
+            fmt, sf, opts = storage.bind(stmt.storer, "store", stmt.storer_args or [])
+            conf = self.spark.conf
+            if sf.error_handling and conf.get("pig.error-handling.enabled", "false") == "true":
                 # SET pig.error-handling.enabled true → tolerant store
-                # (ErrorHandling.java; thresholds per PigConfiguration:
-                # pig.error-handling.min.error.records /
-                # pig.error-handling.error.threshold)
-                conf = self.spark.conf
-                # only delimited-text storers participate — mirrors
-                # Pig, where a StoreFunc opts in by implementing the
-                # ErrorHandling interface; others store normally
-                if fmt in ("csv", "pigstorage") and conf.get("pig.error-handling.enabled", "false") == "true":
-                    opts["on_error"] = "skip"
-                    opts["min_error_records"] = int(
-                        conf.get("pig.error-handling.min.error.records", "0")
-                    )
-                    opts["max_error_frac"] = float(
-                        conf.get("pig.error-handling.error.threshold", "0.0")
-                    )
-                store_fn = lambda d, p=stmt.path, f=fmt, s=sep, o=opts: _sstore(d, p, format=f, sep=s, **o)  # noqa: E731
-            else:
-                raise NameError(
-                    f"unknown storer {stmt.storer!r} — one of "
-                    f"{sorted(k for k in LOADER_FORMAT if k)}, DBStorage, HBaseStorage, AccumuloStorage or HCatStorer"
-                )
+                # (ErrorHandling.java; thresholds per PigConfiguration)
+                opts["on_error"] = "skip"
+                opts["min_error_records"] = int(conf.get("pig.error-handling.min.error.records", "0"))
+                opts["max_error_frac"] = float(conf.get("pig.error-handling.error.threshold", "0.0"))
             import os as _os
 
-            if storer not in ("dbstorage", "hbasestorage", "accumulostorage", "hcatstorer") and self.execute_stores and _os.path.exists(stmt.path):
+            if sf.clobber and self.execute_stores and _os.path.exists(stmt.path):
                 # Pig refuses to clobber an existing output location
                 # (InputOutputFileValidator ERROR 6000, negative.conf
                 # 'store into existing file'); remove it first (fs -rmr)
@@ -943,6 +833,7 @@ class PigTranslator:
                     f"pig latin: output location {stmt.path!r} already exists "
                     "(ERROR 6000 Output Location Validation Failed)"
                 )
+            store_fn = lambda d, p=stmt.path, f=fmt, o=opts: sources.store(d, p, f, **o)  # noqa: E731
             self._pending_stores.append((self._rel(stmt.rel), stmt.path, store_fn))
             self.stores.append(stmt.path)
             self.sink_aliases.append(stmt.rel)
@@ -1462,88 +1353,11 @@ class PigTranslator:
             for _, p, _ in self._pending_stores
         ):
             self._flush_stores()
-        loader = (op.loader or "pigstorage").rsplit(".", 1)[-1].lower()
-        if loader == "hcatloader":
-            # HCatLoader() — the LOAD target is a catalog table name;
-            # schema (incl. trailing partition columns) arrives TYPED
-            # from the catalog, so an AS clause only renames/casts
-            # (sources/hcatalog.py; hcat.conf)
-            from ..sources.hcatalog import load_hcat
-
-            return load_hcat(self.spark, op.path)
-        if loader == "hbasestorage":
-            # HBaseStorage(columnList[, options]) — the client-less
-            # cell-model facade (sources/hbase.py; HBaseStorage.java:146).
-            # Values decode to strings (the bytearray→POCast flow), so
-            # the AS clause applies Pig gradual typing per field; map
-            # fields (cf:* / cf:prefix*) arrive as map<string,string>.
-            from ..sources.hbase import load_hbase
-
-            hargs = list(op.loader_args or [])
-            if not hargs:
-                raise ValueError("HBaseStorage needs a column list argument")
-            return load_hbase(
-                self.spark,
-                op.path,
-                hargs[0],
-                hargs[1] if len(hargs) > 1 else "",
-                # AS-clause types drive the binary caster's per-field
-                # decode (the Java HBaseBinaryConverter contract)
-                field_types=[f.type for f in op.schema] if op.schema else None,
-            )
-        if loader == "accumulostorage":
-            # AccumuloStorage(columns[, options]) — the sibling facade
-            # (sources/accumulo.py; AccumuloStorage.java). Row key is
-            # always field 0; AS applies gradual typing to scalars.
-            from ..sources.accumulo import load_accumulo
-
-            aargs = list(op.loader_args or [])
-            return load_accumulo(
-                self.spark,
-                op.path,
-                aargs[0] if aargs else "",
-                aargs[1] if len(aargs) > 1 else "",
-                field_types=[f.type for f in op.schema] if op.schema else None,
-            )
-        if loader == "dumploader":
-            # test-UDF jar DumpLoader (storefunc/DumpLoader.java): one
-            # tuple per line '(f1, f2, ... )' — the Java strips char 0
-            # and the LAST TWO chars (its data always ends ' )'), then
-            # splits on ',' and trims. The reference appends fields
-            # per ROW at runtime (ragged tuples); a DataFrame needs one
-            # arity, so take max(size) over the FILE (one aggregate —
-            # r10 ADVICE: first() silently truncated any later row
-            # with more fields). Rows shorter than the max pad with
-            # nulls where the reference would emit a shorter tuple —
-            # the relational-schema divergence, not data loss.
-            raw = self.spark.read.text(op.path)
-            body = F.expr("substring(value, 2, greatest(length(value) - 3, 0))")
-            arr = F.transform(F.split(body, ","), lambda x: F.trim(x))
-            n_row = raw.agg(aggregates.over_rows("max", [F.size(arr)]).alias("n")).first()
-            n = int(n_row["n"]) if n_row is not None and n_row["n"] is not None else 0
-            return raw.select(
-                *[F.element_at(arr, i + 1).alias(f"_c{i}") for i in range(max(n, 1))]
-            )
-        fmt = LOADER_FORMAT.get(loader, loader)
-        opts = {}
-        # PigStorage args: first non-flag = delimiter; '-tagFile' flag
-        # prepends the source filename column; '-schema' applies the
-        # .pig_schema sidecar (PigStorage.java options)
-        args = list(op.loader_args or [])
-        flags = {a.strip().lower() for a in args}
-        if "-tagfile" in flags:
-            opts["tag_file"] = True
-        if "-schema" in flags:
-            opts["schema_sidecar"] = True
-        args = [a for a in args if not a.strip().lower().startswith("-")]
-        if fmt in ("csv", "pigstorage") and args:
-            opts["sep"] = _unescape_delim(args[0])
-        if fmt in ("myregexloader", "regexloader") and args:
-            # MyRegExLoader('regex') — the pattern is the loader arg
-            opts["pattern"] = args[0]
+        types = [f.type for f in op.schema] if op.schema else None
+        fmt, _, opts = storage.bind(op.loader, "load", op.loader_args or [], types)
         # with -tagFile the filename is $0 and the user's AS clause
         # includes it (Pig semantics) — the positional binding covers both
-        return Relation.load(self.spark, op.path, fmt, **opts).df
+        return sources.load(self.spark, op.path, fmt, **opts)
 
     # ------------------------------------------------------------------
     def _group(self, op: G.Group) -> RelInfo:
@@ -3874,23 +3688,6 @@ def _range_span(rel: Relation, rp) -> list[str]:
     if lo > hi:
         raise SyntaxError(f"pig latin: range projection {rp.start}..{rp.end} is reversed")
     return names[lo : hi + 1]
-
-
-def _unescape_delim(s: str) -> str:
-    """PigStorage('\\u0001') / ('\\t'): Pig decodes backslash escapes
-    in delimiter arguments (PigStorage.java StorageUtil.parseFieldDel);
-    the string lexer keeps them raw, so decode here — twice when the
-    source was itself backslash-escaped (scripts embedded in other
-    quoting layers write '\\\\u0001')."""
-    out = s
-    for _ in range(2):
-        if "\\" not in out:
-            break
-        try:
-            out = out.encode("utf-8").decode("unicode_escape")
-        except Exception:  # noqa: BLE001 — malformed escape: literal
-            break
-    return out
 
 
 def _single_alias(alias) -> tuple[str | None, str | None]:

@@ -150,12 +150,9 @@ def stream_through(
         # render in Pig's text forms ([k#v], (a,b), {(a,b)}) so the
         # command sees what PigStorage would write (and utf8_decode can
         # parse the declared types back from its stdout)
-        from ..sources import _complex_to_pig_text
+        from ..sources import pig_text_lines
 
-        dfs = _complex_to_pig_text(df)
-        serialized = dfs.select(
-            F.concat_ws(in_sep, *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in dfs.columns])
-        ).rdd.map(lambda r: r[0])
+        serialized = pig_text_lines(df, in_sep).rdd.map(lambda r: r[0])
     else:
         ser = serialize
         serialized = df.rdd.map(lambda row: ser(tuple(row)))

@@ -1431,7 +1431,8 @@ def q103_log_parse(spark: SparkSession, sf: str) -> DataFrame:
     group count): common-log lines synthesized from events are parsed
     back into typed fields. Map-only codegen; the oracle parses the
     identical lines with the identical pattern."""
-    from .sources import COMMON_LOG_PATTERN, regex_groups
+    from .sources import regex_groups
+    from .sources.storage import COMMON_LOG_PATTERN
 
     e = _t(spark, sf, "events").df
     line = F.concat(

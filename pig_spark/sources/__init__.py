@@ -1,16 +1,17 @@
 """Sources & sinks — Pig loader/storer surface on Spark DataSource V2.
 
-Mapping (reference files in apache/pig):
+Pig's storage functions (PigStorage, TextLoader, JsonLoader/JsonStorage,
+BinStorage, CSVExcelStorage, XMLLoader, HBaseStorage, DBStorage, …) are
+one table, ``sources/storage.py``: ``load``/``store`` resolve a format
+name there first, and any other name is a Spark source (parquet, orc,
+avro, json, csv, text, xml) read or written as Spark does, with Pig's
+untyped text semantics for csv: undeclared fields load as strings and
+cast lazily at use sites — Pig's bytearray gradual typing
+(LoadTypeCastInserter.java, Utf8StorageConverter.java).
 
-- PigStorage (builtin/PigStorage.java; delimited text, default tab) →
-  csv with sep. Schema optional: undeclared fields load as strings and
-  cast lazily at use sites — Pig's bytearray gradual typing
-  (LoadTypeCastInserter.java, Utf8StorageConverter.java).
-- TextLoader (builtin/TextLoader.java) → text.
-- JsonLoader/JsonStorage (builtin/JsonLoader.java) → json.
-- AvroStorage/OrcStorage/Parquet{Loader,Storer} → native formats with
-  full predicate/projection pushdown (LoadPredicatePushdown.java /
-  LoadPushDown.java are subsumed by DataSource V2).
+- AvroStorage/OrcStorage/Parquet{Loader,Storer} get full predicate/
+  projection pushdown (LoadPredicatePushdown.java / LoadPushDown.java
+  are subsumed by DataSource V2).
 - MultiStorage (piggybank; partitioned output) → ``partition_by``.
 - compression: transparent, as in Pig (TestBZip.java).
 
@@ -28,7 +29,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..compat import sql_ident
 from ..pigtypes import TYPES, pig_type_name
+from . import storage
+from .storage import load_all, load_regex  # noqa: F401 — re-exported
 
 _FORMATS = {"parquet", "orc", "avro", "json", "csv", "text", "xml"}
 SCHEMA_SIDECAR = ".pig_schema"
@@ -110,141 +114,6 @@ def read_schema_sidecar(spark: SparkSession, dir_path: str) -> T.StructType | No
             )
         out.append(T.StructField(f["name"], spark_t, True))
     return T.StructType(out)
-_ALIASES = {
-    "pigstorage": "csv",
-    "pig_storage": "csv",
-    "textloader": "text",
-    "jsonloader": "json",
-    "avrostorage": "avro",
-    "orcstorage": "orc",
-    "xmlloader": "xml",  # piggybank XMLLoader → Spark 4 built-in xml source
-    "csvexcelstorage": "csv",  # piggybank CSVExcelStorage (quote/escape opts)
-    "csvloader": "csv",  # piggybank CSVLoader (quoted CSV, Excel dialect)
-}
-
-# ---------------------------------------------------------------------------
-# RegExLoader family (piggybank/storage/RegExLoader.java + apachelog/):
-# text lines matched against a regex; each capture group becomes a field,
-# non-matching lines are skipped (RegExLoader.getNext loops past them).
-# Patterns below are verbatim from CommonLogLoader.java:38 /
-# CombinedLogLoader.java:39 (Java regex — compatible with RE2/Spark here).
-# ---------------------------------------------------------------------------
-
-COMMON_LOG_PATTERN = (
-    r"^(\S+)\s+(\S+)\s+(\S+)\s+.(\S+\s+\S+).\s+.(\S+)\s+(\S+)\s+(\S+.\S+).\s+(\S+)\s+(\S+)$"
-)
-COMMON_LOG_FIELDS = (
-    "remote_addr", "remote_logname", "remote_user", "time",
-    "method", "uri", "protocol", "status", "bytes",
-)
-COMBINED_LOG_PATTERN = (
-    r"^(\S+)\s+(\S+)\s+(\S+)\s+.(\S+\s+\S+).\s+\"(\S+)\s+(.+?)\s+(HTTP[^\"]+)\"\s+"
-    r"(\S+)\s+(\S+)\s+\"([^\"]*)\"\s+\"(.*)\"$"
-)
-COMBINED_LOG_FIELDS = COMMON_LOG_FIELDS + ("referer", "user_agent")
-
-_REGEX_LOADERS = {
-    "commonlogloader": (COMMON_LOG_PATTERN, COMMON_LOG_FIELDS),
-    "combinedlogloader": (COMBINED_LOG_PATTERN, COMBINED_LOG_FIELDS),
-    "myregexloader": None,  # pattern supplied by the caller
-    "regexloader": None,
-}
-
-
-#: AllLoader.java's file.extension.loaders mapping, Spark-side: which
-#: engine format reads each file suffix in a mixed-format directory.
-ALL_LOADER_EXTENSIONS = {
-    ".parquet": "parquet",
-    ".orc": "orc",
-    ".avro": "avro",
-    ".json": "json",
-    ".jsonl": "json",
-    ".xml": "xml",
-    ".csv": "csv",
-    ".tsv": "csv",
-    ".txt": "text",
-    ".log": "text",
-}
-
-
-def load_all(
-    spark: SparkSession,
-    path: str,
-    extensions: dict[str, str] | None = None,
-    **options,
-) -> DataFrame:
-    """AllLoader (piggybank storage/AllLoader.java): point at a folder
-    of MIXED formats and pick the loader per file by extension (the
-    ``file.extension.loaders`` property, here :data:`ALL_LOADER_
-    EXTENSIONS` or the ``extensions`` override). Each present format
-    loads with a ``pathGlobFilter`` (one listing per format, pruned at
-    the source), every field is normalized to string (AllLoader's
-    bytearray-everything contract — cast at use sites, Pig gradual
-    typing), and the union is by column NAME with null-fill for
-    columns a format lacks. Gz/Bz2 text is transparent (Spark codecs),
-    matching the Java loader's compressed-text handling."""
-
-    ext_map = extensions or ALL_LOADER_EXTENSIONS
-    present: dict[str, str] = {}
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            base = f[:-3] if f.endswith(".gz") else (f[:-4] if f.endswith(".bz2") else f)
-            ext = os.path.splitext(base)[1].lower()
-            if ext in ext_map:
-                present.setdefault(ext, ext_map[ext])
-    if not present:
-        raise ValueError(
-            f"AllLoader: no files under {path!r} match known extensions {sorted(ext_map)}"
-        )
-    parts = []
-    for ext, fmt in sorted(present.items()):
-        kwargs = dict(options)
-        if fmt == "csv" and ext == ".tsv":
-            kwargs["sep"] = "\t"
-        # exact suffix alternation: '*.json*' would also sweep .jsonl
-        # files (double-loading their rows) and backup-suffixed files
-        # like x.csv.bak — match only .ext and its compressed twins
-        df = load(
-            spark, path, fmt,
-            pathGlobFilter=f"*{{{ext},{ext}.gz,{ext}.bz2}}",
-            recursiveFileLookup=True,
-            **kwargs,
-        )
-        parts.append(df.select(*[df[c].cast("string").alias(c) for c in df.columns]))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
-
-
-def load_regex(
-    spark: SparkSession,
-    path: str,
-    pattern: str,
-    names: tuple[str, ...] | list[str] | None = None,
-) -> DataFrame:
-    """RegExLoader.java: one row per matching line, one string column
-    per capture group (``f0..fN`` unless ``names`` given); lines that
-    don't match are dropped, like the Java loader's skip-loop. All
-    codegen (`rlike` + `regexp_extract`) — the filter and extractions
-    run inside the text scan's stage, no Python, no shuffle."""
-    import re as _re
-
-    from pyspark.sql import functions as F
-
-    n_groups = _re.compile(pattern).groups
-    if n_groups == 0:
-        raise ValueError("RegExLoader pattern must have at least one capture group")
-    cols = list(names) if names else [f"f{i}" for i in range(n_groups)]
-    if len(cols) != n_groups:
-        raise ValueError(f"{len(cols)} names for {n_groups} capture groups")
-    df = load(spark, path, "text")
-    parts = regex_groups(F.col("value"), pattern, n_groups)
-    return (
-        df.filter(F.col("value").rlike(pattern))
-        .select(parts.alias("__g"))
-        .select(*[F.get(F.col("__g"), i).alias(c) for i, c in enumerate(cols)])
-    )
 
 
 def regex_groups(col, pattern: str, n_groups: int):
@@ -263,21 +132,6 @@ def regex_groups(col, pattern: str, n_groups: int):
     rewrite = sep.join(f"${i + 1}" for i in range(n_groups))
     first = F.regexp_substr(col, F.lit(pattern))
     return F.split(F.regexp_replace(first, pattern, rewrite), sep, -1)
-
-
-def _norm_format(fmt: str) -> str:
-    f = _ALIASES.get(fmt.lower(), fmt.lower())
-    if f in ("hbase", "accumulo", "hbasestorage", "accumulostorage"):
-        # not generic formats — they need a column list; point at the
-        # cell-model facades (sources/hbase.py, sources/accumulo.py)
-        raise ValueError(
-            f"format {fmt!r} needs a column list — use "
-            "sources.hbase.load_hbase / sources.accumulo.load_accumulo "
-            "(or Latin LOAD ... USING HBaseStorage/AccumuloStorage)"
-        )
-    if f not in _FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}; one of {sorted(_FORMATS | set(_ALIASES))}")
-    return f
 
 
 @dataclass
@@ -425,60 +279,55 @@ def _pig_paths(path: str) -> list[str]:
     return [fix(p) for p in out if p.strip()]
 
 
+def _resolve(format: str, side: str, options: dict) -> tuple:
+    """(Spark source — None for the function's own reader or writer —,
+    storage-function entry or None, options) of a LOAD or STORE
+    ``format``: a Pig storage function's entry adds the options it
+    fixes under the caller's; any other name must be a Spark source."""
+    sf = storage.entry(format, side)
+    if sf is not None:
+        return sf.format, sf, {**sf.options, **options}
+    if format.lower() not in _FORMATS:
+        raise ValueError(f"unsupported format {format!r}; one of {sorted(_FORMATS | set(storage.FUNCS))}")
+    return format.lower(), None, options
+
+
 def load(
     spark: SparkSession,
     path: str,
     format: str = "parquet",
     schema: str | T.StructType | None = None,
-    sep: str = "\t",
+    sep: str | None = None,
     tag_file: bool = False,
     schema_sidecar: bool = False,
     **options,
 ) -> DataFrame:
     """LOAD 'path' USING <loader> [AS schema].
 
-    For delimited text without a declared schema, every field arrives
-    as string (Pig: bytearray) — cast at use sites, nulls on garbage.
-    ``tag_file`` ≅ PigStorage('-tagFile'): prepend the source file's
-    name as the first column (``input_file_name``) — Spark's
+    ``format`` is a Pig storage function (``sources/storage.py``) or a
+    Spark source. For delimited text without a declared schema, every
+    field arrives as string (Pig: bytearray) — cast at use sites, nulls
+    on garbage; ``sep`` is the delimiter (the function's own default,
+    else tab). ``tag_file`` ≅ PigStorage('-tagFile'): prepend the source
+    file's name as the first column (``input_file_name``) — Spark's
     ``input_file_name()``, evaluated at scan time so it costs nothing.
     ``schema_sidecar`` ≅ PigStorage('-schema'): apply the
     ``.pig_schema`` JSON written beside the data (JsonMetadata.java),
     restoring names and types over schemaless text.
     """
-    lf = format.lower()
-    if lf == "allloader":
-        return load_all(spark, path, **options)
-    if lf in _REGEX_LOADERS:
-        preset = _REGEX_LOADERS[lf]
-        pattern = options.pop("pattern", None) or (preset[0] if preset else None)
-        if pattern is None:
-            raise ValueError(f"{format} needs a regex pattern argument (MyRegExLoader('...'))")
-        names = options.pop("names", None) or (preset[1] if preset else None)
-        if schema is not None and isinstance(schema, str):
-            names = [p.strip().split()[0].split(":")[0] for p in schema.split(",")]
-        return load_regex(spark, path, pattern, names)
-    fmt = _norm_format(format)
     ensure_pig_session_semantics(spark)
+    fmt, sf, options = _resolve(format, "load", options)
+    if fmt is None:  # the function's own reader
+        if schema is not None:
+            options["schema"] = schema
+        return sf.read(spark, path, **options)
     if schema_sidecar and schema is None:
         schema = read_schema_sidecar(spark, path)
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
     if fmt == "csv":
-        if format.lower() in ("csvloader", "csvexcelstorage"):
-            # CSV dialects default to comma (CSVLoader.java wraps
-            # CSVExcelStorage with ',' — PigStorage's default is tab)
-            options.setdefault("sep", ",")
-        options.setdefault("sep", sep)
-        options.setdefault("header", False)
-        if format.lower() in ("pigstorage", "pig_storage"):
-            # PigStorage splits on the delimiter literally — no quote or
-            # escape handling (PigStorage.java readField); only
-            # CSVExcelStorage does quotes. Disable Spark CSV's default
-            # '"' quoting so embedded quotes round-trip byte-identical.
-            options.setdefault("quote", "")
-            options.setdefault("escape", "")
+        options = {"header": False, **options, "sep": sep if sep is not None else options.get("sep", "\t")}
     paths = _pig_paths(path)
     meta = read_conf = None
     if fmt == "parquet":
@@ -524,7 +373,7 @@ def store(
     path: str,
     format: str = "parquet",
     mode: str = "overwrite",
-    sep: str = "\t",
+    sep: str | None = None,
     partition_by: Sequence[str] | None = None,
     bucket_by: tuple[int, Sequence[str]] | None = None,
     sort_by: Sequence[str] | None = None,
@@ -559,20 +408,17 @@ def store(
     bad/total counters come from Spark's Observation API, collected
     DURING the write (one scan, the Spark-native analogue of the MR
     counters CounterBasedErrorHandler reads)."""
-    if format.lower() == "dbstorage":
-        from pig_spark.sources.db import store_db
-
-        store_db(df, url=path, mode=mode, **options)
+    fmt, sf, options = _resolve(format, "store", options)
+    if fmt is None:  # the function's own writer
+        sf.write(df, path, mode=mode, **options)
         return
-    import os as _os
-
-    if path and "://" not in path and not _os.path.isabs(path) and bucket_by is None:
+    if path and "://" not in path and not os.path.isabs(path) and bucket_by is None:
         # relative output path: resolve against the PYTHON cwd (the
         # JVM's user.dir is pinned at launch) — mirrors load()'s
         # relative-path contract
-        path = _os.path.abspath(path)
-    fmt = _norm_format(format)
+        path = os.path.abspath(path)
     if fmt == "csv":
+        sep = options["sep"] = sep if sep is not None else options.get("sep", "\t")
         df = _complex_to_pig_text(df)
     obs = None
     if on_error == "skip":
@@ -601,15 +447,13 @@ def store(
         df = flagged.filter(~F.col("__bad")).drop("__bad")
     elif on_error != "fail":
         raise ValueError(f"store(on_error={on_error!r}): use 'fail' or 'skip'")
-    writer = df.write.mode(mode)
-    if fmt == "csv":
-        options.setdefault("sep", sep)
-        if format.lower() in ("pigstorage", "pig_storage"):
-            # mirror load(): PigStorage joins fields with the delimiter
-            # literally, no quoting/escaping
-            options.setdefault("quote", "")
-            options.setdefault("escape", "")
-    writer = writer.options(**{k: str(v) for k, v in options.items()})
+    out = df
+    if sf is not None and sf.literal:
+        # PigStorage joins fields with the delimiter literally: Spark's
+        # CSV writer would wrap a field holding it in its quote (for an
+        # empty quote, NUL bytes)
+        out, fmt = pig_text_lines(df, options.pop("sep"), partition_by or ()), "text"
+    writer = out.write.mode(mode).options(**{k: str(v) for k, v in options.items()})
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if bucket_by:
@@ -686,40 +530,50 @@ def _check_error_budget(spark, obs, path: str, max_error_frac: float, min_error_
     )
 
 
-def _pig_text_col(col: "Column", dtype) -> "Column":
-    """Render one value in Pig's delimited-text form (Tuple.
-    toDelimitedString / PigStorage write side): maps ``[k#v,...]``,
-    tuples ``(a,b)``, bags ``{(a,b),...}``; null scalars write empty.
-    Pure Column ops — the rendering runs in the writer's stage."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
+def _pig_text_sql(ref: str, dtype, depth: int = 0) -> str:
+    """SQL rendering the value ``ref`` in Pig's delimited-text form
+    (Tuple.toDelimitedString / PigStorage write side): maps
+    ``[k#v,...]``, tuples ``(a,b)``, bags ``{(a,b),...}``, datetimes
+    ISO-8601 to the millisecond (DateTime.toString); null stays null.
+    One SQL template, applied with one ``selectExpr`` — the rendering
+    runs in the writer's stage and costs no py4j call per field."""
     if isinstance(dtype, T.MapType):
-        entries = F.transform(
-            F.map_entries(col),
-            lambda e: F.concat(
-                e["key"].cast("string"),
-                F.lit("#"),
-                F.coalesce(_pig_text_col(e["value"], dtype.valueType), F.lit("")),
-            ),
-        )
-        return F.when(col.isNotNull(), F.concat(F.lit("["), F.array_join(entries, ","), F.lit("]")))
+        e = f"_e{depth}"
+        value = _pig_text_sql(f"{e}.value", dtype.valueType, depth + 1)
+        entry = f"concat(CAST({e}.key AS STRING), '#', coalesce({value}, ''))"
+        return f"CASE WHEN {ref} IS NOT NULL THEN concat('[', array_join(transform(map_entries({ref}), {e} -> {entry}), ','), ']') END"
     if isinstance(dtype, T.StructType):
-        parts = [
-            F.coalesce(_pig_text_col(col.getField(f.name), f.dataType), F.lit(""))
-            for f in dtype.fields
-        ]
-        return F.when(col.isNotNull(), F.concat(F.lit("("), F.concat_ws(",", *parts), F.lit(")")))
+        parts = ", ".join(
+            f"coalesce({_pig_text_sql(f'{ref}.{sql_ident(f.name)}', f.dataType, depth)}, '')" for f in dtype.fields
+        )
+        return f"CASE WHEN {ref} IS NOT NULL THEN concat('(', concat_ws(',', {parts}), ')') END"
     if isinstance(dtype, T.ArrayType):
-        if isinstance(dtype.elementType, T.StructType):
-            elems = F.transform(col, lambda x: _pig_text_col(x, dtype.elementType))
-        else:  # bag of scalars: each element is a 1-field tuple
-            elems = F.transform(
-                col,
-                lambda x: F.concat(F.lit("("), F.coalesce(x.cast("string"), F.lit("")), F.lit(")")),
-            )
-        return F.when(col.isNotNull(), F.concat(F.lit("{"), F.array_join(elems, ","), F.lit("}")))
-    return col.cast("string")
+        x = f"_x{depth}"
+        elem = _pig_text_sql(x, dtype.elementType, depth + 1)
+        if not isinstance(dtype.elementType, T.StructType):  # bag of scalars: 1-field tuples
+            elem = f"concat('(', coalesce({elem}, ''), ')')"
+        return f"CASE WHEN {ref} IS NOT NULL THEN concat('{{', array_join(transform({ref}, {x} -> {elem}), ','), '}}') END"
+    if isinstance(dtype, T.TimestampType):
+        return f"date_format({ref}, \"yyyy-MM-dd'T'HH:mm:ss.SSSXXX\")"
+    if isinstance(dtype, T.TimestampNTZType):
+        return f"date_format({ref}, \"yyyy-MM-dd'T'HH:mm:ss.SSS\")"
+    return f"CAST({ref} AS STRING)"
+
+
+def pig_text_lines(df: DataFrame, sep: str, keys: Sequence[str] = ()) -> DataFrame:
+    """``df`` as lines of Pig delimited text, the string column
+    ``value``: every field in its Pig text form, null as empty, joined
+    by ``sep`` as it is — what PigStorage writes and a STREAM command
+    reads. The columns ``keys`` are kept as they are, not rendered.
+    Fields are read by position, so duplicate names are fine."""
+    pos = df.toDF(*[f"_{i}" for i in range(len(df.columns))])
+    fields = list(zip(pos.columns, df.schema.fields))
+    # the delimiter as a SQL literal of \\u escapes: any character, a
+    # quote or a backslash included, reads back as itself
+    units = sep.encode("utf-16-be")
+    delim = "'" + "".join(f"\\u{int.from_bytes(units[i:i + 2], 'big'):04x}" for i in range(0, len(units), 2)) + "'"
+    line = ", ".join(f"coalesce({_pig_text_sql(p, f.dataType)}, '')" for p, f in fields if f.name not in keys)
+    return pos.selectExpr(f"concat_ws({delim}, {line}) AS value", *[f"{p} AS {sql_ident(f.name)}" for p, f in fields if f.name in keys])
 
 
 def _complex_to_pig_text(df: DataFrame) -> DataFrame:
@@ -727,20 +581,14 @@ def _complex_to_pig_text(df: DataFrame) -> DataFrame:
     map/struct/array columns in Pig's textual forms instead of failing
     (the forms `pigtypes.utf8_decode` parses back on LOAD — a lossless text
     round-trip for the shapes PigStorage supports)."""
-    from pyspark.sql import types as T
-
-    if not any(
-        isinstance(f.dataType, (T.MapType, T.StructType, T.ArrayType)) for f in df.schema.fields
-    ):
+    nested = (T.MapType, T.StructType, T.ArrayType)
+    if not any(isinstance(f.dataType, nested) for f in df.schema.fields):
         return df
-    return df.select(
-        *[
-            _pig_text_col(df[f.name], f.dataType).alias(f.name)
-            if isinstance(f.dataType, (T.MapType, T.StructType, T.ArrayType))
-            else df[f.name]
-            for f in df.schema.fields
-        ]
-    )
+    return df.selectExpr(*[
+        f"{_pig_text_sql(sql_ident(f.name), f.dataType) if isinstance(f.dataType, nested) else sql_ident(f.name)}"
+        f" AS {sql_ident(f.name)}"
+        for f in df.schema.fields
+    ])
 
 
 def load_fixed_width(

@@ -288,22 +288,3 @@ def store_accumulo(
     for p in pieces[1:]:
         cells = cells.unionByName(p)
     cells.write.mode("append").parquet(path)
-
-
-class AccumuloStorage:
-    """Pig-facing class: ``AccumuloStorage(columns[, options])`` —
-    resolved by leaf name from Latin USING clauses."""
-
-    def __init__(self, columns: str = "", options: str = ""):
-        self.columns = columns
-        self.options = options
-        _parse_opts(options)
-        parse_accumulo_columns(columns)
-
-    def load(
-        self, spark: SparkSession, location: str, field_types: list | None = None
-    ) -> DataFrame:
-        return load_accumulo(spark, location, self.columns, self.options, field_types)
-
-    def store(self, df: DataFrame, location: str) -> None:
-        store_accumulo(df, location, self.columns, self.options)

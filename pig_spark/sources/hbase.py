@@ -453,24 +453,3 @@ def store_hbase(
     for p in pieces[1:]:
         cells = cells.unionByName(p)
     cells.write.mode("append").parquet(target)
-
-
-class HBaseStorage:
-    """The Pig-facing class: ``HBaseStorage(columnList[, options])``
-    with load/store methods — resolved by leaf name from Latin
-    ``USING org.apache.pig.backend.hadoop.hbase.HBaseStorage(...)``."""
-
-    def __init__(self, column_list: str, options: str = ""):
-        self.column_list = column_list
-        self.options = options
-        # validate eagerly — Pig's ctor throws on bad options too
-        _parse_options(options)
-        parse_column_list(column_list)
-
-    def load(
-        self, spark: SparkSession, path: str, field_types: list | None = None
-    ) -> DataFrame:
-        return load_hbase(spark, path, self.column_list, self.options, field_types)
-
-    def store(self, df: DataFrame, path: str) -> None:
-        store_hbase(df, path, self.column_list, self.options)

@@ -168,22 +168,3 @@ def store_hcat(df: DataFrame, table: str, partition_spec: str = "") -> None:
             ]
         )
     aligned.write.mode("append").insertInto(table)
-
-
-class HCatLoader:
-    """Pig-facing class — ``USING org.apache.hive.hcatalog.pig.
-    HCatLoader()``, resolved by leaf name from Latin."""
-
-    def load(self, spark: SparkSession, table: str) -> DataFrame:
-        return load_hcat(spark, table)
-
-
-class HCatStorer:
-    """Pig-facing class — ``USING HCatStorer(['partitionSpec'])``."""
-
-    def __init__(self, partition_spec: str = ""):
-        self.partition_spec = partition_spec
-        _parse_partition_spec(partition_spec)  # validate eagerly
-
-    def store(self, df: DataFrame, table: str) -> None:
-        store_hcat(df, table, self.partition_spec)

@@ -6,8 +6,8 @@ backend/hadoop/accumulo/AccumuloStorage.java."""
 
 import pytest
 
+from pig_spark import sources
 from pig_spark.sources.accumulo import (
-    AccumuloStorage,
     load_accumulo,
     parse_accumulo_columns,
     store_accumulo,
@@ -120,7 +120,7 @@ def test_binary_caster_alias(spark, tmp_path):
     encoding (the Java classes do too)."""
     t = str(tmp_path / "tbl")
     df = spark.createDataFrame([("r1", -99)], "k string, v bigint")
-    AccumuloStorage("n:v", "-caster AccumuloBinaryConverter").store(df, t)
+    sources.store(df, t, "AccumuloStorage", columns="n:v", options="-caster AccumuloBinaryConverter")
     got = load_accumulo(spark, t, "n:v", "-caster AccumuloBinaryConverter")
     assert got.first()["n_v"] == "-99"
 

@@ -887,3 +887,142 @@ def test_latin_cogroup_fuzz_differential(spark, tmp_path):
             )
     con.close()
     assert not failures, "\n\n".join(failures)
+
+
+# ----------------------------------------------------------------------
+# multi-STORE then re-LOAD: one script STOREs two or three aliases
+# through PigStorage, a '-schema' PigStorage, BinStorage or
+# ParquetStorer; after an exec boundary it LOADs each back through the
+# matching loader — every scalar type, with nulls, against DuckDB
+# ----------------------------------------------------------------------
+
+N_STORE = 10
+STORE_SEED = 20261020
+
+# (name, Pig type, DuckDB type): every Pig scalar, k the group key
+_ST_COLS = [
+    ("k", "int", "INTEGER"), ("l", "long", "BIGINT"), ("f", "float", "FLOAT"),
+    ("d", "double", "DOUBLE"), ("s", "chararray", "VARCHAR"), ("b", "boolean", "BOOLEAN"),
+    ("t", "datetime", "TIMESTAMP"), ("bd", "bigdecimal", "DECIMAL(38,18)"),
+    ("bi", "biginteger", "DECIMAL(38,0)"),
+]
+_ST_STORERS = ["PigStorage", "PigStorage-schema", "BinStorage", "ParquetStorer"]
+
+
+def _store_rows(rng):
+    """A few rows, each field null one time in five; strings of letters
+    and spaces (no delimiter), datetimes to the millisecond, doubles
+    and floats across exponents."""
+    import datetime
+    from decimal import Decimal
+
+    def maybe(v):
+        return None if rng.random() < 0.2 else v
+
+    rows = []
+    for _ in range(rng.randint(6, 12)):
+        rows.append((
+            maybe(rng.randint(1, 3)),
+            maybe(rng.choice([0, -1, 2**31 + 5, -(2**62), rng.randint(-99, 99)])),
+            maybe(rng.choice([0.5, -2.25, 1.0e10, rng.randint(-9, 9) / 4])),
+            maybe(rng.choice([0.1, -1.0e-300, 1.0e20, 123456789.123, rng.random()])),
+            maybe("".join(rng.choice("ab xyz") for _ in range(rng.randint(1, 6))).strip() or "q"),
+            maybe(rng.random() < 0.5),
+            maybe(datetime.datetime(2000 + rng.randint(0, 30), rng.randint(1, 12), rng.randint(1, 28),
+                                    rng.randint(0, 23), rng.randint(0, 59), rng.randint(0, 59),
+                                    rng.randint(0, 999) * 1000)),
+            maybe(Decimal(rng.randint(-10**6, 10**6)) / Decimal(10**rng.randint(0, 6))),
+            maybe(Decimal(rng.choice([0, -7, 12345678901234567890, rng.randint(-99, 99)]))),
+        ))
+    return rows
+
+
+def _gen_store(rng, src, out):
+    """One script: a FILTER, a projection and a grouped aggregate of the
+    input, two or three of them STOREd, then re-LOADed after ``exec``.
+    Returns (script, {re-loaded alias: (stored alias, SQL twin)})."""
+    preds = [
+        None, ("k IS NOT NULL", "k IS NOT NULL"), ("l > 0", "l > 0"),
+        ("d < 1.0 OR d IS NULL", "d < 1.0 OR d IS NULL"), ("s MATCHES 'a.*'", "regexp_full_match(s, 'a.*')"),
+    ]
+    pred = rng.choice(preds)
+    names = [c for c, _, _ in _ST_COLS]
+    keep = sorted(rng.sample(range(len(names)), rng.randint(2, len(names))))
+    proj = [names[i] for i in keep]
+    where = f" WHERE {pred[1]}" if pred else ""
+    aliases = {
+        "f": (names, f"SELECT * FROM a{where}"),
+        "p": (proj, f"SELECT {', '.join(proj)} FROM a{where}"),
+        "s": (
+            ["k", "n", "mx", "tmin"],
+            f"SELECT k, COUNT(*)::BIGINT AS n, MAX(l) AS mx, MIN(t) AS tmin FROM a{where} GROUP BY k",
+        ),
+    }
+    lines = [
+        f"a = LOAD '{src}' USING ParquetLoader();",
+        f"f = FILTER a BY {pred[0]};" if pred else "f = FOREACH a GENERATE *;",
+        f"p = FOREACH f GENERATE {', '.join(proj)};",
+        "g = GROUP f BY k;",
+        "s = FOREACH g GENERATE group AS k, COUNT_STAR(f) AS n, MAX(f.l) AS mx, MIN(f.t) AS tmin;",
+    ]
+    types = dict((c, t) for c, t, _ in _ST_COLS) | {"n": "long", "mx": "long", "tmin": "datetime"}
+    sep = rng.choice(["\\t", ",", "|", ";"])
+    stored = rng.sample(sorted(aliases), rng.randint(2, 3))
+    reloads, loads = {}, []
+    for alias in stored:
+        storer = rng.choice(_ST_STORERS)
+        path = f"{out}/{alias}"
+        if storer.startswith("PigStorage"):
+            flag = ", '-schema'" if storer.endswith("-schema") else ""
+            lines.append(f"STORE {alias} INTO '{path}' USING PigStorage('{sep}'{flag});")
+            if flag:
+                loads.append(f"{alias}2 = LOAD '{path}' USING PigStorage('{sep}'{flag});")
+            else:
+                cols, _ = aliases[alias]
+                schema = ", ".join(f"{c}:{types[c]}" for c in cols)
+                loads.append(f"{alias}2 = LOAD '{path}' USING PigStorage('{sep}') AS ({schema});")
+        else:
+            lines.append(f"STORE {alias} INTO '{path}' USING {storer}();")
+            loader = "BinStorage" if storer == "BinStorage" else "ParquetLoader"
+            loads.append(f"{alias}2 = LOAD '{path}' USING {loader}();")
+        reloads[f"{alias}2"] = (alias, aliases[alias][1])
+    return "\n".join(lines + ["exec;"] + loads), reloads
+
+
+def test_latin_multi_store_reload_differential(spark, tmp_path):
+    """Several STOREs in one script share the input's subplan; after
+    ``exec`` each output reads back through its loader with the values
+    (floats to 1e-9) and Pig types of the alias it stored, and those
+    values equal DuckDB's over the same input."""
+    from pig_spark.pigtypes import pig_type_name
+
+    rng = random.Random(STORE_SEED)
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE a ({', '.join(f'{c} {t}' for c, _, t in _ST_COLS)})")
+    con.executemany(f"INSERT INTO a VALUES ({', '.join('?' * len(_ST_COLS))})", _store_rows(rng))
+    src = str(tmp_path / "a.parquet")
+    con.execute(f"COPY a TO '{src}' (FORMAT PARQUET)")
+    failures = []
+    for i in range(N_STORE):
+        script, reloads = _gen_store(rng, src, tmp_path / f"case{i}")
+        try:
+            rels = run(spark, script)
+            for alias, (stored, sql) in reloads.items():
+                df, before = rels[alias].df, rels[stored].df
+                got_types = [pig_type_name(f.dataType) for f in df.schema.fields]
+                want_types = [pig_type_name(f.dataType) for f in before.schema.fields]
+                rel = con.sql(sql)
+                got = sorted((tuple(r) for r in df.collect()), key=repr)
+                want = sorted(rel.fetchall(), key=repr)
+                same = len(got) == len(want) and all(
+                    len(g) == len(w) and all(_close(x, y) for x, y in zip(g, w)) for g, w in zip(got, want)
+                )
+                if df.columns != rel.columns or got_types != want_types or not same:
+                    failures.append(
+                        f"case {i} {alias} diff\n{script}\n{sql}\ncolumns {df.columns} vs {rel.columns}"
+                        f"\ntypes {got_types} vs {want_types}\nspark {got}\nduck  {want}"
+                    )
+        except Exception as ex:  # pragma: no cover - diagnostic path
+            failures.append(f"case {i} raised {type(ex).__name__}: {ex}\n{script}")
+    con.close()
+    assert not failures, "\n\n".join(failures)

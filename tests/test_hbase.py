@@ -8,8 +8,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from pig_spark import sources
 from pig_spark.sources.hbase import (
-    HBaseStorage,
     load_hbase,
     parse_column_list,
     store_hbase,
@@ -131,8 +131,8 @@ def test_store_roundtrip_and_prefix_map(spark, tmp_path):
     # upsert: re-store r1's name — each store invocation stamps its
     # cells past the target's max ts, so the LATER put wins on load
     # (the latest-version rule, like real HBase stamping put time)
-    HBaseStorage("info:name friends:*").store(
-        spark.createDataFrame([("r1", "ada2", {})], df.schema), t
+    sources.store(
+        spark.createDataFrame([("r1", "ada2", {})], df.schema), t, "HBaseStorage", column_list="info:name friends:*"
     )
     again = load_hbase(spark, t, "info:name", "-loadKey true")
     assert again.count() == 2

@@ -313,3 +313,48 @@ def test_one_aggregate_table():
 
         walk(ast.parse(path.read_text(), filename=str(path)), None)
     assert not offenders, "builtin aggregate lowered outside pig_spark/aggregates.py:\n" + "\n".join(offenders)
+
+
+def test_one_storage_table():
+    """Pig's storage functions have ONE entry each, in
+    ``pig_spark/sources/storage.py``, read by Latin LOAD/STORE and by
+    ``sources.load``/``store``. The translator and the sources package
+    had three name tables (``LOADER_FORMAT``, ``_ALIASES``,
+    ``_REGEX_LOADERS``), a LOAD and a STORE if-chain and inline name
+    checks that disagreed: CSVExcelStorage loaded but did not store,
+    its delimiter and XMLLoader's row tag were dropped, a STORE through
+    TextLoader failed only inside the deferred write. No other engine
+    module may hold a storage-function name (fully qualified or not, any
+    case) as a string literal, and ``latin/translate.py`` reads a LOAD's
+    loader or a STORE's storer only to pass it to ``storage.bind``."""
+    from pig_spark.sources import storage
+
+    table = PKG / "sources" / "storage.py"
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == table:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and node.value.rsplit(".", 1)[-1].lower() in storage.FUNCS
+            ):
+                offenders.append(f"{path.relative_to(REPO)}:{node.lineno} {node.value!r}")
+    path = PKG / "latin" / "translate.py"
+    tree = ast.parse(path.read_text(), filename=str(path))
+    bound = {
+        id(sub)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and node.func.attr == "bind"
+        for a in node.args
+        for sub in ast.walk(a)
+    }
+    offenders += [
+        f"{path.relative_to(REPO)}:{node.lineno} .{node.attr} outside storage.bind"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute)
+        and node.attr in ("loader", "storer", "loader_args", "storer_args")
+        and id(node) not in bound
+    ]
+    assert not offenders, "storage-function name or dispatch outside sources/storage.py:\n" + "\n".join(offenders)
