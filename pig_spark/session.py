@@ -17,14 +17,38 @@ Scale notes (100 TB target): shuffle partitions default to 32 for
 local[32] testing but should be sized ~2-3x total cores on a real
 cluster; AQE coalescing makes over-provisioning cheap, so prefer high
 values + AQE rather than hand-tuning per query.
+
+Cold start: the driver JVM loads some 20k classes before the first
+query runs. ``get_spark`` starts it from a dynamic class-data archive
+(JDK 13+ AppCDS, :class:`_ClassArchive`): the first session on a cold
+cache records the classes its JVM loads and, when the process exits,
+dumps them into the archive; every later one maps them instead of
+loading them again. The archive is built from the installed jars, lives
+in the user's cache directory and is keyed on the JDK and the class
+path; anything that keeps it from being used safely gives a normal
+start.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
+import json
 import os
+import queue
 import shutil
+import subprocess
 import tempfile
+import threading
+import uuid
+from collections.abc import Callable
 
+import py4j.java_gateway
+import py4j.protocol
+from py4j.java_gateway import GatewayParameters, JavaGateway
+from py4j.protocol import Py4JError, Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # r13: env-parameterised (VERDICT r12 scale rule — scale-dependent
@@ -47,8 +71,282 @@ def _ship_package(spark: SparkSession) -> None:
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_base = os.path.join(tempfile.gettempdir(), f"pig_spark_pkg_{os.getpid()}")
     zip_path = shutil.make_archive(zip_base, "zip", root_dir=os.path.dirname(pkg_dir), base_dir="pig_spark")
+    # executors fetch the zip while this process's session runs;
+    # nothing reads it once the process ends
+    atexit.register(_remove, zip_path)
     spark.sparkContext.addPyFile(zip_path)
     spark._pig_spark_shipped = True  # noqa: SLF001
+
+
+def _remove(path: str) -> None:
+    with contextlib.suppress(OSError):
+        os.remove(path)
+
+
+# -- the driver JVM's class-data archive ------------------------------------
+#: environment that puts class-path entries on the driver JVM that the
+#: archive cannot vet (directories, a spark-submit command line)
+_FOREIGN_CLASSPATH_ENV = (
+    "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH", "SPARK_CLASSPATH", "SPARK_PREPEND_CLASSES",
+    "PYSPARK_SUBMIT_ARGS",
+)
+#: JVM options a child JVM must not inherit from this process
+_JAVA_ENV = ("JAVA_TOOL_OPTIONS", "_JAVA_OPTIONS", "JDK_JAVA_OPTIONS")
+#: class lists this process records; built into an archive at its exit
+_RECORDING: set[str] = set()
+
+
+def _in_use(paths: list[str]) -> set[str]:
+    """The ``paths`` a live process names on its command line (a JVM
+    recording its class list or writing a dump), and the class lists
+    this process builds at its exit."""
+    wanted = [(os.fsencode(p), p) for p in paths]
+    found = set(_RECORDING.intersection(paths))
+    for pid in os.listdir("/proc"):
+        if pid.isdigit():
+            try:
+                with open(f"/proc/{pid}/cmdline", "rb") as f:
+                    cmdline = f.read()
+            except OSError:
+                continue
+            found.update(p for b, p in wanted if b in cmdline)
+    return found
+
+
+def _sweep(root: str, keep: Callable[[str], bool]) -> set[str]:
+    """Remove every file in ``root`` but ``conf``, those ``keep(name)``
+    accepts and those in use (:func:`_in_use`); returns the names in use."""
+    names = [n for n in _listdir(root) if n != "conf" and not keep(n)]
+    if not names:
+        return set()
+    live = _in_use([os.path.join(root, n) for n in names])
+    for n in names:
+        if os.path.join(root, n) not in live:
+            _remove(os.path.join(root, n))
+    return {os.path.basename(p) for p in live}
+
+
+class _ClassArchive:
+    """A JDK dynamic class-data archive (AppCDS) for the driver JVM.
+
+    ``$XDG_CACHE_HOME/pig_spark/cds/`` (``~/.cache/...`` when unset)
+    holds ``<key>.jsa``, the published archive, where the key hashes the
+    JDK (java binary, ``release``), ``SPARK_HOME``, the conf dir and the
+    name, size and mtime of every jar: a JDK or Spark upgrade starts a
+    new archive without a JVM being asked anything. Sessions map it with
+    ``-XX:SharedArchiveFile``.
+
+    On a cold cache the session's JVM only records the classes it loads
+    (``-XX:DumpLoadedClassList=<key>.<id>.classlist``, which costs it
+    nothing measurable; dumping from the session's own JVM, with
+    ``-XX:ArchiveClassesAtExit``, slows its start and first jobs by
+    seconds). At interpreter exit :meth:`build` loads the listed classes
+    into a fresh JVM that dumps them when it ends, proves the dump
+    complete by mapping it in a child ``java -Xshare:on ... -version``
+    (a truncated archive crashes the JVM that maps it) and only then
+    renames it to ``<key>.jsa``, removing other keys' archives. A file
+    in the cache that no live process names on its command line (a
+    class list or dump whose process died) is removed by the next
+    session.
+
+    CDS refuses a non-empty directory on the class path, and Spark puts
+    its conf dir there: when that dir holds only ``*.template`` files
+    (Spark reads none of them) the JVM is launched with an empty conf
+    dir from the cache instead. A conf dir with real files, other
+    class-path additions, an existing JVM, a JDK before 13, a system
+    without ``/proc``, an unwritable cache or anything unexpected gives
+    a normal start, and the JVM itself ignores an archive that does not
+    match its JDK or class path."""
+
+    def __init__(self, root: str, path: str, record: bool) -> None:
+        #: the archive to map, or the class list to record
+        self.root, self.path, self.record = root, path, record
+        self.option = f"-XX:{'DumpLoadedClassList' if record else 'SharedArchiveFile'}={path}"
+
+    @classmethod
+    def plan(cls, extra_conf: dict[str, str]) -> "_ClassArchive | None":
+        """The archive for a session about to launch its JVM, or None
+        for a normal start."""
+        if (
+            not os.path.isdir("/proc/self")
+            or SparkContext._gateway is not None  # noqa: SLF001 — getOrCreate reuses this JVM
+            or "PYSPARK_GATEWAY_PORT" in os.environ  # spark-submit started the JVM
+            or extra_conf.get("spark.driver.extraClassPath")
+            or any(os.environ.get(v) for v in _FOREIGN_CLASSPATH_ENV)
+        ):
+            return None
+        try:
+            return cls._plan()
+        except (OSError, ValueError, IndexError):
+            return None
+
+    @classmethod
+    def _plan(cls) -> "_ClassArchive | None":
+        from pyspark.find_spark_home import _find_spark_home
+
+        # the JDK spark-class runs: $JAVA_HOME/bin/java, else java on PATH
+        java_home = os.environ.get("JAVA_HOME")
+        java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+        if not java:
+            return None
+        java = os.path.realpath(java)
+        with open(os.path.join(os.path.dirname(os.path.dirname(java)), "release"), "rb") as f:
+            release = f.read()
+        version = release.split(b'JAVA_VERSION="', 1)[1].split(b'"', 1)[0]
+        if int(version.split(b".")[0]) < 13:  # no -XX:ArchiveClassesAtExit
+            return None
+        spark_home = os.path.realpath(_find_spark_home())
+        conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+        if any(not n.endswith(".template") for n in _listdir(conf_dir)):
+            return None  # real conf files: Spark reads them, keep its conf dir
+        jars_dir = os.path.join(spark_home, "jars")
+        jars = sorted(
+            (e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in os.scandir(jars_dir) if e.name.endswith(".jar")
+        )
+        base = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
+        root = os.path.join(os.path.abspath(base), "pig_spark", "cds")
+        if any(c.isspace() or c in "\"'\\" for c in root):
+            return None  # spark-submit splits extraJavaOptions on blanks
+        os.makedirs(os.path.join(root, "conf"), exist_ok=True)
+        if _listdir(os.path.join(root, "conf")) or not os.access(root, os.W_OK):
+            return None
+        ident = [java, os.stat(java).st_size, os.stat(java).st_mtime_ns, release.decode(errors="replace"),
+                 spark_home, conf_dir, jars]
+        key = hashlib.sha256(json.dumps(ident).encode()).hexdigest()[:20]
+        busy = _sweep(root, lambda n: n.endswith(".jsa"))
+        archive = os.path.join(root, key + ".jsa")
+        if os.path.isfile(archive):
+            return cls(root, archive, record=False)
+        if any(n.startswith(key + ".") for n in busy):
+            return None  # another session records or builds this archive
+        return cls(root, os.path.join(root, f"{key}.{uuid.uuid4().hex[:12]}.classlist"), record=True)
+
+    def java_options(self, caller: str | None) -> str:
+        """``spark.driver.extraJavaOptions``: the caller's, then the
+        archive's."""
+        return " ".join(filter(None, [caller, self.option]))
+
+    @contextlib.contextmanager
+    def launch(self):
+        """The gateway launch's environment: Spark's conf dir holds no
+        real files (see :meth:`plan`), so the JVM gets the cache's empty
+        one; restored afterwards."""
+        prev = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = os.path.join(self.root, "conf")
+        try:
+            yield
+        finally:
+            if prev is None:
+                os.environ.pop("SPARK_CONF_DIR", None)
+            else:
+                os.environ["SPARK_CONF_DIR"] = prev
+
+    def started(self, spark: SparkSession) -> None:
+        """After a recording launch: build the archive at interpreter
+        exit, for the live JVM's java binary and class path."""
+        if not self.record:
+            return
+        jvm = spark.sparkContext._jvm  # noqa: SLF001
+        java = os.path.join(jvm.System.getProperty("java.home"), "bin", "java")
+        _RECORDING.add(self.path)
+        atexit.register(self.build, java, jvm.System.getProperty("java.class.path"), os.getpid())
+
+    def build(self, java: str, classpath: str, owner: int) -> None:
+        """Dump the recorded classes in a fresh JVM with ``classpath``
+        and publish the archive once it maps; the class list and any
+        unpublished dump are removed either way."""
+        if os.getpid() != owner:  # a forked child exiting
+            return
+        stem = self.path[: -len(".classlist")]
+        tmp, key = stem + ".tmp", os.path.basename(stem).split(".")[0]
+        try:
+            with open(self.path, encoding="utf-8", errors="replace") as f:
+                lines = f.read().split("\n")[:-1]  # a cut last line is dropped
+            names = [line.split()[0] for line in lines if line.strip() and not line.startswith("@")]
+            if not names or any(os.path.isdir(p) and os.listdir(p) for p in classpath.split(os.pathsep)):
+                return  # nothing recorded, or a class path CDS refuses
+            env = {k: v for k, v in os.environ.items() if k not in _JAVA_ENV}
+            _dump_classes(java, classpath, tmp, names, env, self.root)
+            probe = [java, "-Xshare:on", f"-XX:SharedArchiveFile={tmp}", "-cp", classpath,
+                     f"-XX:ErrorFile={os.devnull}", "-XX:-CreateCoredumpOnCrash", "-version"]
+            if os.path.isfile(tmp) and subprocess.run(
+                probe, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, cwd=self.root, env=env, timeout=120,
+                check=False,
+            ).returncode == 0:
+                os.replace(tmp, os.path.join(self.root, key + ".jsa"))
+                _sweep(self.root, lambda n: n == key + ".jsa")  # other keys' archives are stale now
+        except (OSError, ValueError, subprocess.SubprocessError, Py4JError):
+            pass
+        finally:
+            _RECORDING.discard(self.path)
+            _remove(self.path)
+            _remove(tmp)
+
+
+def _dump_classes(java: str, classpath: str, tmp: str, names: list[str], env: dict, cwd: str) -> None:
+    """Load ``names`` (``a/b/C`` form) into a fresh JVM on ``classpath``
+    that dumps them to ``tmp`` when it exits.
+
+    The JVM runs py4j's gateway (its jar is on Spark's class path); a
+    method descriptor naming up to 250 classes resolves them all in one
+    call, a failing batch is halved until the classes that cannot load
+    are left out. Up to four connections load batches at once."""
+    proc = subprocess.Popen(
+        [java, "-cp", classpath, f"-XX:ArchiveClassesAtExit={tmp}", "-Xlog:disable",
+         "-XX:+DisplayVMOutputToStderr",  # stdout carries only the port and token
+         "py4j.GatewayServer", "--die-on-broken-pipe", "--enable-auth", "0"],
+        stdin=subprocess.PIPE, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, cwd=cwd, env=env, text=True,
+    )
+    # pyspark converts every py4j error through its own session's JVM;
+    # this gateway's errors must stay plain py4j ones
+    patched, py4j.java_gateway.get_return_value = py4j.java_gateway.get_return_value, py4j.protocol.get_return_value
+    try:
+        port, token = int(proc.stdout.readline()), proc.stdout.readline().strip()
+        gateway = JavaGateway(gateway_parameters=GatewayParameters(port=port, auth_token=token))
+        method_type = gateway.jvm.java.lang.invoke.MethodType
+        loader = gateway.jvm.java.lang.ClassLoader.getSystemClassLoader()
+
+        def load(batch: list[str]) -> None:
+            try:
+                method_type.fromMethodDescriptorString("(" + "".join(f"L{n};" for n in batch) + ")V", loader)
+            except Py4JJavaError:
+                if len(batch) > 1:
+                    load(batch[: len(batch) // 2])
+                    load(batch[len(batch) // 2 :])
+
+        def work() -> None:
+            with contextlib.suppress(queue.Empty, Py4JError):  # all done, or the JVM is gone
+                while True:
+                    load(todo.get_nowait())
+
+        todo = queue.SimpleQueue()
+        for i in range(0, len(names), 250):
+            todo.put(names[i : i + 250])
+        threads = []
+        with contextlib.suppress(RuntimeError):  # no new threads at interpreter exit (Python 3.12+)
+            for _ in range(min(4, os.cpu_count() or 1) - 1):
+                t = threading.Thread(target=work, daemon=True)
+                t.start()
+                threads.append(t)
+        work()
+        for t in threads:
+            t.join()
+        gateway.close()
+        proc.stdin.close()  # the gateway exits on EOF; the JVM dumps as it ends
+        proc.wait(timeout=300)
+    finally:
+        py4j.java_gateway.get_return_value = patched
+        if proc.poll() is None:
+            proc.kill()
+            proc.wait()
+        proc.stdout.close()
+
+
+def _listdir(path: str) -> list[str]:
+    try:
+        return os.listdir(path)
+    except FileNotFoundError:
+        return []
 
 
 def get_spark(
@@ -97,8 +395,18 @@ def get_spark(
         # sessions behave identically (the r2 lesson: semantics that
         # live only in a session factory break every other consumer).
     )
-    for key, value in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    archive = _ClassArchive.plan(extra_conf)
+    if archive is not None:
+        key = "spark.driver.extraJavaOptions"
+        extra_conf[key] = archive.java_options(extra_conf.get(key))
+    for key, value in extra_conf.items():
         builder = builder.config(key, value)
-    spark = builder.getOrCreate()
+    if archive is None:
+        spark = builder.getOrCreate()
+    else:
+        with archive.launch():
+            spark = builder.getOrCreate()
+        archive.started(spark)
     _ship_package(spark)
     return spark

@@ -289,6 +289,7 @@ def _resolve(format: str, side: str, options: dict) -> tuple:
         return sf.format, sf, {**sf.options, **options}
     if format.lower() not in _FORMATS:
         raise ValueError(f"unsupported format {format!r}; one of {sorted(_FORMATS | set(storage.FUNCS))}")
+    storage.require_source(format.lower(), f"{side.upper()} … {format}")
     return format.lower(), None, options
 
 
@@ -584,11 +585,12 @@ def _complex_to_pig_text(df: DataFrame) -> DataFrame:
     nested = (T.MapType, T.StructType, T.ArrayType)
     if not any(isinstance(f.dataType, nested) for f in df.schema.fields):
         return df
-    return df.selectExpr(*[
-        f"{_pig_text_sql(sql_ident(f.name), f.dataType) if isinstance(f.dataType, nested) else sql_ident(f.name)}"
-        f" AS {sql_ident(f.name)}"
-        for f in df.schema.fields
-    ])
+    # by position, like pig_text_lines: field names may repeat
+    pos = df.toDF(*[f"_{i}" for i in range(len(df.columns))])
+    return pos.selectExpr(*[
+        _pig_text_sql(p, f.dataType) if isinstance(f.dataType, nested) else p
+        for p, f in zip(pos.columns, df.schema.fields)
+    ]).toDF(*df.columns)
 
 
 def load_fixed_width(

@@ -26,6 +26,8 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from functools import partial
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,6 +40,10 @@ from .hcatalog import load_hcat, store_hcat
 #: the function a Latin LOAD or STORE without ``USING`` calls
 DEFAULT = "pigstorage"
 
+#: Spark sources that ship as external modules, not in Spark's own
+#: jars, and the module each needs on the class path
+EXTERNAL_SOURCES = {"avro": "spark-avro (org.apache.spark:spark-avro_2.13)"}
+
 
 @dataclass(frozen=True)
 class StorageFunc:
@@ -49,12 +55,12 @@ class StorageFunc:
     writer ``(df, path, mode=, **kw)``. ``literal``: the store joins
     fields with the delimiter as they are (PigStorage), not through
     Spark's CSV writer. ``args``: the keyword each positional
-    constructor argument binds to, or a function from the arguments to
-    keywords. ``typed``: the reader takes the AS clause's Pig types as
-    ``field_types``. ``clobber``: a STORE's target is a path, refused
-    when it exists (ERROR 6000). ``error_handling``: the storer skips
-    bad records under ``pig.error-handling.enabled``
-    (ErrorHandling.java)."""
+    constructor argument binds to, or a function from the arguments and
+    the side (``"load"``/``"store"``) to keywords. ``typed``: the
+    reader takes the AS clause's Pig types as ``field_types``.
+    ``clobber``: a STORE's target is a path, refused when it exists
+    (ERROR 6000). ``error_handling``: the storer skips bad records
+    under ``pig.error-handling.enabled`` (ErrorHandling.java)."""
 
     format: str | None = None
     options: dict = field(default_factory=dict)
@@ -63,7 +69,7 @@ class StorageFunc:
     load: bool = True
     store: bool = True
     literal: bool = False
-    args: tuple[str, ...] | Callable[[list[str]], dict] = ()
+    args: tuple[str, ...] | Callable[[list[str], str], dict] = ()
     typed: bool = False
     clobber: bool = True
     error_handling: bool = False
@@ -237,7 +243,7 @@ def _string_store(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     lines.select(F.concat(F.lit("("), lines.value, F.lit(")"))).write.mode(mode).text(path)
 
 
-def _db_args(args: list[str]) -> dict:
+def _db_args(args: list[str], side: str) -> dict:
     """DBStorage(driver, url[, table]) — builtin/DBStorage.java ctor
     order: with a url argument the INTO target is the table; without
     one the INTO target is the url (``STORE x INTO 'sqlite:///db'
@@ -252,6 +258,33 @@ def _db_store(df: DataFrame, path: str, mode: str = "append", url: str | None = 
     store_db(df, url=url or path, table=table or (path if url else "pig_out"), mode=mode, **kw)
 
 
+def _csv_excel_args(args: list[str], side: str) -> dict:
+    """CSVExcelStorage(delimiter, multiline, eol, header)
+    (piggybank CSVExcelStorage.java): the header treatment
+    ``SKIP_INPUT_HEADER`` drops each file's first line on LOAD and
+    ``WRITE_OUTPUT_HEADER`` writes the field names first on STORE (each
+    a no-op on the other side, as in Pig). The other values accepted
+    are the ones this reader and writer already behave as: one record
+    per line (``NO_MULTILINE``), ``\\n`` line ends (``UNIX``; on LOAD
+    any), header lines as data or not written (``READ_INPUT_HEADER``,
+    ``SKIP_OUTPUT_HEADER``, ``DEFAULT``). Anything else raises here,
+    at the statement, rather than being ignored."""
+    if len(args) > 4:
+        raise ValueError(f"CSVExcelStorage takes at most 4 arguments, got {len(args)}: {args}")
+    eol = {"UNIX", "NOCHANGE", "WINDOWS"} if side == "load" else {"UNIX", "NOCHANGE"}
+    headers = {"DEFAULT", "READ_INPUT_HEADER", "SKIP_INPUT_HEADER", "SKIP_OUTPUT_HEADER", "WRITE_OUTPUT_HEADER"}
+    for arg, what, known in zip(args[1:], ("multi-line treatment", "line-end treatment", "header treatment"),
+                                ({"NO_MULTILINE"}, eol, headers)):
+        if arg.upper() not in known:
+            raise ValueError(
+                f"{side.upper()} … USING CSVExcelStorage: unsupported {what} {arg!r} (supported: {sorted(known)})"
+            )
+    out = {"sep": unescape_delim(args[0])} if args else {}
+    if len(args) == 4 and args[3].upper() == ("SKIP_INPUT_HEADER" if side == "load" else "WRITE_OUTPUT_HEADER"):
+        out["header"] = True
+    return out
+
+
 # PigStorage splits and joins on the delimiter literally — no quote or
 # escape handling (PigStorage.java readField); Spark CSV's default '"'
 # quoting is off so embedded quotes round-trip byte-identical
@@ -261,7 +294,7 @@ _PIG_STORAGE = StorageFunc(
 # piggybank CSVExcelStorage(delimiter, ...): the Excel dialect, comma by
 # default, quoted fields with doubled quotes inside; CSVLoader wraps it
 # load-only
-_CSV_EXCEL = StorageFunc("csv", {"sep": ",", "escape": '"'}, args=("sep",))
+_CSV_EXCEL = StorageFunc("csv", {"sep": ",", "escape": '"'}, args=_csv_excel_args)
 _PARQUET = StorageFunc("parquet")
 _JSON = StorageFunc("json")
 
@@ -330,6 +363,27 @@ FUNCS: dict[str, StorageFunc] = {
 }
 
 
+def source_available(spark: SparkSession, fmt: str) -> bool:
+    """Whether the session's Spark finds the data source ``fmt``."""
+    try:
+        spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(  # noqa: SLF001
+            fmt, spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+        )
+    except (Py4JJavaError, AnalysisException):  # not found: the Java error, or the one PySpark converts
+        return False
+    return True
+
+
+def require_source(fmt: str, what: str) -> None:
+    """Raise, naming the module, when ``fmt`` is an external Spark
+    source that the active session cannot find: Spark itself would
+    fail only when the write runs. Other sources, and no session, pass."""
+    module = EXTERNAL_SOURCES.get(fmt)
+    spark = SparkSession.getActiveSession() if module else None
+    if spark is not None and not source_available(spark, fmt):
+        raise ValueError(f"{what}: Spark's {fmt} source is the external module {module}, which is not on this Spark's class path")
+
+
 def entry(name: str, side: str) -> StorageFunc | None:
     """The entry of a storage function named by its class (fully
     qualified or not, any case) for a ``"load"`` or ``"store"``; None
@@ -340,6 +394,8 @@ def entry(name: str, side: str) -> StorageFunc | None:
     if sf is not None and not getattr(sf, side):
         kind = "StoreFunc" if side == "store" else "LoadFunc"
         raise ValueError(f"{side.upper()} … USING {leaf}: {leaf} is not a {kind}, it has no {side} side")
+    if sf is not None and sf.format is not None:
+        require_source(sf.format, f"{side.upper()} … USING {leaf}")
     return sf
 
 
@@ -369,7 +425,7 @@ def bind(
     if sf is None:
         return leaf, None, out
     if callable(sf.args):
-        out.update(sf.args(args))
+        out.update(sf.args(args, side))
     else:
         out.update((k, unescape_delim(a) if k == "sep" else a) for k, a in zip(sf.args, args))
     if sf.typed and side == "load":

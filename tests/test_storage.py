@@ -61,6 +61,75 @@ def test_csv_excel_storage_load_and_store_with_delimiter(spark, tmp_path):
     assert sorted(_text(out).decode().splitlines()) == ['1;"a;b";"say ""hi"""', "2;c;"]
 
 
+def test_csv_excel_storage_header_arguments(spark, tmp_path):
+    """CSVExcelStorage's fourth argument: SKIP_INPUT_HEADER drops the
+    header line on LOAD, WRITE_OUTPUT_HEADER writes the field names on
+    STORE; the values that name what the reader and writer already do
+    are accepted, any other raises at the statement."""
+    src = tmp_path / "in.csv"
+    src.write_text("name,age\nann,3\n")
+    out = tmp_path / "out"
+    csv = "org.apache.pig.piggybank.storage.CSVExcelStorage"
+    rels = run(spark, f"""
+        a = LOAD '{src}' USING {csv}(',', 'NO_MULTILINE', 'UNIX', 'SKIP_INPUT_HEADER') AS (name:chararray, age:int);
+        STORE a INTO '{out}' USING {csv}(',', 'NO_MULTILINE', 'UNIX', 'WRITE_OUTPUT_HEADER');
+        b = LOAD '{src}' USING {csv}(',', 'NO_MULTILINE', 'NOCHANGE', 'READ_INPUT_HEADER') AS (name:chararray, age:int);
+    """)
+    assert [tuple(r) for r in rels["a"].df.collect()] == [("ann", 3)]
+    assert _text(out).decode().splitlines() == ["name,age", "ann,3"]
+    assert sorted(tuple(r) for r in rels["b"].df.collect()) == [("ann", 3), ("name", None)]
+    for args, what in [
+        ("',', 'YES_MULTILINE'", "multi-line treatment 'YES_MULTILINE'"),
+        ("',', 'NO_MULTILINE', 'MAC'", "line-end treatment 'MAC'"),
+        ("',', 'NO_MULTILINE', 'UNIX', 'SKIP_HEADER'", "header treatment 'SKIP_HEADER'"),
+    ]:
+        with pytest.raises(ValueError, match=f"LOAD … USING CSVExcelStorage: unsupported {what}"):
+            run(spark, f"a = LOAD '{src}' USING {csv}({args});")
+    with pytest.raises(ValueError, match="STORE … USING CSVExcelStorage: unsupported line-end treatment 'WINDOWS'"):
+        run(spark, f"a = LOAD '{src}'; STORE a INTO '{tmp_path}/w' USING {csv}(',', 'NO_MULTILINE', 'WINDOWS');")
+    assert not (tmp_path / "w").exists()
+
+
+def test_avro_storage_without_spark_avro_raises_at_the_statement(spark, tmp_path):
+    """Spark's avro source is the external module spark-avro: without
+    it on the class path, LOAD and STORE through AvroStorage, a DSL
+    avro load and an AllLoader over .avro files raise at the statement,
+    naming the module, instead of failing inside the write."""
+    if storage.source_available(spark, "avro"):
+        pytest.skip("this Spark has the spark-avro module")
+    src = tmp_path / "in.tsv"
+    src.write_text("a\t1\n")
+    (tmp_path / "mixed").mkdir()
+    (tmp_path / "mixed" / "x.avro").write_bytes(b"Obj\x01")
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="LOAD … USING AvroStorage: .*spark-avro"):
+        run(spark, f"a = LOAD '{src}' USING AvroStorage();")
+    with pytest.raises(ValueError, match="STORE … USING AvroStorage: .*spark-avro"):
+        run(spark, f"a = LOAD '{src}' AS (s:chararray, n:int); STORE a INTO '{out}' USING AvroStorage();")
+    assert not out.exists()
+    with pytest.raises(ValueError, match="spark-avro"):
+        load(spark, str(src), "avro")
+    with pytest.raises(ValueError, match="spark-avro"):
+        run(spark, f"a = LOAD '{tmp_path}/mixed' USING AllLoader();")
+
+
+@pytest.mark.parametrize("storer", ["PigStorage()", "CSVExcelStorage()"])
+def test_text_store_with_duplicate_field_names(spark, tmp_path, storer):
+    """Two fields that share a name and a complex field: the text
+    renderer reads fields by position, so the STORE does not raise
+    AMBIGUOUS_REFERENCE."""
+    src = tmp_path / "in.tsv"
+    src.write_text("ab\t1\n")
+    out = tmp_path / "out"
+    run(spark, f"""
+        a = LOAD '{src}' AS (s:chararray, n:int);
+        b = FOREACH a GENERATE CONCAT(s, 'x'), CONCAT(s, 'y'), TOBAG(n);
+        STORE b INTO '{out}' USING {storer};
+    """)
+    sep = "\t" if storer.startswith("Pig") else ","
+    assert _text(out).decode() == sep.join(["abx", "aby", "{(1)}"]) + "\n"
+
+
 @pytest.mark.parametrize("name", ["CSVExcelStorage", "CSVLoader"])
 def test_csv_dialect_delimiter_in_the_dsl(spark, tmp_path, name):
     """``sep=';'`` overrides the CSV dialects' comma default; without it
