@@ -25,7 +25,7 @@ from pyspark.sql import Window as SparkWindow
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructType
 
-from .. import aggregates, pigtypes, sources
+from .. import aggregates, pigtypes, sources, udf_lift
 from .. import functions as PF
 from ..sources import storage
 from ..operators.nested import bag_distinct, bag_filter, bag_limit, bag_sort, topk_per_group
@@ -168,20 +168,31 @@ class _ScriptUDF:
     ``@outputSchemaFunction`` UDFs (JythonFunction.java outputSchema
     delegation) defer typing to call time: the named schema function
     maps the INPUT's Pig type to the output type, so the translator
-    passes the relation for input-type resolution."""
+    passes the relation for input-type resolution. ``node`` is the
+    function's definition in the script, for :mod:`pig_spark.udf_lift`."""
 
-    def __init__(self, fn, ddl: str | None, schema_fn=None):
-        self.fn, self.ddl, self.schema_fn = fn, ddl, schema_fn
+    def __init__(self, fn, ddl: str | None, schema_fn=None, node=None):
+        self.fn, self.ddl, self.schema_fn, self.node = fn, ddl, schema_fn, node
 
     def __call__(self, *cols, _rel=None):
         ddl = self.ddl
-        if ddl is None and self.schema_fn is not None and _rel is not None and cols:
-            pig_in = pigtypes.pig_type_name(_rel.df.select(cols[0]).schema[0].dataType)
+        try:
+            in_types = [f.dataType for f in _rel.df.select(*cols).schema.fields] if _rel is not None and cols else None
+        except Exception:  # an argument that does not resolve: the UDF call reports it
+            in_types = None
+        if ddl is None and self.schema_fn is not None and in_types:
+            pig_in = pigtypes.pig_type_name(in_types[0])
             try:
                 out = self.schema_fn(pig_in)
             except Exception:
                 out = pig_in
             ddl = _script_udf_ddl(str(out))
+        if in_types is not None:
+            # a pure function is the same Spark expression: no Python
+            # worker, and Catalyst compiles it into the stage
+            lifted = udf_lift.lift(self.node, ddl or "string", list(cols), in_types)
+            if lifted is not None:
+                return lifted
         fn = self.fn
         if (ddl or "string") == "string":
             # bytearray/chararray-typed result: coerce complex Python
@@ -201,11 +212,7 @@ class _ScriptUDF:
         # what the script function sees.
         use_arrow = _scalar_ddl(ddl or "string")
         if use_arrow and _rel is not None and cols:
-            try:
-                in_types = _rel.df.select(*cols).schema.fields
-                use_arrow = all(_scalar_ddl(f.dataType.simpleString()) for f in in_types)
-            except Exception:
-                use_arrow = False
+            use_arrow = in_types is not None and all(_scalar_ddl(t.simpleString()) for t in in_types)
         if use_arrow:
             try:
                 return F.udf(fn, ddl or "string", useArrow=True)(*cols)
@@ -238,7 +245,7 @@ def _load_script_udfs(path: str, engine: str = "jython") -> dict:
     ns — scripting/jython/JythonScriptEngine.java; USING
     streaming_python — python/PythonScriptEngine.java: that engine IS
     CPython, exactly what runs here) and wrap its public functions as
-    Spark UDFs. Pig's decorator surface works verbatim:
+    Spark columns. Pig's decorator surface works verbatim:
     ``@outputSchema('name:type')`` declares the return type
     (un-annotated functions default to chararray, like Pig's
     bytearray-as-default); ``@outputSchemaFunction`` +
@@ -249,9 +256,12 @@ def _load_script_udfs(path: str, engine: str = "jython") -> dict:
     module-level references). The script's own directory joins
     sys.path during exec so sibling helper modules import
     (JythonScriptEngine adds the script dir to jython's path).
-    Scripting UDFs are arbitrary row-at-a-time Python — the sanctioned
-    slow path, same class as STREAM THROUGH; prefer the builtin Column
-    library for anything hot."""
+    A function inside :mod:`pig_spark.udf_lift`'s pure subset (if/elif
+    chains of comparisons, ``is None`` tests, float ``+ - *``,
+    ``upper``/``lower``) runs as a Catalyst expression; any other runs
+    as a row-at-a-time Python UDF (Arrow batches for scalar
+    signatures) — the slow path, same class as STREAM THROUGH."""
+    import ast as _ast
     import os as _os
     import re as _re
     import sys as _sys
@@ -319,6 +329,7 @@ def _load_script_udfs(path: str, engine: str = "jython") -> dict:
         if callable(obj) and getattr(obj, "_pig_schema_fn_name", None)
     }
     deco_ids = {id(d) for d in decorators.values()}
+    tree = _ast.parse(code, path)
     out: dict = {}
     for name, obj in glb.items():
         if name.startswith("_") or not callable(obj) or isinstance(obj, (type, _JavaStub)):
@@ -333,6 +344,7 @@ def _load_script_udfs(path: str, engine: str = "jython") -> dict:
             obj,
             _script_udf_ddl(schema) if schema else (None if ref else "string"),
             schema_fns.get(ref) if ref else None,
+            udf_lift.find_def(tree, obj, path),
         )
     return out
 

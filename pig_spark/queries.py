@@ -2124,11 +2124,13 @@ def q122_latin_scripting_udf(spark: SparkSession, sf: str) -> DataFrame:
     declare types via @outputSchema, delegate typing to a
     @schemaFunction (output type follows the INPUT's type, resolved at
     call time), and return a complex value coerced through Pig's text
-    forms under a chararray type. Scripting UDFs are the sanctioned
-    row-at-a-time slow path (same class as STREAM THROUGH); the
+    forms under a chararray type. These functions call ``re`` and do
+    int arithmetic, so they stay row-at-a-time Python UDFs (same class
+    as STREAM THROUGH), outside pig_spark.udf_lift's pure subset; the
     tokenizer here uses an explicit [ \\t\\n]+ split so the DuckDB
     oracle can mirror the semantics exactly."""
     import os
+    import shutil
     import tempfile
 
     from .latin import run
@@ -2157,13 +2159,18 @@ def q122_latin_scripting_udf(spark: SparkSession, sf: str) -> DataFrame:
             "def idschema(inp):\n"
             "    return inp\n"
         )
-    rels = run(spark, f"""
-        REGISTER '{udf_dir}/udfs.py' USING jython AS f;
-        d = LOAD '{sf}/documents.parquet' USING ParquetLoader();
-        b = FOREACH d GENERATE doc_id, f.toklen(text) AS n_tok,
-                               f.firstword(text) AS w1, f.sq(doc_id) AS sq_id;
-        out = FILTER b BY n_tok > 3;
-    """)
+    try:
+        # the functions are compiled into the plan's UDFs by now; the
+        # file is not read again
+        rels = run(spark, f"""
+            REGISTER '{udf_dir}/udfs.py' USING jython AS f;
+            d = LOAD '{sf}/documents.parquet' USING ParquetLoader();
+            b = FOREACH d GENERATE doc_id, f.toklen(text) AS n_tok,
+                                   f.firstword(text) AS w1, f.sq(doc_id) AS sq_id;
+            out = FILTER b BY n_tok > 3;
+        """)
+    finally:
+        shutil.rmtree(udf_dir, ignore_errors=True)
     return rels["out"].df
 
 

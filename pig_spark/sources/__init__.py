@@ -215,10 +215,60 @@ def _parquet_meta(path: str) -> _ParquetMeta:
         )
     except Exception:  # noqa: BLE001 — non-local paths / odd layouts: skip probe
         nanos = False
-    if hit is None and len(_PARQUET_META) >= _PARQUET_META_MAX:
-        del _PARQUET_META[next(iter(_PARQUET_META))]
-    _PARQUET_META[path] = meta = _ParquetMeta(listing, nanos)
+    meta = _ParquetMeta(listing, nanos)
+    _remember(path, meta)
     return meta
+
+
+def _remember(path: str, meta: _ParquetMeta) -> None:
+    """Keep ``meta`` as the cache entry of ``path``; when the cache is
+    full, the oldest entry goes."""
+    if path not in _PARQUET_META and len(_PARQUET_META) >= _PARQUET_META_MAX:
+        del _PARQUET_META[next(iter(_PARQUET_META))]
+    _PARQUET_META[path] = meta
+
+
+def _write_through(spark: SparkSession, path: str, schema: T.StructType) -> None:
+    """Record what a LOAD of the parquet directory just written at
+    ``path`` would infer: Spark keeps the written schema in the footers
+    and reads it back nullable at every level; a Spark writer never
+    writes TIMESTAMP(NANOS). A path that is not one local directory,
+    or a type whose read-back this does not know, is left to be
+    inferred."""
+    local = _local_path(_pig_paths(path))
+    if local is None or not os.path.isdir(local) or not _round_trips(schema):
+        return
+    read_conf = tuple(spark.conf.get(k, None) for k in _PARQUET_READ_CONFS)
+    _remember(local, _ParquetMeta(_listing(local), False, read_conf, _nullable(schema)))
+
+
+_ROUND_TRIP_LEAVES = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType, T.DoubleType,
+    T.DecimalType, T.StringType, T.BinaryType, T.DateType, T.TimestampType, T.TimestampNTZType,
+)
+
+
+def _round_trips(dt: T.DataType) -> bool:
+    """Whether a parquet read gives ``dt`` back unchanged, bar
+    nullability (char/varchar, intervals, variants and UDTs do not)."""
+    if isinstance(dt, T.StructType):
+        return all(_round_trips(f.dataType) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return _round_trips(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _round_trips(dt.keyType) and _round_trips(dt.valueType)
+    return isinstance(dt, _ROUND_TRIP_LEAVES) and (not isinstance(dt, T.StringType) or dt.simpleString() == "string")
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and map value nullable."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 def ensure_pig_session_semantics(spark: SparkSession) -> None:
@@ -471,6 +521,8 @@ def store(
         _check_error_budget(df.sparkSession, obs, path, max_error_frac, min_error_records, appended=(mode == "append"))
     if schema_sidecar:
         write_schema_sidecar(df, path)
+    if fmt == "parquet" and mode == "overwrite" and not partition_by and not options:
+        _write_through(df.sparkSession, path, out.schema)
 
 
 def _check_error_budget(spark, obs, path: str, max_error_frac: float, min_error_records: int, table: bool = False, appended: bool = False) -> None:

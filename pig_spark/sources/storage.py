@@ -30,6 +30,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .. import aggregates
 from .accumulo import load_accumulo, store_accumulo
@@ -58,9 +59,13 @@ class StorageFunc:
     constructor argument binds to, or a function from the arguments and
     the side (``"load"``/``"store"``) to keywords. ``typed``: the
     reader takes the AS clause's Pig types as ``field_types``.
-    ``clobber``: a STORE's target is a path, refused when it exists
-    (ERROR 6000). ``error_handling``: the storer skips bad records
-    under ``pig.error-handling.enabled`` (ErrorHandling.java)."""
+    ``declared``: a LOAD with an AS clause reads as many string
+    columns as the clause declares, without a job to infer the arity;
+    each line pads with nulls or drops extra fields to that width, as
+    Pig does per tuple. ``clobber``: a STORE's target is a path,
+    refused when it exists (ERROR 6000). ``error_handling``: the
+    storer skips bad records under ``pig.error-handling.enabled``
+    (ErrorHandling.java)."""
 
     format: str | None = None
     options: dict = field(default_factory=dict)
@@ -71,6 +76,7 @@ class StorageFunc:
     literal: bool = False
     args: tuple[str, ...] | Callable[[list[str], str], dict] = ()
     typed: bool = False
+    declared: bool = False
     clobber: bool = True
     error_handling: bool = False
 
@@ -289,7 +295,7 @@ def _csv_excel_args(args: list[str], side: str) -> dict:
 # escape handling (PigStorage.java readField); Spark CSV's default '"'
 # quoting is off so embedded quotes round-trip byte-identical
 _PIG_STORAGE = StorageFunc(
-    "csv", {"quote": "", "escape": ""}, literal=True, args=("sep",), error_handling=True,
+    "csv", {"quote": "", "escape": ""}, literal=True, args=("sep",), declared=True, error_handling=True,
 )
 # piggybank CSVExcelStorage(delimiter, ...): the Excel dialect, comma by
 # default, quoted fields with doubled quotes inside; CSVLoader wraps it
@@ -430,4 +436,9 @@ def bind(
         out.update((k, unescape_delim(a) if k == "sep" else a) for k, a in zip(sf.args, args))
     if sf.typed and side == "load":
         out["field_types"] = types
+    if sf.declared and side == "load" and types and not out.get("schema_sidecar"):
+        # -tagFile's file name is the AS clause's first field, not a column of the text
+        n = len(types) - bool(out.get("tag_file"))
+        if n > 0:
+            out["schema"] = StructType([StructField(f"_c{i}", StringType()) for i in range(n)])
     return leaf, sf, out

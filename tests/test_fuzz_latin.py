@@ -11,6 +11,7 @@ SUM so both engines are IEEE-exact.
 """
 
 import math
+import os
 import random
 
 import duckdb
@@ -349,7 +350,8 @@ _UDF_FILE = None
 
 
 def _udf_file() -> str:
-    """One shared scripting-UDF file per test session."""
+    """One shared scripting-UDF file per test module (removed by
+    ``_remove_udf_file``)."""
     global _UDF_FILE
     if _UDF_FILE is None:
         import tempfile
@@ -366,6 +368,15 @@ def _udf_file() -> str:
             )
         _UDF_FILE = path
     return _UDF_FILE
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _remove_udf_file():
+    yield
+    global _UDF_FILE
+    if _UDF_FILE is not None:
+        os.remove(_UDF_FILE)
+        _UDF_FILE = None
 
 
 def _norm(v):

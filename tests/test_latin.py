@@ -2486,8 +2486,13 @@ def test_scripting_udf_arrow_row_parity(spark, tmp_path, monkeypatch):
     ArrowEvalPython, r7) must be SEMANTICALLY INVISIBLE: the same
     scripting-UDF script over nulls, ints, floats and strings returns
     identical rows with the Arrow path forced OFF (classic pickled row
-    mode). This is the differential gate for the useArrow switch."""
+    mode). This is the differential gate for the useArrow switch. The
+    lifter is patched out so that every function here runs in Python,
+    whatever subset pig_spark.udf_lift lowers to Catalyst."""
+    from pig_spark import udf_lift
     from pig_spark.latin import translate as TR
+
+    monkeypatch.setattr(udf_lift, "lift", lambda *a, **kw: None)
 
     udf = tmp_path / "udfs.py"
     udf.write_text(

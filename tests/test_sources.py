@@ -556,6 +556,20 @@ def test_parquet_schema_cache_follows_a_rewritten_path(spark, tmp_path):
     got = load(spark, str(path))
     assert got.dtypes == [("a", "bigint"), ("s", "string"), ("d", "double")]
     assert got.collect()[0]["a"] == 2**40
+    # a STORE records its schema; an append, then a rewrite from
+    # outside the engine, change the listing, and the LOAD infers again
+    from pig_spark.stats import run_with_stats
+
+    store(spark.createDataFrame([(1, "x")], "a int, s string"), str(path))
+    stored = run_with_stats(spark, lambda: load(spark, str(path)))
+    assert stored.num_jobs == 0 and stored.result.dtypes == [("a", "int"), ("s", "string")]
+    store(spark.createDataFrame([(2, "y")], "a int, s string"), str(path), mode="append")
+    appended = run_with_stats(spark, lambda: load(spark, str(path)))
+    assert appended.num_jobs > 0 and sorted(appended.result.collect()) == [(1, "x"), (2, "y")]
+    for f in path.iterdir():
+        f.unlink()
+    _write_parquet(path, a=pa.array([0.25]), t=pa.array([True]))
+    assert load(spark, str(path)).dtypes == [("a", "double"), ("t", "boolean")]
 
 
 def test_parquet_schema_cache_keys_on_read_conf(spark, tmp_path):
@@ -611,3 +625,50 @@ def test_parquet_schema_cache_bypass(spark, tmp_path):
         assert _local_path([uri]) is None
     assert _local_path([str(p1), str(p2)]) is None
     assert _local_path([str(tmp_path / "missing")]) is None
+
+
+def test_parquet_store_writes_its_schema_through(spark, tmp_path):
+    """A parquet STORE records the schema a LOAD would infer: over a
+    type zoo of non-nullable columns it equals a fresh
+    ``spark.read.parquet`` inference (nullable at every level), and a
+    Latin STORE then LOAD of the same path runs no Spark job."""
+    import datetime
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    from pig_spark import sources
+    from pig_spark.latin import run
+    from pig_spark.stats import run_with_stats
+
+    def req(name, dt):
+        return T.StructField(name, dt, False)
+
+    zoo = T.StructType([
+        req("i", T.IntegerType()), req("l", T.LongType()), req("d", T.DoubleType()), req("s", T.StringType()),
+        req("b", T.BooleanType()), req("dt", T.DateType()), req("ts", T.TimestampType()),
+        req("ntz", T.TimestampNTZType()), req("dec", T.DecimalType(18, 2)), req("bin", T.BinaryType()),
+        req("arr", T.ArrayType(T.IntegerType(), False)),
+        req("m", T.MapType(T.StringType(), T.ArrayType(T.LongType(), False), False)),
+        req("st", T.StructType([req("x", T.FloatType()), req("y", T.ArrayType(T.StructType([req("z", T.ShortType())]), False))])),
+    ])
+    ts = datetime.datetime(2020, 1, 2, 3, 4, 5, 6)
+    row = (1, 2**40, 0.5, "s", True, datetime.date(2020, 1, 2), ts, ts, Decimal("1.25"), b"x", [1], {"k": [2]}, (1.5, [(3,)]))
+    path = str(tmp_path / "zoo")
+    store(spark.createDataFrame([row], zoo), path)
+    recorded = sources._PARQUET_META[path].schema
+    sources._PARQUET_META.pop(path)
+    assert recorded == spark.read.parquet(path).schema
+
+    src, out = tmp_path / "in.tsv", tmp_path / "joined"
+    src.write_text("1\tx\t0.5\n2\ty\t1.5\n")
+    built = run_with_stats(spark, lambda: run(spark, f"""
+        a = LOAD '{src}' AS (k:int, s:chararray, d:double);
+        STORE a INTO '{out}' USING ParquetStorer();
+        exec;
+        b = LOAD '{out}' USING ParquetLoader();
+    """))
+    assert sorted(tuple(r) for r in built.result["b"].df.collect()) == [(1, "x", 0.5), (2, "y", 1.5)]
+    again = run_with_stats(spark, lambda: run(spark, f"b = LOAD '{out}' USING ParquetLoader();"))
+    assert again.num_jobs == 0
+    assert again.result["b"].df.dtypes == [("k", "int"), ("s", "string"), ("d", "double")]

@@ -218,3 +218,29 @@ def test_dsl_store_partitioned_pig_storage(spark, tmp_path):
     path = str(tmp_path / "parts")
     store(df, path, "PigStorage", sep=",", partition_by=["part"])
     assert _text(os.path.join(path, "part=q")) == b"2,b,c\n"
+
+
+@pytest.mark.parametrize("tag_file", [False, True])
+def test_pig_storage_as_pads_and_truncates_each_line(spark, tmp_path, tag_file):
+    """A PigStorage LOAD with AS reads the declared number of fields from
+    every line, with no Spark job while the relation is built: a short
+    line pads with nulls and a long one drops its extra fields, line by
+    line, whatever the first line's width. DuckDB splits the same lines
+    as the oracle."""
+    import duckdb
+
+    from pig_spark.stats import run_with_stats
+
+    src = tmp_path / "ragged.tsv"
+    src.write_text("a\t1\nb\t2\t3\nc\nd\t4\t5\t6\t7\ne\tx\t8\n")
+    flag, tag = ("'-tagFile'", "f, ") if tag_file else ("'\\t'", "")
+    built = run_with_stats(spark, lambda: run(spark, f"x = LOAD '{src}' USING PigStorage({flag}) AS ({tag}k:chararray, a:int, b:int);"))
+    assert built.num_jobs == 0
+    got = sorted(tuple(r) for r in built.result["x"].df.collect())
+    want = duckdb.sql(f"""
+        SELECT {"'ragged.tsv', " if tag_file else ""}f[1], TRY_CAST(f[2] AS INTEGER), TRY_CAST(f[3] AS INTEGER)
+        FROM (SELECT string_split(line, chr(9)) AS f
+              FROM (SELECT unnest(string_split(rtrim(content, chr(10)), chr(10))) AS line FROM read_text('{src}')))
+    """).fetchall()
+    assert got == sorted(want)
+    assert ("b", 2, 3) in [r[-3:] for r in got]

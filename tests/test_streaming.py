@@ -362,7 +362,7 @@ def test_interval_join_matches_batch(spark, sf_dir, tmp_path):
     assert got == exp and len(got) > 0
 
 
-def test_rollup_stream_matches_batch(spark, sf_dir):
+def test_rollup_stream_matches_batch(spark, sf_dir, tmp_path):
     """Continuous aggregate (streaming.rollup_stream) carries additive
     partials equal to the batch hourly rollup, and the emitted partials
     re-aggregate to the daily grain without raw events (mergeability)."""
@@ -372,9 +372,7 @@ def test_rollup_stream_matches_batch(spark, sf_dir):
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     ev = batch.select("event_type", event_ts(batch).alias("ts"), "value")
     schema = ev.schema
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="pig_spark_rollup_stream_")
+    d = str(tmp_path / "events")
     ev.write.mode("overwrite").parquet(d)
     src = spark.readStream.schema(schema).parquet(d)
     aggs = {"n": "count(*)", "sum_v": "sum(value)", "max_v": "max(value)"}
