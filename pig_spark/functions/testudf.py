@@ -5,19 +5,22 @@ the classes ``register :FUNCPATH:/testudf.jar`` snippets exercise
 (nightly/streaming corpus suites). Each is tiny by design (they test
 Pig's UDF MACHINERY — eval/accumulator/monitored/ctor-args/UDFContext
 — not library logic), so the honest port is a Column expression per
-class, resolved by leaf name through the same registry path as
+class, resolved by leaf name through the same function table as
 builtin/piggybank classes.
 
-Protocols used by the Latin layer:
+Their entries in that table (:mod:`pig_spark.functions.registry`)
+state how the Latin layer calls them:
 
-- plain functions take Columns, return a Column;
-- ``__wants_rel__`` — the resolver passes the current Relation as a
-  ``_rel`` kwarg (schema/session introspection UDFs);
-- ``__wants_elem_type__`` — aggregate-position functions over a BAG: the
-  nested-FOREACH lowering passes the bag's element StructType as
-  ``_elem`` so field-0 access works without guessing names;
-- ``__pig_ctor__`` — a FACTORY: ``DEFINE alias Cls('arg')`` calls it
-  with the ctor strings; it returns the column function.
+- plain functions (argument kind ``values``) take Columns and return a
+  Column;
+- ``relation`` — UDFContextTestUDF and DumpJVMArgsUDF also get the
+  relation they read as ``_rel`` (schema/session introspection);
+- ``bag`` — the aggregate-position classes take a BAG and its element
+  type as ``_elem``, so field-0 access works without guessing names;
+- a constructor — Udfcachetest, UdfContextFrontend and
+  TestingAccumulatorHelper are factories: ``DEFINE alias Cls('arg')``
+  calls them with the constructor strings and the alias lowers through
+  the column function they return.
 """
 
 from __future__ import annotations
@@ -126,9 +129,6 @@ def UDFContextTestUDF(col: Column, _rel=None) -> Column:
         return F.lit("unknown")
 
 
-UDFContextTestUDF.__wants_rel__ = True
-
-
 def DumpJVMArgsUDF(col: Column, _rel=None) -> Column:
     """evalfunc/DumpJVMArgsUDF.java — the task JVM's input arguments
     (RuntimeMXBean). local mode shares one JVM between driver and
@@ -141,9 +141,6 @@ def DumpJVMArgsUDF(col: Column, _rel=None) -> Column:
     except Exception:
         args = ""
     return F.lit(args)
-
-
-DumpJVMArgsUDF.__wants_rel__ = True
 
 
 # ---------------------------------------------------------------------
@@ -164,9 +161,6 @@ def Udfcachetest(file_spec: str):
     return _apply
 
 
-Udfcachetest.__pig_ctor__ = True
-
-
 def UdfContextFrontend(*_ctor: str):
     """evalfunc/UdfContextFrontend.java — ctor prints the (frontend)
     job conf, exec returns true; value surface = constant true."""
@@ -175,9 +169,6 @@ def UdfContextFrontend(*_ctor: str):
         return F.lit(True)
 
     return _apply
-
-
-UdfContextFrontend.__pig_ctor__ = True
 
 
 def TestingAccumulatorHelper(early_terminate: str = "false"):
@@ -192,11 +183,7 @@ def TestingAccumulatorHelper(early_terminate: str = "false"):
     def _apply(bag: Column, _elem=None) -> Column:
         return F.size(bag)
 
-    _apply.__wants_elem_type__ = True
     return _apply
-
-
-TestingAccumulatorHelper.__pig_ctor__ = True
 
 
 # ---------------------------------------------------------------------
@@ -217,9 +204,6 @@ def AllFirstLetter(bag: Column, _elem=None) -> Column:
     )
 
 
-AllFirstLetter.__wants_elem_type__ = True
-
-
 def NonAlgNonAccCount(bag: Column, _elem=None) -> Column:
     """evalfunc/NonAlgNonAccCount.java — COUNT without the Algebraic/
     Accumulator interfaces (tests the no-combiner path; same value):
@@ -227,17 +211,11 @@ def NonAlgNonAccCount(bag: Column, _elem=None) -> Column:
     return F.size(F.filter(bag, lambda t: _first_field(t, _elem).isNotNull())).cast("long")
 
 
-NonAlgNonAccCount.__wants_elem_type__ = True
-
-
 def IteratingAccumulatorCount(bag: Column, _elem=None) -> Column:
     """evalfunc/IteratingAccumulatorCount.java — COUNT through the
     IteratingAccumulatorEvalFunc base (chunk-streamed bags; same
     value as COUNT)."""
     return NonAlgNonAccCount(bag, _elem)
-
-
-IteratingAccumulatorCount.__wants_elem_type__ = True
 
 
 def IteratingAccumulatorSum(bag: Column, _elem=None) -> Column:
@@ -250,16 +228,10 @@ def IteratingAccumulatorSum(bag: Column, _elem=None) -> Column:
     )
 
 
-IteratingAccumulatorSum.__wants_elem_type__ = True
-
-
 def IteratingAccumulatorIsEmpty(bag: Column, _elem=None) -> Column:
     """evalfunc/IteratingAccumulatorIsEmpty.java — IsEmpty via the
     iterating-accumulator base."""
     return F.size(bag) == 0
-
-
-IteratingAccumulatorIsEmpty.__wants_elem_type__ = True
 
 
 # ---------------------------------------------------------------------

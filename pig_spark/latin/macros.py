@@ -16,6 +16,8 @@ from __future__ import annotations
 import os
 import re
 
+from ..functions import registry
+
 _DEFINE_RE = re.compile(
     r"define\s+(\w+)\s*\(([^)]*)\)\s+returns\s+((?:\w+\s*,\s*)*\w+)\s*\{",
     re.IGNORECASE,
@@ -64,9 +66,7 @@ def _extract_macros(src: str) -> tuple[str, dict[str, Macro]]:
             dup = next(p for i, p in enumerate(params) if p.lower() in
                        [q.lower() for q in params[:i]])
             raise SyntaxError(f"pig latin: duplicated macro parameter name: {dup}")
-        from .. import functions as _PF
-
-        if callable(getattr(_PF, name.upper(), None)):
+        if registry.find(name) is not None:
             # Pig rejects macro names that shadow builtin functions
             # (QueryParserDriver macro validation; macro.conf negative
             # 'macro name cannot be a built-in function')

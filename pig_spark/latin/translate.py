@@ -23,10 +23,12 @@ from dataclasses import replace as G_replace
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as SparkWindow
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.types import StringType, StructType
 
 from .. import aggregates, pigtypes, sources, udf_lift
 from .. import functions as PF
+from ..functions import registry
 from ..sources import storage
 from ..operators.nested import bag_distinct, bag_filter, bag_limit, bag_sort, topk_per_group
 from ..dsl import Relation
@@ -101,37 +103,28 @@ class _JythonGlobals(dict):
 _PY2_REWRITES = ((".iteritems()", ".items()"), (".iterkeys()", ".keys()"), (".itervalues()", ".values()"))
 
 
-def _deco_outputSchema(schema_str: str):  # noqa: N802 — Pig decorator name
-    def deco(fn):
-        fn._pig_output_schema = schema_str
-        return fn
+def _pig_decorator(attr: str):
+    """A Pig scripting decorator: ``@outputSchema('w:chararray')`` etc.
+    record their argument on the function as ``attr``."""
 
-    return deco
+    def make(value: str):
+        def deco(fn):
+            setattr(fn, attr, value)
+            return fn
 
+        return deco
 
-def _deco_outputSchemaFunction(name: str):  # noqa: N802
-    def deco(fn):
-        fn._pig_schema_fn_ref = name
-        return fn
-
-    return deco
-
-
-def _deco_schemaFunction(name: str):  # noqa: N802
-    def deco(fn):
-        fn._pig_schema_fn_name = name
-        return fn
-
-    return deco
+    return make
 
 
 # singletons, so a pig_util stub created by one REGISTER is still
 # recognized (by identity) when a later REGISTER imports from it
 _PIG_DECORATORS = {
-    "outputSchema": _deco_outputSchema,
-    "outputSchemaFunction": _deco_outputSchemaFunction,
-    "schemaFunction": _deco_schemaFunction,
+    "outputSchema": _pig_decorator("_pig_output_schema"),
+    "outputSchemaFunction": _pig_decorator("_pig_schema_fn_ref"),
+    "schemaFunction": _pig_decorator("_pig_schema_fn_name"),
 }
+
 
 def _pig_text_value(v):
     """Render a Python value in Pig's textual forms — bag {(..),(..)},
@@ -174,12 +167,12 @@ class _ScriptUDF:
     def __init__(self, fn, ddl: str | None, schema_fn=None, node=None):
         self.fn, self.ddl, self.schema_fn, self.node = fn, ddl, schema_fn, node
 
-    def __call__(self, *cols, _rel=None):
-        ddl = self.ddl
-        try:
-            in_types = [f.dataType for f in _rel.df.select(*cols).schema.fields] if _rel is not None and cols else None
-        except Exception:  # an argument that does not resolve: the UDF call reports it
-            in_types = None
+    def lower(self, call: registry.Call) -> Column:
+        """The call as a Catalyst expression when :mod:`pig_spark.udf_lift`
+        lifts it, else as a Python UDF. ``call``'s argument types type
+        the lift and an ``@outputSchemaFunction``."""
+        ddl, cols = self.ddl, call.cols()
+        in_types = call.types if cols else None
         if ddl is None and self.schema_fn is not None and in_types:
             pig_in = pigtypes.pig_type_name(in_types[0])
             try:
@@ -187,49 +180,40 @@ class _ScriptUDF:
             except Exception:
                 out = pig_in
             ddl = _script_udf_ddl(str(out))
+        ddl = ddl or "string"
         if in_types is not None:
             # a pure function is the same Spark expression: no Python
             # worker, and Catalyst compiles it into the stage
-            lifted = udf_lift.lift(self.node, ddl or "string", list(cols), in_types)
+            lifted = udf_lift.lift(self.node, ddl, cols, in_types)
             if lifted is not None:
                 return lifted
+        if call.in_lambda:
+            raise NotImplementedError(
+                f"scripting UDF {self.fn.__name__!r} inside a nested bag pipe: Spark cannot run a "
+                "Python UDF inside a higher-order function's lambda, and this function is outside "
+                "the subset lifted to a Spark expression (pig_spark.udf_lift); apply it in a "
+                "FOREACH before the GROUP"
+            )
         fn = self.fn
-        if (ddl or "string") == "string":
+        if ddl == "string":
             # bytearray/chararray-typed result: coerce complex Python
             # values through Pig's text forms ({(..)}, (..), [k#v]) —
             # JythonUtils.pythonToPig + bytearray cast semantics for
             # un-annotated functions returning lists/tuples/dicts
             fn = _stringify_result(self.fn)
-        # Arrow-optimized Python UDF (SPARK-40307) for scalar-in/
-        # scalar-out signatures: identical row-at-a-time call semantics
-        # (each value arrives as a plain Python object, None stays
-        # None) but Arrow batch transport instead of pickled rows —
-        # the plan node becomes ArrowEvalPython. This is the hot path
-        # a reference user actually drives with data volume (per-row
-        # cleanup UDFs over every document). Bag/tuple/map signatures
-        # keep classic row mode: complex values cross the Arrow
-        # boundary as dicts/lists rather than Rows, which would change
-        # what the script function sees.
-        use_arrow = _scalar_ddl(ddl or "string")
-        if use_arrow and _rel is not None and cols:
+        # scalar signatures take the Arrow-optimized Python UDF
+        # (SPARK-40307: the same per-row calls, Arrow batch transport);
+        # bag/tuple/map ones keep row mode, where complex values arrive
+        # as Rows rather than the dicts/lists Arrow would give
+        use_arrow = _scalar_ddl(ddl)
+        if use_arrow and call.rel is not None and cols:
             use_arrow = in_types is not None and all(_scalar_ddl(t.simpleString()) for t in in_types)
         if use_arrow:
             try:
-                return F.udf(fn, ddl or "string", useArrow=True)(*cols)
+                return F.udf(fn, ddl, useArrow=True)(*cols)
             except TypeError:  # pyspark without the useArrow kwarg
                 pass
-        return F.udf(fn, ddl or "string")(*cols)
-
-
-# builtin/Invoker.java user-facing wrappers → Spark return types
-# (InvokeForInt.java .. InvokeForString.java)
-_INVOKER_RETURNS = {
-    "InvokeForInt": "int",
-    "InvokeForLong": "bigint",
-    "InvokeForFloat": "float",
-    "InvokeForDouble": "double",
-    "InvokeForString": "string",
-}
+        return F.udf(fn, ddl)(*cols)
 
 
 def _scalar_ddl(ddl: str) -> bool:
@@ -240,12 +224,12 @@ def _scalar_ddl(ddl: str) -> bool:
     return "<" not in d and not any(t in d for t in ("array", "map", "struct"))
 
 
-def _load_script_udfs(path: str, engine: str = "jython") -> dict:
+def _load_script_udfs(path: str, engine: str = "jython") -> dict[str, registry.Func]:
     """Execute a Pig scripting-UDF file (REGISTER ... USING jython AS
     ns — scripting/jython/JythonScriptEngine.java; USING
     streaming_python — python/PythonScriptEngine.java: that engine IS
-    CPython, exactly what runs here) and wrap its public functions as
-    Spark columns. Pig's decorator surface works verbatim:
+    CPython, exactly what runs here) and make its public functions
+    function-table entries. Pig's decorator surface works verbatim:
     ``@outputSchema('name:type')`` declares the return type
     (un-annotated functions default to chararray, like Pig's
     bytearray-as-default); ``@outputSchemaFunction`` +
@@ -255,12 +239,8 @@ def _load_script_udfs(path: str, engine: str = "jython") -> dict:
     imports in jython files resolve to permissive stubs (PIG-1824
     module-level references). The script's own directory joins
     sys.path during exec so sibling helper modules import
-    (JythonScriptEngine adds the script dir to jython's path).
-    A function inside :mod:`pig_spark.udf_lift`'s pure subset (if/elif
-    chains of comparisons, ``is None`` tests, float ``+ - *``,
-    ``upper``/``lower``) runs as a Catalyst expression; any other runs
-    as a row-at-a-time Python UDF (Arrow batches for scalar
-    signatures) — the slow path, same class as STREAM THROUGH."""
+    (JythonScriptEngine adds the script dir to jython's path). Each
+    call lowers through :meth:`_ScriptUDF.lower`."""
     import ast as _ast
     import os as _os
     import re as _re
@@ -340,12 +320,13 @@ def _load_script_udfs(path: str, engine: str = "jython") -> dict:
             continue  # schema functions aren't UDFs themselves
         schema = getattr(obj, "_pig_output_schema", None)
         ref = getattr(obj, "_pig_schema_fn_ref", None)
-        out[name] = _ScriptUDF(
+        udf = _ScriptUDF(
             obj,
             _script_udf_ddl(schema) if schema else (None if ref else "string"),
             schema_fns.get(ref) if ref else None,
             udf_lift.find_def(tree, obj, path),
         )
+        out[name] = registry.Func(name, typed=udf.lower)
     return out
 
 
@@ -469,8 +450,6 @@ def _sub_positional(e, sub: dict[str, str]):
 def _orderable(dtype) -> bool:
     """True when a column of this type can appear in an ORDER BY
     (maps — and anything containing one — cannot)."""
-    from pyspark.sql import types as T
-
     if isinstance(dtype, T.MapType):
         return False
     if isinstance(dtype, T.ArrayType):
@@ -494,16 +473,6 @@ def _group_key(kname: str, key_exprs) -> str:
     return kname
 
 
-def _suggest(name: str, candidates: list[str]) -> str:
-    """' — did you mean X?' fragment for unknown-name errors."""
-    import difflib
-
-    close = difflib.get_close_matches(name, candidates, n=2, cutoff=0.6)
-    if not close and name.upper() != name:
-        close = difflib.get_close_matches(name.upper(), candidates, n=2, cutoff=0.6)
-    return f" — did you mean {' or '.join(repr(c) for c in close)}?" if close else ""
-
-
 @dataclass
 class GroupedInfo:
     key_exprs: list[tuple[str, Column]]  # output key name → child expr
@@ -518,6 +487,24 @@ class GroupedInfo:
     # partial aggregation stays below the Expand node (LOCube.java
     # desugars to row expansion BEFORE the shuffle — strictly worse).
     sets: list[list[str]] | None = None
+
+
+@dataclass(frozen=True)
+class _Elem:
+    """One bag element as an expression scope: the higher-order
+    function's lambda variable ``el``, the element's field names ([]
+    for a scalar element, which every field reference names) and a
+    thunk of its Spark type (None: unknown)."""
+
+    el: Column
+    names: list[str]
+    type: object = None
+
+    def field(self, name: str) -> Column:
+        fld = _field_ref(name, self.names)
+        if fld is None:
+            raise NameError(f"nested bag pipe: no field {name!r} (fields: {self.names})")
+        return self.el if fld == "*" else self.el[fld]
 
 
 @dataclass
@@ -644,9 +631,12 @@ class PigTranslator:
         self.sink_aliases: list[str] = []  # STORE/DUMP target aliases, script order
         self.params = params or {}
         self.registered: list[str] = []
-        self.script_udfs: dict[str, dict] = {}  # REGISTER ... AS ns → {fn: udf}
+        # the script's function-table entries: REGISTER ... AS ns →
+        # {name: entry} ("" without AS), DEFINE alias → entry (or an
+        # exec-command spec, for STREAM THROUGH)
+        self.scripts: dict[str, dict[str, registry.Func]] = {}
+        self.defines: dict[str, registry.Func | dict] = {}
         self._job_ship: list[str] = []  # union of DEFINE SHIP files (job-scoped)
-        self.defines: dict[str, str] = {}
         # STOREs are deferred to end-of-script (Pig batch semantics:
         # PigServer executes the whole plan at the last STORE) so the
         # MultiQuery planner can cache subplans shared between sinks
@@ -944,9 +934,9 @@ class PigTranslator:
                 # them unqualified)
                 funcs = _load_script_udfs(stmt.path, engine or "jython")
                 if stmt.namespace:
-                    self.script_udfs[stmt.namespace] = funcs
+                    self.scripts[stmt.namespace] = funcs
                 else:
-                    self.script_udfs.setdefault("", {}).update(funcs)
+                    self.scripts.setdefault("", {}).update(funcs)
         elif isinstance(stmt, G.SetStmt):
             if stmt.key == "__exec_boundary__":
                 # Grunt `exec`: run everything queued so far — later
@@ -962,60 +952,8 @@ class PigTranslator:
         elif isinstance(stmt, G.Define):
             if stmt.args and stmt.args[0] == "__exec__":
                 self.defines[stmt.alias] = self._parse_exec_define(stmt)
-            elif stmt.func.rsplit(".", 1)[-1] in ("HiveUDF", "HiveUDTF", "HiveUDAF") and stmt.args:
-                # org.apache.pig.builtin.HiveUDF family (HiveUDF.java:
-                # wraps a Hive function by name). Spark's own function
-                # registry IS Hive-compatible — resolve by name at call
-                # time (F.call_function), staying JVM-side. The
-                # optional SECOND ctor arg is Hive-side constructor
-                # parameters — no Spark equivalent, refuse rather than
-                # silently resolve a differently-configured function.
-                if len(stmt.args) > 1:
-                    raise NotImplementedError(
-                        f"DEFINE {stmt.alias} {stmt.func}(...): constructor "
-                        "parameters beyond the function name need the Hive "
-                        "bridge; inline the parameters into the call instead"
-                    )
-                self.defines[stmt.alias] = ("__hive__", stmt.func.rsplit(".", 1)[-1], str(stmt.args[0]))
-            elif stmt.func.rsplit(".", 1)[-1] in _INVOKER_RETURNS and stmt.args:
-                # builtin/Invoker.java family (InvokeForInt/Long/Float/
-                # Double/String): reflection-invoke a STATIC Java method
-                # — Spark's java_method expression is the exact JVM-side
-                # equivalent (reflection per row, no Python). Ctor:
-                # (fullName, paramSpecs?, isStatic?="true"); paramSpecs
-                # are space-separated Pig types the args cast to (that
-                # cast is also what selects the Java overload).
-                leaf = stmt.func.rsplit(".", 1)[-1]
-                full = str(stmt.args[0])
-                params = str(stmt.args[1]).strip() if len(stmt.args) > 1 else ""
-                is_static = (
-                    str(stmt.args[2]).lower() in ("true", "static")
-                    if len(stmt.args) > 2
-                    else True
-                )
-                if not is_static:
-                    raise NotImplementedError(
-                        f"DEFINE {stmt.alias} {leaf}('{full}', ..., 'false'): "
-                        "instance-method invocation needs per-row JVM object "
-                        "construction (Invoker.java non-static path); only "
-                        "STATIC methods are supported — use the static "
-                        "equivalent or a scripting UDF"
-                    )
-                self.defines[stmt.alias] = (
-                    "__invoke__", _INVOKER_RETURNS[leaf], full, params,
-                )
             else:
-                leaf = stmt.func.rsplit(".", 1)[-1]
-                factory = getattr(PF, leaf, None)
-                if stmt.args and factory is not None and getattr(factory, "__pig_ctor__", False):
-                    # ctor-arg eval classes (the test-UDF jar surface:
-                    # Udfcachetest('path#link'), TestingAccumulatorHelper
-                    # ('true'), ... — functions/testudf.py): bind the
-                    # constructor strings NOW, exactly when the Java
-                    # ctor runs; the alias maps to the bound column fn
-                    self.defines[stmt.alias] = factory(*[str(a) for a in stmt.args])
-                else:
-                    self.defines[stmt.alias] = stmt.func
+                self.defines[stmt.alias] = registry.define(stmt.func, [str(a) for a in stmt.args], self.defines, self.scripts)
         elif isinstance(stmt, G.AssertStmt):
             rel = self._rel(stmt.rel)
             self.aliases[stmt.rel] = RelInfo(rel.assert_by(self._expr(stmt.cond, rel), stmt.msg or ""))
@@ -1338,15 +1276,15 @@ class PigTranslator:
                 if name not in self.defines:
                     raise NameError(f"STREAM THROUGH {name}: no such DEFINE")
                 spec = self.defines[name]
-                if isinstance(spec, dict):
-                    return typed(rel.stream_through(
-                        spec["cmd"], str_ddl, ship=self._job_ship or None,
-                        in_sep=spec["in_sep"], out_sep=spec["out_sep"],
-                        in_file=spec["in_file"], out_file=spec["out_file"],
-                        serialize=spec.get("serialize"),
-                        deserialize=spec.get("deserialize"),
-                    ))
-                cmd = spec
+                if not isinstance(spec, dict):
+                    raise NameError(f"STREAM THROUGH {name}: DEFINEd as a function, not a command")
+                return typed(rel.stream_through(
+                    spec["cmd"], str_ddl, ship=self._job_ship or None,
+                    in_sep=spec["in_sep"], out_sep=spec["out_sep"],
+                    in_file=spec["in_file"], out_file=spec["out_file"],
+                    serialize=spec.get("serialize"),
+                    deserialize=spec.get("deserialize"),
+                ))
             self._autoship(cmd)  # inline `stream X through \`perl x.pl\``
             return typed(rel.stream_through(cmd, str_ddl, ship=self._job_ship or None))
         raise NotImplementedError(f"operator {type(op).__name__}")
@@ -1458,8 +1396,6 @@ class PigTranslator:
         (filter/order/limit/distinct) apply to a BAG COLUMN (array of
         structs — what COGROUP/GROUP rows carry) as higher-order array
         functions: map-only, no shuffle, the bag never explodes."""
-        from pyspark.sql import types as T
-
         if st.kind == "expr":
             return self._expr(st.cond, rel)
 
@@ -1526,12 +1462,12 @@ class PigTranslator:
                 out = []
                 for i, item in enumerate(st.cond):
                     nm = item.alias or _default_name(item.expr, i)
-                    out.append(self._elem_expr(item.expr, t, fields).alias(nm))
+                    out.append(self._expr(item.expr, _Elem(t, fields, lambda: elem)).alias(nm))
                 return F.struct(*out)
 
             return F.transform(arr, project)
         if st.kind in ("filter", "distinct", "order", "limit"):
-            return self._apply_bag_ops(arr, [_bag_op(st, fields)], fields)
+            return self._apply_bag_ops(arr, [_bag_op(st, fields)], fields, elem=lambda: elem)
         if st.kind == "project":
             rest = st.source.partition(".")[2]
             if rest and fields:
@@ -1704,20 +1640,11 @@ class PigTranslator:
         return RelInfo(out)
 
     def _all_algebraic(self, items: list[G.GenItem], g: GroupedInfo) -> bool:
-        for item in items:
-            e = item.expr
-            if _is_group_ref(e) or self._is_agg_expr(e, g):
-                continue
-            return False
-        return True
+        return all(_is_group_ref(item.expr) or self._is_agg_expr(item.expr, g) for item in items)
 
     def _is_agg_expr(self, e, g: GroupedInfo) -> bool:
-        if self._hive_udaf(e) is not None:
-            # DEFINE f HiveUDAF('name'): an aggregate call in Pig
-            # (HiveUDAF.java extends AlgebraicEvalFunc) — keep the
-            # GENERATE algebraic so it lowers to a grouped agg
-            return True
-        if _grouped_builtin(e, g.child_alias) is not None:
+        # a HiveUDAF alias is algebraic too (HiveUDAF.java extends AlgebraicEvalFunc)
+        if self._hive_udaf(e) is not None or _grouped_builtin(e, g.child_alias) is not None:
             return True
         if isinstance(e, G.Bin):
             return self._is_agg_expr(e.left, g) and self._is_agg_expr(e.right, g)
@@ -1763,8 +1690,6 @@ class PigTranslator:
             # bag drops the record) and splat tuple elements' fields,
             # honoring an AS (name[:type], ...) list. Splices run in
             # reverse select order so recorded positions stay valid.
-            from pyspark.sql import types as T
-
             for idx, nm, it in reversed(flat_aggs):
                 dt = out.schema[nm].dataType
                 if isinstance(dt, T.ArrayType):
@@ -1903,7 +1828,10 @@ class PigTranslator:
                 # the per-row array in place, no shuffle
                 ch = g.child
                 mangled = f"__nfa_{st.alias}"
-                filtered = self._apply_bag_ops(ch.df[base.arr], [("filter", st.cond)], fields)
+                filtered = self._apply_bag_ops(
+                    ch.df[base.arr], [("filter", st.cond)], fields,
+                    elem=lambda: ch.df.schema[base.arr].dataType.elementType,
+                )
                 g = G_replace(
                     g,
                     child=Relation(ch.df.withColumn(mangled, filtered)),
@@ -2239,8 +2167,6 @@ class PigTranslator:
         a bag column (``c``, ``$1``), its field (``c.f``, ``c.$N``), or a
         bag-valued expression (COUNT(TOKENIZE(text)) is Pig's per-tuple
         bag count; the type is probed, as SIZE does). Else None."""
-        from pyspark.sql import types as T
-
         if not isinstance(arg, G.Col):
             if isinstance(arg, (G.Num, G.Str, G.Bool)):
                 return None
@@ -2675,8 +2601,6 @@ class PigTranslator:
         FLATTEN: one FLATTEN item over an array-typed expression, plus
         any per-row scalar items (replicated per element — Pig's
         flatten × scalar cross within the tuple)."""
-        from pyspark.sql import types as T
-
         flat_items = [(i, it) for i, it in enumerate(st.cond) if it.flatten]
         if len(flat_items) != 1:
             raise NotImplementedError("exactly one FLATTEN per inner FOREACH is supported")
@@ -2729,17 +2653,18 @@ class PigTranslator:
         )
         return g, _Pipe(arr=mangled)
 
-    def _apply_bag_ops(self, bag: Column, ops: list, fields: list[str], rename: dict | None = None) -> Column:
+    def _apply_bag_ops(self, bag: Column, ops: list, fields: list[str], rename: dict | None = None, elem=None) -> Column:
         """Replay recorded nested ops — ("filter", predicate),
         ("distinct", None), ("order", [(field, asc)]), ("limit", n) —
         over a collected bag in the given order (Pig's dataflow order):
         pure array functions (operators.nested), the bag never explodes.
         ``fields`` are the element fields ([] for a scalar-element bag);
         ORDER keys name child or element fields and resolve against them
-        through ``rename`` (child column → bag field)."""
+        through ``rename`` (child column → bag field). ``elem`` gives the
+        element's Spark type (``_Elem``)."""
         for kind, payload in ops:
             if kind == "filter":
-                bag = bag_filter(bag, lambda el: self._elem_expr(payload, el, fields))
+                bag = bag_filter(bag, lambda el: self._expr(payload, _Elem(el, fields, elem)))
             elif kind == "distinct":
                 # DistinctDataBag iterates in full-tuple sorted order
                 bag = bag_sort(bag_distinct(bag), [(f, True) for f in fields] or [("*", True)])
@@ -2807,7 +2732,7 @@ class PigTranslator:
         if hidden:
             bag = F.transform(bag, lambda t: F.struct(*[t[n].alias(n) for n in names]))
         if pipe.post_ops:
-            bag = self._apply_bag_ops(bag, pipe.post_ops, names, rename)
+            bag = self._apply_bag_ops(bag, pipe.post_ops, names, rename, elem=lambda b=bag: self._bag_elem(b, g))
         if rest:
             leaf = _field_ref(rest, names) or rest
             bag = F.transform(bag, lambda t: F.struct(t[leaf].alias(leaf.split("::")[-1])))
@@ -2879,17 +2804,13 @@ class PigTranslator:
         return g.child.df.limit(0).groupBy().agg(bag.alias("__pb")).schema["__pb"].dataType.elementType
 
     def _hive_udaf(self, e) -> str | None:
-        """Hive function name if ``e`` is a call to a DEFINEd
-        HiveUDAF alias (builtin/HiveUDAF.java), else None. Checked
-        BEFORE the builtin aggregate table so a define shadowing a
-        builtin name (``define avg HiveUDAF('percentile')``) resolves
-        to the Hive function, matching Pig's alias precedence."""
+        """The Hive function a call of a DEFINEd HiveUDAF alias names,
+        else None. A DEFINE shadows a builtin (``define avg
+        HiveUDAF('percentile')``), as in Pig."""
         if not isinstance(e, G.Call):
             return None
-        spec = self.defines.get(e.func)
-        if isinstance(spec, tuple) and len(spec) == 3 and spec[0] == "__hive__" and spec[1] == "HiveUDAF":
-            return spec[2]
-        return None
+        fn = registry.find(e.func, self.defines, self.scripts)
+        return fn.udaf if fn is not None else None
 
     # Hive UDAFs whose trailing arguments must be compile-time
     # constants (Hive's GenericUDAFPercentile* reject non-constant
@@ -2897,29 +2818,17 @@ class PigTranslator:
     _HIVE_CONST_TAIL = {"percentile", "percentile_approx", "approx_percentile"}
 
     def _hive_agg(self, hname: str, e: G.Call, g: GroupedInfo) -> Column:
-        """Lower a HiveUDAF call over a grouped relation to the
-        Spark aggregate of the same name (Spark's FunctionRegistry
-        implements the Hive builtin aggregate surface — avg,
-        percentile, collect_set, histogram_numeric, …), staying
-        JVM-side with map-side partial aggregation instead of Pig's
-        GenericUDAFEvaluator PARTIAL1/FINAL bridge modes.
-
-        Pig feeds a UDAF one bag argument, possibly of n-field tuples
-        (``percentile(B.(age, perc))``, nightly.conf HiveUDF #5) —
-        each tuple field becomes one positional Spark argument.
-        Trailing args of the percentile family must be constants
-        (Hive rejects non-constant fractions) so they are folded to
-        literals: from the optimized plan when Catalyst can constant-
-        fold them, else via a distinct-check scan that raises on
-        non-constant input exactly like Hive does."""
+        """A HiveUDAF call over a grouped relation as the Spark
+        aggregate of the same name (Spark implements Hive's builtin
+        aggregates: avg, percentile, collect_set, …), with map-side
+        partials. Each field of an n-field tuple bag argument
+        (``percentile(B.(age, perc))``) is one Spark argument; the
+        percentile family's trailing arguments fold to literals
+        (:meth:`_fold_constant`), as Hive requires constants there."""
         child = g.child
         if "." in hname or not self.spark.catalog.functionExists(hname):
-            # scope decision (COVERAGE.md §2.4, r6): only the Hive
-            # BUILTIN aggregate surface (Spark's Hive-compatible
-            # registry) resolves; arbitrary custom-jar
-            # GenericUDAFEvaluator classes (HiveUDAF.java
-            # PARTIAL1/FINAL bridge) are version-interop, out of
-            # scope like MAPREDUCE/HBase
+            # custom-jar GenericUDAFEvaluator classes (HiveUDAF.java's
+            # PARTIAL1/FINAL bridge) are out of scope (COVERAGE.md §2.4)
             raise NotImplementedError(
                 f"HiveUDAF({hname!r}): only Hive BUILTIN aggregates resolve "
                 "(Spark's Hive-compatible registry); custom-jar evaluator "
@@ -2936,8 +2845,6 @@ class PigTranslator:
                     # columns instead): resolve tuple fields through
                     # the struct; bag columns need a row-per-element
                     # shape first
-                    from pyspark.sql import types as T
-
                     if base not in child.df.columns:
                         raise SyntaxError(f"{hname}: unknown bag {base!r} in UDAF argument")
                     dt = child.df.schema[base].dataType
@@ -2952,18 +2859,7 @@ class PigTranslator:
                         "FLATTEN the bag into rows first, then GROUP and call the UDAF"
                     )
                 return [self._expr(G.Col(c), child) for c in a.cols]
-            if isinstance(a, G.Col):
-                name = a.name
-                if name == g.child_alias:
-                    if len(child.df.columns) != 1:
-                        raise SyntaxError(
-                            f"HiveUDAF {hname}({name}) needs a single-field bag; "
-                            f"project the field first ({name}.field)"
-                        )
-                    return [child.df[child.df.columns[0]]]
-                if name.startswith(g.child_alias + "."):
-                    return [self._expr(G.Col(name.split(".", 1)[1]), child)]
-            return [self._expr(a, child)]
+            return [self._group_arg(a, g, f"HiveUDAF {hname}")]
 
         cols: list[Column] = []
         for a in e.args:
@@ -3021,34 +2917,18 @@ class PigTranslator:
         """An algebraic GENERATE item over a plain GROUP as a Spark
         aggregate: builtins take the row lowering (aggregates.over_rows)
         over the child's columns — map-side partials, no bag."""
-        child = g.child
         hname = self._hive_udaf(e)
         if hname is not None:
             return self._hive_agg(hname, e, g)
         fn = _grouped_builtin(e, g.child_alias)
         if fn in aggregates.PAIRWISE:
             # same-bag projections pair by row
-            return aggregates.over_rows(fn, [self._expr(G.Col(a.name.split(".", 1)[1]), child) for a in e.args])
+            return aggregates.over_rows(fn, [self._group_arg(a, g, fn.upper()) for a in e.args])
         if fn == "count_star" or (fn is not None and not e.args):
             return aggregates.over_rows("count_star")
         if fn is not None:
-            arg = e.args[0]
-            if isinstance(arg, G.Col) and arg.name == g.child_alias:
-                # COUNT(rel) reads the first field (COUNT.java:40);
-                # SUM/AVG/MIN/MAX(rel) need a bag of single-field
-                # tuples and aggregate that field (SUM.java:58)
-                if fn != "count" and len(child.df.columns) != 1:
-                    raise SyntaxError(
-                        f"{fn.upper()}({arg.name}) needs a single-field bag "
-                        f"(got {len(child.df.columns)} fields); project the "
-                        f"field first or use {arg.name}.field"
-                    )
-                inner: Column = child.df[child.df.columns[0]]
-            elif isinstance(arg, G.Col) and arg.name.startswith(g.child_alias + "."):
-                inner = self._expr(G.Col(arg.name.split(".", 1)[1]), child)
-            else:
-                inner = self._expr(arg, child)
-            return aggregates.over_rows(fn, [inner])
+            # COUNT(rel) reads the first field (COUNT.java:40)
+            return aggregates.over_rows(fn, [self._group_arg(e.args[0], g, fn.upper(), single=fn != "count")])
         if isinstance(e, G.Bin):
             return _binop(e.op, self._agg_expr(e.left, g), self._agg_expr(e.right, g))
         if isinstance(e, (G.Num, G.Str)):
@@ -3058,32 +2938,39 @@ class PigTranslator:
             return hooked
         raise NotImplementedError(f"aggregate expression {e}")
 
+    def _group_arg(self, a, g: GroupedInfo, what: str, single: bool = True) -> Column:
+        """An aggregate argument over a plain GROUP's rows: a field of
+        the grouped bag (``rel.f``), an expression over the child, or
+        the bag itself, which reads its first field (a bag of
+        single-field tuples when ``single``: SUM.java:58)."""
+        child = g.child
+        if isinstance(a, G.Col) and a.name == g.child_alias:
+            if single and len(child.df.columns) != 1:
+                raise SyntaxError(
+                    f"{what}({a.name}) needs a single-field bag (got {len(child.df.columns)} fields); "
+                    f"project the field first or use {a.name}.field"
+                )
+            return child.df[child.df.columns[0]]
+        if isinstance(a, G.Col) and a.name.startswith(g.child_alias + "."):
+            a = G.Col(a.name.split(".", 1)[1])
+        return self._expr(a, child)
+
     def _bag_udf(self, e, g: GroupedInfo, pipes: dict) -> Column | None:
-        """Registry eval funcs in AGGREGATE position over a pipe or
-        the grouped relation (the test-UDF jar surface —
-        AllFirstLetter(d), NonAlgNonAccCount(a), DEFINEd
-        TestingAccumulatorHelper aliases): the argument bag ASSEMBLES
-        (the order-preserving pipe assembly, so nested-ORDER feeds a
-        sorted bag) and the function evaluates over it IN-ROW —
-        EvalFunc-over-DataBag semantics with Pig's own reducer-bag
-        footprint. Only functions declaring ``__wants_elem_type__``
-        participate (functions/testudf.py protocol); the probed bag
-        element type makes field-0 access schema-safe."""
+        """A function taking a bag (``registry.BAG``: AllFirstLetter(d),
+        a DEFINEd TestingAccumulatorHelper) over a pipe or the grouped
+        relation: the bag assembles in pipe order (a nested ORDER feeds
+        a sorted bag) and the function evaluates over it in-row, with
+        the probed element type, as an EvalFunc over a DataBag."""
         if not (isinstance(e, G.Call) and e.args and isinstance(e.args[0], G.Col)):
             return None
-        fname = self.defines.get(e.func, e.func)
-        fn = None
-        if callable(fname) and not isinstance(fname, (str, tuple, dict)):
-            fn = fname
-        elif isinstance(fname, str) and fname.count(".") >= 2:
-            fn = getattr(PF, fname.rsplit(".", 1)[-1], None)
-        if fn is None or not getattr(fn, "__wants_elem_type__", False):
+        fn = registry.find(e.func, self.defines, self.scripts)
+        if fn is None or fn.args != registry.BAG:
             return None
         head, _, rest = e.args[0].name.partition(".")
         if head not in pipes and head != g.child_alias:
             return None
         bag = self._pipe_bag(self._resolve_pipe(head, g, pipes), rest or None, g)
-        return fn(bag, _elem=self._bag_elem(bag, g))
+        return fn.lower(registry.Call([registry.Arg(bag)], probe=lambda: [T.ArrayType(self._bag_elem(bag, g))]))
 
     # ------------------------------------------------------------------
     def _join(self, op: G.Join) -> Relation:
@@ -3156,35 +3043,6 @@ class PigTranslator:
     # ------------------------------------------------------------------
     # expressions
     # ------------------------------------------------------------------
-    def _hive_call(self, kind: str, hname: str, e: G.Call, rel: Relation) -> Column:
-        """DEFINE f HiveUDF('name') (builtin/HiveUDF.java — Pig wraps
-        Hive functions via the Hive bridge). Spark's SQL function
-        registry is Hive-compatible, so the call lowers to
-        F.call_function(name, args) — built-in, codegen, no bridge.
-        HiveUDTF output is a BAG of 1-field tuples (one per emitted
-        row); 'explode' over an array is the supported shape —
-        FLATTEN then restores Pig's row-per-element semantics.
-        HiveUDAF lowers to the same-named Spark aggregate in grouped
-        FOREACH (_hive_agg); in a per-row position it is a semantic
-        error in Pig too — raises with the pointer."""
-        args = [self._expr(a, rel) for a in e.args]
-        if kind == "HiveUDF":
-            return F.call_function(hname, *args)
-        if kind == "HiveUDTF":
-            if hname.lower() == "explode" and len(args) == 1:
-                return F.transform(args[0], lambda x: F.struct(x.alias("x")))
-            raise NotImplementedError(
-                f"HiveUDTF({hname!r}): only 'explode' over a bag maps to a "
-                "Spark-side bag; other UDTFs need the Hive bridge"
-            )
-        raise SyntaxError(
-            f"HiveUDAF({hname!r}) is an aggregate — call it in a FOREACH over a "
-            "plain GROUP alias whose GENERATE holds only aggregate calls and "
-            "group keys (it lowers to the Spark aggregate of the same name); "
-            "for COGROUP bags or GENERATEs mixing per-row expressions, aggregate "
-            "in a separate FOREACH first"
-        )
-
     def _bool_expr(self, e, rel: Relation) -> Column:
         """A FILTER condition. An untyped (string-backed bytearray)
         operand in boolean position gets Pig's implicit
@@ -3193,8 +3051,6 @@ class PigTranslator:
         so the coercion lands on the leaves BEFORE the boolean op —
         probing after NOT(stringcol) would already be an analysis
         error."""
-        from pyspark.sql import types as T
-
         if isinstance(e, G.Un) and e.op == "not":
             return ~self._bool_expr(e.operand, rel)
         if isinstance(e, G.Bin) and e.op in ("and", "or"):
@@ -3210,78 +3066,24 @@ class PigTranslator:
                 return c.try_cast("boolean")
         return c
 
-    def _elem_expr(self, e, el: Column, names: list[str]) -> Column:
-        """Expression over ONE bag element (array-HOF lambda variable
-        ``el``, element fields ``names``; [] for a scalar-element bag,
-        where every field reference is the element itself): fields
-        ($N, unique ``a::f`` suffixes), literals, arithmetic and
-        comparisons, IN, matches, bincond, casts and scalar builtins.
-        No relation context exists inside a lambda, so aggregates and
-        relation scalars raise with guidance."""
-        def sub(x):
-            return self._elem_expr(x, el, names)
-
-        if isinstance(e, G.Num):
-            t = e.value.lower()
-            return F.lit(float(t.rstrip("f")) if "." in t or "e" in t else int(t.rstrip("l")))
-        if isinstance(e, (G.Str, G.Bool)):
-            return F.lit(e.value)
-        if isinstance(e, G.Null):
-            return F.lit(None)
-        if isinstance(e, G.Col):
-            fld = _field_ref(e.name, names)
-            if fld is None:
-                raise NameError(f"nested bag pipe: no field {e.name!r} (fields: {names})")
-            return el if fld == "*" else el[fld]
-        if isinstance(e, G.Bin):
-            if e.op == "and":
-                return sub(e.left) & sub(e.right)
-            if e.op == "or":
-                return sub(e.left) | sub(e.right)
-            return _binop(e.op, sub(e.left), sub(e.right))
-        if isinstance(e, G.Un):
-            return ~sub(e.operand) if e.op == "not" else -sub(e.operand)
-        if isinstance(e, G.IsNull):
-            c = sub(e.operand)
-            return c.isNotNull() if e.negated else c.isNull()
-        if isinstance(e, G.Matches):
-            return PF.MATCHES(sub(e.operand), e.pattern)
-        if isinstance(e, G.InList):
-            return sub(e.operand).isin(*[_const(o) for o in e.options])
-        if isinstance(e, G.BinCond):
-            return F.when(sub(e.cond), sub(e.then)).otherwise(sub(e.otherwise))
-        if isinstance(e, G.Cast):
-            return sub(e.operand).try_cast(pigtypes.ddl(e.type))
-        if isinstance(e, G.Call):
-            # scalar builtin over element fields (CONCAT, ABS…);
-            # aggregates don't belong inside a per-element lambda
-            if e.func.lower() in aggregates.BUILTINS:
-                raise NotImplementedError(
-                    f"aggregate {e.func.upper()} inside a nested bag pipe; "
-                    "aggregate in the outer GENERATE instead"
-                )
-            fn = getattr(PF, e.func, None) or getattr(PF, e.func.upper(), None)
-            if fn is None:
-                raise NameError(f"pig latin: unknown function {e.func!r}")
-            return fn(*[sub(a) for a in e.args])
-        raise NotImplementedError(
-            f"unsupported expression {type(e).__name__} inside a nested bag pipe; "
-            "move the FILTER before the inner FOREACH for the full expression surface"
-        )
-
-    def _expr(self, e, rel: Relation) -> Column:
-        if isinstance(e, G.Num):
-            t = e.value.lower()
-            if "." in t or "e" in t:
-                return F.lit(float(t.rstrip("f")))
-            return F.lit(int(t.rstrip("l")))
-        if isinstance(e, G.Str):
-            return F.lit(e.value)
+    def _expr(self, e, rel: "Relation | _Elem") -> Column:
+        """``e`` over a relation's row, or over one bag element inside a
+        higher-order function's lambda (``_Elem``: no relation there, so
+        aggregates, relation scalars and ``*`` raise)."""
+        if isinstance(rel, _Elem) and isinstance(e, (G.Star, G.MultiCol)):
+            raise NotImplementedError(
+                f"unsupported expression {type(e).__name__} inside a nested bag pipe; "
+                "move the FILTER before the inner FOREACH for the full expression surface"
+            )
+        if isinstance(e, (G.Num, G.Str)):
+            return F.lit(_const(e))
         if isinstance(e, G.Bool):
             return F.lit(e.value)
         if isinstance(e, G.Null):
             return F.lit(None)
         if isinstance(e, G.Col):
+            if isinstance(rel, _Elem):
+                return rel.field(e.name)
             head, _, scalar_field = e.name.partition(".")
             if (
                 scalar_field
@@ -3327,9 +3129,7 @@ class PigTranslator:
             then_c = self._expr(e.then, rel)
             else_c = self._expr(e.otherwise, rel)
             try:
-                from pyspark.sql import types as T
-
-                if not any(
+                if isinstance(rel, _Elem) or not any(
                     isinstance(b, (G.Col, G.Call, G.Cast, G.MultiCol))
                     for b in (e.then, e.otherwise)
                 ):
@@ -3386,8 +3186,6 @@ class PigTranslator:
         """rel.(c1, c2): project a bag of structs to a bag of narrower
         tuples (POProject over inner plans) — F.transform keeps it
         JVM-side; a plain struct (tuple) projects directly."""
-        from pyspark.sql import types as T
-
         head = self._resolve(e.rel, rel)
         name = e.rel if e.rel in rel.df.columns else None
         dtype = rel.df.schema[name].dataType if name else None
@@ -3429,8 +3227,6 @@ class PigTranslator:
                     # and bag-element projection by index (b.$0 over
                     # array<struct>: field 0 of every element, Pig's
                     # positional bag projection)
-                    from pyspark.sql import types as T
-
                     dtype = rel.df.schema[head].dataType
                     if isinstance(dtype, T.StructType):
                         return rel.df[head].getField(dtype.names[int(rest[1:])])
@@ -3471,214 +3267,31 @@ class PigTranslator:
             if rest in cols or "::" in rest:
                 return self._resolve(rest, rel)
             raise NameError(
-                f"pig latin: unknown field {name!r}{_suggest(name, cols)} (columns: {cols})"
+                f"pig latin: unknown field {name!r}{registry.suggest(name, cols)} (columns: {cols})"
             )
         return F.expr(name)
 
-    def _call(self, e: G.Call, rel: Relation) -> Column:
-        fname = self.defines.get(e.func, e.func)  # DEFINE alias → func
-        if isinstance(fname, tuple) and fname[0] == "__hive__":
-            return self._hive_call(fname[1], fname[2], e, rel)
-        if isinstance(fname, tuple) and fname[0] == "__invoke__":
-            # Invoker.java static-method reflection → java_method
-            # (JVM-side reflection per row; the result crosses back as
-            # a string — Java's shortest-roundtrip toString — and casts
-            # to the InvokeForX return type losslessly)
-            _, ret, full, params = fname
-            cls, _, method = full.rpartition(".")
-            args = [self._expr(a, rel) for a in e.args]
-            ptypes = params.split() if params else []
-            for i, pt in enumerate(ptypes[: len(args)]):
-                # Invoker.stringToClass names Java classes, in any case:
-                # 'String' (java.lang.String) and the array forms are no
-                # Pig type and pass as string
-                try:
-                    pddl = pigtypes.ddl(pt)
-                except ValueError:
-                    pddl = "string"
-                args[i] = args[i].cast(pddl)
-            return F.java_method(F.lit(cls), F.lit(method), *args).cast(ret)
-        if callable(fname) and not isinstance(fname, (str, tuple, dict)):
-            # DEFINE-bound column function (ctor-arg eval classes)
-            args = [self._expr(a, rel) for a in e.args]
-            if getattr(fname, "__wants_rel__", False):
-                return fname(*args, _rel=rel)
-            return fname(*args)
-        if not isinstance(fname, str):  # exec-command DEFINE used as a UDF
-            raise NameError(
-                f"{e.func!r} is DEFINEd as a stream command; it can only follow STREAM ... THROUGH"
-            )
-        if "." in fname:
-            ns, _, leaf = fname.partition(".")
-            funcs = self.script_udfs.get(ns)
-            if funcs is None and fname.count(".") >= 2:
-                # fully-qualified Java class call (org.apache.pig.
-                # builtin.X / piggybank evaluation classes): resolve
-                # the LEAF against the builtin/piggybank registry —
-                # Pig scripts habitually call piggybank by class path
-                java_leaf = fname.rsplit(".", 1)[-1]
-                fn = getattr(PF, java_leaf, None) or getattr(PF, java_leaf.upper(), None)
-                if fn is None:
-                    # case-insensitive fallback: the lexer lowercases
-                    # leaves that collide with statement keywords
-                    # (…piggybank.evaluation.string.Split arrives as
-                    # 'split'), but class-path resolution is by name
-                    match = next(
-                        (n for n in dir(PF) if not n.startswith("_") and n.lower() == java_leaf.lower()),
-                        None,
-                    )
-                    if match is not None:
-                        fn = getattr(PF, match)
-                if fn is not None:
-                    args = [self._expr(a, rel) for a in e.args]
-                    if getattr(fn, "__wants_rel__", False):
-                        return fn(*args, _rel=rel)
-                    return fn(*args)
-                raise NameError(
-                    f"pig latin: {fname!r} is a Java UDF class — this engine cannot load "
-                    f"JVM classes; no builtin named {java_leaf!r} matches. Port it as a "
-                    "scripting UDF (REGISTER 'x.py' USING jython AS ns) or use a builtin."
+    def _call(self, e: G.Call, rel: "Relation | _Elem") -> Column:
+        fn = registry.resolve(e.func, self.defines, self.scripts)
+        args = _call_args(e, lambda a: self._expr(a, rel))
+        if isinstance(rel, _Elem):
+            if fn.aggregate is not None:
+                raise NotImplementedError(
+                    f"aggregate {e.func.upper()} inside a nested bag pipe; aggregate in the outer GENERATE instead"
                 )
-            if funcs is None:
-                raise NameError(
-                    f"pig latin: unknown UDF namespace {ns!r} — REGISTER 'file.py' USING jython AS {ns};"
-                )
-            udf_col = funcs.get(leaf)
-            if udf_col is None:
-                raise NameError(
-                    f"pig latin: no function {leaf!r} in namespace {ns!r}{_suggest(leaf, sorted(funcs))}"
-                )
-            return udf_col(*[self._expr(a, rel) for a in e.args], _rel=rel)
-        if fname.upper() == "TOTUPLE" and e.args:
-            # TOTUPLE.java: fields inherit the argument names; repeated
-            # columns (TOTUPLE($0,$0,$0)) and expressions get POSITIONAL
-            # names so later field access / storage isn't ambiguous.
-            # Untyped null constants become chararray nulls (bytearray).
-            cols = []
-            used: set[str] = set()
-            for i, a in enumerate(e.args):
-                c = self._expr(a, rel)
-                if isinstance(a, G.Null):
-                    c = c.cast("string")
-                nm = _default_name(a, i)
-                if not nm or nm.startswith("$") or not nm.replace("_", "a").isalnum():
-                    nm = f"col{i}"
-                if nm in used:
-                    nm = f"{nm}_{i}"
-                used.add(nm)
-                cols.append(c.alias(nm))
-            return F.struct(*cols)
-        if fname.upper() == "TOBAG" and e.args:
-            # TOBAG.java: tuple arguments insert as-is, scalars wrap
-            # into single-field tuples. Spark arrays need ONE element
-            # type, so tuple schemas unify positionally — names from
-            # the widest tuple, numeric widening, chararray fallback
-            # (Pig's merged-or-bytearray output schema), null-padding
-            # for shorter tuples; scalar bags unify the same way.
-            from pyspark.sql import types as T
+            probe = rel.type and (lambda: self._elem_types(e.args, rel))
+            return fn.lower(registry.Call(args, probe=probe, in_lambda=True))
+        if fn.aggregate is not None:
+            bag_agg = self._bag_agg(fn.aggregate, e, rel)
+            if bag_agg is not None:
+                return bag_agg
+        return fn.lower(registry.Call(args, rel))
 
-            arg_cols = [self._expr(a, rel) for a in e.args]
-            for i, a in enumerate(e.args):
-                if isinstance(a, G.Null):
-                    arg_cols[i] = arg_cols[i].cast("string")
-            try:
-                probe = rel.df.select(*[c.alias(f"__tb{i}") for i, c in enumerate(arg_cols)]).schema
-                types = [f.dataType for f in probe.fields]
-            except Exception:
-                types = []
-            if types and all(isinstance(t, T.StructType) for t in types):
-                arity = max(len(t.fields) for t in types)
-                base = next(t for t in types if len(t.fields) == arity)
-                names = list(base.names)
-                targets = [
-                    _common_type([
-                        t[t.names[i]].dataType if i < len(t.fields) else None
-                        for t in types
-                    ]).simpleString()
-                    for i in range(arity)
-                ]
-                elems = []
-                for c, t in zip(arg_cols, types):
-                    fields = [
-                        (c[t.names[i]] if i < len(t.fields) else F.lit(None))
-                        .cast(targets[i])
-                        .alias(names[i])
-                        for i in range(arity)
-                    ]
-                    elems.append(F.struct(*fields))
-                return F.array(*elems)
-            if types and not any(isinstance(t, T.StructType) for t in types):
-                target = _common_type(types).simpleString()
-                return F.array(
-                    *[F.struct(c.cast(target).alias("t")) for c in arg_cols]
-                )
-            return F.array(*arg_cols)  # schema probe unavailable / mixed
-        anon = self.script_udfs.get("")
-        if anon is not None and fname in anon:
-            # bare-name scripting UDF (REGISTER ... USING <engine>;
-            # with no AS clause) — exact-case match, so lowercase
-            # script functions never shadow the UPPERCASE builtins
-            return anon[fname](*[self._expr(a, rel) for a in e.args], _rel=rel)
-        fn = getattr(PF, fname, None) or getattr(PF, fname.upper(), None)
-        if fn is None:
-            known = [n for n in dir(PF) if not n.startswith("_")]
-            raise NameError(f"pig latin: unknown function {fname!r}{_suggest(fname, known)}")
-        bag_agg = self._bag_agg(fname, e, rel)
-        if bag_agg is not None:
-            return bag_agg
-        if fname.upper() in ("SIZE", "ARITY"):
-            # SIZE is type-polymorphic in Pig (StringSize/TupleSize/
-            # BagSize/MapSize dispatched by the frontend) — resolve the
-            # argument's Spark type here, where the schema is known
-            from pyspark.sql import types as T
-
-            if len(e.args) > 1:
-                # ARITY(a, b, c): the args form an implicit tuple —
-                # its SIZE is the field count (TupleSize.java)
-                return F.lit(len(e.args)).cast("long")
-            c = self._expr(e.args[0], rel)
-            if isinstance(e.args[0], G.Col) and e.args[0].name in rel.df.columns:
-                dtype = rel.df.schema[e.args[0].name].dataType
-            else:  # Cast/Call/arith arg: probe the expression's type
-                dtype = rel.df.select(c.alias("__sz")).schema[0].dataType
-            if isinstance(dtype, T.StringType):
-                return F.length(c).cast("long")
-            if isinstance(dtype, T.BinaryType):
-                return F.octet_length(c).cast("long")
-            if isinstance(dtype, (T.ArrayType, T.MapType)):
-                return F.size(c).cast("long")
-            if isinstance(dtype, T.StructType):
-                return F.lit(len(dtype.fields)).cast("long")
-            # numeric/bool/datetime scalar: SIZE = 1 (SIZE.java:52),
-            # null-propagating like the Java impl
-            return F.when(c.isNotNull(), F.lit(1).cast("long"))
-        if (
-            fname.upper() == "TOP"
-            and len(e.args) >= 3
-            and isinstance(e.args[1], G.Num)
-            and isinstance(e.args[2], G.Col)
-        ):
-            # TOP(n, column_INDEX, bag) — Pig's positional field arg
-            # (TOP.java). Resolve the index against the bag's element
-            # struct here, where the schema is known.
-            from pyspark.sql import types as T
-
-            bag_name = e.args[2].name
-            if bag_name in rel.df.columns:
-                dtype = rel.df.schema[bag_name].dataType
-                if isinstance(dtype, T.ArrayType) and isinstance(dtype.elementType, T.StructType):
-                    field = dtype.elementType.fieldNames()[int(e.args[1].value)]
-                    return PF.TOP(int(e.args[0].value), field, self._expr(e.args[2], rel))
-        args = []
-        for a in e.args:
-            if isinstance(a, G.Num):
-                t = a.value.lower().rstrip("lf")
-                args.append(float(t) if "." in t or "e" in t else int(t))
-            elif isinstance(a, G.Str):
-                args.append(a.value)
-            else:
-                args.append(self._expr(a, rel))
-        return fn(*args)
+    def _elem_types(self, args: list, scope: "_Elem") -> list:
+        """The Spark types of ``args`` over a typed stand-in for the element."""
+        frame = self.spark.range(0).select(F.lit(None).cast(scope.type()).alias("__el"))
+        stand_in = _Elem(frame["__el"], scope.names, scope.type)
+        return [f.dataType for f in frame.select(*[self._expr(a, stand_in) for a in args]).schema.fields]
 
 
 def _range_span(rel: Relation, rp) -> list[str]:
@@ -3710,33 +3323,6 @@ def _single_alias(alias) -> tuple[str | None, str | None]:
     if isinstance(alias, str) or alias is None:
         return alias, None
     return None, None  # multi-field schema — caller splats positionally
-
-
-def _common_type(ts):
-    """Widest common Spark type for TOBAG element unification
-    (TOBAG.java output schema: mergeable field types merge, otherwise
-    the field degrades to bytearray ≅ chararray here): identical →
-    itself, all-numeric → the widest, else string. Nulls/voids defer
-    to the other elements."""
-    from pyspark.sql import types as T
-
-    nn = [t for t in ts if t is not None and not isinstance(t, T.NullType)]
-    if not nn:
-        return T.StringType()
-    if all(t.simpleString() == nn[0].simpleString() for t in nn):
-        return nn[0]
-    order = [T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType, T.DoubleType]
-
-    def rank(t):
-        for i, cls in enumerate(order):
-            if isinstance(t, cls):
-                return i
-        return None
-
-    ranks = [rank(t) for t in nn]
-    if all(r is not None for r in ranks):
-        return order[max(ranks)]()
-    return T.StringType()
 
 
 def _field_ref(name: str, fields: list[str]) -> str | None:
@@ -3831,6 +3417,18 @@ def _const(e):
 
         return {"+": _o.add, "-": _o.sub, "*": _o.mul, "%": _o.mod}[e.op](l, r)
     raise ValueError("pig latin: constant expected")
+
+
+def _call_args(e: G.Call, lower) -> list[registry.Arg]:
+    """A call's arguments for its function-table entry; ``lower`` makes
+    an argument's column."""
+    return [
+        registry.Arg(
+            lambda a=a: lower(a), _const(a) if isinstance(a, (G.Num, G.Str)) else registry.NOT_LITERAL,
+            name=_default_name(a, i), null=isinstance(a, G.Null), field=a.name if isinstance(a, G.Col) else None,
+        )
+        for i, a in enumerate(e.args)
+    ]
 
 
 def _default_name(e, i: int) -> str:

@@ -1037,3 +1037,95 @@ def test_latin_multi_store_reload_differential(spark, tmp_path):
             failures.append(f"case {i} raised {type(ex).__name__}: {ex}\n{script}")
     con.close()
     assert not failures, "\n\n".join(failures)
+
+
+# ----------------------------------------------------------------------
+# function names in every spelling a script may use — the bare name,
+# lower case, the org.apache.pig.builtin class path, a DEFINE alias —
+# at the top level and in a nested FILTER after a LIMIT (the call runs
+# inside a higher-order function's lambda there), vs DuckDB
+# ----------------------------------------------------------------------
+
+N_SPELL = 16
+SPELL_SEED = 20261020
+_SPELLINGS = ("bare", "lower", "class path", "define")
+
+# (builtin, Latin arguments, SQL twin, a value it gives for the letter c)
+_SCALAR_CALLS = [
+    ("UPPER", "b", "upper(b)", lambda c: f"'{c.upper()}'"),
+    ("LOWER", "b", "lower(b)", lambda c: f"'{c}'"),
+    ("TRIM", "b", "trim(b)", lambda c: f"'{c}'"),
+    ("CONCAT", "b, '!'", "(b || '!')", lambda c: f"'{c}!'"),
+    ("SUBSTRING", "b, 0, 1", "substr(b, 1, 1)", lambda c: f"'{c}'"),
+    ("SIZE", "b", "length(b)", lambda c: "1"),
+    ("ABS", "a - 5", "abs(a - 5)", lambda c: "3"),
+]
+
+
+def _spell(form, name, defines):
+    if form == "bare":
+        return name
+    if form == "lower":
+        return name.lower()
+    if form == "class path":
+        return f"org.apache.pig.builtin.{name}"
+    alias = f"Fn{len(defines)}"
+    defines.append(f"DEFINE {alias} {name}();")
+    return alias
+
+
+def _gen_spelled(rng, path, i):
+    """One script with a top-level FOREACH of two builtin calls and a
+    nested FILTER on a third after ORDER + LIMIT, each name spelled one
+    of the four ways (case i spells its first call the i-th way), and
+    the SQL twins of both outputs."""
+    defines = []
+    calls = [rng.choice(_SCALAR_CALLS) for _ in range(3)]
+    forms = [_SPELLINGS[i % 4], rng.choice(_SPELLINGS), _SPELLINGS[(i // 4) % 4]]
+    lat = [f"{_spell(f, name, defines)}({args})" for f, (name, args, _, _) in zip(forms, calls)]
+    c = rng.choice("xyz")
+    n = rng.randint(1, 4)
+    name, _, sql, value = calls[2]
+    script = "\n".join([
+        *defines,
+        f"r = LOAD '{path}' USING ParquetLoader();",
+        f"top = FOREACH r GENERATE id, {lat[0]} AS c1, {lat[1]} AS c2;",
+        "g = GROUP r BY k;",
+        f"out = FOREACH g {{ s1 = ORDER r BY id; s2 = LIMIT s1 {n}; s3 = FILTER s2 BY {lat[2]} == {value(c)}; "
+        "GENERATE group AS kk, COUNT(s3) AS n, SUM(s3.id) AS si; };",
+    ])
+    top_sql = f"SELECT id, {calls[0][2]} AS c1, {calls[1][2]} AS c2 FROM r"
+    out_sql = (
+        "WITH gk AS (SELECT DISTINCT k FROM r), "
+        f"s2 AS (SELECT * FROM r QUALIFY row_number() OVER (PARTITION BY k ORDER BY id) <= {n}), "
+        f"s3 AS (SELECT * FROM s2 WHERE {sql} = {value(c)}) "
+        "SELECT gk.k AS kk, COUNT(t.k) AS n, SUM(t.id) AS si FROM gk LEFT JOIN s3 t ON gk.k = t.k GROUP BY gk.k"
+    )
+    return script, {"top": top_sql, "out": out_sql}
+
+
+def test_latin_function_spelling_differential(spark, tmp_path):
+    """Scalar builtins called by the bare name, in lower case, by class
+    path or through a DEFINE alias give DuckDB's values, at the top
+    level and inside a nested pipe."""
+    rng = random.Random(SPELL_SEED)
+    path = str(tmp_path / "spell.parquet")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE r (k INTEGER, id INTEGER, a INTEGER, b VARCHAR)")
+    con.executemany("INSERT INTO r VALUES (?, ?, ?, ?)", _nested_rows(rng))
+    con.execute(f"COPY r TO '{path}' (FORMAT PARQUET)")
+    failures = []
+    for i in range(N_SPELL):
+        script, sqls = _gen_spelled(rng, path, i)
+        try:
+            rels = run(spark, script)
+            for alias, sql in sqls.items():
+                df, rel = rels[alias].df, con.execute(sql)
+                got = (df.columns, sorted(tuple(_norm(v) for v in r) for r in df.collect()))
+                want = ([d[0] for d in rel.description], sorted(tuple(_norm(v) for v in r) for r in rel.fetchall()))
+                if got != want:
+                    failures.append(f"case {i} {alias} diff\n{script}\n{sql}\nspark: {got}\nduck:  {want}")
+        except Exception as ex:  # pragma: no cover - diagnostic path
+            failures.append(f"case {i} raised {type(ex).__name__}: {ex}\n{script}")
+    con.close()
+    assert not failures, "\n\n".join(failures)

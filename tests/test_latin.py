@@ -266,6 +266,7 @@ def test_nested_foreach_limit_now_lowered(spark, sf_dir):
 
 
 def test_preamble_register_define_set(spark, sf_dir):
+    from pig_spark.functions import registry
     from pig_spark.latin import translator
 
     tr = translator(spark)
@@ -277,7 +278,7 @@ def test_preamble_register_define_set(spark, sf_dir):
         b = FOREACH a GENERATE shout(n_name) AS loud;
     """)
     assert tr.registered == ["piggybank.jar"]
-    assert tr.defines == {"shout": "UPPER"}
+    assert tr.defines == {"shout": registry.BUILTINS["UPPER"]}
     vals = {r["loud"] for r in tr.relation("b").df.collect()}
     assert vals and all(v == v.upper() for v in vals)
 

@@ -271,13 +271,13 @@ def test_pig_type_text_round_trips_through_the_printer(text):
 @given(picks=st.lists(st.sampled_from(_SCALARS + ["null"]), min_size=1, max_size=6))
 @settings(max_examples=80, deadline=None)
 def test_common_type_is_total_and_widening(picks):
-    """_common_type (r6 — TOBAG element unification): always returns a
+    """registry._common_type (r6 — TOBAG element unification): always returns a
     concrete Spark type; identical inputs return themselves; numeric
     mixes widen (never narrow); anything else degrades to string —
     TOBAG.java's merged-or-bytearray output schema."""
     from pyspark.sql import types as T
 
-    from pig_spark.latin.translate import _common_type
+    from pig_spark.functions.registry import _common_type
 
     m = {
         "int": T.IntegerType(), "long": T.LongType(), "float": T.FloatType(),

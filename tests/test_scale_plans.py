@@ -178,7 +178,9 @@ def test_catalog_plan_audit(spark, sf_dir, checkpointed):
         # it (RANK and packing store their input; the upstream runs
         # there, behind a LogicalRDD leaf of the final plan)
         for s in map(_optimized, [df, *checkpointed]):
-            if name not in _PYTHON_OK and ("PythonUDF" in s or "BatchEvalPython" in s):
+            # the optimizer moves a scalar Python UDF into an
+            # ArrowEvalPython node, a row one into BatchEvalPython
+            if name not in _PYTHON_OK and ("PythonUDF" in s or "EvalPython" in s):
                 bad.append(f"{name}: python in plan")
             if name not in _CARTESIAN_OK:
                 # per-join check: a cross join is fine ONLY when broadcast
@@ -325,7 +327,7 @@ def test_r6_nested_corner_plans(spark, sf_dir):
 
     s2 = q120_latin_arr_pipe_ops(spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in s2, s2
-    assert "PythonUDF" not in s2
+    assert "PythonUDF" not in s2 and "EvalPython" not in s2, s2
     assert len(re.findall(r"(?m)^[\s+:-]*Aggregate", s2)) == 1, s2
 
 
@@ -377,7 +379,7 @@ def test_tfidf_plan(spark, sf_dir):
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     assert "TakeOrderedAndProject" in phys, phys
     assert "hashpartitioning(doc_id" not in phys, phys
-    assert "PythonUDF" not in opt
+    assert "PythonUDF" not in opt and "EvalPython" not in opt, opt
     assert not unpartitioned_windows(opt), unpartitioned_windows(opt)
 
 
@@ -506,7 +508,7 @@ def test_bigram_lm_plan(spark, sf_dir):
     assert "hashpartitioning(doc_id" not in phys, phys
     # both remaining exchanges key on grouping expressions (the bigram
     # gram string / the pmod bucket), never on doc identity
-    assert "PythonUDF" not in opt
+    assert "PythonUDF" not in opt and "EvalPython" not in opt, opt
     assert not unpartitioned_windows(opt), unpartitioned_windows(opt)
 
 
@@ -586,7 +588,7 @@ def test_dsir_plan(spark, sf_dir):
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     assert phys.count("TakeOrderedAndProject") == 2, phys.count("TakeOrderedAndProject")
     assert "hashpartitioning(doc_id" not in phys, phys
-    assert "PythonUDF" not in opt
+    assert "PythonUDF" not in opt and "EvalPython" not in opt, opt
     assert not unpartitioned_windows(opt), unpartitioned_windows(opt)
 
 

@@ -282,7 +282,7 @@ def test_regex_log_loaders(spark, tmp_path):
     got = rels["big"].df.collect()
     assert len(got) == 1 and got[0]["ip"] == "81.19.151.110" and got[0]["size"] == 156
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "PythonUDF" not in plan
+    assert "EvalPython" not in plan and "PythonUDF" not in plan, plan
 
 
 def test_regex_loader_first_match_semantics(spark, tmp_path):

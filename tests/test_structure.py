@@ -358,3 +358,46 @@ def test_one_storage_table():
         and id(node) not in bound
     ]
     assert not offenders, "storage-function name or dispatch outside sources/storage.py:\n" + "\n".join(offenders)
+
+
+def test_one_function_table():
+    """Every Latin function call, DEFINE and REGISTER resolves through
+    ONE table, ``pig_spark/functions/registry.py``. The translator had
+    seven resolution sites that disagreed: ``getattr``/``dir`` over
+    ``pig_spark.functions`` in the DEFINE handler, the bag-eval path,
+    the nested bag pipes and ``_call``'s seven-resolver chain, plus
+    three protocol attributes on the test-jar functions. A nested pipe
+    did not know DEFINE aliases, class paths or scripting UDFs, and a
+    script could call a module. No other engine module may look a name
+    up in ``pig_spark.functions`` (``getattr``/``hasattr``/``dir`` or
+    ``vars`` over it), nor use the old protocol attributes."""
+    table = PKG / "functions" / "registry.py"
+    protocol = {"__wants_rel__", "__pig_ctor__", "__wants_elem_type__"}
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path == table:
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        aliases = set()  # the names this module binds pig_spark.functions to
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.level or (node.module or "").startswith("pig_spark")):
+                aliases.update(a.asname or a.name for a in node.names if a.name == "functions")
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.endswith("pig_spark.functions") and a.asname:
+                        aliases.add(a.asname)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id in ("getattr", "hasattr", "dir", "vars")
+                and node.args
+                and isinstance(node.args[0], ast.Name)
+                and node.args[0].id in aliases
+            ):
+                offenders.append(f"{path.relative_to(REPO)}:{node.lineno} {node.func.id}({node.args[0].id}, …)")
+            if isinstance(node, ast.Attribute) and node.attr in protocol:
+                offenders.append(f"{path.relative_to(REPO)}:{node.lineno} .{node.attr}")
+            if isinstance(node, ast.Constant) and node.value in protocol:
+                offenders.append(f"{path.relative_to(REPO)}:{node.lineno} {node.value!r}")
+    assert not offenders, "function name resolved outside pig_spark/functions/registry.py:\n" + "\n".join(offenders)

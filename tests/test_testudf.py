@@ -43,7 +43,7 @@ def test_all_first_letter_over_ordered_pipe(spark, student):
 
 def test_ctor_define_binding_and_accumulators(spark, student, tmp_path):
     """DEFINE alias Cls('arg') binds constructor strings at define
-    time (__pig_ctor__): Udfcachetest ships a file's first line,
+    time (the entry's constructor): Udfcachetest ships a file's first line,
     TestingAccumulatorHelper counts accumulate() calls."""
     cache = str(tmp_path / "cache")
     open(cache, "w").write("first line wins\nsecond\n")

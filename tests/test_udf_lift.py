@@ -12,6 +12,7 @@ import pytest
 
 from pig_spark import udf_lift
 from pig_spark.dsl import Relation
+from pig_spark.functions import registry
 from pig_spark.latin import run
 from pig_spark.latin.translate import _load_script_udfs
 
@@ -260,7 +261,8 @@ def _udfs(tmp_path, source, name):
 
 
 def _apply(frame, udf, args):
-    return frame.select("k", udf(*[frame[a] for a in args], _rel=Relation(frame)).alias("r"))
+    call = registry.Call([registry.Arg(frame[a]) for a in args], Relation(frame))
+    return frame.select("k", udf.lower(call).alias("r"))
 
 
 def _runs_python(df) -> bool:
